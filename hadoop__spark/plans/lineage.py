@@ -23,8 +23,10 @@ Design differences from the reference (all deliberate):
 * fresh analysis state per ``analyze`` call (the reference accumulates
   across ``parse()`` calls forever, README.md:108-129 — a wart);
 * ``spark.catalog`` replaces the Hive ``MetaDataDao``
-  (README.md:102, 239, 814) for ``SELECT *`` expansion and positional
-  sink alignment;
+  (README.md:102, 239, 814) for ``SELECT *`` expansion, positional
+  sink alignment and validation.  A lookup reads analysis metadata
+  only and submits no Spark job, and each ``analyze`` call memoizes
+  its lookups, so the analysis plane never executes anything;
 * multi-source provenance is stored as ``list[str]``; the reference's
   ``&``/``,`` string encodings (README.md:231, 1050) appear only in
   rendered output.
@@ -33,9 +35,11 @@ Design differences from the reference (all deliberate):
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Protocol
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from hadoop__spark.plans.jbridge import Node, parse_statement
@@ -93,7 +97,14 @@ class Metastore(Protocol):
 
 class SparkCatalogMetastore:
     """``spark.catalog`` as the metastore (replaces ``MetaDataDao``,
-    reference README.md:102, 239, 814)."""
+    reference README.md:102, 239, 814).
+
+    A lookup answers from analysis metadata alone and submits no Spark
+    job: ``tableExists`` guards each candidate name (the qualified name,
+    then the bare name, so ``default.t`` finds a temp view ``t``), and
+    the columns are the resolved schema of ``spark.table``, partition
+    columns last.  A missing table, an unparsable name, or a view whose
+    definition no longer resolves reads as unknown (``None``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -101,8 +112,9 @@ class SparkCatalogMetastore:
     def columns(self, qualified_table: str) -> list[str] | None:
         for name in (qualified_table, qualified_table.split(".", 1)[-1]):
             try:
-                return [c.name for c in self.spark.catalog.listColumns(name)]
-            except Exception:
+                if self.spark.catalog.tableExists(name):
+                    return self.spark.table(name).columns
+            except AnalysisException:
                 continue
         return None
 
@@ -212,10 +224,15 @@ class FromCtx:
                 return s
         return None
 
-    def _claims(self, source: BaseTable | SubScope, col: str, ms: Metastore) -> bool:
+    def _claims(
+        self,
+        source: BaseTable | SubScope,
+        col: str,
+        columns: Callable[[str], list[str] | None],
+    ) -> bool:
         if isinstance(source, SubScope):
             return any(c.name.lower() == col for c in source.scope.cols)
-        cols = ms.columns(source.qname)
+        cols = columns(source.qname)
         return cols is not None and col in [c.lower() for c in cols]
 
     def make_qualify(self, analyzer: "LineageAnalyzer"):
@@ -260,7 +277,7 @@ class FromCtx:
             claimers = [
                 s
                 for _, s in self.sources
-                if self._claims(s, col, analyzer.metastore)
+                if self._claims(s, col, analyzer._columns)
             ]
             if len(claimers) == 1:
                 return resolve(claimers[0], col)
@@ -311,6 +328,18 @@ class LineageAnalyzer:
         self._ctes: dict[str, Scope] = {}  # per-statement WITH scopes
         self._views: dict[str, Scope] = {}  # session-level CREATE VIEWs
         self._cur_res: LineageResult | None = None
+        self._column_memo: dict[str, list[str] | None] = {}
+
+    def _columns(self, qualified_table: str) -> list[str] | None:
+        """Metastore lookup, memoized for one ``analyze`` call.  The
+        analyzer never executes a statement, so the catalog cannot
+        change within a call; across calls it can (a script session
+        runs statements between them), so ``analyze`` starts afresh."""
+        if qualified_table not in self._column_memo:
+            self._column_memo[qualified_table] = self.metastore.columns(
+                qualified_table
+            )
+        return self._column_memo[qualified_table]
 
     def fill_db(self, name: str) -> str:
         """``table`` → ``db.table`` with the session database
@@ -329,6 +358,7 @@ class LineageAnalyzer:
     def analyze(self, script: str, validate: bool = False) -> LineageResult:
         res = LineageResult()
         self._bindings = []
+        self._column_memo = {}
         for sql in split_statements(script):
             self._statement(sql, res)
         if validate:
@@ -751,7 +781,7 @@ class LineageAnalyzer:
                 if isinstance(s, SubScope):
                     names = [c.name.lower() for c in s.scope.cols if c.name]
                 else:
-                    cols = self.metastore.columns(s.qname)
+                    cols = self._columns(s.qname)
                     if cols is None:
                         return None
                     names = [c.lower() for c in cols]
@@ -886,7 +916,7 @@ class LineageAnalyzer:
                     for c in s.scope.cols
                 )
                 continue
-            cols = self.metastore.columns(s.qname)
+            cols = self._columns(s.qname)
             if cols is None:
                 raise LineageError(
                     f"SELECT * needs catalog columns for {s.qname}"
@@ -915,7 +945,7 @@ class LineageAnalyzer:
             # (README.md:796-804); an explicit INSERT column list
             # overrides the metastore order
             dest_cols = (
-                self.metastore.columns(dest)
+                self._columns(dest)
                 if dest != "TOK_TMP_FILE"
                 else None
             )
@@ -965,10 +995,10 @@ class LineageAnalyzer:
         every lineage endpoint must exist)."""
         problems: list[str] = []
         for t in sorted(res.input_tables):
-            if self.metastore.columns(t) is None:
+            if self._columns(t) is None:
                 problems.append(f"unknown input table: {t}")
         for table, col in dict.fromkeys(self._bindings):
-            cols = self.metastore.columns(table)
+            cols = self._columns(table)
             if cols is not None and col not in [c.lower() for c in cols]:
                 problems.append(f"unknown column: {table}.{col}")
         if problems:

@@ -1957,6 +1957,26 @@ def test_policy_pyarrow_and_spark_reads_agree(spark, tmp_path):
     assert _read_policy(spark, state) == fast
 
 
+def test_policy_null_optional_fields_round_trip(spark, tmp_path):
+    """A policy whose optional INT and DOUBLE fields are absent (a
+    simhash state with no group cap: num_perm, threshold, group_cap_k
+    are None) reads back None on both read paths, never NaN or 0:
+    the Arrow-built write turns pandas' NaN placeholders into nulls."""
+    from hadoop__spark.operators.ingest import _read_policy, _write_policy
+
+    state = str(tmp_path / "state")
+    pol = {
+        "text_method": "simhash", "n": 5, "num_perm": None,
+        "threshold": None, "max_hamming": 3, "n_chunks": 4, "bands": 8,
+        "has_quality_gate": False, "group_cap_col": None,
+        "group_cap_k": None, "accounting_col": None,
+        "has_embeddings": False, "semantic_threshold": 0.9,
+    }
+    _write_policy(spark, state, pol)
+    assert _read_policy(spark, state) == pol
+    assert spark.read.parquet(f"{state}/policy").first().asDict() == pol
+
+
 def test_streaming_loop_refit_advice(spark, tmp_path, monkeypatch):
     """The streaming loop's advice check consumes refit_recommended
     when refit="advice" (judge r11 item 1, streaming half): the

@@ -390,3 +390,19 @@ def test_with_wrapped_dir_insert_and_update(analyzer):
     assert res.output_tables == {"db.t2"}
     assert res.input_tables == {"db.src", "db.t2"}
     assert res.statements[-1] == "UPDATE"
+
+
+def test_broken_permanent_view_is_unknown(spark):
+    """A permanent view whose definition no longer resolves reads as an
+    unknown table (its stored schema is not trusted)."""
+    spark.sql("CREATE TABLE IF NOT EXISTS adv_base (a INT, b STRING) USING parquet")
+    spark.sql("CREATE OR REPLACE VIEW adv_broken AS SELECT a, b FROM adv_base")
+    spark.sql("DROP TABLE adv_base")
+    try:
+        an = LineageAnalyzer(spark)
+        with pytest.raises(LineageError, match="SELECT \\* needs catalog"):
+            an.analyze("select * from adv_broken")
+        with pytest.raises(LineageError, match="unknown input table"):
+            an.analyze("select a from adv_broken", validate=True)
+    finally:
+        spark.sql("DROP VIEW IF EXISTS adv_broken")

@@ -321,6 +321,111 @@ def test_spark_catalog_metastore_and_validation(spark):
         spark.sql("DROP DATABASE IF EXISTS app")
 
 
+def test_spark_catalog_metastore_matches_list_columns_without_jobs(spark):
+    """SparkCatalogMetastore answers from analysis metadata alone: the
+    same ordered columns ``spark.catalog.listColumns`` reports, for
+    every kind of relation the analyzer meets, and no Spark job."""
+    from hadoop__spark.plans.lineage import SparkCatalogMetastore
+
+    spark.range(2).selectExpr("id AS a", "id * 2 AS B").createOrReplaceTempView(
+        "ms_tv"
+    )
+    spark.range(2).selectExpr("id AS g", "id AS h").createOrReplaceGlobalTempView(
+        "ms_gv"
+    )
+    spark.sql(
+        "CREATE TABLE IF NOT EXISTS ms_part (p INT, x INT, y STRING) "
+        "USING parquet PARTITIONED BY (p)"
+    )
+    spark.sql("CREATE OR REPLACE VIEW ms_pv AS SELECT y, p, x FROM ms_part")
+    sc = spark.sparkContext
+    try:
+        # (lookup, oracle name): default.ms_tv exists only as the temp
+        # view ms_tv, so it resolves through the bare-name fallback
+        cases = [
+            ("ms_tv", "ms_tv"),
+            ("global_temp.ms_gv", "global_temp.ms_gv"),
+            ("default.ms_part", "default.ms_part"),
+            ("default.ms_pv", "default.ms_pv"),
+            ("default.ms_tv", "ms_tv"),
+        ]
+        oracle = {
+            name: [c.name for c in spark.catalog.listColumns(ref)]
+            for name, ref in cases
+        }
+        assert oracle["default.ms_part"] == ["x", "y", "p"]  # partition last
+        ms = SparkCatalogMetastore(spark)
+        sc.setJobGroup("ms-lookups", "catalog lookups")
+        try:
+            got = {name: ms.columns(name) for name, _ in cases}
+            missing = ms.columns("default.ms_no_such_table")
+            jobs = list(sc.statusTracker().getJobIdsForGroup("ms-lookups"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == oracle
+        assert missing is None
+        assert jobs == []
+    finally:
+        spark.sql("DROP VIEW IF EXISTS ms_pv")
+        spark.sql("DROP TABLE IF EXISTS ms_part")
+        spark.catalog.dropTempView("ms_tv")
+        spark.catalog.dropGlobalTempView("ms_gv")
+
+
+class _CountingMetastore:
+    def __init__(self, inner):
+        self.inner = inner
+        self.calls: dict[str, int] = {}
+
+    def columns(self, qualified_table):
+        self.calls[qualified_table] = self.calls.get(qualified_table, 0) + 1
+        return self.inner.columns(qualified_table)
+
+
+def test_catalog_lookups_memoized_per_analyze_call(spark):
+    """Each table is looked up once per ``analyze`` call, however many
+    unqualified columns, join sides, sink alignments and validation
+    checks consult it; the next call looks it up again."""
+    ms = _CountingMetastore(
+        DictMetastore(
+            {
+                "default.src": ["a", "b", "k"],
+                "default.src2": ["k2", "z"],
+                "default.dst": ["c1", "c2", "c3"],
+            }
+        )
+    )
+    an = LineageAnalyzer(spark, ms)
+    sql = (
+        "insert into table dst select a, b, z from src join src2 "
+        "on k = k2 where b > z"
+    )
+    res = an.analyze(sql, validate=True)
+    lines = lines_by_name(res)
+    assert lines["a"].from_names == ("default.src.a",)
+    assert lines["z"].from_names == ("default.src2.z",)
+    assert lines["z"].to_name == "default.dst.c3"
+    assert ms.calls == {"default.src": 1, "default.src2": 1, "default.dst": 1}
+    an.analyze(sql, validate=True)
+    assert ms.calls == {"default.src": 2, "default.src2": 2, "default.dst": 2}
+
+
+def test_catalog_lookups_not_stale_across_analyze_calls(spark):
+    """A table created between two ``analyze`` calls on one analyzer is
+    visible to the second: the memo never outlives a call."""
+    an = LineageAnalyzer(spark)
+    with pytest.raises(LineageError):
+        an.analyze("select * from ms_late")
+    spark.range(1).selectExpr("id AS a", "id AS b").createOrReplaceTempView(
+        "ms_late"
+    )
+    try:
+        res = an.analyze("select * from ms_late", validate=True)
+        assert [line.to_name_parse for line in res.col_lines] == ["a", "b"]
+    finally:
+        spark.catalog.dropTempView("ms_late")
+
+
 def test_ddl_statement_kinds(spark):
     """DDL routing (S4-S9): statement kinds + tagged ALTER outputs."""
     ms = DictMetastore({})
