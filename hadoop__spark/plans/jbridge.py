@@ -1,12 +1,22 @@
 """Convert a Spark *parsed* (unresolved) logical plan into Python nodes.
 
-One py4j pass per statement; everything downstream (resolution,
-rendering, lineage) is pure Python.  Each expression node carries the
-exact source-text slice from Catalyst's ``Origin`` (startIndex /
-stopIndex into the statement), which is what lets the renderer
-reproduce literals exactly as written (``"Category159"`` keeps its
-double quotes, ``'$V_PARYMD'`` its single quotes — the reference
-emits raw token text, reference README.md:523-526).
+The plan crosses the JVM boundary in one py4j call per statement:
+``PlanDump`` (Java source below) serializes the whole parsed tree to
+JSON, and everything downstream (conversion, resolution, rendering,
+lineage) is pure Python.  ``PlanDump`` is compiled once per JVM with
+Janino's ``SimpleCompiler``, the compiler Catalyst's own code
+generation uses, so it ships with every Spark distribution: there is
+no jar to build and nothing to configure.
+
+Each expression node carries the exact source-text slice from
+Catalyst's ``Origin`` (startIndex / stopIndex into the statement),
+which is what lets the renderer reproduce literals exactly as written
+(``"Category159"`` keeps its double quotes, ``'$V_PARYMD'`` its single
+quotes — the reference emits raw token text, reference
+README.md:523-526).  The dump carries only the indices; the slice is
+taken here, in Python, because Catalyst's indices count code points,
+as Python ``str`` indexing does (a JVM ``substring`` counts UTF-16
+units and would shift past a non-BMP character).
 
 This is the only JVM boundary of the analysis plane; like the
 reference's ``ParseDriver.parse`` (README.md:747-750) it never touches
@@ -15,9 +25,13 @@ executors.
 
 from __future__ import annotations
 
+import json
+import threading
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j import protocol
+from py4j.java_gateway import JVMView
 from pyspark.sql import SparkSession
 
 
@@ -37,27 +51,157 @@ class Node:
         return self.fields.get(key, default)
 
 
-def _seq(jseq) -> list:
-    return [jseq.apply(i) for i in range(jseq.size())]
+#: The dump format: a JSON array of TreeNodes, the root first.  A node
+#: is ``{"c": simple class name, "s"/"e": Origin start/stop index or
+#: null, "k": children() as node ids, "f": product fields}``; fields
+#: are keyed by ``productElementName`` (by position when it is empty).
+#: A field value is a node id (TreeNode), ``null`` (null or None), the
+#: value of a ``Some``, an array (Seq; byte[] as its unsigned bytes),
+#: ``{"c", "f"}`` (any other Product; a JoinType adds its ``"sql"``),
+#: a string, number or bool as py4j would auto-convert it, or else
+#: ``toString()``.
+_PLAN_DUMP_JAVA = r"""
+import java.util.ArrayList;
+import java.util.IdentityHashMap;
+import org.apache.spark.sql.catalyst.plans.JoinType;
+import org.apache.spark.sql.catalyst.trees.Origin;
+import org.apache.spark.sql.catalyst.trees.TreeNode;
+
+public class PlanDump {
+    private final IdentityHashMap ids = new IdentityHashMap();
+    private final ArrayList nodes = new ArrayList();
+
+    /** Each call walks with a fresh instance: concurrent calls share nothing. */
+    public String dump(TreeNode plan) {
+        PlanDump walk = new PlanDump();
+        walk.node(plan);
+        StringBuilder sb = new StringBuilder("[");
+        for (int i = 0; i < walk.nodes.size(); i++) {
+            if (i > 0) sb.append(',');
+            sb.append((String) walk.nodes.get(i));
+        }
+        return sb.append(']').toString();
+    }
+
+    private int node(TreeNode n) {
+        Integer seen = (Integer) ids.get(n);
+        if (seen != null) return seen.intValue();
+        int id = nodes.size();
+        ids.put(n, Integer.valueOf(id));
+        nodes.add(null);
+        StringBuilder sb = new StringBuilder("{\"c\":");
+        string(sb, n.getClass().getSimpleName());
+        Origin o = n.origin();
+        sb.append(",\"s\":");
+        value(sb, o.startIndex());
+        sb.append(",\"e\":");
+        value(sb, o.stopIndex());
+        sb.append(",\"k\":");
+        value(sb, n.children());
+        sb.append(",\"f\":");
+        fields(sb, n);
+        nodes.set(id, sb.append('}').toString());
+        return id;
+    }
+
+    private void fields(StringBuilder sb, scala.Product p) {
+        sb.append('{');
+        for (int i = 0; i < p.productArity(); i++) {
+            if (i > 0) sb.append(',');
+            String name = p.productElementName(i);
+            string(sb, name.isEmpty() ? String.valueOf(i) : name);
+            sb.append(':');
+            value(sb, p.productElement(i));
+        }
+        sb.append('}');
+    }
+
+    private void value(StringBuilder sb, Object v) {
+        if (v == null) {
+            sb.append("null");
+        } else if (v instanceof TreeNode) {
+            sb.append(node((TreeNode) v));
+        } else if (v instanceof scala.Option) {
+            scala.Option o = (scala.Option) v;
+            value(sb, o.isEmpty() ? null : o.get());
+        } else if (v instanceof String) {
+            string(sb, (String) v);
+        } else if (v instanceof Number || v instanceof Boolean) {
+            sb.append(v.toString());  // Integer, Long, Double, Float ...
+        } else if (v instanceof scala.collection.Seq) {
+            sb.append('[');
+            scala.collection.Iterator it = ((scala.collection.Seq) v).iterator();
+            for (int i = 0; it.hasNext(); i++) {
+                if (i > 0) sb.append(',');
+                value(sb, it.next());
+            }
+            sb.append(']');
+        } else if (v instanceof byte[]) {
+            byte[] b = (byte[]) v;
+            sb.append('[');
+            for (int i = 0; i < b.length; i++) {
+                if (i > 0) sb.append(',');
+                sb.append(b[i] & 0xff);
+            }
+            sb.append(']');
+        } else if (v instanceof scala.Product) {
+            sb.append("{\"c\":");
+            string(sb, v.getClass().getSimpleName());
+            if (v instanceof JoinType) {
+                sb.append(",\"sql\":");
+                string(sb, ((JoinType) v).sql());
+            }
+            sb.append(",\"f\":");
+            fields(sb, (scala.Product) v);
+            sb.append('}');
+        } else {
+            String s;
+            try {
+                s = v.toString();
+            } catch (RuntimeException e) {
+                s = null;
+            }
+            if (s == null) sb.append("null"); else string(sb, s);
+        }
+    }
+
+    private static void string(StringBuilder sb, String s) {
+        sb.append('"');
+        for (int i = 0; i < s.length(); i++) {
+            char c = s.charAt(i);
+            if (c == '"' || c == '\\') {
+                sb.append('\\').append(c);
+            } else if (c < 0x20 || Character.isSurrogate(c)) {
+                sb.append(String.format("\\u%04x", new Object[] {Integer.valueOf(c)}));
+            } else {
+                sb.append(c);
+            }
+        }
+        sb.append('"');
+    }
+}
+"""
+
+_dumpers: dict[Any, Any] = {}
+_dumpers_lock = threading.Lock()
 
 
-def _opt(jopt):
-    return jopt.get() if jopt.isDefined() else None
-
-
-def _name(jobj) -> str:
-    return jobj.getClass().getSimpleName()
-
-
-def _src_of(jnode, sql: str) -> str | None:
-    try:
-        o = jnode.origin()
-        start, stop = _opt(o.startIndex()), _opt(o.stopIndex())
-        if start is None or stop is None:
-            return None
-        return sql[start : stop + 1]
-    except Exception:
-        return None
+def _dumper(jplan):
+    """The JVM's ``PlanDump`` instance, compiled on first use and cached
+    per py4j gateway (one JVM), never per analyzer or statement."""
+    client = jplan._gateway_client  # noqa: SLF001
+    dumper = _dumpers.get(client)
+    if dumper is None:
+        with _dumpers_lock:
+            dumper = _dumpers.get(client)
+            if dumper is None:
+                jvm = JVMView(client, protocol.DEFAULT_JVM_NAME, id=protocol.DEFAULT_JVM_ID)
+                compiler = jvm.org.codehaus.janino.SimpleCompiler()
+                compiler.setParentClassLoader(jplan.getClass().getClassLoader())
+                compiler.cook(_PLAN_DUMP_JAVA)
+                cls = compiler.getClassLoader().loadClass("PlanDump")
+                dumper = _dumpers[client] = cls.newInstance()
+    return dumper
 
 
 #: Plan wrappers that contribute nothing to lineage — unwrapped in place
@@ -85,282 +229,6 @@ _DDL_TARGET_CLASSES = {
     "UnresolvedRelation": "multipartIdentifier",
 }
 
-
-def _ddl_target(jplan) -> list[str] | None:
-    """Find the multi-part name of a DDL statement's target table by
-    scanning direct children for the Unresolved* placeholder node."""
-    for ch in _seq(jplan.children()):
-        cname = _name(ch)
-        meth = _DDL_TARGET_CLASSES.get(cname)
-        if meth:
-            return [str(p) for p in _seq(getattr(ch, meth)())]
-    return None
-
-
-def convert_plan(jplan, sql: str) -> Node:
-    cls = _name(jplan)
-
-    if cls in _PASS_THROUGH:
-        return convert_plan(jplan.children().apply(0), sql)
-
-    if cls == "UnresolvedRelation":
-        parts = [str(p) for p in _seq(jplan.multipartIdentifier())]
-        return Node("UnresolvedRelation", {"parts": parts})
-    if cls == "SubqueryAlias":
-        return Node(
-            "SubqueryAlias",
-            {"alias": str(jplan.alias())},
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "Project":
-        plist = [convert_expr(e, sql) for e in _seq(jplan.projectList())]
-        return Node("Project", {"exprs": plist}, [convert_plan(jplan.child(), sql)])
-    if cls == "Aggregate":
-        aggs = [convert_expr(e, sql) for e in _seq(jplan.aggregateExpressions())]
-        keys = [convert_expr(e, sql) for e in _seq(jplan.groupingExpressions())]
-        return Node(
-            "Aggregate",
-            {"exprs": aggs, "keys": keys},
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "Filter":
-        return Node(
-            "Filter",
-            {"cond": convert_expr(jplan.condition(), sql)},
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "UnresolvedHaving":
-        # Distinct node so the analyzer can tag HAVING: (the reference
-        # predates HAVING and had only WHERE:/JOIN tags).
-        return Node(
-            "Having",
-            {"cond": convert_expr(jplan.havingCondition(), sql)},
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "Sort":
-        keys = [convert_expr(so.child(), sql) for so in _seq(jplan.order())]
-        return Node("Sort", {"keys": keys}, [convert_plan(jplan.child(), sql)])
-    if cls == "Join":
-        jcond = _opt(jplan.condition())
-        # USING/NATURAL joins carry their keys in the join TYPE
-        # (UsingJoin(tpe, cols) / NaturalJoin(tpe)), with condition()
-        # undefined — unwrap to the inner type for the label and keep
-        # the keys so the analyzer can emit the join-condition tag.
-        jtype = jplan.joinType()
-        using: list[str] | None = None
-        natural = False
-        jt_cls = _name(jtype)
-        if jt_cls == "UsingJoin":
-            using = [str(c) for c in _seq(jtype.usingColumns())]
-            jtype = jtype.tpe()
-        elif jt_cls == "NaturalJoin":
-            natural = True
-            jtype = jtype.tpe()
-        # Inner→JOIN, FullOuter→FULLOUTERJOIN … — the reference labels
-        # joins by stripping TOK_ from the Hive token (README.md:276).
-        label = str(jtype.sql()).replace(" ", "")
-        if label in ("INNER", "CROSS"):
-            label = "JOIN"
-        elif not label.endswith("JOIN"):
-            label += "JOIN"
-        return Node(
-            "Join",
-            {
-                "label": label,
-                "cond": convert_expr(jcond, sql) if jcond is not None else None,
-                "using": using,
-                "natural": natural,
-            },
-            [convert_plan(jplan.left(), sql), convert_plan(jplan.right(), sql)],
-        )
-    if cls == "Union":
-        return Node(
-            "Union", {}, [convert_plan(c, sql) for c in _seq(jplan.children())]
-        )
-    if cls == "UnresolvedWith":
-        # WITH ctes (beyond the reference — it predates CTEs): each
-        # (name, SubqueryAlias(query)) pair plus the main query child
-        ctes = [
-            (str(t._1()), convert_plan(t._2().child(), sql))
-            for t in _seq(jplan.cteRelations())
-        ]
-        return Node("With", {"ctes": ctes}, [convert_plan(jplan.child(), sql)])
-    if cls == "InsertIntoStatement":
-        table = convert_plan(jplan.table(), sql)
-        ucols = jplan.userSpecifiedCols()
-        return Node(
-            "InsertIntoStatement",
-            {
-                "table_parts": table["parts"],
-                "overwrite": bool(jplan.overwrite()),
-                # lowercase like every other identifier path: a
-                # consumer joining edges on to_name case-sensitively
-                # must not see default.sink.C2 beside default.sink.c2
-                "cols": [
-                    str(ucols.apply(i)).lower()
-                    for i in range(ucols.size())
-                ],
-            },
-            [convert_plan(jplan.query(), sql)],
-        )
-    if cls in ("UpdateTable", "DeleteFromTable"):
-        # condition() is Option[Expression] on UpdateTable but a plain
-        # Expression on DeleteFromTable — normalize both.
-        cond = jplan.condition()
-        try:
-            cond = _opt(cond)
-        except Exception:
-            pass
-        fields = {
-            "cond": convert_expr(cond, sql) if cond is not None else None
-        }
-        if cls == "UpdateTable":
-            fields["assignments"] = [
-                (convert_expr(a.key(), sql), convert_expr(a.value(), sql))
-                for a in _seq(jplan.assignments())
-            ]
-        return Node(cls, fields, [convert_plan(jplan.table(), sql)])
-    if cls == "MergeIntoTable":
-        # MERGE INTO (beyond the reference): target + source relations,
-        # the ON condition, and per-action SET/INSERT assignments.
-        def _assignments(action) -> list[tuple[Node, Node]]:
-            try:
-                return [
-                    (convert_expr(a.key(), sql), convert_expr(a.value(), sql))
-                    for a in _seq(action.assignments())
-                ]
-            except Exception:
-                return []  # DeleteAction / star actions carry none
-
-        actions = []
-        for seq in (
-            jplan.matchedActions(),
-            jplan.notMatchedActions(),
-            jplan.notMatchedBySourceActions(),
-        ):
-            for a in _seq(seq):
-                actions.append(
-                    {"kind": _name(a), "assignments": _assignments(a)}
-                )
-        return Node(
-            "MergeIntoTable",
-            {
-                "cond": convert_expr(jplan.mergeCondition(), sql),
-                "actions": actions,
-            },
-            [
-                convert_plan(jplan.targetTable(), sql),
-                convert_plan(jplan.sourceTable(), sql),
-            ],
-        )
-    if cls == "ScriptTransformation":
-        # Hive TRANSFORM ... USING 'script' (beyond the reference): an
-        # opaque row transform — every output column derives from every
-        # input expression of the child projection.
-        return Node(
-            "ScriptTransformation",
-            {
-                "script": str(jplan.script()),
-                "out_names": [
-                    str(a.name()).lower() for a in _seq(jplan.output())
-                ],
-            },
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "Generate":
-        # LATERAL VIEW (beyond the reference): generator output columns
-        # carry the generator expression's sources.
-        alias = _opt(jplan.qualifier())
-        outs = [convert_expr(a, sql) for a in _seq(jplan.generatorOutput())]
-        out_names = [
-            o["parts"][-1].lower() for o in outs if o.cls == "Attr"
-        ]
-        return Node(
-            "Generate",
-            {
-                "alias": str(alias) if alias is not None else None,
-                "out_names": out_names,
-                "gen": convert_expr(jplan.generator(), sql),
-            },
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "CreateTableLikeCommand":
-        def _ti_parts(ti) -> list[str]:
-            db = _opt(ti.database())
-            return ([str(db)] if db is not None else []) + [str(ti.table())]
-
-        return Node(
-            "CreateTableLike",
-            {
-                "table_parts": _ti_parts(jplan.targetTable()),
-                "source_parts": _ti_parts(jplan.sourceTable()),
-            },
-        )
-    if cls == "InsertIntoDir":
-        # INSERT OVERWRITE [LOCAL] DIRECTORY '/path' — the reference's
-        # TOK_DIR destination (README.md:211-225); the path is the sink.
-        try:
-            uri = _opt(jplan.storage().locationUri())
-            path = str(uri) if uri is not None else None
-        except Exception:
-            path = None
-        return Node(
-            "InsertIntoDir",
-            {"path": path},
-            [convert_plan(jplan.child(), sql)],
-        )
-    if cls == "SetCatalogAndNamespace":
-        return Node("Use", {"parts": _ddl_target(jplan) or []})
-    if cls in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
-        name = jplan.name()
-        parts = [str(p) for p in _seq(name.nameParts())]
-        return Node(
-            "CreateTableAsSelect",
-            {"table_parts": parts},
-            [convert_plan(jplan.query(), sql)],
-        )
-    if cls == "DropTable":
-        return Node("DropTable", {"table_parts": _ddl_target(jplan)})
-    if cls == "TruncateTable":
-        return Node("TruncateTable", {"table_parts": _ddl_target(jplan)})
-    if cls == "LoadData":
-        return Node("LoadData", {"table_parts": _ddl_target(jplan)})
-    if cls == "RenameTable":
-        return Node(
-            "AlterTable",
-            {
-                "table_parts": _ddl_target(jplan),
-                "new_parts": [str(p) for p in _seq(jplan.newName())],
-            },
-        )
-    if cls.startswith(("Alter", "AddColumns", "ReplaceColumns", "RenameColumn",
-                       "DropColumns", "SetTableProperties", "AddPartitions",
-                       "DropPartitions", "RenamePartitions")):
-        return Node("AlterTable", {"table_parts": _ddl_target(jplan)})
-    if cls in ("CreateTable", "CreateTableStatement"):
-        return Node("CreateTable", {"table_parts": _ddl_target(jplan)})
-    if cls == "CreateView":
-        return Node(
-            "CreateView",
-            {"table_parts": _ddl_target(jplan)},
-            [convert_plan(jplan.children().apply(1), sql)],
-        )
-    if cls == "CreateViewCommand":  # CREATE [OR REPLACE] TEMP VIEW
-        ti = jplan.name()
-        db = _opt(ti.database())
-        parts = ([str(db)] if db else []) + [str(ti.table())]
-        return Node(
-            "CreateView",
-            {"table_parts": parts, "temp": True},
-            [convert_plan(jplan.plan(), sql)],
-        )
-
-    # Unknown plan node: keep class name + children so the walker can
-    # recurse (robustness over the full Spark SQL surface).
-    children = [convert_plan(c, sql) for c in _seq(jplan.children())]
-    return Node(cls, {}, children)
-
-
 _BINARY_OPS = {
     "EqualTo": "=",
     "EqualNullSafe": "<=>",
@@ -379,143 +247,356 @@ _BINARY_OPS = {
 }
 
 
-def convert_expr(jexpr, sql: str) -> Node:
-    cls = _name(jexpr)
-    src = _src_of(jexpr, sql)
+def convert_plan(jplan, sql: str) -> Node:
+    """Detach a parsed plan: one ``PlanDump.dump`` call, then pure
+    Python over the dumped node table."""
+    return _Tree(json.loads(_dumper(jplan).dump(jplan)), sql).plan(0)
 
-    if cls == "UnresolvedAttribute":
-        parts = [str(p) for p in _seq(jexpr.nameParts())]
-        return Node("Attr", {"parts": parts}, src=src)
-    if cls == "UnresolvedStar":
-        target = _opt(jexpr.target())
-        parts = [str(p) for p in _seq(target)] if target is not None else None
-        return Node("Star", {"parts": parts}, src=src)
-    if cls == "Alias":
-        return Node(
-            "Alias",
-            {"name": str(jexpr.name())},
-            [convert_expr(jexpr.child(), sql)],
-            src=src,
-        )
-    if cls == "UnresolvedAlias":
-        return Node("UnresolvedAlias", {}, [convert_expr(jexpr.child(), sql)], src=src)
-    if cls == "Literal":
-        try:
-            value = jexpr.value()
-            text = None if value is None else str(value)
-        except Exception:
-            text = None
-        return Node("Literal", {"value": text}, src=src)
-    if cls == "UnresolvedFunction":
-        fname = ".".join(str(p) for p in _seq(jexpr.nameParts()))
-        args = [convert_expr(a, sql) for a in _seq(jexpr.arguments())]
-        return Node(
-            "Function",
-            {"name": fname, "distinct": bool(jexpr.isDistinct())},
-            args,
-            src=src,
-        )
-    if cls in ("And", "Or"):
-        return Node(
-            cls,
-            {},
-            [convert_expr(jexpr.left(), sql), convert_expr(jexpr.right(), sql)],
-            src=src,
-        )
-    if cls in _BINARY_OPS:
-        return Node(
-            "BinOp",
-            {"op": _BINARY_OPS[cls]},
-            [convert_expr(jexpr.left(), sql), convert_expr(jexpr.right(), sql)],
-            src=src,
-        )
-    if cls == "Not":
-        return Node("Not", {}, [convert_expr(jexpr.child(), sql)], src=src)
-    if cls in ("UnaryMinus", "UnaryPositive"):
-        sign = "-" if cls == "UnaryMinus" else "+"
-        return Node("Unary", {"op": sign}, [convert_expr(jexpr.child(), sql)], src=src)
-    if cls == "BitwiseNot":
-        return Node("Unary", {"op": "~"}, [convert_expr(jexpr.child(), sql)], src=src)
-    if cls == "In":
-        return Node(
-            "In",
-            {},
-            [convert_expr(jexpr.value(), sql)]
-            + [convert_expr(e, sql) for e in _seq(jexpr.list())],
-            src=src,
-        )
-    if cls in ("Like", "RLike", "ILike"):
-        kw = {"Like": "like", "RLike": "rlike", "ILike": "ilike"}[cls]
-        return Node(
-            "LikeOp",
-            {"kw": kw},
-            [convert_expr(jexpr.left(), sql), convert_expr(jexpr.right(), sql)],
-            src=src,
-        )
-    if cls in ("IsNull", "IsNotNull"):
-        kw = "isnull" if cls == "IsNull" else "isnotnull"
-        return Node("NullTest", {"kw": kw}, [convert_expr(jexpr.child(), sql)], src=src)
-    if cls == "CaseWhen":
-        branches = []
-        for t in _seq(jexpr.branches()):
-            branches.append(
-                (convert_expr(t._1(), sql), convert_expr(t._2(), sql))
+
+class _Tree:
+    """One statement's dumped node table; ``plan``/``expr`` convert the
+    node with the given id."""
+
+    def __init__(self, nodes: list[dict], sql: str):
+        self.nodes = nodes
+        self.sql = sql
+
+    def src(self, i: int) -> str | None:
+        n = self.nodes[i]
+        start, stop = n["s"], n["e"]
+        if start is None or stop is None:
+            return None
+        return self.sql[start : stop + 1]
+
+    def _ddl_target(self, n: dict) -> list[str] | None:
+        """The multi-part name of a DDL statement's target table, from
+        the Unresolved* placeholder among its direct children."""
+        for k in n["k"]:
+            ch = self.nodes[k]
+            key = _DDL_TARGET_CLASSES.get(ch["c"])
+            if key:
+                return ch["f"][key]
+        return None
+
+    def plan(self, i: int) -> Node:
+        n = self.nodes[i]
+        cls, f = n["c"], n["f"]
+        plan, expr = self.plan, self.expr
+
+        if cls in _PASS_THROUGH:
+            return plan(n["k"][0])
+
+        if cls == "UnresolvedRelation":
+            return Node("UnresolvedRelation", {"parts": f["multipartIdentifier"]})
+        if cls == "SubqueryAlias":
+            return Node(
+                "SubqueryAlias",
+                {"alias": f["identifier"]["f"]["name"]},
+                [plan(f["child"])],
             )
-        els = _opt(jexpr.elseValue())
-        return Node(
-            "CaseWhen",
-            {
-                "branches": branches,
-                "else": convert_expr(els, sql) if els is not None else None,
-            },
-            src=src,
-        )
-    if cls == "UnresolvedExtractValue":
-        return Node(
-            "Subscript",
-            {},
-            [convert_expr(jexpr.child(), sql), convert_expr(jexpr.extraction(), sql)],
-            src=src,
-        )
+        if cls == "Project":
+            plist = [expr(e) for e in f["projectList"]]
+            return Node("Project", {"exprs": plist}, [plan(f["child"])])
+        if cls == "Aggregate":
+            aggs = [expr(e) for e in f["aggregateExpressions"]]
+            keys = [expr(e) for e in f["groupingExpressions"]]
+            return Node("Aggregate", {"exprs": aggs, "keys": keys}, [plan(f["child"])])
+        if cls == "Filter":
+            return Node("Filter", {"cond": expr(f["condition"])}, [plan(f["child"])])
+        if cls == "UnresolvedHaving":
+            # Distinct node so the analyzer can tag HAVING: (the reference
+            # predates HAVING and had only WHERE:/JOIN tags).
+            return Node(
+                "Having", {"cond": expr(f["havingCondition"])}, [plan(f["child"])]
+            )
+        if cls == "Sort":
+            keys = [expr(self.nodes[so]["f"]["child"]) for so in f["order"]]
+            return Node("Sort", {"keys": keys}, [plan(f["child"])])
+        if cls == "Join":
+            jcond = f["condition"]
+            # USING/NATURAL joins carry their keys in the join TYPE
+            # (UsingJoin(tpe, cols) / NaturalJoin(tpe)), with condition
+            # undefined — unwrap to the inner type for the label and
+            # keep the keys so the analyzer can emit the join-condition
+            # tag.
+            jtype = f["joinType"]
+            using: list[str] | None = None
+            natural = False
+            if jtype["c"] == "UsingJoin":
+                using = jtype["f"]["usingColumns"]
+                jtype = jtype["f"]["tpe"]
+            elif jtype["c"] == "NaturalJoin":
+                natural = True
+                jtype = jtype["f"]["tpe"]
+            # Inner→JOIN, FullOuter→FULLOUTERJOIN … — the reference labels
+            # joins by stripping TOK_ from the Hive token (README.md:276).
+            label = jtype["sql"].replace(" ", "")
+            if label in ("INNER", "CROSS"):
+                label = "JOIN"
+            elif not label.endswith("JOIN"):
+                label += "JOIN"
+            return Node(
+                "Join",
+                {
+                    "label": label,
+                    "cond": expr(jcond) if jcond is not None else None,
+                    "using": using,
+                    "natural": natural,
+                },
+                [plan(f["left"]), plan(f["right"])],
+            )
+        if cls == "Union":
+            return Node("Union", {}, [plan(c) for c in n["k"]])
+        if cls == "UnresolvedWith":
+            # WITH ctes (beyond the reference — it predates CTEs): each
+            # (name, SubqueryAlias(query)) pair plus the main query child
+            ctes = [
+                (t["f"]["_1"], plan(self.nodes[t["f"]["_2"]]["f"]["child"]))
+                for t in f["cteRelations"]
+            ]
+            return Node("With", {"ctes": ctes}, [plan(f["child"])])
+        if cls == "InsertIntoStatement":
+            table = plan(f["table"])
+            return Node(
+                "InsertIntoStatement",
+                {
+                    "table_parts": table["parts"],
+                    "overwrite": f["overwrite"],
+                    # lowercase like every other identifier path: a
+                    # consumer joining edges on to_name case-sensitively
+                    # must not see default.sink.C2 beside default.sink.c2
+                    "cols": [c.lower() for c in f["userSpecifiedCols"]],
+                },
+                [plan(f["query"])],
+            )
+        if cls in ("UpdateTable", "DeleteFromTable"):
+            # condition is Option[Expression] on UpdateTable but a plain
+            # Expression on DeleteFromTable; the dump gives an id or null
+            # for both.
+            cond = f["condition"]
+            fields = {"cond": expr(cond) if cond is not None else None}
+            if cls == "UpdateTable":
+                fields["assignments"] = self._assignments(f["assignments"])
+            return Node(cls, fields, [plan(f["table"])])
+        if cls == "MergeIntoTable":
+            # MERGE INTO (beyond the reference): target + source relations,
+            # the ON condition, and per-action SET/INSERT assignments.
+            # DeleteAction and the star actions carry no assignments.
+            actions = [
+                {
+                    "kind": self.nodes[a]["c"],
+                    "assignments": self._assignments(
+                        self.nodes[a]["f"].get("assignments", [])
+                    ),
+                }
+                for key in ("matchedActions", "notMatchedActions",
+                            "notMatchedBySourceActions")
+                for a in f[key]
+            ]
+            return Node(
+                "MergeIntoTable",
+                {"cond": expr(f["mergeCondition"]), "actions": actions},
+                [plan(f["targetTable"]), plan(f["sourceTable"])],
+            )
+        if cls == "ScriptTransformation":
+            # Hive TRANSFORM ... USING 'script' (beyond the reference): an
+            # opaque row transform — every output column derives from every
+            # input expression of the child projection.
+            return Node(
+                "ScriptTransformation",
+                {
+                    "script": f["script"],
+                    "out_names": [
+                        self.nodes[a]["f"]["name"].lower() for a in f["output"]
+                    ],
+                },
+                [plan(f["child"])],
+            )
+        if cls == "Generate":
+            # LATERAL VIEW (beyond the reference): generator output columns
+            # carry the generator expression's sources.
+            outs = [expr(a) for a in f["generatorOutput"]]
+            return Node(
+                "Generate",
+                {
+                    "alias": f["qualifier"],
+                    "out_names": [
+                        o["parts"][-1].lower() for o in outs if o.cls == "Attr"
+                    ],
+                    "gen": expr(f["generator"]),
+                },
+                [plan(f["child"])],
+            )
+        if cls == "CreateTableLikeCommand":
+            return Node(
+                "CreateTableLike",
+                {
+                    "table_parts": _table_parts(f["targetTable"]),
+                    "source_parts": _table_parts(f["sourceTable"]),
+                },
+            )
+        if cls == "InsertIntoDir":
+            # INSERT OVERWRITE [LOCAL] DIRECTORY '/path' — the reference's
+            # TOK_DIR destination (README.md:211-225); the path is the sink.
+            return Node(
+                "InsertIntoDir",
+                {"path": f["storage"]["f"]["locationUri"]},
+                [plan(f["child"])],
+            )
+        if cls == "SetCatalogAndNamespace":
+            return Node("Use", {"parts": self._ddl_target(n) or []})
+        if cls in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
+            return Node(
+                "CreateTableAsSelect",
+                {"table_parts": self.nodes[f["name"]]["f"]["nameParts"]},
+                [plan(f["query"])],
+            )
+        if cls == "DropTable":
+            return Node("DropTable", {"table_parts": self._ddl_target(n)})
+        if cls == "TruncateTable":
+            return Node("TruncateTable", {"table_parts": self._ddl_target(n)})
+        if cls == "LoadData":
+            return Node("LoadData", {"table_parts": self._ddl_target(n)})
+        if cls == "RenameTable":
+            return Node(
+                "AlterTable",
+                {"table_parts": self._ddl_target(n), "new_parts": f["newName"]},
+            )
+        if cls.startswith(("Alter", "AddColumns", "ReplaceColumns", "RenameColumn",
+                           "DropColumns", "SetTableProperties", "AddPartitions",
+                           "DropPartitions", "RenamePartitions")):
+            return Node("AlterTable", {"table_parts": self._ddl_target(n)})
+        if cls in ("CreateTable", "CreateTableStatement"):
+            return Node("CreateTable", {"table_parts": self._ddl_target(n)})
+        if cls == "CreateView":
+            return Node(
+                "CreateView",
+                {"table_parts": self._ddl_target(n)},
+                [plan(n["k"][1])],
+            )
+        if cls == "CreateViewCommand":  # CREATE [OR REPLACE] TEMP VIEW
+            return Node(
+                "CreateView",
+                {"table_parts": _table_parts(f["name"]), "temp": True},
+                [plan(f["plan"])],
+            )
 
-    if cls in ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery"):
-        # expression-level subquery: keep the inner plan so the walker
-        # can register its input tables (beyond the reference's Q3).
-        # The EXPRESSION origin is unreliable here — Exists spans
-        # `NOT EXISTS (…)` under a NOT and the WHOLE statement when
-        # bare — but the inner PLAN's origin is the exact subquery
-        # text in every case; carry it for the renderer.
-        jinner = jexpr.plan()
-        return Node(
-            "SubqueryExpr",
-            {
-                "plan": convert_plan(jinner, sql),
-                "kind": cls,
-                "plan_src": _src_of(jinner, sql),
-            },
-            src=src,
-        )
-    if cls == "InSubquery":
-        values = [convert_expr(v, sql) for v in _seq(jexpr.values())]
-        jinner = jexpr.query().plan()  # ListQuery's inner plan
-        return Node(
-            "SubqueryExpr",
-            {
-                "plan": convert_plan(jinner, sql),
-                "kind": cls,
-                "plan_src": _src_of(jinner, sql),
-            },
-            values,
-            src=src,
-        )
+        # Unknown plan node: keep class name + children so the walker can
+        # recurse (robustness over the full Spark SQL surface).
+        return Node(cls, {}, [plan(c) for c in n["k"]])
 
-    # Unknown expression: generic node; renderer falls back to the
-    # source slice, sources = union over children.
-    try:
-        children = [convert_expr(c, sql) for c in _seq(jexpr.children())]
-    except Exception:
-        children = []
-    return Node("Opaque", {"cls": cls}, children, src=src)
+    def _assignments(self, ids: list[int]) -> list[tuple[Node, Node]]:
+        out = []
+        for a in ids:
+            af = self.nodes[a]["f"]
+            out.append((self.expr(af["key"]), self.expr(af["value"])))
+        return out
+
+    def expr(self, i: int) -> Node:
+        n = self.nodes[i]
+        cls, f = n["c"], n["f"]
+        expr = self.expr
+        src = self.src(i)
+
+        if cls == "UnresolvedAttribute":
+            return Node("Attr", {"parts": f["nameParts"]}, src=src)
+        if cls == "UnresolvedStar":
+            return Node("Star", {"parts": f["target"]}, src=src)
+        if cls == "Alias":
+            return Node("Alias", {"name": f["name"]}, [expr(f["child"])], src=src)
+        if cls == "UnresolvedAlias":
+            return Node("UnresolvedAlias", {}, [expr(f["child"])], src=src)
+        if cls == "Literal":
+            value = f["value"]
+            if isinstance(value, list):  # byte[]: py4j delivers bytes
+                value = bytes(value)
+            text = None if value is None else str(value)
+            return Node("Literal", {"value": text}, src=src)
+        if cls == "UnresolvedFunction":
+            return Node(
+                "Function",
+                {"name": ".".join(f["nameParts"]), "distinct": f["isDistinct"]},
+                [expr(a) for a in f["arguments"]],
+                src=src,
+            )
+        if cls in ("And", "Or"):
+            return Node(cls, {}, [expr(f["left"]), expr(f["right"])], src=src)
+        if cls in _BINARY_OPS:
+            return Node(
+                "BinOp",
+                {"op": _BINARY_OPS[cls]},
+                [expr(f["left"]), expr(f["right"])],
+                src=src,
+            )
+        if cls == "Not":
+            return Node("Not", {}, [expr(f["child"])], src=src)
+        if cls in ("UnaryMinus", "UnaryPositive"):
+            sign = "-" if cls == "UnaryMinus" else "+"
+            return Node("Unary", {"op": sign}, [expr(f["child"])], src=src)
+        if cls == "BitwiseNot":
+            return Node("Unary", {"op": "~"}, [expr(f["child"])], src=src)
+        if cls == "In":
+            return Node(
+                "In", {}, [expr(f["value"])] + [expr(e) for e in f["list"]], src=src
+            )
+        if cls in ("Like", "RLike", "ILike"):
+            kw = {"Like": "like", "RLike": "rlike", "ILike": "ilike"}[cls]
+            return Node(
+                "LikeOp", {"kw": kw}, [expr(f["left"]), expr(f["right"])], src=src
+            )
+        if cls in ("IsNull", "IsNotNull"):
+            kw = "isnull" if cls == "IsNull" else "isnotnull"
+            return Node("NullTest", {"kw": kw}, [expr(f["child"])], src=src)
+        if cls == "CaseWhen":
+            els = f["elseValue"]
+            return Node(
+                "CaseWhen",
+                {
+                    "branches": [
+                        (expr(t["f"]["_1"]), expr(t["f"]["_2"]))
+                        for t in f["branches"]
+                    ],
+                    "else": expr(els) if els is not None else None,
+                },
+                src=src,
+            )
+        if cls == "UnresolvedExtractValue":
+            return Node(
+                "Subscript", {}, [expr(f["child"]), expr(f["extraction"])], src=src
+            )
+
+        if cls in ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery"):
+            # expression-level subquery: keep the inner plan so the walker
+            # can register its input tables (beyond the reference's Q3).
+            # The EXPRESSION origin is unreliable here — Exists spans
+            # `NOT EXISTS (…)` under a NOT and the WHOLE statement when
+            # bare — but the inner PLAN's origin is the exact subquery
+            # text in every case; carry it for the renderer.
+            inner = f["plan"]
+            return Node(
+                "SubqueryExpr",
+                {"plan": self.plan(inner), "kind": cls, "plan_src": self.src(inner)},
+                src=src,
+            )
+        if cls == "InSubquery":
+            values = [expr(v) for v in f["values"]]
+            inner = self.nodes[f["query"]]["f"]["plan"]  # ListQuery's inner plan
+            return Node(
+                "SubqueryExpr",
+                {"plan": self.plan(inner), "kind": cls, "plan_src": self.src(inner)},
+                values,
+                src=src,
+            )
+
+        # Unknown expression: generic node; renderer falls back to the
+        # source slice, sources = union over children.
+        return Node("Opaque", {"cls": cls}, [expr(c) for c in n["k"]], src=src)
+
+
+def _table_parts(ti: dict) -> list[str]:
+    """A dumped ``TableIdentifier``'s parts: [database,] table."""
+    db = ti["f"]["database"]
+    return ([db] if db else []) + [ti["f"]["table"]]
 
 
 def parse_statement(spark: SparkSession, sql: str) -> Node:

@@ -406,3 +406,28 @@ def test_broken_permanent_view_is_unknown(spark):
             an.analyze("select a from adv_broken", validate=True)
     finally:
         spark.sql("DROP VIEW IF EXISTS adv_broken")
+
+
+def test_literals_render_exactly_as_written(analyzer):
+    """Literals holding a non-BMP character, an embedded double quote, a
+    backslash, a raw tab and a raw newline come back verbatim in the
+    COLFUN:/WHERE: tags.  Catalyst's Origin indices count code points,
+    so a literal AFTER the emoji must still slice at the right place."""
+    emoji, quoted, backslash = "'😀'", r'"say \"hi\""', r"'c:\\tmp'"
+    tab, newline = "'\t'", "'\n'"
+    after_emoji, quote_only, lone_backslash = "'x😀y'", r'"q\""', r"'\\'"
+    res = analyzer.analyze(
+        f"use db;insert into table dest select concat({emoji}, a), "
+        f"concat(b, {quoted}, {backslash}, {tab}, {newline}) from src "
+        f"where a = {after_emoji} and b <> {quote_only} and k = {lone_backslash}"
+    )
+    where = (
+        f"WHERE:((db.src.a = {after_emoji} and db.src.b <> {quote_only}) "
+        f"and db.src.k = {lone_backslash})"
+    )
+    first, second = res.col_lines
+    assert set(first.conditions) == {f"COLFUN:concat({emoji},db.src.a)", where}
+    assert set(second.conditions) == {
+        f"COLFUN:concat(db.src.b,{quoted},{backslash},{tab},{newline})",
+        where,
+    }

@@ -17,6 +17,9 @@ Documented deviations from the upstream expectations:
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
 from hadoop__spark.plans import ColLine, LineageAnalyzer, LineageError
@@ -424,6 +427,113 @@ def test_catalog_lookups_not_stale_across_analyze_calls(spark):
         assert [line.to_name_parse for line in res.col_lines] == ["a", "b"]
     finally:
         spark.catalog.dropTempView("ms_late")
+
+
+def test_plan_conversion_is_one_py4j_call(spark, monkeypatch):
+    """A parsed plan crosses the JVM boundary in one py4j call, however
+    many nodes it has, and the dumper is compiled once per JVM: the
+    first statement of a second analyzer costs one call too."""
+    from hadoop__spark.plans import jbridge
+
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    calls: list[int] = []
+    counting = False
+    send_command = client.send_command
+
+    def counted_send_command(*args, **kwargs):
+        if counting:
+            calls[-1] += 1
+        return send_command(*args, **kwargs)
+
+    convert_plan = jbridge.convert_plan
+
+    def counted_convert_plan(jplan, sql):
+        nonlocal counting
+        if counting:  # a recursive converter: count the outermost call
+            return convert_plan(jplan, sql)
+        calls.append(0)
+        counting = True
+        try:
+            return convert_plan(jplan, sql)
+        finally:
+            counting = False
+
+    monkeypatch.setattr(client, "send_command", counted_send_command)
+    monkeypatch.setattr(jbridge, "convert_plan", counted_convert_plan)
+    ms = DictMetastore(
+        {
+            "app.orders": ["id", "cust", "amt"],
+            "app.customers": ["id", "name"],
+            "app.vip": ["id"],
+            "app.dest": ["name", "size", "amt"],
+        }
+    )
+    sql = (
+        "with big as (select cust, amt from app.orders where amt > 10) "
+        "insert into table app.dest select c.name, case when b.amt > 100 "
+        "then 'large' else 'small' end, nvl(b.amt, 0) from app.customers c "
+        "join big b on c.id = b.cust where c.id in (select id from app.vip)"
+    )
+    first = LineageAnalyzer(spark, ms)
+    first.analyze(sql)  # warm-up: the session's first dump may compile
+    res = first.analyze(sql)
+    assert res.input_tables == {"app.orders", "app.customers", "app.vip"}
+    assert res.output_tables == {"app.dest"}
+    assert calls[-1] == 1
+    LineageAnalyzer(spark, ms).analyze(sql)
+    assert len(calls) == 3 and calls[-1] == 1
+
+
+def test_concurrent_analyze_calls_compile_one_dumper(spark, monkeypatch):
+    """``analyze`` from more threads than cores, starting from a JVM
+    with no compiled dumper: every thread gets the sequential result,
+    and ``PlanDump`` is compiled once, not once per racing thread."""
+    from hadoop__spark.plans import jbridge
+
+    ms = DictMetastore(
+        {"app.src": ["id", "amt", "tag"], "app.dim": ["id", "name"],
+         "app.dst": ["id", "v", "name"]}
+    )
+    script = (
+        "insert into table app.dst select s.id, case when s.amt > 1 then "
+        "concat('😀', s.tag) else 'x' end, d.name from app.src s join app.dim d "
+        "on s.id = d.id where s.tag in ('a', 'b');"
+        "with t as (select id, sum(amt) v from app.src group by id) "
+        "select t.id, t.v from t where t.v > (select avg(amt) from app.src)"
+    )
+    expected = LineageAnalyzer(spark, ms).analyze(script)
+    compiles = []
+
+    def counted_view(*args, **kwargs):
+        compiles.append(1)
+        return jvm_view(*args, **kwargs)
+
+    jvm_view = jbridge.JVMView
+    monkeypatch.setattr(jbridge, "JVMView", counted_view)
+    monkeypatch.setattr(jbridge, "_dumpers", {})
+    results, errors = [], []
+
+    def work():
+        try:
+            for _ in range(3):
+                results.append(LineageAnalyzer(spark, ms).analyze(script))
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert results == [expected] * 24
+    assert compiles == [1]
 
 
 def test_ddl_statement_kinds(spark):
