@@ -27,7 +27,7 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from hadoop__spark.operators.text import (
     exact_key,
@@ -248,6 +248,64 @@ def _minhash_signatures(base: DataFrame, num_perm: int) -> DataFrame:
     )
 
 
+def _num_perm(mh: DataFrame, bands: int | None = None) -> int:
+    """Signature width of an (_id, mh_*) frame.  With ``bands``, refuse
+    a band count that does not divide it: rows_per_band would TRUNCATE
+    silently — and at num_perm < bands every band hashed a constant,
+    putting the whole corpus in one capped bucket (recall collapse)."""
+    num_perm = sum(c.startswith("mh_") for c in mh.columns)
+    if bands is not None and num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    return num_perm
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    id_a: str,
+    id_b: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact verify of a candidate-pair frame ``(id_a, id_b)``: join
+    each side's full shingle set from the (_id, _sh) frames ``sh_a`` and
+    ``sh_b``, compute Jaccard with ``array_intersect``/``array_union``
+    (no UDF) and keep the pairs at or above ``threshold``."""
+    return (
+        cand.join(
+            sh_a.select(F.col("_id").alias(id_a), F.col("_sh").alias("sh_a")),
+            id_a,
+        )
+        .join(
+            sh_b.select(F.col("_id").alias(id_b), F.col("_sh").alias("sh_b")),
+            id_b,
+        )
+        .select(
+            id_a,
+            id_b,
+            (
+                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+                / F.size(F.array_union("sh_a", "sh_b"))
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _capped(members: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """At most ``cap`` members (smallest ``_id`` first) per bucket
+    ``keys``.  A bucket that large means the band hash is degenerate
+    for those docs (boilerplate/empty shingles), and their real
+    near-dup pairs almost surely co-occur in a healthier band — the
+    standard datasketch/Spark-LSH mitigation."""
+    w = Window.partitionBy(*keys).orderBy("_id")
+    return (
+        members.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
+        .drop("_rn")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -257,7 +315,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.8,
     max_bucket: int = 1000,
-    cache: str = "auto",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding + exact verify.
 
@@ -267,11 +324,8 @@ def minhash_lsh_pairs(
     (1/16)^(1/4) ≈ 0.5, so recall at 0.8 is ~1-3e-9 — the exact-verify
     step then removes all false positives, making the operator's output
     equal to exact all-pairs Jaccard at the threshold (which is what
-    the DuckDB oracle computes).
-
-    ``cache`` picks how the shared shingle frame is materialized:
-    ``"persist"``, ``"local_checkpoint"``, or ``"auto"`` (persist
-    unless dynamic allocation is on — see below).
+    the DuckDB oracle computes).  Shingles and signs the text, then
+    pairs through :func:`minhash_lsh_pairs_frames`.
     """
     # The shingle frame feeds three consumers (signatures + both sides
     # of the exact-verify join); without materialization each one
@@ -283,8 +337,8 @@ def minhash_lsh_pairs(
     #   plan-matching lets repeated calls reuse the cache (warm runs
     #   ~25% faster than checkpointing).  Cost: entries live in the
     #   CacheManager until unpersist, and a function returning a lazy
-    #   plan has no safe unpersist point — long-lived sessions rely on
-    #   LRU eviction.
+    #   plan has no safe unpersist point — long-lived sessions release
+    #   them through release_probe_caches.
     # * localCheckpoint(eager=False): blocks are released by the
     #   ContextCleaner when the caller drops the frame, but lineage is
     #   TRUNCATED and blocks are unreplicated executor-local — any
@@ -292,42 +346,27 @@ def minhash_lsh_pairs(
     #   allocation) fails the query with a missing-checkpoint-block
     #   error instead of recomputing.
     #
-    # "auto" resolves to persist: recomputability + cache reuse beat
-    # automatic cleanup, and under dynamic allocation localCheckpoint
-    # is outright unsafe (Spark's own docs flag it).  At 100 TB,
-    # materialize signatures as a table instead (NOTES.md).
-    if num_perm % bands:
-        # the four table/frame entry points all refuse this; skipping
-        # the check here let rows_per_band TRUNCATE silently — and at
-        # num_perm < bands every band hashed a constant, putting the
-        # whole corpus in one capped bucket (recall collapse)
-        raise ValueError(
-            f"bands={bands} must divide num_perm={num_perm}"
-        )
+    # So persist: recomputability + cache reuse beat automatic cleanup,
+    # and under dynamic allocation localCheckpoint is outright unsafe
+    # (Spark's own docs flag it).  At 100 TB, materialize signatures as
+    # a table instead (minhash_write_signatures, NOTES.md).
     base = shingle_frame(df, text_col, id_col, n)
-    if cache == "auto":
-        cache = "persist"
-    if cache == "persist":
-        base = _register_probe_cache(
-            base.persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    elif cache == "local_checkpoint":
-        base = base.localCheckpoint(eager=False)
-    else:
-        raise ValueError(
-            f"cache must be 'auto', 'persist', or 'local_checkpoint', got {cache!r}"
-        )
+    # signed BEFORE the persist so a bad band count is refused with no
+    # cache registered; cached data is substituted when the plan is
+    # optimized, so the signatures still read the persisted frame
     mh = _minhash_signatures(base, num_perm)
-    return _lsh_pairs_from_frames(
-        mh, base.select("_id", "_sh"), num_perm, bands, threshold, max_bucket
+    _num_perm(mh, bands)
+    base = _register_probe_cache(base.persist(StorageLevel.MEMORY_AND_DISK))
+    return minhash_lsh_pairs_frames(
+        mh, base.select("_id", "_sh"), bands, threshold, max_bucket
     )
 
 
-def _band_buckets(mh: DataFrame, num_perm: int, bands: int) -> DataFrame:
+def _band_buckets(mh: DataFrame, bands: int) -> DataFrame:
     """(_id, band_idx, band_hash) LSH bucket memberships from an
     (_id, mh_0..mh_{num_perm-1}) signature frame: band hash =
     xxhash64 over the band's rows_per_band signature slots."""
-    rows_per_band = num_perm // bands
+    rows_per_band = _num_perm(mh, bands) // bands
     banded = mh.select(
         "_id",
         F.array(
@@ -348,72 +387,6 @@ def _band_buckets(mh: DataFrame, num_perm: int, bands: int) -> DataFrame:
     )
 
 
-def _lsh_pairs_from_frames(
-    mh: DataFrame,
-    sh_sets: DataFrame,
-    num_perm: int,
-    bands: int,
-    threshold: float,
-    max_bucket: int,
-) -> DataFrame:
-    """Banding + bucket candidate generation + exact-Jaccard verify,
-    from an (_id, mh_0..mh_{num_perm-1}) signature frame and an
-    (_id, _sh) shingle frame.  Shared by the in-memory
-    :func:`minhash_lsh_pairs` and the materialized
-    :func:`minhash_lsh_pairs_from` paths — identical plan, different
-    provenance of the two frames."""
-    buckets = _band_buckets(mh, num_perm, bands)
-    # Candidate pairs by grouping each LSH bucket and emitting its
-    # i<j combinations with higher-order array functions: ONE shuffle
-    # of the bucket table (vs a self-join shuffling it twice), same
-    # output.  Measured ~3 s faster cold at sf0.1.  Pair count per
-    # bucket is quadratic (inherent to LSH banding), so hot buckets
-    # are capped at ``max_bucket`` members BEFORE collect_list ever
-    # materializes them (row_number over the same key — the window's
-    # hash partitioning is reused by the groupBy, so the cap adds no
-    # extra shuffle).  A bucket that large means the band hash is
-    # degenerate for those docs (boilerplate/empty shingles), and its
-    # real near-dup pairs almost surely co-occur in a healthier band —
-    # the standard datasketch/Spark-LSH mitigation.
-    from pyspark.sql import Window
-
-    w_bucket = Window.partitionBy("band_idx", "band_hash").orderBy("_id")
-    grouped = (
-        buckets.withColumn("_rn", F.row_number().over(w_bucket))
-        .where(F.col("_rn") <= max_bucket)
-        .groupBy("band_idx", "band_hash")
-        .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
-        .where(F.size("ids") > 1)
-    )
-    cand = (
-        grouped.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    verified = (
-        cand.join(sh_sets.withColumnRenamed("_id", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
-        .join(sh_sets.withColumnRenamed("_id", "id_b").withColumnRenamed("_sh", "sh_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified
-
-
 def minhash_write_signatures(
     df: DataFrame,
     path: str,
@@ -431,48 +404,24 @@ def minhash_write_signatures(
     This is the 100 TB lifecycle answer to the persist-vs-checkpoint
     tradeoff documented in :func:`minhash_lsh_pairs` (and the path
     NOTES.md names): signatures computed once, stored columnar, shared
-    by every later pairing run — no CacheManager entry to leak in a
+    by every later pairing run (:func:`minhash_lsh_pairs_frames` over
+    the two tables read back) — no CacheManager entry to leak in a
     long-lived session, no executor-loss recompute risk, and banding
     reads ONLY the mh_* columns (column pruning) while the verify join
     reads only (_id, _sh).  Mirrors the persisted-IVF-index pattern
     (``similarity.ivf_write_index``).
     """
-    if mode == "append":
-        _check_append_num_perm(df.sparkSession, path, num_perm)
     base = shingle_frame(df, text_col, id_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
-        base.write.mode(mode).parquet(f"{path}/shingles")
-        _minhash_signatures(base, num_perm).write.mode(mode).parquet(
-            f"{path}/signatures"
+        minhash_write_signatures_frames(
+            df.sparkSession, path, base, _minhash_signatures(base, num_perm), mode
         )
     finally:
         # both consumers are eager write jobs, so this unpersist point
         # is safe — unlike the lazy-return in minhash_lsh_pairs
         base.unpersist()
-
-
-def _check_append_num_perm(spark, path: str, num_perm: int) -> None:
-    """Refuse an append whose ``num_perm`` differs from the stored
-    signature table's: the mismatched files' schema differs, and
-    Spark's non-merging parquet read would then resolve to an
-    arbitrary file's schema (silent corruption) — fail loudly
-    instead.  Existence is checked explicitly (NOT by catching the
-    read error, which would also swallow transient I/O failures and
-    skip the guard at exactly the wrong moment).  (An ``n`` mismatch
-    is not schema-visible — the writers' docstring contract covers
-    it.)"""
-    from hadoop__spark.operators.util import table_exists
-
-    if table_exists(spark, f"{path}/signatures"):
-        stored = spark.read.parquet(f"{path}/signatures").columns
-        stored_perm = sum(c.startswith("mh_") for c in stored)
-        if stored_perm != num_perm:
-            raise ValueError(
-                f"append with num_perm={num_perm} onto a table "
-                f"written with num_perm={stored_perm}"
-            )
 
 
 def minhash_write_signatures_frames(
@@ -486,43 +435,33 @@ def minhash_write_signatures_frames(
     ``sh`` is an (_id, _sh) shingle frame, ``mh`` an (_id, mh_*)
     signature frame (e.g. a batch's staged signature tables that the
     probe and the within-batch pairing already consumed).  Writes the
-    same two tables with the same ``num_perm`` append guard; nothing
-    is re-tokenized or re-hashed — the single-computation half of the
-    ingest loop's signature staging.  ``mode`` is REQUIRED (no
-    default): the from-text twin defaults to ``"overwrite"`` while
-    this variant's natural use is the ingest loop's ``"append"`` — a
-    silent default either way would flip write semantics under a
-    caller porting between the two."""
-    num_perm = sum(c.startswith("mh_") for c in mh.columns)
-    if mode == "append":
-        _check_append_num_perm(spark, path, num_perm)
+    same two tables; nothing is re-tokenized or re-hashed — the
+    single-computation half of the ingest loop's signature staging.
+    ``mode`` is REQUIRED (no default): the from-text twin defaults to
+    ``"overwrite"`` while this variant's natural use is the ingest
+    loop's ``"append"`` — a silent default either way would flip write
+    semantics under a caller porting between the two.
+
+    An append whose ``num_perm`` differs from the stored signature
+    table's is refused: the mismatched files' schema differs, and
+    Spark's non-merging parquet read would then resolve to an
+    arbitrary file's schema (silent corruption).  (An ``n`` mismatch is
+    not schema-visible — the docstring contract above covers it.)"""
+    from hadoop__spark.operators.util import table_exists
+
+    num_perm = _num_perm(mh)
+    # existence is checked explicitly, NOT by catching the read error,
+    # which would also swallow transient I/O failures and skip the
+    # guard at exactly the wrong moment
+    if mode == "append" and table_exists(spark, f"{path}/signatures"):
+        stored = _num_perm(spark.read.parquet(f"{path}/signatures"))
+        if stored != num_perm:
+            raise ValueError(
+                f"append with num_perm={num_perm} onto a table "
+                f"written with num_perm={stored}"
+            )
     sh.select("_id", "_sh").write.mode(mode).parquet(f"{path}/shingles")
     mh.write.mode(mode).parquet(f"{path}/signatures")
-
-
-def minhash_lsh_pairs_from(
-    spark,
-    path: str,
-    bands: int = 16,
-    threshold: float = 0.8,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Near-duplicate pairs from signatures materialized by
-    :func:`minhash_write_signatures` — same banding/verify plan as
-    :func:`minhash_lsh_pairs`, but each consumer re-reads the parquet
-    tables instead of sharing an in-memory persist.  ``bands`` may
-    differ from the write-time default as long as it divides the stored
-    ``num_perm`` (the banding S-curve is a query-time choice)."""
-    sh_sets = spark.read.parquet(f"{path}/shingles")
-    mh = spark.read.parquet(f"{path}/signatures")
-    num_perm = sum(c.startswith("mh_") for c in mh.columns)
-    if num_perm % bands:
-        raise ValueError(
-            f"bands={bands} must divide the stored num_perm={num_perm}"
-        )
-    return _lsh_pairs_from_frames(
-        mh, sh_sets, num_perm, bands, threshold, max_bucket
-    )
 
 
 def minhash_lsh_pairs_frames(
@@ -532,22 +471,49 @@ def minhash_lsh_pairs_frames(
     threshold: float = 0.8,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """:func:`minhash_lsh_pairs` from ALREADY-COMPUTED frames — ``mh``
-    an (_id, mh_*) signature frame, ``sh_sets`` an (_id, _sh) shingle
-    frame (e.g. the ingest loop's per-batch signature staging,
-    semi-joined down to the ids still alive after the exact pass).
-    Identical banding/cap/verify plan and output to the text path —
-    the per-row shingle and signature projections are deterministic,
-    so frames computed once on a superset and filtered equal frames
-    recomputed on the subset."""
-    num_perm = sum(c.startswith("mh_") for c in mh.columns)
-    if num_perm % bands:
-        raise ValueError(
-            f"bands={bands} must divide the frame's num_perm={num_perm}"
-        )
-    return _lsh_pairs_from_frames(
-        mh, sh_sets, num_perm, bands, threshold, max_bucket
+    """Banding + bucket candidate generation + exact-Jaccard verify
+    from ALREADY-COMPUTED frames — ``mh`` an (_id, mh_*) signature
+    frame, ``sh_sets`` an (_id, _sh) shingle frame.  Every MinHash
+    self-pair route ends here: :func:`minhash_lsh_pairs` signs the text
+    first; the tables :func:`minhash_write_signatures` wrote are paired
+    by reading them back (``spark.read.parquet`` of ``{path}/signatures``
+    and ``{path}/shingles``); the ingest loop passes its per-batch
+    signature staging, semi-joined down to the ids still alive after
+    the exact pass.  The per-row shingle and signature projections are
+    deterministic, so frames computed once on a superset and filtered
+    equal frames recomputed on the subset.  ``bands`` is a query-time
+    choice (the banding S-curve) and must divide the frame's
+    ``num_perm``."""
+    keys = ["band_idx", "band_hash"]
+    # Candidate pairs by grouping each LSH bucket and emitting its
+    # i<j combinations with higher-order array functions: ONE shuffle
+    # of the bucket table (vs a self-join shuffling it twice), same
+    # output.  Measured ~3 s faster cold at sf0.1.  Pair count per
+    # bucket is quadratic (inherent to LSH banding), so hot buckets
+    # are capped at ``max_bucket`` members BEFORE collect_list ever
+    # materializes them (row_number over the same key — the window's
+    # hash partitioning is reused by the groupBy, so the cap adds no
+    # extra shuffle).
+    grouped = (
+        _capped(_band_buckets(mh, bands), keys, max_bucket)
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
+        .where(F.size("ids") > 1)
     )
+    cand = (
+        grouped.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ids, (x, i) -> "
+                    "transform(slice(ids, i + 2, size(ids)), "
+                    "y -> struct(x AS id_a, y AS id_b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+    return _jaccard_verify(cand, sh_sets, sh_sets, "id_a", "id_b", threshold)
 
 
 def minhash_lsh_pairs_between(
@@ -573,27 +539,13 @@ def minhash_lsh_pairs_between(
     exact-verified Jaccard ≥ ``threshold``.  Within-batch duplicates
     are deliberately out of scope — run :func:`minhash_lsh_pairs` on
     the batch for those; the composition covers A∪B completely when
-    the corpus was already self-deduped.
-
-    Scale shape: the batch (small by definition) is shingled and
-    signed in memory; candidate generation is a bucket equi-join of
-    the batch's band table against the stored band table — cost is
-    proportional to the batch's bucket memberships, never to corpus
-    pairs.  Hot buckets are capped at ``max_bucket`` members per side
-    (same degenerate-band mitigation as the self-join path).  The
-    index's signature scan is column-pruned to mh_*; the verify join
-    reads stored shingles only for candidate ids.
+    the corpus was already self-deduped.  Shingles and signs the batch
+    at the stored ``num_perm``, then pairs through
+    :func:`minhash_lsh_pairs_between_frames`.
     """
-    num_perm = sum(
-        c.startswith("mh_")
-        for c in spark.read.parquet(f"{path}/signatures").columns
-    )
-    if num_perm % bands:
-        # validate BEFORE the persist below: raising after it would
-        # strand a registered CacheManager entry on the error path
-        raise ValueError(
-            f"bands={bands} must divide the stored num_perm={num_perm}"
-        )
+    # validate BEFORE the persist below: raising after it would
+    # strand a registered CacheManager entry on the error path
+    num_perm = _num_perm(spark.read.parquet(f"{path}/signatures"), bands)
     # same persist-with-no-unpersist-point tradeoff as
     # minhash_lsh_pairs (documented there): the batch shingle frame
     # feeds both the signatures and the verify join; registered so
@@ -603,11 +555,10 @@ def minhash_lsh_pairs_between(
             StorageLevel.MEMORY_AND_DISK
         )
     )
-    mh_new = _minhash_signatures(base_new, num_perm)
     return minhash_lsh_pairs_between_frames(
         spark,
         path,
-        mh_new,
+        _minhash_signatures(base_new, num_perm),
         base_new.select("_id", "_sh"),
         bands=bands,
         threshold=threshold,
@@ -630,67 +581,43 @@ def minhash_lsh_pairs_between_frames(
     at the index's own ``n``/``num_perm`` (the ingest loop stages them
     once per batch and reuses them here, in the within-batch pairing,
     and in the plane append — one tokenize+hash pass instead of
-    three).  Identical plan and output to the text path; ``mh_new``'s
-    width must match the stored index's ``num_perm``."""
-    from pyspark.sql import Window
+    three).  ``mh_new``'s width must match the stored index's
+    ``num_perm``.
 
-    sh_old = spark.read.parquet(f"{path}/shingles")
+    Scale shape: candidate generation is a bucket equi-join of the
+    batch's band table against the stored band table — cost is
+    proportional to the batch's bucket memberships, never to corpus
+    pairs.  Hot buckets are capped at ``max_bucket`` members per side
+    (same degenerate-band mitigation as the self-join path).  The
+    index's signature scan is column-pruned to mh_*; the verify join
+    reads stored shingles only for candidate ids."""
     mh_old = spark.read.parquet(f"{path}/signatures")
-    num_perm = sum(c.startswith("mh_") for c in mh_old.columns)
-    new_perm = sum(c.startswith("mh_") for c in mh_new.columns)
+    num_perm, new_perm = _num_perm(mh_old), _num_perm(mh_new)
     if new_perm != num_perm:
         raise ValueError(
             f"batch signature frame has num_perm={new_perm}, the "
             f"stored index num_perm={num_perm} — probe is meaningless "
             "across widths"
         )
-    if num_perm % bands:
-        raise ValueError(
-            f"bands={bands} must divide the stored num_perm={num_perm}"
-        )
-
-    def _cap(buckets: DataFrame) -> DataFrame:
-        w = Window.partitionBy("band_idx", "band_hash").orderBy("_id")
-        return (
-            buckets.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_bucket)
-            .drop("_rn")
-        )
-
+    keys = ["band_idx", "band_hash"]
     cand = (
-        _cap(_band_buckets(mh_new, num_perm, bands))
+        _capped(_band_buckets(mh_new, bands), keys, max_bucket)
         .withColumnRenamed("_id", "id_new")
         .join(
-            _cap(_band_buckets(mh_old, num_perm, bands)).withColumnRenamed(
-                "_id", "id_old"
-            ),
-            ["band_idx", "band_hash"],
+            _capped(_band_buckets(mh_old, bands), keys, max_bucket)
+            .withColumnRenamed("_id", "id_old"),
+            keys,
         )
         .select("id_new", "id_old")
         .distinct()
     )
-    return (
-        cand.join(
-            sh_new.select(
-                F.col("_id").alias("id_new"), F.col("_sh").alias("sh_a")
-            ),
-            "id_new",
-        )
-        .join(
-            sh_old.select(
-                F.col("_id").alias("id_old"), F.col("_sh").alias("sh_b")
-            ),
-            "id_old",
-        )
-        .select(
-            "id_new",
-            "id_old",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _jaccard_verify(
+        cand,
+        sh_new,
+        spark.read.parquet(f"{path}/shingles"),
+        "id_new",
+        "id_old",
+        threshold,
     )
 
 
@@ -748,6 +675,38 @@ def fingerprint_filter_new(
     )
 
 
+def _inverted(sh: DataFrame) -> DataFrame:
+    """(_id, _n, _s) postings of an (_id, _sh) frame.  ``_n`` (the
+    set size, which the prefix length needs) rides along from before
+    the explode, so no extra sizes join."""
+    return sh.select(
+        "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_s")
+    )
+
+
+def _with_stale_df(inv: DataFrame, doc_freq: DataFrame) -> DataFrame:
+    """Postings ranked by a supplied ``(_s, _df)`` table that may
+    predate some shingles: left join, absent shingles get df 0 and rank
+    first (the stale-df argument of :func:`ngram_jaccard_pairs` — any
+    consistent order preserves exactness)."""
+    return inv.join(doc_freq.select("_s", "_df"), "_s", "left").withColumn(
+        "_df", F.coalesce("_df", F.lit(0))
+    )
+
+
+def _prefix(ranked: DataFrame, threshold: float) -> DataFrame:
+    """The WWW'07 prefix of every document in a ranked postings frame
+    (_id, _n, _s, _df): its first ``|d| - ceil(t*|d|) + 1`` shingles
+    under the global (df asc, shingle asc) order.  The rank window
+    partitions by document, so its buffer is bounded by document
+    length, never by corpus size."""
+    w = Window.partitionBy("_id").orderBy("_df", "_s")
+    return ranked.withColumn("_rk", F.row_number().over(w)).where(
+        F.col("_rk")
+        <= F.col("_n") - F.ceil(F.lit(float(threshold)) * F.col("_n")) + 1
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -797,7 +756,7 @@ def ngram_jaccard_pairs(
     selective.
 
     The shingle frame is persisted (same strategy decision as
-    :func:`minhash_lsh_pairs` — see its docstring): it feeds the
+    :func:`minhash_lsh_pairs` — see the comment there): it feeds the
     inverted index (document frequencies + the prefix ranking) AND
     both sides of the exact verify join, so the lazy plan re-ran the
     corpus normalize+shingle projection four times (r15 before-plan:
@@ -836,33 +795,14 @@ def ngram_jaccard_pairs(
             .where(F.col("jaccard") >= threshold)
         )
 
-    from pyspark.sql.window import Window
-
-    # _n rides along from before the explode, so no extra sizes join.
-    inv = sh.select(
-        "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_s")
-    )
+    inv = _inverted(sh)
     if doc_freq is None:
-        doc_freq = inv.groupBy("_s").agg(F.count("*").alias("_df"))
-        ranked = inv.join(doc_freq, "_s")
-    else:
-        # supplied table may predate some shingles: left join, absent
-        # shingles rank first with df 0 (see docstring — any
-        # consistent order preserves exactness)
-        ranked = inv.join(doc_freq.select("_s", "_df"), "_s", "left").withColumn(
-            "_df", F.coalesce("_df", F.lit(0))
+        ranked = inv.join(
+            inv.groupBy("_s").agg(F.count("*").alias("_df")), "_s"
         )
-    # Per-document rank under the global (df asc, shingle asc) order.
-    # The window partitions by document, so its buffer is bounded by
-    # document length, never by corpus size.
-    ranked = ranked.withColumn(
-        "_rk",
-        F.row_number().over(Window.partitionBy("_id").orderBy("_df", "_s")),
-    )
-    prefix = ranked.where(
-        F.col("_rk")
-        <= F.col("_n") - F.ceil(F.lit(float(threshold)) * F.col("_n")) + 1
-    )
+    else:
+        ranked = _with_stale_df(inv, doc_freq)
+    prefix = _prefix(ranked, threshold)
     cand = (
         prefix.alias("a")
         .join(
@@ -872,26 +812,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    sh_sets = sh.select("_id", "_sh")
-    return (
-        cand.join(
-            sh_sets.withColumnRenamed("_id", "id_a").withColumnRenamed("_sh", "sh_a"),
-            "id_a",
-        )
-        .join(
-            sh_sets.withColumnRenamed("_id", "id_b").withColumnRenamed("_sh", "sh_b"),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(cand, sh, sh, "id_a", "id_b", threshold)
 
 
 def ngram_write_doc_freq(
@@ -937,36 +858,22 @@ def ngram_write_index(
     every needed one); :func:`ngram_jaccard_pairs_between` enforces
     that.  Sign once, probe every batch.
     """
-    from pyspark.sql.window import Window
+    from hadoop__spark.operators.util import local_frame
 
     sh = shingle_frame(df, text_col, id_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
         sh.write.mode("overwrite").parquet(f"{path}/shingle_sets")
-        inv = sh.select(
-            "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_s")
-        )
+        inv = _inverted(sh)
         dfq = inv.groupBy("_s").agg(F.count("*").alias("_df"))
         dfq.write.mode("overwrite").parquet(f"{path}/doc_freq")
         dfq_stored = df.sparkSession.read.parquet(f"{path}/doc_freq")
-        ranked = inv.join(dfq_stored, "_s").withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("_id").orderBy("_df", "_s")),
-        )
-        (
-            ranked.where(
-                F.col("_rk")
-                <= F.col("_n") - F.ceil(F.lit(float(threshold)) * F.col("_n")) + 1
-            )
-            .select("_s", "_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/prefix")
-        )
+        _prefix(inv.join(dfq_stored, "_s"), threshold).select(
+            "_s", "_id"
+        ).write.mode("overwrite").parquet(f"{path}/prefix")
         # Arrow-built local frame — see util.local_frame: the pickled
         # default made this one-row coalesce(1) write cost ~5 s
-        from hadoop__spark.operators.util import local_frame
-
         local_frame(
             df.sparkSession,
             [(float(threshold), int(n))],
@@ -1006,8 +913,6 @@ def ngram_append_index(
     (wasted candidates), a STRICTER one shorter than the bound needs
     (silent recall loss), and a different ``n`` makes cross-side
     Jaccard meaningless."""
-    from pyspark.sql.window import Window
-
     from hadoop__spark.operators.util import table_exists
 
     if not table_exists(spark, f"{path}/meta"):
@@ -1032,30 +937,9 @@ def ngram_append_index(
     )
     try:
         sh.write.mode("append").parquet(f"{path}/shingle_sets")
-        inv = sh.select(
-            "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_s")
-        )
-        ranked = (
-            inv.join(dfq, "_s", "left")
-            .withColumn("_df", F.coalesce("_df", F.lit(0)))
-            .withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy("_id").orderBy("_df", "_s")
-                ),
-            )
-        )
-        (
-            ranked.where(
-                F.col("_rk")
-                <= F.col("_n")
-                - F.ceil(F.lit(float(meta.threshold)) * F.col("_n"))
-                + 1
-            )
-            .select("_s", "_id")
-            .write.mode("append")
-            .parquet(f"{path}/prefix")
-        )
+        _prefix(_with_stale_df(_inverted(sh), dfq), meta.threshold).select(
+            "_s", "_id"
+        ).write.mode("append").parquet(f"{path}/prefix")
     finally:
         sh.unpersist()
 
@@ -1102,58 +986,27 @@ def ngram_jaccard_pairs_between(
             f"{meta.threshold}: stored prefixes are too short for this "
             "bound — rebuild the index at the lower threshold"
         )
-    from pyspark.sql.window import Window
-
     dfq = spark.read.parquet(f"{path}/doc_freq")
     sh_new = _register_probe_cache(
         shingle_frame(df, text_col, id_col, meta.n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
     )
-    inv_new = sh_new.select(
-        "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_s")
-    )
-    ranked = inv_new.join(dfq, "_s", "left").withColumn(
-        "_df", F.coalesce("_df", F.lit(0))
-    ).withColumn(
-        "_rk",
-        F.row_number().over(Window.partitionBy("_id").orderBy("_df", "_s")),
-    )
-    prefix_new = ranked.where(
-        F.col("_rk")
-        <= F.col("_n") - F.ceil(F.lit(float(threshold)) * F.col("_n")) + 1
-    ).select("_s", F.col("_id").alias("id_new"))
-    prefix_old = spark.read.parquet(f"{path}/prefix").select(
-        "_s", F.col("_id").alias("id_old")
-    )
+    prefix_new = _prefix(_with_stale_df(_inverted(sh_new), dfq), threshold)
+    prefix_old = spark.read.parquet(f"{path}/prefix")
     cand = (
-        prefix_new.join(prefix_old, "_s")
+        prefix_new.select("_s", F.col("_id").alias("id_new"))
+        .join(prefix_old.select("_s", F.col("_id").alias("id_old")), "_s")
         .select("id_new", "id_old")
         .distinct()
     )
-    sh_old = spark.read.parquet(f"{path}/shingle_sets")
-    return (
-        cand.join(
-            sh_new.select(
-                F.col("_id").alias("id_new"), F.col("_sh").alias("sh_a")
-            ),
-            "id_new",
-        )
-        .join(
-            sh_old.select(
-                F.col("_id").alias("id_old"), F.col("_sh").alias("sh_b")
-            ),
-            "id_old",
-        )
-        .select(
-            "id_new",
-            "id_old",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _jaccard_verify(
+        cand,
+        sh_new,
+        spark.read.parquet(f"{path}/shingle_sets"),
+        "id_new",
+        "id_old",
+        threshold,
     )
 
 
@@ -1161,9 +1014,10 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: in
     """64-bit SimHash over n-gram shingle features, fully JVM-side.
 
     Bit i of the signature is 1 iff the majority of feature hashes have
-    bit i set.  One ``aggregate`` pass builds all 64 bit-counts at once
-    (same single-pass trick as :func:`_minhash_array`); no shuffle, no
-    UDF.
+    bit i set.  The shingles are exploded and hashed once each, and
+    one ``groupBy`` on the document sums all 64 bit indicators at once
+    (64 conditional ``sum`` aggregates, partially aggregated map-side);
+    no UDF.
     """
     masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
     # explode_outer, not explode: shingle_frame guarantees a non-null,
@@ -1198,19 +1052,30 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: in
 
 
 def _simhash_bucket_guard(
-    n_docs: int,
-    chunk_bits: int,
-    max_expected_pairs_per_bucket: int,
+    sigs: DataFrame,
+    n_docs: int | None,
+    n_chunks: int,
+    max_pairs: int | None,
 ) -> None:
+    """Refuse a chunking whose expected candidate pairs per chunk
+    bucket, N²/2^(chunk_bits+1), exceed ``max_pairs`` (``None``
+    disables the guard).  N is ``n_docs`` when the caller knows it,
+    else a count of ``sigs`` — one full-scan job, which is why every
+    SimHash entry point takes ``n_docs``."""
+    if max_pairs is None:
+        return
+    if n_docs is None:
+        n_docs = sigs.count()
+    chunk_bits = 64 // n_chunks
     exp_bucket = n_docs / float(2**chunk_bits)
     exp_pairs = exp_bucket * exp_bucket / 2.0
-    if exp_pairs > max_expected_pairs_per_bucket:
+    if exp_pairs > max_pairs:
         raise ValueError(
             f"simhash_pairs: ~{n_docs} docs over 2^{chunk_bits} "
             f"chunk buckets gives an expected {exp_bucket:.0f} "
             f"members and ~{exp_pairs:.2g} candidate pairs per "
             f"bucket (> max_expected_pairs_per_bucket="
-            f"{max_expected_pairs_per_bucket}). Escalate to fewer, "
+            f"{max_pairs}). Escalate to fewer, "
             "wider chunks (smaller n_chunks raises chunk_bits — at "
             "the cost of the guaranteed-recall distance n_chunks-1), "
             "remove exact duplicates first (fingerprint_dedup — "
@@ -1241,20 +1106,135 @@ def _simhash_chunks(sigs: DataFrame, n_chunks: int) -> DataFrame:
     )
 
 
-def _simhash_pairs_from_sigs(
-    sigs: DataFrame,
-    max_hamming: int,
-    n_chunks: int,
+def simhash_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    max_hamming: int = 6,
+    n_chunks: int = 4,
+    max_expected_pairs_per_bucket: int | None = 10_000_000,
+    n_docs: int | None = None,
 ) -> DataFrame:
-    """Chunk-bucket candidate generation + exact Hamming verify from a
-    (_id, simhash) signature frame — shared by the in-memory
-    :func:`simhash_pairs` and the materialized
-    :func:`simhash_pairs_from` paths."""
+    """Near-duplicate pairs by SimHash Hamming distance.
+
+    Candidate generation uses the pigeonhole principle: the 64-bit
+    signature splits into ``n_chunks`` equal chunks, and any pair with
+    Hamming distance < n_chunks must agree exactly on at least one
+    chunk — so a chunk-bucket self-join (one shuffle, no cross join)
+    finds all such pairs; exact Hamming verification then filters
+    candidates.  Recall is 1 for distance ≤ n_chunks-1.  Signs the
+    text, then pairs through :func:`simhash_pairs_frames`.
+
+    Scale trade-off: more chunks → higher guaranteed recall but
+    coarser buckets (64/n_chunks bits each), and bucket size drives the
+    self-join cost.  At billions of docs keep 16-bit chunks
+    (n_chunks=4, recall 1 up to distance 3); small corpora can afford
+    n_chunks=8 for guaranteed recall up to distance 7.
+
+    Buckets cannot be capped (the recall guarantee needs every pair
+    agreeing on a chunk), but the candidate count per bucket is
+    quadratic in the bucket bound ~N/2^chunk_bits: hash-uniform chunk
+    values keep buckets to megabytes even at billions of docs, yet at
+    ~10⁹ docs with 16-bit chunks that is ~15k members → ~10⁸ candidate
+    pairs *per bucket*.  The guard makes that cliff an explicit
+    error instead of a silent cluster-killer (same contract as
+    :func:`embedding_dedup_pairs`'s ``max_rows``): the expected
+    per-bucket pair count (N²/2^(chunk_bits+1)) is checked against
+    ``max_expected_pairs_per_bucket``.  The check needs the corpus
+    size: pass it via ``n_docs`` when known (a catalog/stats lookup,
+    or the pipeline already counted) to skip the count job the guard
+    otherwise runs over ``df``'s rows — at 100 TB that scan costs more
+    than the question deserves.  Pass
+    ``max_expected_pairs_per_bucket=None`` to disable the guard
+    entirely when the cost is understood.
+    """
+    # guarded on the TEXT rows, before signing: counting the signature
+    # frame instead would shingle and aggregate the whole corpus
+    _simhash_bucket_guard(df, n_docs, n_chunks, max_expected_pairs_per_bucket)
+    sigs = simhash(df, text_col, id_col, n).select(
+        F.col(id_col).alias("_id"), "simhash"
+    )
+    return simhash_pairs_frames(
+        sigs, max_hamming, n_chunks, max_expected_pairs_per_bucket=None
+    )
+
+
+def simhash_write_signatures(
+    df: DataFrame,
+    path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    mode: str = "overwrite",
+) -> None:
+    """Materialize SimHash signatures as a parquet table
+    ``{path}/signatures`` (_id, simhash) — the long-lived-pipeline
+    mirror of :func:`minhash_write_signatures`: sign once, store 8
+    bytes per document, and let every later pairing run (different
+    ``max_hamming``/``n_chunks`` through :func:`simhash_pairs_frames`
+    over the table read back, incremental batches) start from the
+    table instead of re-shingling the corpus.  ``mode="append"`` adds
+    a new batch's signatures (the ingest loop); the shingle order
+    ``n`` is not schema-visible, so matching the stored index's ``n``
+    is the caller's contract — exactly as for the MinHash writer's
+    ``n``."""
+    simhash_write_signatures_frames(
+        df.sparkSession,
+        path,
+        simhash(df, text_col, id_col, n).select(
+            F.col(id_col).alias("_id"), "simhash"
+        ),
+        mode,
+    )
+
+
+def simhash_write_signatures_frames(
+    spark,
+    path: str,
+    sigs: DataFrame,
+    mode: str,
+) -> None:
+    """:func:`simhash_write_signatures` from an ALREADY-COMPUTED
+    (_id, simhash) frame — e.g. a batch's staged signature table that
+    the probe and the within-batch pairing already consumed (the
+    ingest loop's single-computation path, mirroring
+    :func:`minhash_write_signatures_frames`).  Nothing is re-shingled
+    or re-hashed.  ``mode`` is REQUIRED (no default) for the same
+    porting-trap reason as the minhash frames writer: the from-text
+    twin defaults to ``"overwrite"``."""
+    sigs.select("_id", "simhash").write.mode(mode).parquet(
+        f"{path}/signatures"
+    )
+
+
+def simhash_pairs_frames(
+    sigs: DataFrame,
+    max_hamming: int = 6,
+    n_chunks: int = 4,
+    max_expected_pairs_per_bucket: int | None = 10_000_000,
+    n_docs: int | None = None,
+) -> DataFrame:
+    """Chunk-bucket candidate generation + exact Hamming verify from an
+    ALREADY-COMPUTED (_id, simhash) frame.  Every SimHash self-pair
+    route ends here: :func:`simhash_pairs` signs the text first; a
+    :func:`simhash_write_signatures` table is paired by reading it back
+    (``max_hamming`` and ``n_chunks`` are query-time choices — the
+    signature is parameterized only by ``n``); the ingest loop passes
+    its per-batch staging.  The per-row signature aggregation is
+    deterministic, so a frame computed once on a superset and
+    semi-joined down to the ids of interest pairs identically to
+    recomputing on the subset.  The expected-pairs guard counts the
+    given frame when ``n_docs`` is not supplied (signature rows, i.e.
+    docs with ≥1 shingle — the from-text twin counts all rows; both
+    are the same order of magnitude, and the guard is an
+    order-of-magnitude cliff check)."""
+    _simhash_bucket_guard(sigs, n_docs, n_chunks, max_expected_pairs_per_bucket)
     chunks = _simhash_chunks(sigs, n_chunks)
     # Group each chunk bucket and expand its i<j combinations — ONE
     # shuffle of the chunk table instead of a self-join shuffling it
-    # twice (same rewrite as minhash_lsh_pairs).  Members carry their
-    # signature so the Hamming verify needs no further join.  No
+    # twice (same rewrite as minhash_lsh_pairs_frames).  Members carry
+    # their signature so the Hamming verify needs no further join.  No
     # bucket cap (the pigeonhole recall guarantee requires every pair
     # agreeing on a chunk), but unlike Zipfian text postings (see
     # ngram_jaccard_pairs) chunk values are hash-uniform, so a
@@ -1293,151 +1273,6 @@ def _simhash_pairs_from_sigs(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_hamming: int = 6,
-    n_chunks: int = 4,
-    max_expected_pairs_per_bucket: int | None = 10_000_000,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance.
-
-    Candidate generation uses the pigeonhole principle: the 64-bit
-    signature splits into ``n_chunks`` equal chunks, and any pair with
-    Hamming distance < n_chunks must agree exactly on at least one
-    chunk — so a chunk-bucket self-join (one shuffle, no cross join)
-    finds all such pairs; exact Hamming verification then filters
-    candidates.  Recall is 1 for distance ≤ n_chunks-1.
-
-    Scale trade-off: more chunks → higher guaranteed recall but
-    coarser buckets (64/n_chunks bits each), and bucket size drives the
-    self-join cost.  At billions of docs keep 16-bit chunks
-    (n_chunks=4, recall 1 up to distance 3); small corpora can afford
-    n_chunks=8 for guaranteed recall up to distance 7.
-
-    Buckets cannot be capped (the recall guarantee needs every pair
-    agreeing on a chunk), but the candidate count per bucket is
-    quadratic in the bucket bound ~N/2^chunk_bits: hash-uniform chunk
-    values keep buckets to megabytes even at billions of docs, yet at
-    ~10⁹ docs with 16-bit chunks that is ~15k members → ~10⁸ candidate
-    pairs *per bucket*.  The guard makes that cliff an explicit
-    error instead of a silent cluster-killer (same contract as
-    :func:`embedding_dedup_pairs`'s ``max_rows``): the expected
-    per-bucket pair count (N²/2^(chunk_bits+1)) is checked against
-    ``max_expected_pairs_per_bucket``.  The check needs the corpus
-    size: pass it via ``n_docs`` when known (a catalog/stats lookup,
-    or the pipeline already counted) to skip the full-scan count job
-    the guard otherwise runs — at 100 TB that scan costs more than
-    the question deserves.  Pass
-    ``max_expected_pairs_per_bucket=None`` to disable the guard
-    entirely when the cost is understood.
-    """
-    if max_expected_pairs_per_bucket is not None:
-        _simhash_bucket_guard(
-            df.count() if n_docs is None else n_docs,
-            64 // n_chunks,
-            max_expected_pairs_per_bucket,
-        )
-    sigs = simhash(df, text_col, id_col, n).select(
-        F.col(id_col).alias("_id"), "simhash"
-    )
-    return _simhash_pairs_from_sigs(sigs, max_hamming, n_chunks)
-
-
-def simhash_write_signatures(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize SimHash signatures as a parquet table
-    ``{path}/signatures`` (_id, simhash) — the long-lived-pipeline
-    mirror of :func:`minhash_write_signatures`: sign once, store 8
-    bytes per document, and let every later pairing run (different
-    ``max_hamming``/``n_chunks``, incremental batches) start from the
-    table instead of re-shingling the corpus.  ``mode="append"`` adds
-    a new batch's signatures (the ingest loop); the shingle order
-    ``n`` is not schema-visible, so matching the stored index's ``n``
-    is the caller's contract — exactly as for the MinHash writer's
-    ``n``."""
-    simhash(df, text_col, id_col, n).select(
-        F.col(id_col).alias("_id"), "simhash"
-    ).write.mode(mode).parquet(f"{path}/signatures")
-
-
-def simhash_write_signatures_frames(
-    spark,
-    path: str,
-    sigs: DataFrame,
-    mode: str,
-) -> None:
-    """:func:`simhash_write_signatures` from an ALREADY-COMPUTED
-    (_id, simhash) frame — e.g. a batch's staged signature table that
-    the probe and the within-batch pairing already consumed (the
-    ingest loop's single-computation path, mirroring
-    :func:`minhash_write_signatures_frames`).  Nothing is re-shingled
-    or re-hashed.  ``mode`` is REQUIRED (no default) for the same
-    porting-trap reason as the minhash frames writer: the from-text
-    twin defaults to ``"overwrite"``."""
-    sigs.select("_id", "simhash").write.mode(mode).parquet(
-        f"{path}/signatures"
-    )
-
-
-def simhash_pairs_frames(
-    sigs: DataFrame,
-    max_hamming: int = 6,
-    n_chunks: int = 4,
-    max_expected_pairs_per_bucket: int | None = 10_000_000,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """:func:`simhash_pairs` from an ALREADY-COMPUTED (_id, simhash)
-    frame — the per-row signature aggregation is deterministic, so a
-    frame computed once on a superset and semi-joined down to the ids
-    of interest pairs identically to recomputing on the subset.  The
-    expected-pairs guard counts the given frame when ``n_docs`` is
-    not supplied (signature rows, i.e. docs with ≥1 shingle — the
-    from-text twin counts all rows; both are the same order of
-    magnitude, and the guard is an order-of-magnitude cliff check)."""
-    if max_expected_pairs_per_bucket is not None:
-        _simhash_bucket_guard(
-            sigs.count() if n_docs is None else n_docs,
-            64 // n_chunks,
-            max_expected_pairs_per_bucket,
-        )
-    return _simhash_pairs_from_sigs(sigs, max_hamming, n_chunks)
-
-
-def simhash_pairs_from(
-    spark,
-    path: str,
-    max_hamming: int = 6,
-    n_chunks: int = 4,
-    max_expected_pairs_per_bucket: int | None = 10_000_000,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs from signatures materialized by
-    :func:`simhash_write_signatures` — same chunk/bucket/verify plan
-    as :func:`simhash_pairs`.  ``max_hamming`` and ``n_chunks`` are
-    query-time choices (the signature is parameterized only by ``n``).
-    The bucket guard counts the (8-bytes-per-row) signature table when
-    ``n_docs`` is not supplied — far cheaper than a corpus scan, but
-    still skippable."""
-    sigs = spark.read.parquet(f"{path}/signatures")
-    if max_expected_pairs_per_bucket is not None:
-        _simhash_bucket_guard(
-            sigs.count() if n_docs is None else n_docs,
-            64 // n_chunks,
-            max_expected_pairs_per_bucket,
-        )
-    return _simhash_pairs_from_sigs(sigs, max_hamming, n_chunks)
-
-
 def simhash_pairs_between(
     spark,
     path: str,
@@ -1454,19 +1289,8 @@ def simhash_pairs_between(
     indexed by :func:`simhash_write_signatures` — the SimHash mirror
     of :func:`minhash_lsh_pairs_between`.  Returns ``(id_new, id_old,
     hamming ≤ max_hamming)``; within-batch pairs are out of scope
-    (run :func:`simhash_pairs` on the batch).
-
-    Scale shape: the batch is signed in memory and its chunk table is
-    equi-joined against the stored signatures' chunk table — cost ∝
-    the batch's bucket memberships × stored bucket occupancy, never
-    corpus pairs.  The pigeonhole recall guarantee (distance <
-    n_chunks found with certainty) carries over: a qualifying cross
-    pair agrees on some chunk, and that chunk value co-buckets the
-    two sides of the join.  Buckets are NOT capped (capping would
-    break the guarantee — unlike the minhash probe, whose banding is
-    already probabilistic); the expected-pairs guard instead bounds
-    the stored side's occupancy up front, exactly as in
-    :func:`simhash_pairs_from` (pass ``n_docs`` to skip its count).
+    (run :func:`simhash_pairs` on the batch).  Signs the batch, then
+    pairs through :func:`simhash_pairs_between_frames`.
     ``n``/``n_chunks`` must describe the stored index's signing.
     """
     sigs_new = simhash(df, text_col, id_col, n).select(
@@ -1494,16 +1318,23 @@ def simhash_pairs_between_frames(
 ) -> DataFrame:
     """:func:`simhash_pairs_between` from the batch's ALREADY-COMPUTED
     (_id, simhash) frame (e.g. the ingest loop's per-batch signature
-    staging) — identical join plan and output to the text path; the
-    stored-occupancy guard is unchanged (it bounds the INDEX side,
-    which this variant still reads from ``path``)."""
+    staging).
+
+    Scale shape: the batch's chunk table is equi-joined against the
+    stored signatures' chunk table — cost ∝ the batch's bucket
+    memberships × stored bucket occupancy, never corpus pairs.  The
+    pigeonhole recall guarantee (distance < n_chunks found with
+    certainty) carries over: a qualifying cross pair agrees on some
+    chunk, and that chunk value co-buckets the two sides of the join.
+    Buckets are NOT capped (capping would break the guarantee — unlike
+    the minhash probe, whose banding is already probabilistic); the
+    expected-pairs guard instead bounds the stored INDEX side's
+    occupancy up front, counting the stored table unless ``n_docs``
+    is passed."""
     sigs_old = spark.read.parquet(f"{path}/signatures")
-    if max_expected_pairs_per_bucket is not None:
-        _simhash_bucket_guard(
-            sigs_old.count() if n_docs is None else n_docs,
-            64 // n_chunks,
-            max_expected_pairs_per_bucket,
-        )
+    _simhash_bucket_guard(
+        sigs_old, n_docs, n_chunks, max_expected_pairs_per_bucket
+    )
     new_chunks = _simhash_chunks(sigs_new, n_chunks).select(
         F.col("_id").alias("id_new"),
         F.col("simhash").alias("_sig_new"),
@@ -2078,7 +1909,8 @@ def dedup_corpus(
 
     ``pairs`` is the escape hatch for every other pair source: any
     precomputed ``(id_a, id_b, …)`` frame — materialized signatures
-    (:func:`minhash_lsh_pairs_from`, :func:`simhash_pairs_from`),
+    (:func:`minhash_lsh_pairs_frames` / :func:`simhash_pairs_frames`
+    over the tables the ``*_write_signatures`` writers stored),
     incremental batches (:func:`minhash_lsh_pairs_between`,
     :func:`embedding_pairs_against_index` — rename their id columns
     to ``id_a``/``id_b``), or a hand-built union of several methods.

@@ -43,15 +43,51 @@ def test_minhash_pairs_from_materialized_signatures(spark, docs, tmp_path):
     index.  Also checks a query-time re-banding divides num_perm."""
     path = str(tmp_path / "mh_index")
     dedup.minhash_write_signatures(docs, path, num_perm=64)
-    from_table = dedup.minhash_lsh_pairs_from(spark, path, threshold=0.8)
+
+    def from_table(**kw):
+        return dedup.minhash_lsh_pairs_frames(
+            spark.read.parquet(f"{path}/signatures"),
+            spark.read.parquet(f"{path}/shingles"),
+            **kw,
+        )
+
     in_memory = dedup.minhash_lsh_pairs(docs, threshold=0.8)
-    assert _pairs(from_table) == _pairs(in_memory)
+    assert _pairs(from_table(threshold=0.8)) == _pairs(in_memory)
     # re-banding at query time: coarser bands lower the S-curve midpoint,
     # so candidates only grow — the exact verify keeps output identical
-    rebanded = dedup.minhash_lsh_pairs_from(spark, path, bands=32, threshold=0.8)
+    rebanded = from_table(bands=32, threshold=0.8)
     assert _pairs(rebanded) == _pairs(in_memory)
     with pytest.raises(ValueError, match="must divide"):
-        dedup.minhash_lsh_pairs_from(spark, path, bands=7)
+        from_table(bands=7)
+
+
+def test_refused_calls_leave_no_probe_cache(spark, tmp_path):
+    """Argument checks run before the shingle frame is persisted:
+    a refused call registers no probe cache, so nothing is left pinned
+    in the CacheManager for release_probe_caches to find."""
+    small = spark.createDataFrame(
+        [(i, f"some text body number {i} with words") for i in range(10)],
+        "doc_id LONG, text STRING",
+    )
+    mh_path, ng_path = str(tmp_path / "mh"), str(tmp_path / "ng")
+    dedup.minhash_write_signatures(small, mh_path, num_perm=16)
+    dedup.ngram_write_index(small, ng_path, threshold=0.8)
+    refused = [
+        lambda: dedup.minhash_lsh_pairs(small, num_perm=8, bands=16),
+        lambda: dedup.minhash_lsh_pairs_between(spark, mh_path, small, bands=7),
+        lambda: dedup.ngram_jaccard_pairs_between(
+            spark, ng_path, small, threshold=0.5
+        ),
+    ]
+
+    def registered():
+        return [id(f) for f in dedup._UNRELEASED_PROBE_CACHES.get(id(spark), [])]
+
+    for call in refused:
+        before = registered()
+        with pytest.raises(ValueError):
+            call()
+        assert registered() == before
 
 
 def test_simhash_recall_on_planted_dups(spark, docs):
@@ -568,8 +604,10 @@ def test_simhash_pairs_from_materialized_signatures(spark, docs, tmp_path):
         }
         got = {
             (r.id_a, r.id_b, r.hamming)
-            for r in dedup.simhash_pairs_from(
-                spark, path, n_chunks=n_chunks, max_hamming=max_hamming
+            for r in dedup.simhash_pairs_frames(
+                spark.read.parquet(f"{path}/signatures"),
+                n_chunks=n_chunks,
+                max_hamming=max_hamming,
             ).collect()
         }
         assert got == want

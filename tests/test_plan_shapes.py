@@ -192,7 +192,13 @@ def test_minhash_from_table_prunes_signature_columns(spark, tmp_path):
     docs = load_tables(spark, SF_DIR)["documents"]
     path = str(tmp_path / "mh_idx")
     dedup.minhash_write_signatures(docs, path, num_perm=16)
-    plan = _plan(dedup.minhash_lsh_pairs_from(spark, path, bands=4))
+    plan = _plan(
+        dedup.minhash_lsh_pairs_frames(
+            spark.read.parquet(f"{path}/signatures"),
+            spark.read.parquet(f"{path}/shingles"),
+            bands=4,
+        )
+    )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # identify each scan by its output attribute list (Location paths
@@ -217,7 +223,9 @@ def test_simhash_from_table_plan_bucket_local(spark, tmp_path):
     path = str(tmp_path / "sh_idx")
     dedup.simhash_write_signatures(docs, path)
     plan = _plan(
-        dedup.simhash_pairs_from(spark, path, n_docs=docs.count())
+        dedup.simhash_pairs_frames(
+            spark.read.parquet(f"{path}/signatures"), n_docs=docs.count()
+        )
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
