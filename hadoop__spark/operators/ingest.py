@@ -19,6 +19,16 @@ each new batch against that state:
 A crash between appends is recovered by :func:`rebuild_state` from
 the immutable per-batch survivors snapshots.
 
+The maintenance verbs (:func:`compact_state`,
+:func:`refit_ivf_index`, :func:`coalesce_snapshots`,
+:func:`retract_documents`) mutate the state through ONE commit
+journal: each writes everything it will adopt into a stage under
+``{state_dir}/tmp/commit/``, commits by writing the stage's manifest
+of idempotent ``mv``/``rm`` ops last, then applies it.  A crash
+before the commit leaves the state untouched; a crash after it is
+finished by replaying the manifest — :func:`fsck_state` is "replay
+committed stages, sweep uncommitted ones".
+
 :func:`ingest_batch` is that loop as one call.  Each primitive's
 docstring argues its own composition claim; the end-to-end claim — a
 two-batch ingest equals the from-scratch dedup of the union — is
@@ -30,6 +40,11 @@ capability built from this package's own tested primitives.
 """
 
 from __future__ import annotations
+
+import json
+import threading
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -69,10 +84,10 @@ from hadoop__spark.operators.similarity import (
 from hadoop__spark.operators.util import (
     delete_path as _delete_path,
     list_child_dirs as _list_child_dirs,
+    list_files as _list_files,
     read_text_file as _read_text_file,
     rename_path as _rename_path,
     table_exists as _table_exists,
-    touch_file as _touch_file,
     write_text_file as _write_text_file,
 )
 
@@ -88,18 +103,18 @@ from hadoop__spark.operators.util import (
 _COMMIT_MARKER = "_INGEST_COMMITTED"
 
 # advisory maintenance lock at {state_dir}/_MAINTENANCE_LOCK: held by
-# compact_state / retract_documents while they delete-and-swap tables
-# a concurrent reader may hold open; ingest_batch refuses to start
-# while it exists.  Advisory — it turns the race into a loud refusal,
-# not a transaction; a crashed maintenance run leaves a stale lock to
+# every maintenance verb while it stages, commits and applies its
+# journal stage; ingest_batch refuses to start while it exists.
+# Advisory — it turns the race into a loud refusal, not a
+# transaction; a crashed maintenance run leaves a stale lock to
 # delete by hand (the error message says so).
 _MAINT_LOCK = "_MAINTENANCE_LOCK"
 
 # the OTHER side of the advisory protocol: ingest_batch holds this
 # in-progress marker for its whole run, and _maintenance_lock refuses
 # while it exists — so a compact/retract started while an ingest is
-# mid-flight cannot delete-and-swap a table between the ingest's read
-# and append (which would silently lose that batch's appended rows).
+# mid-flight cannot replace a table between the ingest's read and
+# append (which would silently lose that batch's appended rows).
 # Each side creates its own flag FIRST and then checks the other's,
 # so the two can never both proceed (both may refuse — advisory, not
 # a scheduler).  A crashed ingest leaves the marker; rebuild_state
@@ -112,39 +127,11 @@ _INGEST_MARKER = "_INGEST_INPROGRESS"
 # clears the entries it rebuilds and state_summary reports the rest.
 _STALE_MARKER = "_STALE_SKETCHES"
 
-# written INSIDE a snapshot-surgery staging dir (tmp/retract/{name})
-# as the LAST file of the staging write: it lists the basenames of the
-# snapshot's HIT files the staged replacement rows supersede.  Its
-# presence makes the surgery FINISHABLE — fsck_state (and the surgery
-# itself) idempotently move the staged files in and delete the listed
-# hit files; a staging dir without it never mutated the snapshot and
-# is swept.
-_SURGERY_MANIFEST = "_SURGERY_MANIFEST"
-
-# written INSIDE an epoch snapshot's staging dir as the LAST file of
-# coalesce_snapshots' tmp write: it lists the source snapshot names
-# the epoch replaces, so fsck_state can FINISH a coalesce that
-# crashed mid-swap (some sources already deleted — the epoch is the
-# union of all of them, so finishing loses nothing) or SWEEP one that
-# never started deleting (all sources still present — the corpus is
-# intact without the epoch).
-_COALESCE_MANIFEST = "_COALESCE_MANIFEST"
-
-# commit point of refit_ivf_index's staged index swap: written into
-# tmp/ivf_refit once BOTH new tables (assigned + centroids) are
-# durable; before it fsck sweeps the stage (old index intact), after
-# it fsck finishes the swap — both tables together, never a mixed
-# old-centroids/new-assignments hybrid
-_REFIT_MARKER = "_REFIT_COMPLETE"
-
-# planted for the duration of a FAST-path retraction: its multi-table
-# mutations (negative cap rows, snapshot swaps, file surgeries) are
-# not atomic as a group, and a naive RETRY after a crash would
-# double-apply the parts that had committed (e.g. decrement a group's
-# cap twice).  A surviving marker therefore refuses further fast
-# retractions until rebuild_state — which reconsolidates every table
-# exactly from the snapshots — clears it.
-_RETRACT_MARKER = "_RETRACT_INPROGRESS"
+# the maintenance commit journal: a verb stages under
+# {state_dir}/tmp/commit/{verb}-{uuid}/ and commits by writing the
+# stage's manifest (its op list, see _apply) as the stage's LAST file
+_JOURNAL = "tmp/commit"
+_MANIFEST = "_COMMIT"
 
 # near-dup text plane state layout: subdir under state_dir ("" = the
 # state root, minhash's original layout) and the layout-marker table
@@ -158,10 +145,10 @@ _PLANE_LAYOUT = {
 
 # every flat state table (relpath → compaction sort keys; None =
 # unsorted, the kilobyte sketch tables) — the registry compact_state
-# rewrites, fsck_state checks for swap orphans, and state_summary
-# counts.  batches/* (immutable snapshots) and ivf/ (centroid-
-# partitioned) are deliberately absent: compacting them would destroy
-# the rebuild source of truth / the partition pruning.
+# rewrites and state_summary counts.  batches/* (immutable snapshots)
+# and ivf/ (centroid-partitioned) are deliberately absent: compacting
+# them would destroy the rebuild source of truth / the partition
+# pruning.
 _STATE_TABLES = {
     "fingerprints": ["fp"],
     "shingles": ["_id"],
@@ -175,6 +162,11 @@ _STATE_TABLES = {
     "accounting/stats": None,
     "accounting/overlap": None,
 }
+
+
+def _name(path: str) -> str:
+    """Last path component (a snapshot, stage or bucket dir name)."""
+    return path.rstrip("/").rsplit("/", 1)[-1]
 
 
 def _plane_paths(state_dir: str, text_method: str) -> tuple[str, str]:
@@ -192,42 +184,153 @@ def _detect_plane(spark, state_dir: str) -> str | None:
     return None
 
 
-class _maintenance_lock:
-    """Context manager: exclusively create the state's maintenance
-    lock file, refusing when another run holds it OR an ingest is
-    mid-flight (two-sided advisory locking; see _INGEST_MARKER);
-    always released."""
+def _complete_snapshots(spark, state_dir: str) -> list[str]:
+    """The batch snapshot dirs holding a parquet ``_SUCCESS`` marker —
+    a dir without one crashed during its own write, before any state
+    append, so it was never ingested."""
+    return [
+        b
+        for b in _list_child_dirs(spark, f"{state_dir}/batches")
+        if _table_exists(spark, f"{b}/_SUCCESS")
+    ]
 
-    def __init__(self, spark, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
-        self.path = f"{state_dir}/{_MAINT_LOCK}"
 
-    def __enter__(self):
-        from hadoop__spark.operators.util import create_exclusive
+def _union(spark, paths: list[str]) -> DataFrame:
+    """The snapshots at ``paths`` as one frame, in list order (optional
+    columns may have drifted across batches)."""
+    union = spark.read.parquet(paths[0])
+    for p in paths[1:]:
+        union = union.unionByName(
+            spark.read.parquet(p), allowMissingColumns=True
+        )
+    return union
 
-        if not create_exclusive(self.spark, self.path):
-            raise RuntimeError(
-                f"maintenance lock {self.path} is held — another "
-                "compact/retract run is active (or crashed and left it "
-                "stale; delete the file after confirming nothing runs)"
-            )
+
+# state dirs whose maintenance lock THIS thread holds — module-level
+# because the re-entrant verbs are public functions with no hold
+# parameter to pass; thread-local so another thread never rides along
+_HELD = threading.local()
+
+
+@contextmanager
+def _maintenance_lock(spark, state_dir: str):
+    """The maintenance hold every verb runs under: exclusively create
+    the state's lock file, refusing when another run holds it OR an
+    ingest is mid-flight (two-sided advisory locking; see
+    _INGEST_MARKER), then run the fsck pass FIRST — a crashed verb's
+    committed stage is replayed and an uncommitted one swept before
+    this verb reads anything — and always release.
+
+    Re-entrant per thread: a call made while this thread already holds
+    the state's lock (maintain_state → coalesce_snapshots,
+    decontaminate_state → retract_documents) runs directly, and the
+    fsck pass runs once per outermost hold.  Yields the fsck report
+    (empty for a nested hold)."""
+    from hadoop__spark.operators.util import create_exclusive
+
+    key = state_dir.rstrip("/")
+    held = _HELD.__dict__.setdefault("dirs", set())
+    if key in held:
+        yield {"restored": [], "swept": []}
+        return
+    path = f"{state_dir}/{_MAINT_LOCK}"
+    if not create_exclusive(spark, path):
+        raise RuntimeError(
+            f"maintenance lock {path} is held — another "
+            "compact/retract run is active (or crashed and left it "
+            "stale; delete the file after confirming nothing runs)"
+        )
+    try:
         # own flag first, then the other side's — if an ingest slipped
         # in between our existence check and our create, one of us
         # sees the other and backs off
-        if _table_exists(self.spark, f"{self.state_dir}/{_INGEST_MARKER}"):
-            _delete_path(self.spark, self.path)
+        if _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
             raise RuntimeError(
-                f"an ingest_batch run is in flight on {self.state_dir} "
+                f"an ingest_batch run is in flight on {state_dir} "
                 f"({_INGEST_MARKER} present) — retry after it completes "
                 "(a crashed ingest leaves the marker stale; "
                 "rebuild_state clears it, or delete the file by hand)"
             )
-        return self
+        held.add(key)
+        yield _fsck_state_locked(spark, state_dir)
+    finally:
+        held.discard(key)
+        _delete_path(spark, path)
 
-    def __exit__(self, *exc):
-        _delete_path(self.spark, self.path)
-        return False
+
+def _stage_dir(verb: str) -> str:
+    """A fresh journal stage, relative to the state dir."""
+    return f"{_JOURNAL}/{verb}-{uuid.uuid4().hex[:12]}"
+
+
+def _commit(spark, state_dir: str, stage: str, ops: list) -> None:
+    """Commit a stage, then apply it.  Writing the manifest — the op
+    list, every ``mv`` before every ``rm``, so a reader sees at worst
+    duplicates, never a missing kept row — as the stage's LAST file is
+    the commit point."""
+    ops = sorted(ops, key=lambda op: op[0] != "mv")
+    _write_text_file(
+        spark, f"{state_dir}/{stage}/{_MANIFEST}",
+        "\n".join(json.dumps(op) for op in ops),
+    )
+    _apply(spark, state_dir, stage)
+
+
+def _apply(spark, state_dir: str, stage: str) -> None:
+    """Run a committed stage's ops in order, then delete the stage.
+    Paths are relative to the state dir, and every op is idempotent,
+    so a crashed apply is finished by running it again
+    (:func:`fsck_state`):
+
+    * ``["mv", SRC, DST]`` does nothing once SRC is gone; otherwise it
+      deletes an existing DST (Hadoop's rename would nest SRC INSIDE
+      an existing directory) and renames, creating DST's parent;
+    * ``["rm", PATH]`` does nothing once PATH is gone.
+
+    ``_rename_path`` / ``_delete_path`` are looked up as module
+    globals here — the one place a crash can be injected into any
+    maintenance mutation."""
+    manifest = _read_text_file(spark, f"{state_dir}/{stage}/{_MANIFEST}")
+    for line in manifest.splitlines():
+        op, *paths = json.loads(line)
+        src = f"{state_dir}/{paths[0]}"
+        if not _table_exists(spark, src):
+            continue
+        if op == "rm":
+            _delete_path(spark, src)
+            continue
+        dst = f"{state_dir}/{paths[1]}"
+        if _table_exists(spark, dst):
+            _delete_path(spark, dst)
+        _rename_path(spark, src, dst)
+    _delete_path(spark, f"{state_dir}/{stage}")
+
+
+def _adopt(spark, state_dir: str, stage: str, rel: str) -> list:
+    """One ``mv`` per parquet file staged under ``{stage}/{rel}`` to
+    the same relative path under ``rel`` (partition dirs included)."""
+    return [
+        ["mv", f"{stage}/{rel}/{sub}", f"{rel}/{sub}"]
+        for sub in (
+            f.split(f"/{stage}/{rel}/", 1)[1]
+            for f in _list_files(
+                spark, f"{state_dir}/{stage}/{rel}", suffix=".parquet"
+            )
+        )
+    ]
+
+
+def _stages(spark, state_dir: str) -> tuple[list[str], list[str]]:
+    """(committed, uncommitted) journal stages, relative to the state
+    dir."""
+    committed, uncommitted = [], []
+    for d in _list_child_dirs(spark, f"{state_dir}/{_JOURNAL}"):
+        rel = f"{_JOURNAL}/{_name(d)}"
+        if _table_exists(spark, f"{d}/{_MANIFEST}"):
+            committed.append(rel)
+        else:
+            uncommitted.append(rel)
+    return committed, uncommitted
 
 
 # ---------------------------------------------------------------------------
@@ -349,14 +452,6 @@ def _read_commit_marker(spark, batch_path: str) -> set[str] | None:
         return {"fingerprints", "text", "gate", "group_counts",
                 "accounting", "embeddings"}
     return set(content.split(","))
-
-
-def _mark_stale(spark, state_dir: str, tables: set[str]) -> None:
-    """Record sketch states left overstating by a fast-path
-    retraction (union with any already-recorded entries)."""
-    path = f"{state_dir}/{_STALE_MARKER}"
-    prior = _read_stale(spark, state_dir)
-    _write_text_file(spark, path, ",".join(sorted(prior | tables)))
 
 
 def _read_stale(spark, state_dir: str) -> set[str]:
@@ -846,7 +941,11 @@ def ingest_batch(
     at least what the state tables saw), and the writers re-run over
     their union with ``mode="overwrite"`` (chaos-tested in
     tests/test_ingest.py).  At 100 TB wrap the appends in the
-    lakehouse transaction layer of the deployment instead.
+    lakehouse transaction layer of the deployment instead.  The call
+    refuses while a maintenance verb holds the lock, and while a
+    crashed verb's COMMITTED journal stage is pending (run
+    :func:`fsck_state`): its table replacements must land before any
+    append, or replaying them later would drop the appended rows.
     """
     if on_existing not in ("fail", "skip"):
         raise ValueError(
@@ -888,6 +987,16 @@ def ingest_batch(
                 f"state at {state_dir} is under maintenance "
                 f"({_MAINT_LOCK} present) — retry after it completes, "
                 "or delete a stale lock by hand"
+            )
+        committed = _stages(spark, state_dir)[0]
+        if committed:
+            # a crashed maintenance verb committed but did not finish:
+            # its whole-table mv ops would replace whatever this
+            # ingest appends, so nothing appends until it is replayed
+            raise RuntimeError(
+                f"state at {state_dir} has committed maintenance "
+                f"stage(s) {committed} pending — run fsck_state to "
+                "finish them, then retry"
             )
         return _ingest_batch_inner(
             spark, state_dir, batch, batch_name, text_col, id_col,
@@ -1478,10 +1587,11 @@ def rebuild_state(
     (and the layout guards re-check against the surviving state
     tables, so even a legacy pre-policy state refuses a wrong plane).
     ``group_cap_col``/``accounting_col`` also default from the policy
-    (their states rebuild from the snapshots alone).  The swap-window
-    orphans of a crashed retract/compact are repaired first
-    (:func:`fsck_state`) and a crashed ingest's in-progress marker is
-    cleared — this IS the recovery path those point at.
+    (their states rebuild from the snapshots alone).  A crashed
+    maintenance verb's journal stage is replayed or swept first
+    (:func:`fsck_state`'s body) and a crashed ingest's in-progress
+    marker is cleared — this IS the recovery path a crashed ingest
+    points at.
 
     The external-input states rebuild only when their inputs are
     supplied, since survivors snapshots hold documents, not scores:
@@ -1507,9 +1617,9 @@ def rebuild_state(
     # clear a crashed ingest's in-progress marker FIRST (rebuild IS
     # the recovery path that marker's error message points to — and
     # fsck skips the ingest-staging sweep while the marker stands),
-    # then repair swap-window orphans (a crash inside
-    # retract/compact's delete→rename protocol leaves data at a tmp
-    # path — restored or swept here, never hand-renamed at 3 a.m.).
+    # then replay or sweep a crashed maintenance verb's journal stage
+    # (a committed retraction's snapshot surgery must land before the
+    # snapshots are unioned).
     # The LOCKED fsck body, not the public wrapper: rebuild is the
     # operator-initiated recovery verb, documented to run on a
     # quiesced state — it must repair past a STALE maintenance lock
@@ -1530,23 +1640,16 @@ def rebuild_state(
     _validate_rebuild_layout(
         spark, state_dir, text_method, n, num_perm, threshold
     )
-    batch_dirs = _list_child_dirs(spark, f"{state_dir}/batches")
-    complete = []
-    for b in batch_dirs:
-        if _table_exists(spark, f"{b}/_SUCCESS"):
-            complete.append(b)
-        else:
+    complete = _complete_snapshots(spark, state_dir)
+    for b in _list_child_dirs(spark, f"{state_dir}/batches"):
+        if b not in complete:
             _delete_path(spark, b)
     if not complete:
         raise ValueError(
             f"no complete batch snapshots under {state_dir}/batches — "
             "nothing to rebuild from"
         )
-    union = spark.read.parquet(complete[0])
-    for b in complete[1:]:
-        union = union.unionByName(
-            spark.read.parquet(b), allowMissingColumns=True
-        )
+    union = _union(spark, complete)
     covered = _write_state_tables(
         spark,
         state_dir,
@@ -1607,10 +1710,6 @@ def rebuild_state(
     # replays no-op over e.g. an IVF index missing the batch's vectors
     for b in complete:
         _write_commit_marker(spark, b, covered)
-    # LAST: every table is reconsolidated, so a crashed fast
-    # retraction's double-apply hazard is gone — clearing earlier
-    # would re-expose it if THIS rebuild crashed mid-write
-    _delete_path(spark, f"{state_dir}/{_RETRACT_MARKER}")
     return union
 
 
@@ -1645,9 +1744,8 @@ def rebuild_sketch_states(
     (the crash-recovery path, which must run even when markers are
     stale), this is a maintenance operation on a HEALTHY state and
     must not race a concurrent ingest's appends.  (The takedown verbs
-    compose the same repair in-line via ``repair_sketches=True``,
-    under their own lock hold — one call, one lock, healthy end
-    state.)
+    call it in-line via ``repair_sketches=True``, inside their own
+    lock hold — one call, one lock, healthy end state.)
 
     Returns ``{"rebuilt": [...], "still_stale": [...]}`` (coverage
     plane names / stale-marker entries).
@@ -1659,19 +1757,6 @@ def rebuild_sketch_states(
             "sketch rebuild needs it to know which policy states "
             "exist; use rebuild_state for legacy states"
         )
-    include = _sketch_repair_planes(pol, scores)
-    if not include:
-        return {"rebuilt": [], "still_stale": sorted(_read_stale(spark, state_dir))}
-    with _maintenance_lock(spark, state_dir):
-        return _rebuild_sketch_states_locked(
-            spark, state_dir, pol, include, scores, score_col, text_col,
-            id_col,
-        )
-
-
-def _sketch_repair_planes(pol: dict, scores: DataFrame | None) -> set[str]:
-    """The coverage planes a targeted sketch repair can rebuild under
-    a stored policy with the given external inputs."""
     include = set()
     if pol.get("group_cap_col") is not None:
         include.add("group_counts")
@@ -1679,58 +1764,65 @@ def _sketch_repair_planes(pol: dict, scores: DataFrame | None) -> set[str]:
         include.add("accounting")
     if bool(pol.get("has_quality_gate")) and scores is not None:
         include.add("gate")
-    return include
+    if not include:
+        return {"rebuilt": [], "still_stale": sorted(_read_stale(spark, state_dir))}
+    with _maintenance_lock(spark, state_dir):
+        covered = _write_state_tables(
+            spark,
+            state_dir,
+            _read_snapshots_union(spark, state_dir),
+            mode="rebuild",
+            text_col=text_col,
+            id_col=id_col,
+            text_method=pol["text_method"],
+            n=pol.get("n") or 3,
+            num_perm=pol.get("num_perm") or 64,
+            threshold=pol.get("threshold") or 0.8,
+            scores=scores,
+            score_col=score_col,
+            write_gate="gate" in include,
+            group_cap_col=pol.get("group_cap_col"),
+            accounting_col=pol.get("accounting_col"),
+            include=include,
+        )
+        rebuilt = set()
+        if "gate" in covered:
+            rebuilt.add("score_sketches")
+        if "accounting" in covered:
+            rebuilt.add("accounting")
+        _clear_stale(spark, state_dir, rebuilt)
+        return {
+            "rebuilt": sorted(covered),
+            "still_stale": sorted(_read_stale(spark, state_dir)),
+        }
 
 
-def _rebuild_sketch_states_locked(
-    spark, state_dir: str, pol: dict, include: set[str],
-    scores: DataFrame | None, score_col: str, text_col: str, id_col: str,
-) -> dict:
-    """:func:`rebuild_sketch_states`' body, run while the caller holds
-    the maintenance lock — shared with the takedown verbs'
-    ``repair_sketches=True`` composition (which already holds the lock
-    for its snapshot rewrites and must not re-acquire)."""
-    union = _read_snapshots_union(spark, state_dir)
-    covered = _write_state_tables(
-        spark,
-        state_dir,
-        union,
-        mode="rebuild",
-        text_col=text_col,
-        id_col=id_col,
-        text_method=pol["text_method"],
-        n=pol.get("n") or 3,
-        num_perm=pol.get("num_perm") or 64,
-        threshold=pol.get("threshold") or 0.8,
-        scores=scores,
-        score_col=score_col,
-        write_gate="gate" in include,
-        group_cap_col=pol.get("group_cap_col"),
-        accounting_col=pol.get("accounting_col"),
-        include=include,
-    )
-    rebuilt = set()
-    if "gate" in covered:
-        rebuilt.add("score_sketches")
-    if "accounting" in covered:
-        rebuilt.add("accounting")
-    _clear_stale(spark, state_dir, rebuilt)
-    return {
-        "rebuilt": sorted(covered),
-        "still_stale": sorted(_read_stale(spark, state_dir)),
-    }
+def _stage_kept(
+    spark, state_dir: str, stage: str, rel: str, hit_files: list,
+    kept: DataFrame,
+) -> list:
+    """Stage one file-local surgery on the table or snapshot at
+    ``rel``: write the hit files' kept rows to ``{stage}/{rel}``, and
+    return an ``mv`` per staged file plus an ``rm`` per hit file."""
+    kept.write.mode("overwrite").parquet(f"{state_dir}/{stage}/{rel}")
+    return _adopt(spark, state_dir, stage, rel) + [
+        ["rm", f"{rel}/{_name(f)}"] for f in hit_files
+    ]
 
 
 def _rewrite_snapshots_without(
-    spark, state_dir: str, retract: DataFrame, id_col: str,
-    retract_values: list | None = None,
-) -> list[str]:
-    """Remove the retracted ids (``retract``: one ``_retract``
-    column) from every COMPLETE batch snapshot by FILE-LOCAL surgery:
-    only the parquet files that contain a hit are replaced — the
-    snapshot's clean files, its ``_SUCCESS`` marker and its commit
-    marker are untouched byte-for-byte.  Returns the affected
-    snapshot paths.
+    spark, state_dir: str, stage: str, complete: list[str],
+    retract: DataFrame, id_col: str, retract_values: list | None = None,
+) -> list:
+    """Stage the removal of the retracted ids (``retract``: one
+    ``_retract`` column) from the COMPLETE batch snapshots
+    (``complete``) as FILE-LOCAL surgery: only the parquet files that
+    contain a hit are replaced — the snapshot's clean files, its
+    ``_SUCCESS`` marker and its commit marker are untouched
+    byte-for-byte.  The kept rows of each snapshot's hit files are
+    written to ``{stage}/batches/{name}``; returns the journal ops (an
+    ``mv`` per staged file, an ``rm`` per hit file).  Nothing under
+    ``batches/`` changes until the caller commits.
 
     File-locality is the 100 TB property that must SURVIVE snapshot
     coalescing: after :func:`coalesce_snapshots` merges a year of
@@ -1750,26 +1842,13 @@ def _rewrite_snapshots_without(
     across batches (the same tolerance the rebuild's
     ``unionByName(allowMissingColumns)`` gives).
 
-    Crash-safety (snapshots are the rebuild's source of truth, so —
-    unlike the flat probe tables — they tolerate NEITHER lost kept
-    rows nor, once rebuilt from, duplicates): the kept rows of the
-    hit files stage OUTSIDE ``batches/`` at
-    ``{state_dir}/tmp/retract/{name}``, with a ``_SURGERY_MANIFEST``
-    (listing the hit files' basenames) written LAST; only then does
-    :func:`_finish_snapshot_surgery` mutate the snapshot — staged
-    files in first, manifest-listed hit files deleted after, both
-    idempotent.  A crash before the manifest leaves the snapshot
-    untouched (:func:`fsck_state` sweeps the stage); a crash after it
-    is FINISHED by fsck — and :func:`rebuild_state` runs fsck first,
-    so no rebuild ever unions a mid-surgery snapshot (whose transient
-    shape is duplicates, never losses — the same at-worst-duplicates
-    reader contract as the flat tables)."""
-    complete = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-        # partial snapshots are excluded; rebuild_state sweeps them
-    ]
+    Crash-safety: snapshots are the rebuild's source of truth, so
+    they tolerate NEITHER lost kept rows nor, once rebuilt from,
+    duplicates.  Before the commit nothing is mutated; after it, the
+    journal adds the staged files before it deletes the hit files (a
+    transient reader sees duplicates, never losses), and
+    :func:`rebuild_state` replays a pending stage before it unions
+    the snapshots."""
     if not complete:
         return []
     scan = spark.read.option("mergeSchema", "true").parquet(*complete)
@@ -1792,49 +1871,15 @@ def _rewrite_snapshots_without(
         # .../batches/{name}/part-….parquet → {name}
         name = r._file.rsplit("/batches/", 1)[1].split("/", 1)[0]
         by_snap.setdefault(name, []).append(r._file)
-    rewritten = []
+    ops = []
     for name, files in sorted(by_snap.items()):
         kept = spark.read.parquet(*files).join(
             retract, F.col(id_col) == F.col("_retract"), "left_anti"
         )
-        stage = f"{state_dir}/tmp/retract/{name}"
-        _delete_path(spark, stage)
-        kept.write.mode("overwrite").parquet(stage)
-        # manifest LAST: its presence is the commit point — before it,
-        # fsck sweeps the stage (snapshot untouched); after it, the
-        # surgery is finishable from the stage alone
-        _write_text_file(
-            spark,
-            f"{stage}/{_SURGERY_MANIFEST}",
-            "\n".join(sorted(f.rsplit("/", 1)[-1] for f in files)),
+        ops += _stage_kept(
+            spark, state_dir, stage, f"batches/{name}", files, kept
         )
-        _finish_snapshot_surgery(spark, state_dir, name)
-        rewritten.append(f"{state_dir}/batches/{name}")
-    return rewritten
-
-
-def _finish_snapshot_surgery(spark, state_dir: str, name: str) -> None:
-    """Complete a staged, manifested snapshot surgery (idempotent —
-    also the fsck repair for one that crashed mid-flight): move the
-    staged replacement files into the snapshot FIRST (a crash window
-    shows duplicates, never losses), delete the manifest-listed hit
-    files after, then drop the stage."""
-    import uuid
-
-    from hadoop__spark.operators.util import list_files
-
-    stage = f"{state_dir}/tmp/retract/{name}"
-    snap = f"{state_dir}/batches/{name}"
-    manifest = _read_text_file(spark, f"{stage}/{_SURGERY_MANIFEST}")
-    tag = uuid.uuid4().hex[:12]
-    for i, f in enumerate(list_files(spark, stage, suffix=".parquet")):
-        _rename_path(
-            spark, f, f"{snap}/part-retract-{tag}-{i:05d}.parquet"
-        )
-    for base in manifest.strip().split("\n"):
-        if base:
-            _delete_path(spark, f"{snap}/{base}")
-    _delete_path(spark, stage)
+    return ops
 
 
 def retract_documents(
@@ -1906,11 +1951,20 @@ def retract_documents(
     the first destructive snapshot rewrite — a typo'd kwarg or a
     wrong ``text_method``/``num_perm`` refuses while the state is
     still intact instead of stranding retracted ids probe-visible
-    after a half-done rewrite.  Runs fsck-first under the maintenance
-    lock (a crashed coalesce's partially-deleted sources would
-    otherwise scope the retraction to a PARTIAL corpus, and the later
-    fsck would adopt the pre-retraction staged epoch — resurrecting
-    the ids; see :func:`_fsck_first`).
+    after a half-done rewrite.
+
+    Crash safety is the commit journal's: the call runs under the
+    maintenance lock, after the lock's fsck pass has replayed any
+    crashed verb (a half-applied coalesce would otherwise scope the
+    retraction to a PARTIAL corpus).  Everything the call changes —
+    the frozen retract ids, the kept rows of every hit snapshot file,
+    flat-table file and IVF bucket, the negative ``group_counts`` rows
+    and the new ``_STALE_SKETCHES`` content — is written to ONE stage
+    and adopted by ONE commit (kept rows in first, hit files removed
+    after).  A crash before the commit changes nothing; a crash after
+    it is finished by :func:`fsck_state` (or by the next maintenance
+    verb or :func:`rebuild_state`), so a retraction is never applied
+    twice.
 
     Retraction semantics are the inverse of first-arrival: once a
     document is retracted, it is GONE from every plane — a later
@@ -2000,29 +2054,29 @@ def retract_documents(
             "(or drop repair_sketches and rebuild_sketch_states later)"
         )
     with _maintenance_lock(spark, state_dir):
-        # fsck-first (the shared maintenance-verb contract): a crashed
-        # coalesce mid-swap would otherwise leave this retraction
-        # reading a PARTIAL snapshot set, and the later fsck would
-        # adopt the pre-retraction staged epoch — resurrecting the
-        # retracted ids with nothing left to flag it (see _fsck_first)
-        _fsck_first(spark, state_dir, "retract_documents")
+        complete = _complete_snapshots(spark, state_dir)
+        if mode == "fast" and not complete:
+            raise ValueError(
+                f"no complete batch snapshots under {state_dir}/batches — "
+                "nothing to retract from"
+            )
+        stage = _stage_dir("retract")
         # FREEZE the retract set before any mutation: the caller's
-        # frame may lazily derive from the very snapshots the rewrite
-        # below deletes-and-swaps (the natural "retract everything
-        # matching this corpus filter" flow) — re-evaluating such a
-        # plan after the first swap reads deleted files and crashes
-        # the retraction mid-run.  One small staged table, every
-        # phase (cap counts, snapshot rewrite, plane deletes) reads
-        # the same frozen ids; swept by fsck_state after a crash.
-        ids_tmp = f"{state_dir}/tmp/retract_ids"
-        _delete_path(spark, ids_tmp)
+        # frame may lazily derive from the very snapshots the surgery
+        # rewrites (the natural "retract everything matching this
+        # corpus filter" flow) — re-evaluating such a plan after the
+        # commit would read deleted files.  One small table in the
+        # stage; every phase (cap counts, snapshot surgery, plane
+        # deletes) reads the same frozen ids, and it goes with the
+        # stage.
+        ids_path = f"{state_dir}/{stage}/ids"
         (
             ids.select(F.col(id_col).alias("_retract"))
             .distinct()
             .write.mode("overwrite")
-            .parquet(ids_tmp)
+            .parquet(ids_path)
         )
-        retract = spark.read.parquet(ids_tmp)
+        retract = spark.read.parquet(ids_path)
         # a bounded-size takedown set is collected once so every
         # hit-file discovery pushes an IN predicate into the parquet
         # scans (row-group min/max pruning).  The limit-count never
@@ -2030,80 +2084,55 @@ def retract_documents(
         vals = None
         if retract.limit(10_001).count() <= 10_000:
             vals = [r._retract for r in retract.collect()]
-        try:
-            if mode == "rebuild":
-                _rewrite_snapshots_without(
-                    spark, state_dir, retract, id_col, retract_values=vals
-                )
-                return rebuild_state(
-                    spark, state_dir, id_col=id_col, **rebuild_kwargs
-                )
-            result = _retract_fast(
-                spark, state_dir, retract, id_col, pol, vals
+        ops = _rewrite_snapshots_without(
+            spark, state_dir, stage, complete, retract, id_col,
+            retract_values=vals,
+        )
+        if mode == "rebuild":
+            _commit(spark, state_dir, stage, ops)
+            return rebuild_state(
+                spark, state_dir, id_col=id_col, **rebuild_kwargs
             )
-            if repair_sketches and _read_stale(spark, state_dir):
-                # the in-line targeted repair, under THIS lock hold —
-                # the snapshots are already rewritten, so the
-                # reconsolidated sketches describe the retained corpus
-                include = _sketch_repair_planes(
-                    pol, rebuild_kwargs.get("scores")
-                )
-                if include:
-                    _rebuild_sketch_states_locked(
-                        spark, state_dir, pol, include,
-                        rebuild_kwargs.get("scores"),
-                        rebuild_kwargs.get("score_col", "quality_score"),
-                        rebuild_kwargs.get("text_col", "text"),
-                        id_col,
-                    )
-            return result
-        finally:
-            _delete_path(spark, ids_tmp)
+        if ops:
+            _commit(spark, state_dir, stage, ops + _retract_fast(
+                spark, state_dir, stage, complete, retract, id_col, pol,
+                vals,
+            ))
+        else:
+            # no snapshot held any of the ids — nothing to do anywhere
+            _delete_path(spark, f"{state_dir}/{stage}")
+        if repair_sketches and _read_stale(spark, state_dir):
+            # the in-line targeted repair, inside THIS lock hold — the
+            # snapshots are already rewritten, so the reconsolidated
+            # sketches describe the retained corpus
+            rebuild_sketch_states(
+                spark, state_dir, rebuild_kwargs.get("scores"),
+                rebuild_kwargs.get("score_col", "quality_score"),
+                rebuild_kwargs.get("text_col", "text"), id_col,
+            )
+        return _read_snapshots_union(spark, state_dir)
 
 
 def _retract_fast(
-    spark, state_dir: str, retract: DataFrame, id_col: str, pol: dict,
-    vals: list | None,
-) -> DataFrame:
-    """The plane-local fast path of :func:`retract_documents`, run
-    under the maintenance lock.  ``retract`` has one ``_retract``
-    column, already distinct and FROZEN (staged to parquet by the
-    caller — its plan must not reference the snapshots the rewrite
-    below swaps); ``vals`` is its collected id list when bounded
-    (≤10k), enabling pushed IN discovery everywhere."""
-    text_method = pol["text_method"]
-    marker = f"{state_dir}/{_RETRACT_MARKER}"
-    if _table_exists(spark, marker):
-        raise RuntimeError(
-            f"a previous fast retraction on {state_dir} crashed mid-run "
-            f"({_RETRACT_MARKER} present) — its partial mutations would "
-            "double-apply on a retry; run rebuild_state first (it "
-            "reconsolidates every table and clears the marker)"
-        )
-    _touch_file(spark, marker)
-    # exact NEGATIVE per-group cap rows FIRST, while the snapshots
-    # still hold the retracted rows (the counts are exact integers —
+    spark, state_dir: str, stage: str, complete: list[str],
+    retract: DataFrame, id_col: str, pol: dict, vals: list | None,
+) -> list:
+    """Stage the plane-local half of a fast :func:`retract_documents`
+    (the caller stages the snapshot surgery and commits both) and
+    return its journal ops.  ``retract`` has one ``_retract`` column,
+    distinct and FROZEN in the stage; ``vals`` is its collected id
+    list when bounded (≤10k), enabling pushed IN discovery
+    everywhere."""
+    ops = []
+    # exact NEGATIVE per-group cap rows, counted from the snapshots
+    # before the staged surgery lands (the counts are exact integers —
     # the one policy state that CAN subtract); only ids actually
     # present decrement, so retracting an unknown id is a no-op
     cap_col = pol.get("group_cap_col")
-    batch_dirs = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-    ]
-    if not batch_dirs:
-        raise ValueError(
-            f"no complete batch snapshots under {state_dir}/batches — "
-            "nothing to retract from"
-        )
     if cap_col is not None and _table_exists(
         spark, f"{state_dir}/group_counts"
     ):
-        union = spark.read.parquet(batch_dirs[0])
-        for b in batch_dirs[1:]:
-            union = union.unionByName(
-                spark.read.parquet(b), allowMissingColumns=True
-            )
+        union = _union(spark, complete)
         if vals is not None:
             # pushed IN over the snapshots' id column: row-group stats
             # skip clean files, so the removed-rows scan is ∝ files
@@ -2117,75 +2146,56 @@ def _retract_fast(
             (-F.count("*")).cast("bigint").alias("n_admitted")
         )
         if neg.limit(1).count():
-            neg.write.mode("append").parquet(f"{state_dir}/group_counts")
-    rewritten = _rewrite_snapshots_without(
-        spark, state_dir, retract, id_col, retract_values=vals
-    )
-    if not rewritten:
-        # no snapshot held any of the ids — nothing to do anywhere
-        # (and nothing was mutated above: no hit rows, no neg counts)
-        _delete_path(spark, marker)
-        return _read_snapshots_union(spark, state_dir)
-    # plane-local deletes: file-local surgery on the flat tables
-    # (only files containing a hit are rewritten) …
-    _delete_keys_file_local(
-        spark, f"{state_dir}/fingerprints", "keep_id", retract,
-        retract_values=vals,
-    )
-    if text_method == "minhash":
-        plane_path, _ = _plane_paths(state_dir, "minhash")
-        for rel in ("shingles", "signatures"):
-            _delete_keys_file_local(
-                spark, f"{plane_path}/{rel}", "_id", retract,
-                retract_values=vals,
+            neg.write.mode("overwrite").parquet(
+                f"{state_dir}/{stage}/group_counts"
             )
-    elif text_method == "simhash":
-        _delete_keys_file_local(
-            spark, f"{state_dir}/simhash/signatures", "_id", retract,
-            retract_values=vals,
+            ops += _adopt(spark, state_dir, stage, "group_counts")
+    # plane-local deletes: file-local surgery on the flat tables (only
+    # files containing a hit are rewritten).  The ngram plane's
+    # doc_freq stays FROZEN — stale df only lengthens prefixes
+    # (recall-safe; the ngram_append_index argument)
+    plane = {
+        "minhash": ["shingles", "signatures"],
+        "simhash": ["simhash/signatures"],
+        "ngram": ["ngram/shingle_sets", "ngram/prefix"],
+    }[pol["text_method"]]
+    for rel, key in [("fingerprints", "keep_id")] + [(r, "_id") for r in plane]:
+        found = _delete_keys_file_local(
+            spark, f"{state_dir}/{rel}", key, retract, retract_values=vals
         )
-    else:
-        for rel in ("shingle_sets", "prefix"):
-            _delete_keys_file_local(
-                spark, f"{state_dir}/ngram/{rel}", "_id", retract,
-                retract_values=vals,
-            )
-        # ngram doc_freq stays FROZEN — stale df only lengthens
-        # prefixes (recall-safe; the ngram_append_index argument)
+        if found is not None:
+            ops += _stage_kept(spark, state_dir, stage, rel, *found)
     # … and a bucket-local rewrite of ONLY the IVF partitions holding
     # a retracted vector
     if _table_exists(spark, f"{state_dir}/ivf/assigned"):
-        _retract_ivf_partitions(
-            spark, f"{state_dir}/ivf", retract, id_col, retract_values=vals
+        ops += _retract_ivf_partitions(
+            spark, state_dir, stage, retract, id_col, retract_values=vals
         )
     # the subtract-incapable sketch states now OVERSTATE — record it
-    stale = set()
-    if _table_exists(spark, f"{state_dir}/score_sketches"):
-        stale.add("score_sketches")
-    if _table_exists(spark, f"{state_dir}/accounting/stats"):
-        stale.add("accounting")
+    stale = {
+        name
+        for name, table in (
+            ("score_sketches", "score_sketches"),
+            ("accounting", "accounting/stats"),
+        )
+        if _table_exists(spark, f"{state_dir}/{table}")
+    }
     if stale:
-        _mark_stale(spark, state_dir, stale)
-    _delete_path(spark, marker)
-    return _read_snapshots_union(spark, state_dir)
+        _write_text_file(
+            spark, f"{state_dir}/{stage}/{_STALE_MARKER}",
+            ",".join(sorted(_read_stale(spark, state_dir) | stale)),
+        )
+        ops.append(["mv", f"{stage}/{_STALE_MARKER}", _STALE_MARKER])
+    return ops
 
 
 def _read_snapshots_union(spark, state_dir: str) -> DataFrame:
-    dirs = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-    ]
-    if not dirs:
+    complete = _complete_snapshots(spark, state_dir)
+    if not complete:
         raise ValueError(
             f"no complete batch snapshots under {state_dir}/batches"
         )
-    union = spark.read.parquet(dirs[0])
-    for b in dirs[1:]:
-        union = union.unionByName(
-            spark.read.parquet(b), allowMissingColumns=True
-        )
-    return union
+    return _union(spark, complete)
 
 
 def _delete_keys_file_local(
@@ -2194,12 +2204,14 @@ def _delete_keys_file_local(
     key_col: str,
     retract: DataFrame,
     retract_values: list | None = None,
-) -> int:
-    """Delete rows whose ``key_col`` matches a retracted id from a
-    flat parquet state table by rewriting ONLY the files that contain
-    a hit — takedown cost ∝ the retracted set's file footprint, not
-    the table (after :func:`compact_state`'s probe-key sort, hits
-    cluster into few files).  Returns the number of files rewritten.
+) -> tuple[list, DataFrame] | None:
+    """Plan the delete of rows whose ``key_col`` matches a retracted
+    id from a flat parquet state table, FILE-LOCALLY: returns the
+    files that contain a hit and their kept rows (or None when no
+    file holds a hit) — the caller stages the kept rows and commits
+    the swap, so takedown cost ∝ the retracted set's file footprint,
+    not the table (after :func:`compact_state`'s probe-key sort, hits
+    cluster into few files).
 
     ``retract_values`` (supplied when the retracted set is small —
     the common takedown) turns hit-file DISCOVERY into a pushed
@@ -2207,22 +2219,14 @@ def _delete_keys_file_local(
     whose key range misses the set, so after a key-sorted compaction
     the discovery scan itself is ∝ files-with-hits, not the table.
     Without it, discovery is a key-column-only scan plus a broadcast
-    semi-join (still column-pruned; the rewrite below is file-local
-    either way).
-
-    Protocol (crash-safe via the snapshots being the source of
-    truth): a ``_RETRACT_SURGERY`` marker is planted in the table
-    before any mutation and removed after — a crash in between leaves
-    replacement files and hit files coexisting (duplicate rows, which
-    the probes tolerate: fingerprint/anti-join and pair-candidate
-    reads are set-semantics) and the marker makes
-    :func:`state_summary` report the table as needing
-    :func:`rebuild_state`.  Replacement rows are ADDED before the hit
-    files are deleted, so no window ever loses kept rows."""
-    from hadoop__spark.operators.util import list_files
-
+    semi-join (still column-pruned; the rewrite is file-local either
+    way).  The journal adds the replacement files before it deletes
+    the hit files, so a concurrent reader sees duplicate rows at
+    worst (the probes tolerate them: fingerprint/anti-join and
+    pair-candidate reads are set-semantics), never a missing kept
+    row."""
     if not _table_exists(spark, table_path):
-        return 0
+        return None
     df = spark.read.parquet(table_path)
     # the key filter goes BEFORE the input_file_name projection:
     # input_file_name is nondeterministic, so a predicate above it
@@ -2245,50 +2249,31 @@ def _delete_keys_file_local(
         r._file for r in hit_rows.select("_file").distinct().collect()
     ]
     if not hit_files:
-        return 0
-    kept = (
-        spark.read.parquet(*hit_files)
-        .join(
-            F.broadcast(retract),
-            F.col(key_col) == F.col("_retract"),
-            "left_anti",
-        )
+        return None
+    kept = spark.read.parquet(*hit_files).join(
+        F.broadcast(retract),
+        F.col(key_col) == F.col("_retract"),
+        "left_anti",
     )
-    import uuid
-
-    tag = uuid.uuid4().hex[:12]
-    add_tmp = f"{table_path}__retract_add"
-    _delete_path(spark, add_tmp)
-    kept.write.mode("overwrite").parquet(add_tmp)
-    surgery = f"{table_path}/_RETRACT_SURGERY"
-    _touch_file(spark, surgery)
-    # adds in first (a crash now duplicates rows — probe-safe, and
-    # flagged via the surgery marker), hit files deleted after
-    for i, f in enumerate(list_files(spark, add_tmp, suffix=".parquet")):
-        _rename_path(
-            spark, f, f"{table_path}/part-retract-{tag}-{i:05d}.parquet"
-        )
-    for f in hit_files:
-        _delete_path(spark, f)
-    _delete_path(spark, add_tmp)
-    _delete_path(spark, surgery)
-    return len(hit_files)
+    return hit_files, kept
 
 
 def _retract_ivf_partitions(
-    spark, ivf_path: str, retract: DataFrame, id_col: str,
+    spark, state_dir: str, stage: str, retract: DataFrame, id_col: str,
     retract_values: list | None = None,
 ) -> list:
-    """Rewrite ONLY the IVF ``centroid_id`` partitions that hold a
-    retracted vector (dynamic partition overwrite — untouched buckets
-    keep their files byte-for-byte), deleting outright any affected
-    bucket left empty (dynamic overwrite only replaces partitions
-    present in the written data).  Centroids stay frozen — probe
-    exactness needs only internal consistency.  A small
-    ``retract_values`` set pushes an IN predicate into the bucket
-    discovery scan (same row-group pruning as the flat tables).
-    Returns the affected centroid ids."""
-    assigned = spark.read.parquet(f"{ivf_path}/assigned")
+    """Stage a rewrite of ONLY the IVF ``centroid_id`` partitions that
+    hold a retracted vector: their kept rows are written to
+    ``{stage}/ivf/assigned`` in the same layout (one file per bucket),
+    and the returned ops move them in, then remove each affected
+    bucket's old files — or the whole bucket dir when no row survives.
+    Untouched buckets keep their files byte-for-byte.  Centroids stay
+    frozen — probe exactness needs only internal consistency.  A
+    small ``retract_values`` set pushes an IN predicate into the
+    bucket discovery scan (same row-group pruning as the flat
+    tables)."""
+    rel = "ivf/assigned"
+    assigned = spark.read.parquet(f"{state_dir}/{rel}")
     if retract_values is not None:
         aff_rows = assigned.where(F.col(id_col).isin(retract_values))
     else:
@@ -2303,33 +2288,32 @@ def _retract_ivf_partitions(
     ]
     if not affected:
         return []
-    bucket = assigned.where(F.col("centroid_id").isin(affected))
-    kept = bucket.join(
+    kept = assigned.where(F.col("centroid_id").isin(affected)).join(
         F.broadcast(retract), F.col(id_col) == F.col("_retract"), "left_anti"
     )
-    # stage the kept bucket rows (∝ affected buckets, not the index)
-    # before overwriting — Spark cannot overwrite a path it is
-    # reading, and the dynamic overwrite must not scan its own target
-    tmp = f"{ivf_path}/__retract_kept_tmp"
-    _delete_path(spark, tmp)
-    kept.write.mode("overwrite").parquet(tmp)
-    kept_m = spark.read.parquet(tmp)
-    remaining = {
-        r.centroid_id
-        for r in kept_m.select("centroid_id").distinct().collect()
+    (
+        kept.repartition("centroid_id")
+        .write.mode("overwrite")
+        .partitionBy("centroid_id")
+        .parquet(f"{state_dir}/{stage}/{rel}")
+    )
+    staged = {
+        _name(d)
+        for d in _list_child_dirs(spark, f"{state_dir}/{stage}/{rel}")
     }
-    if remaining:
-        (
-            kept_m.repartition("centroid_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("centroid_id")
-            .parquet(f"{ivf_path}/assigned")
-        )
-    for cid in set(affected) - remaining:
-        _delete_path(spark, f"{ivf_path}/assigned/centroid_id={cid}")
-    _delete_path(spark, tmp)
-    return affected
+    ops = _adopt(spark, state_dir, stage, rel)
+    for cid in affected:
+        bucket = f"{rel}/centroid_id={cid}"
+        if _name(bucket) not in staged:
+            ops.append(["rm", bucket])
+            continue
+        ops += [
+            ["rm", f"{bucket}/{_name(f)}"]
+            for f in _list_files(
+                spark, f"{state_dir}/{bucket}", suffix=".parquet"
+            )
+        ]
+    return ops
 
 
 def decontaminate_state(
@@ -2377,26 +2361,24 @@ def decontaminate_state(
     keep the benchmark in every subsequent :func:`ingest_batch` call
     to hold the decontamination going forward.
     """
-    # fsck-first, under a short lock hold: the overlap scan below
-    # reads the snapshot union lock-free, so a crashed coalesce's
-    # partially-deleted sources would silently scope the scan to a
-    # PARTIAL corpus (contaminated docs in the missing sources never
-    # flagged).  Repair-or-refuse before reading; the retraction at
-    # the end re-guards under its own lock hold.
+    # one lock hold for the whole call: its fsck pass replays a
+    # crashed verb before the overlap scan reads the snapshot union (a
+    # half-applied coalesce would scope the scan to a PARTIAL corpus),
+    # and the retraction runs inside the same hold
     with _maintenance_lock(spark, state_dir):
-        _fsck_first(spark, state_dir, "decontaminate_state")
-    union = _read_snapshots_union(spark, state_dir)
-    flagged = contamination_report(
-        union, benchmark, text_col, id_col, n=n
-    ).where(F.col("overlap_frac") > max_overlap)
-    audit = f"{state_dir}/decontamination/{benchmark_name}"
-    flagged.write.mode("overwrite").parquet(audit)
-    report = spark.read.parquet(audit)
-    if report.limit(1).count():
-        retract_documents(
-            spark, state_dir, report.select(id_col), id_col=id_col,
-            mode=mode, repair_sketches=repair_sketches, **rebuild_kwargs,
-        )
+        union = _read_snapshots_union(spark, state_dir)
+        flagged = contamination_report(
+            union, benchmark, text_col, id_col, n=n
+        ).where(F.col("overlap_frac") > max_overlap)
+        audit = f"{state_dir}/decontamination/{benchmark_name}"
+        flagged.write.mode("overwrite").parquet(audit)
+        report = spark.read.parquet(audit)
+        if report.limit(1).count():
+            retract_documents(
+                spark, state_dir, report.select(id_col), id_col=id_col,
+                mode=mode, repair_sketches=repair_sketches,
+                **rebuild_kwargs,
+            )
     return report
 
 
@@ -2417,78 +2399,61 @@ def compact_state(
 
     Each table present is rewritten right-sized via
     :func:`~hadoop__spark.sources.io.compact_parquet` (sorted by its
-    probe key, so row-group stats cluster) and swapped in
-    (write-new / delete / rename).  Row CONTENT is untouched — probes
-    read the same state, just from fewer files (tested).  The IVF
-    assigned table gets the partition-PRESERVING variant
-    (:func:`_compact_ivf_assigned` — one file per centroid bucket,
-    pruning layout intact); ``batches/*`` is skipped on purpose
-    (immutable snapshots — the rebuild and retraction source of
-    truth; :func:`coalesce_snapshots` is their axis).  Runs
-    fsck-first under the lock: a
-    previously-crashed compact's ``__compact_tmp`` is restored before
-    the existence check (which would otherwise skip the table), and a
-    mid-surgery table (whose duplicate rows a compaction would bake
-    in while dropping the needs-rebuild flag) refuses
-    (:func:`_fsck_first`).
+    probe key, so row-group stats cluster) into one journal stage,
+    and one commit swaps every rewritten table in (an ``mv`` per
+    table).  Row CONTENT is untouched — probes read the same state,
+    just from fewer files (tested).  The IVF assigned table gets the
+    partition-PRESERVING variant (:func:`_compact_ivf_assigned` — one
+    file per centroid bucket, pruning layout intact); ``batches/*`` is
+    skipped on purpose (immutable snapshots — the rebuild and
+    retraction source of truth; :func:`coalesce_snapshots` is their
+    axis).  The lock's fsck pass runs first: a crashed verb's
+    committed stage (say a half-applied retraction) is replayed
+    before the tables are read, so a compaction never bakes a
+    transient duplicate in.
 
     Returns ``{table: files_written}`` for the tables that existed.
     """
-    with _maintenance_lock(spark, state_dir):
-        return _compact_state_locked(spark, state_dir, target_file_bytes)
+    return _compact_state(spark, state_dir, target_file_bytes)
 
 
-def _compact_state_locked(
-    spark,
-    state_dir: str,
-    target_file_bytes: int,
-    fsck: bool = True,
-    skip_ivf: bool = False,
+def _compact_state(
+    spark, state_dir: str, target_file_bytes: int, skip_ivf: bool = False
 ) -> dict[str, int]:
-    """:func:`compact_state`'s body, run under the maintenance lock
-    (shared with :func:`maintain_state`'s single lock hold —
-    ``fsck=False`` skips the fsck-first pass when the composing verb
-    already ran it under the same hold; ``skip_ivf=True`` skips the
-    IVF rewrite when a just-finished refit already rewrote the index
-    in :func:`_compact_ivf_assigned`'s exact layout — one file per
+    """:func:`compact_state`'s body.  ``skip_ivf=True`` skips the IVF
+    rewrite when a just-finished refit already rewrote the index in
+    :func:`_compact_ivf_assigned`'s exact layout — one file per
     bucket, id-sorted within buckets (``ivf_write_index`` sorts within
     partitions), so re-compacting it in the same window would double
-    the window's table I/O to produce byte-equivalent row groups)."""
+    the window's table I/O to produce byte-equivalent row groups."""
     from hadoop__spark.sources.io import compact_parquet
 
-    done: dict[str, int] = {}
-    # fsck-first (the shared maintenance-verb contract): restores a
-    # previously-crashed compact's {table}__compact_tmp BEFORE the
-    # existence check below (which would otherwise SKIP the table —
-    # its data sits at the tmp path), and refuses mid-surgery tables
-    # whose duplicate rows a compaction would silently bake in while
-    # dropping the _RETRACT_SURGERY marker that flags them
-    if fsck:
-        _fsck_first(spark, state_dir, "compact_state")
-    for rel, sort_by in _STATE_TABLES.items():
-        path = f"{state_dir}/{rel}"
-        if not _table_exists(spark, path):
-            continue
-        tmp = f"{path}__compact_tmp"
-        n = compact_parquet(
-            spark, path, tmp, target_file_bytes=target_file_bytes,
-            sort_by=sort_by,
+    with _maintenance_lock(spark, state_dir):
+        stage = _stage_dir("compact")
+        done: dict[str, int] = {}
+        for rel, sort_by in _STATE_TABLES.items():
+            if _table_exists(spark, f"{state_dir}/{rel}"):
+                done[rel] = compact_parquet(
+                    spark, f"{state_dir}/{rel}",
+                    f"{state_dir}/{stage}/{rel}",
+                    target_file_bytes=target_file_bytes, sort_by=sort_by,
+                )
+        if not skip_ivf:
+            n = _compact_ivf_assigned(
+                spark, state_dir, target_file_bytes, stage
+            )
+            if n is not None:
+                done["ivf/assigned"] = n
+        _commit(
+            spark, state_dir, stage,
+            [["mv", f"{stage}/{rel}", rel] for rel in done],
         )
-        _delete_path(spark, path)
-        # a crash between this delete and the rename leaves the
-        # data at {table}__compact_tmp — fsck_state (run by
-        # rebuild_state, or standalone) restores it
-        _rename_path(spark, tmp, path)
-        done[rel] = n
-    if not skip_ivf:
-        n = _compact_ivf_assigned(spark, state_dir, target_file_bytes)
-        if n is not None:
-            done["ivf/assigned"] = n
-    return done
+        return done
 
 
 def _compact_ivf_assigned(
-    spark, state_dir: str, target_file_bytes: int = 128 * 1024 * 1024
+    spark, state_dir: str, target_file_bytes: int = 128 * 1024 * 1024,
+    stage: str | None = None,
 ) -> int | None:
     """Partition-PRESERVING compaction of the IVF assigned table —
     the embedding plane's small-files bound.  Every
@@ -2511,17 +2476,14 @@ def _compact_ivf_assigned(
     layout, not one-file-per-bucket, and without the cap a
     pathological bucket becomes one giant write task and one
     oversized file (:func:`refit_ivf_index` is the rebalance; this
-    keeps the compact itself parallel until it runs).  Same
-    write-tmp/delete/rename swap and fsck coverage as the flat
-    tables.  Returns the file count written, or None when no index
+    keeps the compact itself parallel until it runs).  The rewrite
+    goes to ``{stage}/ivf/assigned`` of the caller's journal stage,
+    which commits it; without a ``stage`` the call stages and commits
+    its own.  Returns the file count written, or None when no index
     exists."""
     from pyspark.sql.types import ArrayType
 
-    from hadoop__spark.operators.util import (
-        list_files,
-        parquet_row_count,
-        path_bytes,
-    )
+    from hadoop__spark.operators.util import parquet_row_count, path_bytes
 
     path = f"{state_dir}/ivf/assigned"
     if not _table_exists(spark, path):
@@ -2539,7 +2501,7 @@ def _compact_ivf_assigned(
     splits = {}
     split_dirs = {}
     for b in _list_child_dirs(spark, path):
-        name = b.rstrip("/").rsplit("/", 1)[-1]
+        name = _name(b)
         # only real partition dirs: a hard-crashed append can leave
         # _temporary (non-numeric → _typed would raise; truncated
         # footers → parquet_row_count would raise), and the reader
@@ -2566,8 +2528,9 @@ def _compact_ivf_assigned(
             out = out.sortWithinPartitions("centroid_id", *sort_cols)
         return out
 
-    tmp = f"{path}__compact_tmp"
-    _delete_path(spark, tmp)
+    own = stage is None
+    stage = stage or _stage_dir("compact")
+    tmp = f"{state_dir}/{stage}/ivf/assigned"
     if splits and sort_cols:
         # TWO writers into the same tmp: maxRecordsPerFile is a
         # writer-GLOBAL option, so one writer carrying the hot
@@ -2659,9 +2622,12 @@ def _compact_ivf_assigned(
         _cluster(df).write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(tmp)
-    n_files = len(list_files(spark, tmp, suffix=".parquet"))
-    _delete_path(spark, path)
-    _rename_path(spark, tmp, path)
+    n_files = len(_list_files(spark, tmp, suffix=".parquet"))
+    if own:
+        _commit(
+            spark, state_dir, stage,
+            [["mv", f"{stage}/ivf/assigned", "ivf/assigned"]],
+        )
     return n_files
 
 
@@ -2685,14 +2651,13 @@ def refit_ivf_index(
     (refused by Spark), take no lock against a concurrent ingest, and
     leave no crash protocol.  Here the new index (fresh centroids +
     re-assigned vectors, ``nlist`` defaulting to the faiss
-    ``max(16, 4√N)`` rule) is built at ``tmp/ivf_refit`` reading the
-    OLD table, a ``_REFIT_COMPLETE`` marker is written as the commit
-    point, and only then are the old ``assigned``/``centroids``
-    swapped out — both together, never mixed (an old-centroids /
-    new-assignments hybrid would silently mis-route probes).
-    :func:`fsck_state` sweeps a pre-marker stage (old index intact)
-    and FINISHES a post-marker one (delete old remnants, adopt both
-    new tables).  Runs under the maintenance lock, fsck-first.
+    ``max(16, 4√N)`` rule) is built in a journal stage reading the
+    OLD table, and ONE commit swaps both ``assigned`` and
+    ``centroids`` in — never mixed (an old-centroids /
+    new-assignments hybrid would silently mis-route probes): a crash
+    before the commit leaves the old index intact, a crash after it
+    is finished by :func:`fsck_state`, which adopts both new tables.
+    Runs under the maintenance lock, after its fsck pass.
 
     Probe exactness needs only internal consistency, so subsequent
     :func:`ingest_batch` calls append against the NEW frozen
@@ -2703,59 +2668,43 @@ def refit_ivf_index(
     lock hold) when called with ``refit="advice"`` and the bucket
     skew crosses the :func:`state_summary` threshold.
     """
-    with _maintenance_lock(spark, state_dir):
-        _fsck_first(spark, state_dir, "refit_ivf_index")
-        return _refit_ivf_locked(spark, state_dir, nlist, seed)
-
-
-def _refit_ivf_locked(
-    spark, state_dir: str, nlist: int | None, seed: int
-) -> dict:
-    """:func:`refit_ivf_index`'s body, run under the maintenance lock
-    (shared with :func:`maintain_state`'s single lock hold)."""
     from hadoop__spark.operators.similarity import ivf_write_index
     from pyspark.sql.types import ArrayType
 
-    assigned_path = f"{state_dir}/ivf/assigned"
-    if not _table_exists(spark, assigned_path):
-        raise ValueError(
-            f"no IVF index at {state_dir}/ivf — nothing to re-fit"
+    with _maintenance_lock(spark, state_dir):
+        assigned_path = f"{state_dir}/ivf/assigned"
+        if not _table_exists(spark, assigned_path):
+            raise ValueError(
+                f"no IVF index at {state_dir}/ivf — nothing to re-fit"
+            )
+        assigned = spark.read.parquet(assigned_path)
+        vec_col = next(
+            f.name
+            for f in assigned.schema.fields
+            if isinstance(f.dataType, ArrayType)
         )
-    assigned = spark.read.parquet(assigned_path)
-    vec_col = next(
-        f.name
-        for f in assigned.schema.fields
-        if isinstance(f.dataType, ArrayType)
-    )
-    id_col = next(
-        f.name
-        for f in assigned.schema.fields
-        if f.name not in (vec_col, "centroid_id")
-    )
-    n = assigned.count()
-    fit_nlist = nlist or max(16, int(4 * n**0.5))
-    tmp = f"{state_dir}/tmp/ivf_refit"
-    _delete_path(spark, tmp)
-    ivf_write_index(
-        assigned.select(id_col, vec_col),
-        tmp,
-        nlist=fit_nlist,
-        vec_col=vec_col,
-        id_col=id_col,
-        seed=seed,
-    )
-    # commit point: both new tables are durable; the swap below is
-    # finishable from the stage alone
-    _touch_file(spark, f"{tmp}/{_REFIT_MARKER}")
-    _delete_path(spark, assigned_path)
-    _delete_path(spark, f"{state_dir}/ivf/centroids")
-    _rename_path(spark, f"{tmp}/assigned", assigned_path)
-    _rename_path(
-        spark, f"{tmp}/centroids", f"{state_dir}/ivf/centroids"
-    )
-    _delete_path(spark, tmp)
-    return {"n_vectors": int(n), "nlist": int(fit_nlist)}
-
+        id_col = next(
+            f.name
+            for f in assigned.schema.fields
+            if f.name not in (vec_col, "centroid_id")
+        )
+        n = assigned.count()
+        fit_nlist = nlist or max(16, int(4 * n**0.5))
+        stage = _stage_dir("refit")
+        ivf_write_index(
+            assigned.select(id_col, vec_col),
+            f"{state_dir}/{stage}/ivf",
+            nlist=fit_nlist,
+            vec_col=vec_col,
+            id_col=id_col,
+            seed=seed,
+        )
+        _commit(
+            spark, state_dir, stage,
+            [["mv", f"{stage}/ivf/{t}", f"ivf/{t}"]
+             for t in ("assigned", "centroids")],
+        )
+        return {"n_vectors": int(n), "nlist": int(fit_nlist)}
 
 
 def coalesce_snapshots(
@@ -2789,15 +2738,14 @@ def coalesce_snapshots(
     * **Commit-marker coverage** — the epoch's marker claims the
       INTERSECTION of its sources' covered planes (conservative: a
       replay needing a plane any source lacked still refuses).
-    * **Crash-safety** — the epoch is staged OUTSIDE ``batches/``
-      (``{state_dir}/tmp/coalesce/{epoch}``) with a manifest of its
-      source names written last; the swap deletes sources and then
-      renames the epoch in.  A crash anywhere in the window is
-      repaired by :func:`fsck_state`: sources all present → sweep the
-      staged epoch (nothing was lost); any source already deleted →
-      FINISH (retire the rest, adopt the epoch) — the epoch holds the
-      union of all of them, so no window loses rows or duplicates
-      them into a later rebuild.
+    * **Crash-safety** — the epoch is staged OUTSIDE ``batches/`` in
+      a journal stage, and one commit moves it in FIRST and only then
+      removes the sources.  A crash before the commit leaves the
+      sources as they were; a crash after it is finished by
+      :func:`fsck_state` (run before any other maintenance verb and
+      by :func:`rebuild_state`, and :func:`ingest_batch` refuses
+      meanwhile).  No window loses rows; a reader in the apply window
+      sees the epoch's rows twice at worst.
 
     Selection: ``names`` picks explicit snapshot names; default is
     every complete+committed snapshot EXCEPT the ``keep_recent`` most
@@ -2812,9 +2760,9 @@ def coalesce_snapshots(
     :func:`rebuild_state` is their path).  Fewer than two candidates
     is a no-op.
 
-    Runs under the maintenance lock, fsck-first (a crashed
-    surgery/coalesce stage is repaired before the snapshot set is
-    read; a crashed fast retraction refuses — see :func:`_fsck_first`).
+    Runs under the maintenance lock, after its fsck pass (a crashed
+    retraction's committed surgery lands before the snapshot set is
+    read, so the epoch never bakes retracted rows back in).
     Returns ``{"epoch": name or None, "coalesced": [names...],
     "skipped_uncommitted": [...]}``.  :func:`maintain_state` composes
     this with the fsck and the table compaction as one verb.
@@ -2824,118 +2772,77 @@ def coalesce_snapshots(
     follows public log-structured designs (e.g. LSM level merges,
     Iceberg/Delta snapshot expiration).
     """
-    if keep_recent < 0:
-        raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
-    with _maintenance_lock(spark, state_dir):
-        return _coalesce_snapshots_locked(
-            spark, state_dir, names, keep_recent, target_file_bytes
-        )
-
-
-def _coalesce_snapshots_locked(
-    spark,
-    state_dir: str,
-    names: list[str] | None,
-    keep_recent: int,
-    target_file_bytes: int,
-    fsck: bool = True,
-) -> dict:
-    """:func:`coalesce_snapshots`'s body, run under the maintenance
-    lock (shared with :func:`maintain_state`'s single lock hold —
-    ``fsck=False`` skips the fsck-first pass when the composing verb
-    already ran it under the same hold)."""
     import hashlib
 
     from hadoop__spark.operators.util import path_bytes, path_mtime
 
-    # fsck-first: a crashed surgery/coalesce stage must be
-    # repaired (or the state refused) before the snapshot set
-    # below is read — see _fsck_first for the two failure
-    # compositions this closes
-    if fsck:
-        _fsck_first(spark, state_dir, "coalesce_snapshots")
-    complete = [
-        b
-        for b in _list_child_dirs(spark, f"{state_dir}/batches")
-        if _table_exists(spark, f"{b}/_SUCCESS")
-    ]
-    committed, skipped = [], []
-    for b in complete:
-        name = b.rstrip("/").rsplit("/", 1)[-1]
-        if _read_commit_marker(spark, b) is None:
-            skipped.append(name)
+    if keep_recent < 0:
+        raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
+    with _maintenance_lock(spark, state_dir):
+        committed, skipped = [], []
+        for b in _complete_snapshots(spark, state_dir):
+            if _read_commit_marker(spark, b) is None:
+                skipped.append(_name(b))
+            else:
+                committed.append(_name(b))
+        if names is not None:
+            missing = sorted(set(names) - set(committed))
+            if missing:
+                raise ValueError(
+                    f"cannot coalesce {missing} on {state_dir} — not "
+                    "complete committed snapshots (uncommitted "
+                    "snapshots are crash evidence: rebuild_state first)"
+                )
+            sources = sorted(set(names))
         else:
-            committed.append(name)
-    if names is not None:
-        missing = sorted(set(names) - set(committed))
-        if missing:
-            raise ValueError(
-                f"cannot coalesce {missing} on {state_dir} — not "
-                "complete committed snapshots (uncommitted "
-                "snapshots are crash evidence: rebuild_state first)"
+            by_age = sorted(
+                committed,
+                key=lambda n: path_mtime(
+                    spark, f"{state_dir}/batches/{n}/{_COMMIT_MARKER}"
+                ),
             )
-        sources = sorted(set(names))
-    else:
-        by_age = sorted(
-            committed,
-            key=lambda n: path_mtime(
-                spark, f"{state_dir}/batches/{n}/{_COMMIT_MARKER}"
-            ),
+            # max(0, …): keep_recent beyond the candidate count must
+            # keep EVERYTHING, not wrap into a negative slice that
+            # coalesces batches the caller asked to protect
+            sources = sorted(by_age[: max(0, len(by_age) - keep_recent)])
+        if len(sources) < 2:
+            return {
+                "epoch": None,
+                "coalesced": [],
+                "skipped_uncommitted": sorted(skipped),
+            }
+        digest = hashlib.sha1("\n".join(sources).encode()).hexdigest()[:12]
+        epoch = f"epoch-{digest}"
+        if _table_exists(spark, f"{state_dir}/batches/{epoch}"):
+            raise RuntimeError(
+                f"epoch snapshot {epoch} already exists under "
+                f"{state_dir}/batches — name collision with a live "
+                "batch; retract or rename it first"
+            )
+        src_paths = [f"{state_dir}/batches/{n}" for n in sources]
+        covered = _read_commit_marker(spark, src_paths[0])
+        for p in src_paths[1:]:
+            covered &= _read_commit_marker(spark, p)
+        # right-size from the sources' on-disk bytes — coalesce, not
+        # repartition: the epoch write must not shuffle the corpus
+        total = sum(path_bytes(spark, p) for p in src_paths)
+        n_files = max(1, -(-total // target_file_bytes))
+        stage = _stage_dir("coalesce")
+        tmp = f"{state_dir}/{stage}/batches/{epoch}"
+        _union(spark, src_paths).coalesce(n_files).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        _write_commit_marker(spark, tmp, covered)
+        _commit(
+            spark, state_dir, stage,
+            [["mv", f"{stage}/batches/{epoch}", f"batches/{epoch}"]]
+            + [["rm", f"batches/{n}"] for n in sources],
         )
-        # max(0, …): keep_recent beyond the candidate count must
-        # keep EVERYTHING, not wrap into a negative slice that
-        # coalesces batches the caller asked to protect
-        sources = sorted(by_age[: max(0, len(by_age) - keep_recent)])
-    if len(sources) < 2:
         return {
-            "epoch": None,
-            "coalesced": [],
+            "epoch": epoch,
+            "coalesced": sources,
             "skipped_uncommitted": sorted(skipped),
         }
-    digest = hashlib.sha1("\n".join(sources).encode()).hexdigest()[:12]
-    epoch = f"epoch-{digest}"
-    if _table_exists(spark, f"{state_dir}/batches/{epoch}"):
-        raise RuntimeError(
-            f"epoch snapshot {epoch} already exists under "
-            f"{state_dir}/batches — name collision with a live "
-            "batch; retract or rename it first"
-        )
-    src_paths = [f"{state_dir}/batches/{n}" for n in sources]
-    union = spark.read.parquet(src_paths[0])
-    covered = _read_commit_marker(spark, src_paths[0])
-    for p in src_paths[1:]:
-        union = union.unionByName(
-            spark.read.parquet(p), allowMissingColumns=True
-        )
-        covered &= _read_commit_marker(spark, p)
-    # right-size from the sources' on-disk bytes — coalesce, not
-    # repartition: the epoch write must not shuffle the corpus
-    total = sum(path_bytes(spark, p) for p in src_paths)
-    n_files = max(1, -(-total // target_file_bytes))
-    tmp = f"{state_dir}/tmp/coalesce/{epoch}"
-    _delete_path(spark, tmp)
-    union.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    _write_commit_marker(spark, tmp, covered)
-    # the manifest is the LAST tmp write: its presence marks the
-    # staged epoch as finish-able (see fsck_state)
-    _write_text_file(
-        spark, f"{tmp}/{_COALESCE_MANIFEST}", "\n".join(sources)
-    )
-    for p in src_paths:
-        _delete_path(spark, p)
-    _rename_path(spark, tmp, f"{state_dir}/batches/{epoch}")
-    # the manifest did its job (it was the crash protocol's commit
-    # point INSIDE tmp/); don't let the protocol artifact live on in
-    # the adopted snapshot — harmless to Spark's underscore-file
-    # filtering, but a relocated batches/ dir could be misread as a
-    # pending coalesce.  A crash in this one-file window leaves a
-    # stray manifest that fsck_state sweeps.
-    _delete_path(spark, f"{state_dir}/batches/{epoch}/{_COALESCE_MANIFEST}")
-    return {
-        "epoch": epoch,
-        "coalesced": sources,
-        "skipped_uncommitted": sorted(skipped),
-    }
 
 
 def maintain_state(
@@ -2951,8 +2858,8 @@ def maintain_state(
     bound the snapshot count (:func:`coalesce_snapshots`), rebalance a
     drifted IVF index when asked (:func:`refit_ivf_index`), and
     right-size the probe tables (:func:`compact_state`) under a single
-    maintenance-lock acquisition (the fsck pass runs ONCE and the
-    composed steps skip theirs) — so an operator's cron job is one
+    maintenance-lock acquisition (the verbs run inside the one hold,
+    and its fsck pass runs ONCE) — so an operator's cron job is one
     call and a concurrent :func:`ingest_batch` sees one exclusion
     window instead of several lock/unlock races it could slip between.
 
@@ -2971,8 +2878,7 @@ def maintain_state(
     the index layout mid-stream, so it stays opt-in.
 
     Equivalent to the per-verb composition (tested); refuses exactly
-    when the parts would (a crashed fast retraction still needs
-    :func:`rebuild_state` first).  Returns the combined report::
+    when the parts would.  Returns the combined report::
 
         {"fsck": {...}, "coalesce": {...}, "compact": {...},
          "refit": {"n_vectors": ..., "nlist": ...} | None}
@@ -2981,11 +2887,10 @@ def maintain_state(
         raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
     if refit not in ("advice", "off"):
         raise ValueError(f"refit must be 'advice' or 'off', got {refit!r}")
-    with _maintenance_lock(spark, state_dir):
-        fsck = _fsck_first(spark, state_dir, "maintain_state")
-        coalesce = _coalesce_snapshots_locked(
-            spark, state_dir, None, keep_recent, target_file_bytes,
-            fsck=False,
+    with _maintenance_lock(spark, state_dir) as fsck:
+        coalesce = coalesce_snapshots(
+            spark, state_dir, keep_recent=keep_recent,
+            target_file_bytes=target_file_bytes,
         )
         refit_report = None
         if refit == "advice":
@@ -2997,12 +2902,10 @@ def maintain_state(
                     _REFIT_SKEW if refit_skew is None else refit_skew
                 )
             ):
-                refit_report = _refit_ivf_locked(
-                    spark, state_dir, None, seed
-                )
-        compact = _compact_state_locked(
+                refit_report = refit_ivf_index(spark, state_dir, seed=seed)
+        compact = _compact_state(
             spark, state_dir, target_file_bytes,
-            fsck=False, skip_ivf=refit_report is not None,
+            skip_ivf=refit_report is not None,
         )
     return {
         "fsck": fsck,
@@ -3013,67 +2916,48 @@ def maintain_state(
 
 
 def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
-    """Detect AND REPAIR the swap-window orphans of a crashed
-    :func:`retract_documents` / :func:`compact_state` — the recovery
-    step that used to be a prose "rename it back by hand" note, as
-    code (:func:`rebuild_state` runs it first, so a post-crash rebuild
-    needs no hand intervention; it is also safe standalone from a
-    maintenance window).
+    """Finish or discard whatever a crashed maintenance verb left —
+    "replay committed stages, sweep uncommitted ones" over the commit
+    journal (``{state_dir}/tmp/commit/``):
 
-    Flat-table compaction follows write-tmp / delete-target / rename,
-    so a crash leaves exactly one of two states per table:
+    * a stage WITH its manifest reached its commit point: its ops are
+      applied again (each is idempotent, so a half-applied stage
+      finishes exactly once) — reported as ``restored``;
+    * a stage WITHOUT one never mutated anything: it is deleted —
+      ``swept``;
+    * a crashed ingest's single-execution staging tables
+      (``tmp/*_eligible`` / ``tmp/*_text_survivors`` / ``tmp/*_sigs``)
+      are swept too — but never while an ingest marker stands, since
+      a LIVE run holds them transiently.
 
-    * target MISSING, tmp complete → the crash hit between delete and
-      rename: finish it (rename the tmp into place) — ``restored``.
-    * target present, tmp also present → the crash hit before the
-      delete: the target is still authoritative; the tmp is a
-      half-adopted copy that must never be unioned or double-counted
-      — delete it — ``swept``.
+    A leftover of the per-verb swap protocols this journal replaced
+    (listed in :func:`_pending`) makes the call REFUSE, naming the
+    artifacts and changing nothing: finish it with the previous
+    release's ``fsck_state``.
 
-    Snapshot surgeries and epoch coalesces are MANIFEST-driven
-    (the manifest is each protocol's commit point, written last into
-    the stage): a stage without its manifest never mutated anything
-    and is swept; one with it is FINISHED idempotently — surgery:
-    staged replacement files in, listed hit files deleted; coalesce:
-    remaining sources retired, epoch adopted (see the inline
-    comments).  One manifest-less stage is NOT swept: a complete
-    staged copy (``_SUCCESS``) whose ``batches/{name}`` is missing is
-    a pre-file-local-protocol (round ≤9) whole-snapshot swap that
-    crashed between delete and rename — it holds the snapshot's ONLY
-    copy and is renamed into place.  Also sweeps incomplete
-    (``_SUCCESS``-less) tmps, stray ``_COALESCE_MANIFEST`` files left
-    inside adopted epochs (a crash in the post-rename cleanup
-    window), and a crashed ingest's single-execution staging tables
-    (``tmp/*_eligible`` / ``tmp/*_text_survivors`` / ``tmp/*_sigs`` —
-    skipped while an ingest marker stands, since a LIVE run holds
-    them transiently);
-    and reports — but does not repair — mid-surgery flat tables
-    (``_RETRACT_SURGERY`` marker: duplicate rows possible; run
-    :func:`rebuild_state`).
-
-    Every maintenance verb runs this first under its lock and refuses
-    while anything needs a rebuild (:func:`_fsck_first`) — crashed
-    stages must never compose into a later verb's snapshot walk.
+    Every maintenance verb runs this first under its lock, and
+    :func:`rebuild_state` runs it before it reads the snapshots, so a
+    crashed stage never composes into a later verb's reads;
+    :func:`ingest_batch` refuses while a committed stage is pending.
+    Run it standalone after a crashed maintenance verb
+    (:func:`rebuild_state` is the recovery for a crashed ingest).
 
     Standalone runs take the maintenance lock themselves: a fsck
-    racing a LIVE compact/refit could otherwise sweep the verb's
-    in-flight ``__compact_tmp`` / ``tmp/ivf_refit`` between its staged
-    write and its delete→rename — after which the verb deletes the
-    live table and renames a now-missing tmp, permanent table loss.
-    Held lock → refuse (a stale lock from a hard crash is deleted by
-    hand after confirming nothing runs — the same contract as every
-    other verb).  A monitoring cron that merely happens to poll during
-    a maintenance window should pass ``blocking=False`` to get
-    ``{"skipped": "lock held"}`` instead of the exception (the default
-    raises, so an operator running fsck BECAUSE they suspect damage is
-    never handed a silent no-op).  A live ingest does NOT block the
-    fsck: its staging artifacts are protected by the
-    in-progress-marker guard below, and nothing else it writes is a
-    repair target.
+    racing a LIVE verb could otherwise sweep the verb's stage before
+    its commit.  Held lock → refuse (a stale lock from a hard crash is
+    deleted by hand after confirming nothing runs — the same contract
+    as every other verb).  A monitoring cron that merely happens to
+    poll during a maintenance window should pass ``blocking=False`` to
+    get ``{"skipped": "lock held"}`` instead of the exception (the
+    default raises, so an operator running fsck BECAUSE they suspect
+    damage is never handed a silent no-op).  A live ingest does NOT
+    block the fsck: its staging is protected by the
+    in-progress-marker guard, and it writes no journal stage.
 
-    Returns ``{"restored": [...], "swept": [...],
-    "needs_rebuild": [...]}`` (paths relative to ``state_dir``), or
-    ``{"skipped": "lock held"}`` under ``blocking=False``.
+    Returns ``{"restored": [...], "swept": [...]}`` (paths relative to
+    ``state_dir``) — the same list :func:`state_summary` reports as
+    ``orphans`` — or ``{"skipped": "lock held"}`` under
+    ``blocking=False``.
     """
     from hadoop__spark.operators.util import create_exclusive
 
@@ -3083,10 +2967,10 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
             return {"skipped": "lock held"}
         raise RuntimeError(
             f"maintenance lock {lock} is held — a live compact/"
-            "retract/refit may be mid-swap, and fsck racing it could "
-            "sweep its staged tables out from under the rename (or "
-            "the lock is stale from a hard crash; delete the file "
-            "after confirming nothing runs)"
+            "retract/refit may be mid-commit, and fsck racing it could "
+            "sweep its stage before the commit (or the lock is stale "
+            "from a hard crash; delete the file after confirming "
+            "nothing runs)"
         )
     try:
         return _fsck_state_locked(spark, state_dir)
@@ -3094,210 +2978,59 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
         _delete_path(spark, lock)
 
 
+def _pending(spark, state_dir: str) -> tuple[list, list, list]:
+    """Everything :func:`fsck_state` acts on, relative to the state
+    dir: (committed stages it replays, uncommitted stages and crashed
+    ingest staging it sweeps, pre-journal artifacts it refuses on).
+    :func:`state_summary` reports the same three lists as
+    ``orphans``."""
+    replay, sweep = _stages(spark, state_dir)
+    if not _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
+        sweep += [
+            f"tmp/{_name(d)}"
+            for d in _list_child_dirs(spark, f"{state_dir}/tmp")
+            if _name(d).endswith(("_eligible", "_text_survivors", "_sigs"))
+        ]
+    # the per-verb protocols the journal replaced: the compaction
+    # swap's sibling, the flat-table surgery's add-staging and marker,
+    # the IVF takedown's staging, the coalesce manifest stranded in an
+    # adopted epoch, the fast retraction's run marker and frozen ids,
+    # and the staging dirs of snapshot surgery (_SURGERY_MANIFEST),
+    # coalesce (_COALESCE_MANIFEST) and refit (_REFIT_COMPLETE)
+    pre_journal = [
+        f"{rel}{suffix}"
+        for rel in list(_STATE_TABLES) + ["ivf/assigned"]
+        for suffix in ("__compact_tmp", "__retract_add", "/_RETRACT_SURGERY")
+    ] + [
+        f"batches/{_name(b)}/_COALESCE_MANIFEST"
+        for b in _list_child_dirs(spark, f"{state_dir}/batches")
+    ] + [
+        "_RETRACT_INPROGRESS", "ivf/__retract_kept_tmp", "tmp/retract",
+        "tmp/coalesce", "tmp/ivf_refit", "tmp/retract_ids",
+    ]
+    legacy = [
+        rel for rel in pre_journal
+        if _table_exists(spark, f"{state_dir}/{rel}")
+    ]
+    return replay, sweep, legacy
+
+
 def _fsck_state_locked(spark, state_dir: str) -> dict:
     """:func:`fsck_state`'s body, run while the caller holds the
-    maintenance lock (the standalone wrapper above, or a maintenance
-    verb's :func:`_fsck_first`)."""
-    restored, swept, needs_rebuild = [], [], []
-    # "ivf/assigned" shares the flat tables' write-tmp/delete/rename
-    # compaction swap (partition-preserving variant) — same windows
-    for rel in list(_STATE_TABLES) + ["ivf/assigned"]:
-        path = f"{state_dir}/{rel}"
-        tmp = f"{path}__compact_tmp"
-        if _table_exists(spark, tmp):
-            if _table_exists(spark, path):
-                _delete_path(spark, tmp)
-                swept.append(f"{rel}__compact_tmp")
-            elif _table_exists(spark, f"{tmp}/_SUCCESS"):
-                _rename_path(spark, tmp, path)
-                restored.append(rel)
-            else:
-                _delete_path(spark, tmp)
-                swept.append(f"{rel}__compact_tmp")
-        add_tmp = f"{path}__retract_add"
-        if _table_exists(spark, add_tmp):
-            # staged replacement rows never adopted (crash before the
-            # surgery marker, or mid-move with the marker below)
-            _delete_path(spark, add_tmp)
-            swept.append(f"{rel}__retract_add")
-        if _table_exists(spark, f"{path}/_RETRACT_SURGERY"):
-            needs_rebuild.append(rel)
-    for tmp in _list_child_dirs(spark, f"{state_dir}/tmp/retract"):
-        # a crashed snapshot surgery: the stage holds the kept rows of
-        # the snapshot's hit files.  Manifest present (written last) →
-        # the surgery reached its commit point; FINISH it (idempotent
-        # — staged files in, listed hit files deleted).  No manifest →
-        # the snapshot was never mutated; sweep the stage.
-        name = tmp.rstrip("/").rsplit("/", 1)[-1]
-        has_manifest = _table_exists(spark, f"{tmp}/{_SURGERY_MANIFEST}")
-        has_success = _table_exists(spark, f"{tmp}/_SUCCESS")
-        has_target = _table_exists(spark, f"{state_dir}/batches/{name}")
-        if has_manifest and has_success and has_target:
-            _finish_snapshot_surgery(spark, state_dir, name)
-            restored.append(f"batches/{name}")
-        elif not has_manifest and has_success and not has_target:
-            # LEGACY restore (pre-file-local protocol): the whole-
-            # snapshot swap staged a complete replacement copy (no
-            # manifest — that file postdates it) and crashed between
-            # deleting batches/{name} and renaming the stage in.  The
-            # stage is the snapshot's ONLY copy — sweeping it would
-            # permanently delete the batch; finish the rename instead.
-            _rename_path(spark, tmp, f"{state_dir}/batches/{name}")
-            restored.append(f"batches/{name}")
-        else:
-            _delete_path(spark, tmp)
-            swept.append(f"tmp/retract/{name}")
-    for tmp in _list_child_dirs(spark, f"{state_dir}/tmp/coalesce"):
-        # a crashed coalesce_snapshots: the staged epoch's manifest
-        # lists the sources it replaces.  All sources still present →
-        # the swap never started deleting; sweep the epoch (the corpus
-        # is intact without it).  Any source gone → the swap was
-        # mid-flight; FINISH it (the epoch is the union of ALL its
-        # sources, so retiring the rest and adopting it loses nothing
-        # and duplicates nothing).  No/incomplete manifest → the
-        # staging write itself crashed; sweep.
-        name = tmp.rstrip("/").rsplit("/", 1)[-1]
-        manifest = f"{tmp}/{_COALESCE_MANIFEST}"
-        if not (
-            _table_exists(spark, f"{tmp}/_SUCCESS")
-            and _table_exists(spark, manifest)
-        ):
-            _delete_path(spark, tmp)
-            swept.append(f"tmp/coalesce/{name}")
-            continue
-        sources = _read_text_file(spark, manifest).strip().split("\n")
-        src_paths = [f"{state_dir}/batches/{s}" for s in sources if s]
-        if all(_table_exists(spark, p) for p in src_paths):
-            _delete_path(spark, tmp)
-            swept.append(f"tmp/coalesce/{name}")
-            continue
-        if _table_exists(spark, f"{state_dir}/batches/{name}"):
-            raise RuntimeError(
-                f"cannot finish crashed coalesce {name} on {state_dir}: "
-                f"batches/{name} already exists while manifest sources "
-                "are partially deleted — external interference; "
-                "resolve by hand"
-            )
-        for p in src_paths:
-            _delete_path(spark, p)
-        _rename_path(spark, tmp, f"{state_dir}/batches/{name}")
-        # same cleanup as the crash-free path: the manifest's job
-        # ended at adoption
-        _delete_path(
-            spark, f"{state_dir}/batches/{name}/{_COALESCE_MANIFEST}"
-        )
-        restored.append(f"batches/{name}")
-    for b in _list_child_dirs(spark, f"{state_dir}/batches"):
-        # a crash between an epoch's adopting rename and its manifest
-        # delete strands the protocol artifact inside the live
-        # snapshot — sweep it (the coalesce itself is complete)
-        stray = f"{b.rstrip('/')}/{_COALESCE_MANIFEST}"
-        if _table_exists(spark, stray):
-            _delete_path(spark, stray)
-            name = b.rstrip("/").rsplit("/", 1)[-1]
-            swept.append(f"batches/{name}/{_COALESCE_MANIFEST}")
-    ivf_tmp = f"{state_dir}/ivf/__retract_kept_tmp"
-    if _table_exists(spark, ivf_tmp):
-        # staging only — the dynamic overwrite either committed or
-        # not; the staged copy is never authoritative
-        _delete_path(spark, ivf_tmp)
-        swept.append("ivf/__retract_kept_tmp")
-    refit_tmp = f"{state_dir}/tmp/ivf_refit"
-    if _table_exists(spark, refit_tmp):
-        # a crashed refit_ivf_index.  Pre-marker: the old index was
-        # never touched — sweep the stage.  Post-marker AND the swap
-        # started (a target missing): FINISH by replacing BOTH tables
-        # from the stage (adopting only one would mix old centroids
-        # with new assignments and silently mis-route probes).
-        # Post-marker but BOTH targets still fully present: the swap
-        # never started — sweep the stage rather than finish, because
-        # an ingest may have appended to the old assigned between the
-        # crash and this fsck, and adopting the stage would discard
-        # those vectors; the refit is simply lost (re-run it).  Once
-        # the swap HAS started no ingest can complete against the
-        # half-missing index, so the finish cannot lose appends.
-        swap_started = not (
-            _table_exists(spark, f"{state_dir}/ivf/assigned")
-            and _table_exists(spark, f"{state_dir}/ivf/centroids")
-        )
-        if (
-            _table_exists(spark, f"{refit_tmp}/{_REFIT_MARKER}")
-            and swap_started
-        ):
-            for t in ("assigned", "centroids"):
-                if _table_exists(spark, f"{refit_tmp}/{t}"):
-                    _delete_path(spark, f"{state_dir}/ivf/{t}")
-                    _rename_path(
-                        spark, f"{refit_tmp}/{t}", f"{state_dir}/ivf/{t}"
-                    )
-            _delete_path(spark, refit_tmp)
-            restored.append("ivf")
-        else:
-            _delete_path(spark, refit_tmp)
-            swept.append("tmp/ivf_refit")
-    ids_tmp = f"{state_dir}/tmp/retract_ids"
-    if _table_exists(spark, ids_tmp):
-        # the frozen retract-id staging table of a crashed
-        # retract_documents — input staging only, never authoritative
-        _delete_path(spark, ids_tmp)
-        swept.append("tmp/retract_ids")
-    if not _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
-        # a crashed ingest_batch's single-execution staging tables
-        # (probe-filtered rows, text-plane survivors) — derived data
-        # only, re-created by the re-ingest; never authoritative.
-        # Skipped while an ingest is IN FLIGHT (marker present): a
-        # live run holds these transiently, and a standalone fsck
-        # must not sweep them out from under it.
-        for tmp in _list_child_dirs(spark, f"{state_dir}/tmp"):
-            name = tmp.rstrip("/").rsplit("/", 1)[-1]
-            if (
-                name.endswith("_eligible")
-                or name.endswith("_text_survivors")
-                or name.endswith("_sigs")
-            ):
-                _delete_path(spark, tmp)
-                swept.append(f"tmp/{name}")
-    if _table_exists(spark, f"{state_dir}/{_RETRACT_MARKER}"):
-        # a fast retraction crashed between its multi-table mutations
-        # — only a rebuild reconsolidates (and clears the marker)
-        needs_rebuild.append(_RETRACT_MARKER)
-    return {
-        "restored": restored,
-        "swept": swept,
-        "needs_rebuild": needs_rebuild,
-    }
-
-
-def _fsck_first(spark, state_dir: str, op: str) -> dict:
-    """The fsck-first contract every maintenance verb shares with
-    :func:`rebuild_state`, run AFTER the verb holds the maintenance
-    lock: repair any crashed stage (:func:`fsck_state`) BEFORE the
-    verb reads the snapshot set, and REFUSE while anything needs a
-    rebuild.
-
-    Without it the maintenance verbs compose unsafely across a crash:
-    :func:`coalesce_snapshots` would merge a mid-surgery snapshot
-    (transient duplicates, retracted ids still present) into an epoch
-    and delete the source — after which fsck SWEEPS the committed
-    surgery stage (its ``batches/{name}`` no longer exists), baking
-    the duplicates in and silently undoing the takedown; symmetrically,
-    :func:`retract_documents` run between a coalesce crash and its
-    fsck would do surgery on the partial snapshot set, and the later
-    fsck would adopt the PRE-retraction staged epoch, resurrecting
-    the retracted ids with no marker left to flag it.  Repair-first
-    closes both directions; the refusal mirrors
-    :func:`_retract_fast`'s marker check (a half-applied fast
-    retraction only reconsolidates through a rebuild)."""
-    report = _fsck_state_locked(spark, state_dir)
-    if report["needs_rebuild"]:
+    maintenance lock (the standalone wrapper above, a verb's lock
+    hold) or by :func:`rebuild_state` on a quiesced state."""
+    replay, sweep, legacy = _pending(spark, state_dir)
+    if legacy:
         raise RuntimeError(
-            f"{op} on {state_dir} refused: a crashed fast retraction "
-            f"left {sorted(report['needs_rebuild'])} needing a rebuild "
-            f"— running {op} now would bake its partial mutations into "
-            "the state; run rebuild_state first (it reconsolidates "
-            "every table and clears the markers)"
+            f"{state_dir} holds pre-journal maintenance artifacts "
+            f"{legacy} — finish it with the previous release's "
+            "fsck_state; nothing was changed"
         )
-    return report
+    for stage in replay:
+        _apply(spark, state_dir, stage)
+    for rel in sweep:
+        _delete_path(spark, f"{state_dir}/{rel}")
+    return {"restored": replay, "swept": sweep}
 
 
 # bucket-balance ratio (max bucket rows / mean bucket rows) above
@@ -3419,7 +3152,7 @@ def state_summary(
 
         {"text_method": ..., "tables": {relpath: rows, ...},
          "batches": [{"name", "rows", "committed", "covered"}, ...],
-         "needs_rebuild": bool,    # uncommitted batch or mid-surgery
+         "needs_rebuild": bool,    # an uncommitted batch snapshot
          "policy": dict | None,
          "ingest_in_progress": bool, "maintenance_lock": bool,
          "orphans": [...],         # fsck_state would repair these
@@ -3473,7 +3206,7 @@ def state_summary(
     needs_rebuild = False
     snapshot_rows = 0
     for b in _list_child_dirs(spark, f"{state_dir}/batches"):
-        name = b.rstrip("/").rsplit("/", 1)[-1]
+        name = _name(b)
         complete = _table_exists(spark, f"{b}/_SUCCESS")
         covered = _read_commit_marker(spark, b)
         rows = parquet_row_count(spark, b) if complete else None
@@ -3489,37 +3222,7 @@ def state_summary(
             snapshot_rows += rows
             if covered is None:
                 needs_rebuild = True
-    orphans = []
-    for rel in list(_STATE_TABLES) + ["ivf/assigned"]:
-        for suffix in ("__compact_tmp", "__retract_add"):
-            if _table_exists(spark, f"{state_dir}/{rel}{suffix}"):
-                orphans.append(f"{rel}{suffix}")
-        if _table_exists(spark, f"{state_dir}/{rel}/_RETRACT_SURGERY"):
-            needs_rebuild = True
-            orphans.append(f"{rel}/_RETRACT_SURGERY")
-    for tmp in _list_child_dirs(spark, f"{state_dir}/tmp/retract"):
-        orphans.append(f"tmp/retract/{tmp.rstrip('/').rsplit('/', 1)[-1]}")
-    for tmp in _list_child_dirs(spark, f"{state_dir}/tmp/coalesce"):
-        orphans.append(f"tmp/coalesce/{tmp.rstrip('/').rsplit('/', 1)[-1]}")
-    if _table_exists(spark, f"{state_dir}/tmp/retract_ids"):
-        orphans.append("tmp/retract_ids")
-    if _table_exists(spark, f"{state_dir}/tmp/ivf_refit"):
-        orphans.append("tmp/ivf_refit")
-    if not _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
-        # only when no ingest is in flight: a LIVE ingest_batch holds
-        # these staging tables transiently — they are orphans (fsck
-        # sweeps) only once the run that made them is gone
-        for tmp in _list_child_dirs(spark, f"{state_dir}/tmp"):
-            name = tmp.rstrip("/").rsplit("/", 1)[-1]
-            if (
-                name.endswith("_eligible")
-                or name.endswith("_text_survivors")
-                or name.endswith("_sigs")
-            ):
-                orphans.append(f"tmp/{name}")
-    if _table_exists(spark, f"{state_dir}/{_RETRACT_MARKER}"):
-        needs_rebuild = True
-        orphans.append(_RETRACT_MARKER)
+    orphans = [rel for found in _pending(spark, state_dir) for rel in found]
     stale = sorted(_read_stale(spark, state_dir))
     overstatement = None
     if "accounting" in stale and _table_exists(
@@ -3538,7 +3241,7 @@ def state_summary(
             "snapshot_rows": snapshot_rows,
         }
     decontaminated = sorted(
-        d.rstrip("/").rsplit("/", 1)[-1]
+        _name(d)
         for d in _list_child_dirs(spark, f"{state_dir}/decontamination")
     )
     n_committed = sum(1 for b in batches if b["committed"])

@@ -269,11 +269,13 @@ def read_text_file(spark, path: str) -> str:
 def rename_path(spark, src: str, dst: str) -> None:
     """Same-filesystem rename (atomic on HDFS and the local FS,
     metadata-only) — the swap step of write-new / delete / rename
-    table-replacement protocols.  Raises on failure."""
+    table-replacement protocols.  Creates ``dst``'s parent directory
+    first.  Raises on failure."""
     jvm = spark._jvm
     jsrc = jvm.org.apache.hadoop.fs.Path(src)
     jdst = jvm.org.apache.hadoop.fs.Path(dst)
     fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.mkdirs(jdst.getParent())
     if not fs.rename(jsrc, jdst):
         raise IOError(f"rename {src} -> {dst} failed")
 

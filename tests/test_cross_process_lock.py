@@ -5,7 +5,7 @@ against a live stream's state.  This spawns a real second Spark driver
 (subprocess, own JVM, own SparkContext) and walks the interleavings:
 
   P1  parent holds the maintenance lock (simulated live compact, with
-      a staged ``__compact_tmp`` beside the authoritative table) →
+      a staged rewrite in an uncommitted journal stage) →
       the peer's ``create_exclusive`` loses, ``fsck_state`` /
       ``maintain_state`` refuse, ``fsck_state(blocking=False)`` skips,
       and the live stage is NOT swept out from under the parent.
@@ -14,7 +14,7 @@ against a live stream's state.  This spawns a real second Spark driver
       ``maintain_state`` refuses on the marker; its ``fsck_state``
       completes (a live ingest does not block fsck) but leaves the
       marker-guarded staging alone while sweeping the genuinely-stale
-      compact tmp.
+      compact stage.
   P3  state quiet → the peer's full ``maintain_state`` completes from
       the second JVM and releases the lock.
 
@@ -80,7 +80,7 @@ try:
 except RuntimeError as e:
     report["p1_maintain_refused"] = "maintenance lock" in str(e)
 report["p1_live_stage_intact"] = table_exists(
-    spark, state + "/fingerprints__compact_tmp"
+    spark, state + "/tmp/commit/compact-live"
 )
 signal("p1.done")
 
@@ -105,7 +105,7 @@ signal("p2.done")
 wait_for("p3.ready")
 out = maintain_state(spark, state, keep_recent=1)
 report["p3_compacted"] = sorted(out["compact"])
-report["p3_fsck_needs_rebuild"] = out["fsck"]["needs_rebuild"]
+report["p3_fsck"] = out["fsck"]
 report["p3_no_stranded_lock"] = not table_exists(
     spark, state + "/_MAINTENANCE_LOCK"
 )
@@ -171,15 +171,17 @@ def test_second_driver_contends_maintenance(spark, tmp_path):
             time.sleep(0.2)
 
     try:
-        # P1: this driver "runs a compact" — lock held, staged tmp
+        # P1: this driver "runs a compact" — lock held, its staged
+        # rewrite not yet committed
         shutil.copytree(
-            f"{state}/fingerprints", f"{state}/fingerprints__compact_tmp"
+            f"{state}/fingerprints",
+            f"{state}/tmp/commit/compact-live/fingerprints",
         )
         touch_file(spark, f"{state}/{_MAINT_LOCK}")
         touch_file(spark, f"{sync}/p1.ready")
         wait_for("p1.done")
         # the peer's refusals really left the parent's window alone
-        assert table_exists(spark, f"{state}/fingerprints__compact_tmp")
+        assert table_exists(spark, f"{state}/tmp/commit/compact-live")
         assert table_exists(spark, f"{state}/{_MAINT_LOCK}")
 
         # P2: compact "finished" (lock released); an ingest goes live
@@ -218,11 +220,11 @@ def test_second_driver_contends_maintenance(spark, tmp_path):
     assert rep["p1_maintain_refused"] is True
     assert rep["p1_live_stage_intact"] is True
     assert rep["p2_maintain_refused"] is True
-    # the peer's fsck swept the stale compact tmp but not the staging
-    assert "fingerprints__compact_tmp" in rep["p2_fsck_swept"]
+    # the peer's fsck swept the stale compact stage but not the staging
+    assert "tmp/commit/compact-live" in rep["p2_fsck_swept"]
     assert rep["p2_staging_intact"] is True
     assert rep["p2_no_stranded_lock"] is True
-    assert rep["p3_fsck_needs_rebuild"] == []
+    assert rep["p3_fsck"] == {"restored": [], "swept": []}
     assert "fingerprints" in rep["p3_compacted"]
     assert rep["p3_no_stranded_lock"] is True
 

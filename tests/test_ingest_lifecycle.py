@@ -1,14 +1,15 @@
 """Round-9 ingest-lifecycle hardening: plane-local (fast) retraction
 equals the rebuild path, file-local delete surgery touches only the
-files holding a retracted key, fsck_state repairs the swap crash
-windows without hand intervention, the persisted policy refuses silent
-option drift, commit-marker coverage gates partial-rebuild replays,
-and the two-sided advisory lock keeps maintenance and ingest mutually
-exclusive."""
+files holding a retracted key, fsck_state replays or sweeps a crashed
+maintenance verb's journal stage without hand intervention, the
+persisted policy refuses silent option drift, commit-marker coverage
+gates partial-rebuild replays, and the two-sided advisory lock keeps
+maintenance and ingest mutually exclusive."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -17,6 +18,8 @@ from pyspark.sql import functions as F
 
 from hadoop__spark.operators.ingest import (
     _INGEST_MARKER,
+    _JOURNAL,
+    _MANIFEST,
     _STALE_MARKER,
     compact_state,
     fsck_state,
@@ -243,122 +246,139 @@ def test_fast_retract_is_file_local(spark, tmp_path):
     assert ids == admitted - {16}
 
 
+def _write_manifest(state, stage, ops):
+    with open(f"{state}/{stage}/{_MANIFEST}", "w") as fh:
+        fh.write("\n".join(json.dumps(op) for op in ops))
+
+
 def test_fsck_restores_and_sweeps_swap_orphans(spark, tmp_path):
-    """Both sides of the delete→rename crash window, for both
-    maintenance operations: a tmp with a missing target is RESTORED
-    (the crash hit after the delete); a tmp whose target still exists
-    is SWEPT (the target is still authoritative).  No hand renames."""
+    """Both sides of the commit point, for both maintenance shapes
+    (whole-table swap, file-local snapshot surgery): a journal stage
+    WITH its manifest is replayed — RESTORED; a stage without one
+    never mutated anything and is SWEPT.  No hand renames."""
     state = str(tmp_path / "state")
     ingest_batch(spark, state, _docs(spark, range(1, 10)), "b1")
 
-    # compact orphan, restore side: table vanished mid-swap
-    shutil.move(f"{state}/fingerprints", f"{state}/fingerprints__compact_tmp")
+    # compaction stage, restore side: the table vanished mid-swap (the
+    # mv deleted it, the rename never ran) — the stage finishes it
+    stage = f"{_JOURNAL}/compact-restore"
+    os.makedirs(f"{state}/{stage}")
+    shutil.move(f"{state}/fingerprints", f"{state}/{stage}/fingerprints")
+    _write_manifest(state, stage, [["mv", f"{stage}/fingerprints",
+                                    "fingerprints"]])
     rep = fsck_state(spark, state)
-    assert rep["restored"] == ["fingerprints"]
+    assert rep["restored"] == [stage]
     assert table_exists(spark, f"{state}/fingerprints")
-    # compact orphan, sweep side: crash before the delete
-    shutil.copytree(f"{state}/signatures", f"{state}/signatures__compact_tmp")
+    # compaction stage, sweep side: crash before the commit
+    stage = f"{_JOURNAL}/compact-sweep"
+    shutil.copytree(f"{state}/signatures", f"{state}/{stage}/signatures")
     rep = fsck_state(spark, state)
-    assert rep["swept"] == ["signatures__compact_tmp"]
-    assert not os.path.exists(f"{state}/signatures__compact_tmp")
+    assert rep["swept"] == [stage]
+    assert not os.path.exists(f"{state}/{stage}")
 
-    # snapshot-surgery orphan, FINISH side: the stage reached its
-    # commit point (manifest written) before the crash — fsck moves
-    # the staged replacement in and deletes the listed hit file
-    os.makedirs(f"{state}/tmp/retract/b1", exist_ok=True)
+    # snapshot-surgery stage, FINISH side: the stage reached its
+    # commit point before the crash — fsck moves the staged
+    # replacement in and deletes the listed hit file
+    stage = f"{_JOURNAL}/retract-finish"
+    os.makedirs(f"{state}/{stage}/batches/b1")
     hit = sorted(
         f for f in os.listdir(f"{state}/batches/b1")
         if f.endswith(".parquet")
     )[0]
     shutil.copy(
         f"{state}/batches/b1/{hit}",
-        f"{state}/tmp/retract/b1/part-staged.parquet",
+        f"{state}/{stage}/batches/b1/part-staged.parquet",
     )
-    touch_file(spark, f"{state}/tmp/retract/b1/_SUCCESS")
-    with open(f"{state}/tmp/retract/b1/_SURGERY_MANIFEST", "w") as fh:
-        fh.write(hit)
+    _write_manifest(state, stage, [
+        ["mv", f"{stage}/batches/b1/part-staged.parquet",
+         "batches/b1/part-staged.parquet"],
+        ["rm", f"batches/b1/{hit}"],
+    ])
     rows_before = spark.read.parquet(f"{state}/batches/b1").count()
     rep = fsck_state(spark, state)
-    assert rep["restored"] == ["batches/b1"]
-    assert not os.path.exists(f"{state}/tmp/retract/b1")
+    assert rep["restored"] == [stage]
+    assert not os.path.exists(f"{state}/{stage}")
     assert not os.path.exists(f"{state}/batches/b1/{hit}")
     # the staged copy replaced the hit file 1:1 — same rows
     assert spark.read.parquet(f"{state}/batches/b1").count() == rows_before
-    # snapshot-surgery orphan, SWEEP side: no manifest = the snapshot
+    # snapshot-surgery stage, SWEEP side: no manifest = the snapshot
     # was never mutated; the stage is dropped, the snapshot kept
-    shutil.copytree(f"{state}/batches/b1", f"{state}/tmp/retract/b1")
+    stage = f"{_JOURNAL}/retract-sweep"
+    shutil.copytree(f"{state}/batches/b1", f"{state}/{stage}/batches/b1")
     rep = fsck_state(spark, state)
-    assert rep["swept"] == ["tmp/retract/b1"]
+    assert rep["swept"] == [stage]
     assert spark.read.parquet(f"{state}/batches/b1").count() == rows_before
     # a state_summary BEFORE repair only reports; it never mutates
-    shutil.copytree(f"{state}/batches/b1", f"{state}/tmp/retract/b1")
+    stage = f"{_JOURNAL}/retract-report"
+    shutil.copytree(f"{state}/batches/b1", f"{state}/{stage}/batches/b1")
     s = state_summary(spark, state)
-    assert s["orphans"] == ["tmp/retract/b1"]
-    assert os.path.exists(f"{state}/tmp/retract/b1")
+    assert s["orphans"] == [stage]
+    assert os.path.exists(f"{state}/{stage}")
     fsck_state(spark, state)
     assert state_summary(spark, state)["orphans"] == []
 
 
 def test_retract_crash_mid_swap_recovers_via_rebuild(spark, tmp_path,
                                                     monkeypatch):
-    """True chaos: the snapshot surgery crashes after its commit point
-    (manifest written) but before any staged file moved in.
-    rebuild_state (which runs fsck_state first) must recover WITHOUT
-    hand intervention, and the recovered timeline must equal a
-    crash-free retraction."""
+    """True chaos: the fast retraction crashes after its commit point
+    (manifest written) but before its first staged file moved in.  The
+    committed stage blocks ingest_batch (naming fsck_state), and both
+    recovery routes — a plain retry, whose lock fsck replays the stage,
+    and rebuild_state, which replays it before the rebuild — end equal
+    to a crash-free retraction, with nothing applied twice."""
     from hadoop__spark.operators import ingest as ingest_mod
 
-    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
-    for st in (clean, crashed):
+    clean = str(tmp_path / "clean")
+    retried = str(tmp_path / "retried")
+    rebuilt = str(tmp_path / "rebuilt")
+    for st in (clean, retried, rebuilt):
         ingest_batch(spark, st, _docs(spark, range(1, 10)), "b1")
         ingest_batch(spark, st, _docs(spark, range(10, 20)), "b2")
     victims = spark.createDataFrame([(3,), (12,)], "doc_id LONG")
 
     real_rename = ingest_mod._rename_path
-    calls = {"n": 0}
 
     def crash_on_first_rename(spark_, src, dst):
-        if "/tmp/retract/" in src and calls["n"] == 0:
-            calls["n"] += 1
+        if f"/{_JOURNAL}/retract-" in src:
             raise RuntimeError("simulated crash between delete and rename")
         return real_rename(spark_, src, dst)
 
-    monkeypatch.setattr(ingest_mod, "_rename_path", crash_on_first_rename)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        retract_documents(spark, crashed, victims, mode="fast")
-    monkeypatch.setattr(ingest_mod, "_rename_path", real_rename)
-    # the crash stranded b1's staged surgery (manifest + kept rows)
-    # in tmp/; the snapshot itself is intact — file-local surgery
-    # never deletes the snapshot, only individual hit files, and none
-    # were deleted before the first move
-    assert table_exists(spark, f"{crashed}/batches/b1/_SUCCESS")
-    assert table_exists(spark, f"{crashed}/tmp/retract/b1")
-    assert table_exists(
-        spark, f"{crashed}/tmp/retract/b1/_SURGERY_MANIFEST"
-    )
-    # a retry WITHOUT a rebuild refuses (at the fsck-first entry
-    # guard) — the crashed run's committed parts (e.g. negative cap
-    # rows) would double-apply.  The guard's fsck pass may finish the
-    # committed surgery stage first; the refusal still stands on the
-    # retraction marker.
-    with pytest.raises(RuntimeError, match="needing a rebuild"):
-        retract_documents(spark, crashed, victims, mode="fast")
-    assert state_summary(spark, crashed)["needs_rebuild"]
-    rebuild_state(spark, crashed)
-    # finish the interrupted retraction (now a no-op for b1, which the
-    # restored tmp already rewrote; b2 still holds victim 12)
-    retract_documents(spark, crashed, victims, mode="fast")
+    for st in (retried, rebuilt):
+        monkeypatch.setattr(ingest_mod, "_rename_path", crash_on_first_rename)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            retract_documents(spark, st, victims, mode="fast")
+        monkeypatch.setattr(ingest_mod, "_rename_path", real_rename)
+        # the crash stranded the committed stage (manifest + kept
+        # rows); the snapshots themselves are intact — no staged file
+        # moved in and no hit file was deleted before the crash
+        assert table_exists(spark, f"{st}/batches/b1/_SUCCESS")
+        (stage,) = state_summary(spark, st)["orphans"]
+        assert stage.startswith(f"{_JOURNAL}/retract-")
+        assert table_exists(spark, f"{st}/{stage}/{_MANIFEST}")
+        # nothing appends while a committed stage is pending
+        with pytest.raises(RuntimeError, match="fsck_state"):
+            ingest_batch(spark, st, _docs(spark, range(30, 32)), "b3")
+    # route 1: the retry's lock fsck replays the stage, after which
+    # the retraction itself finds nothing left to remove
+    retract_documents(spark, retried, victims, mode="fast")
+    # route 2: rebuild_state replays the stage before it rebuilds
+    rebuild_state(spark, rebuilt)
+    retract_documents(spark, rebuilt, victims, mode="fast")
     retract_documents(spark, clean, victims, mode="fast")
-    for tbl, cols in [
-        ("fingerprints", ["fp", "keep_id"]),
-        ("signatures", ["_id", "mh_0", "mh_63"]),
-    ]:
-        assert _rows(spark, f"{crashed}/{tbl}", cols) == _rows(
-            spark, f"{clean}/{tbl}", cols
-        ), tbl
-    assert {r.doc_id for r in spark.read.parquet(f"{crashed}/batches/*").collect()} == {
-        r.doc_id for r in spark.read.parquet(f"{clean}/batches/*").collect()
-    }
+    for st in (retried, rebuilt):
+        for tbl, cols in [
+            ("fingerprints", ["fp", "keep_id"]),
+            ("signatures", ["_id", "mh_0", "mh_63"]),
+        ]:
+            assert _rows(spark, f"{st}/{tbl}", cols) == _rows(
+                spark, f"{clean}/{tbl}", cols
+            ), tbl
+        assert {r.doc_id for r in spark.read.parquet(f"{st}/batches/*").collect()} == {
+            r.doc_id for r in spark.read.parquet(f"{clean}/batches/*").collect()
+        }
+        assert spark.read.parquet(f"{st}/fingerprints").count() == (
+            spark.read.parquet(f"{clean}/fingerprints").count()
+        )
 
 
 def test_policy_drift_refused_and_opt_out(spark, tmp_path):
@@ -499,21 +519,41 @@ def test_two_sided_lock_excludes_maintenance_during_ingest(spark, tmp_path):
     compact_state(spark, state)
 
 
-def test_compact_refuses_mid_surgery_table(spark, tmp_path):
-    """Compacting a table whose fast-retraction surgery crashed would
-    bake the duplicate rows in and drop the needs-rebuild flag — it
-    must refuse until a rebuild reconsolidates."""
+def test_compact_refuses_mid_surgery_table(spark, tmp_path, monkeypatch):
+    """Compacting a table whose fast-retraction surgery crashed half
+    way (replacement files in, hit files not yet deleted) would bake
+    the duplicate rows in — so compaction's lock fsck replays the
+    pending retraction FIRST: the compacted table holds every kept row
+    exactly once and no retracted one."""
+    from hadoop__spark.operators import ingest as ingest_mod
+
     state = str(tmp_path / "state")
     ingest_batch(spark, state, _docs(spark, range(1, 10)), "b1")
-    touch_file(spark, f"{state}/fingerprints/_RETRACT_SURGERY")
-    assert fsck_state(spark, state)["needs_rebuild"] == ["fingerprints"]
-    assert state_summary(spark, state)["needs_rebuild"]
-    with pytest.raises(RuntimeError, match="needing a rebuild"):
-        compact_state(spark, state)
-    # the rebuild overwrites the table (dropping the marker) and the
-    # maintenance then composes again
+    real_delete = ingest_mod._delete_path
+
+    def crash_on_hit_delete(spark_, path):
+        if path.startswith(f"{state}/fingerprints/"):
+            raise RuntimeError("chaos: crash before the hit-file delete")
+        return real_delete(spark_, path)
+
+    monkeypatch.setattr(ingest_mod, "_delete_path", crash_on_hit_delete)
+    with pytest.raises(RuntimeError, match="chaos"):
+        retract_documents(
+            spark, state, spark.createDataFrame([(4,)], "doc_id LONG"),
+            mode="fast",
+        )
+    monkeypatch.setattr(ingest_mod, "_delete_path", real_delete)
+    fps = spark.read.parquet(f"{state}/fingerprints")
+    assert fps.count() > fps.select("keep_id").distinct().count()  # dups
+    (stage,) = state_summary(spark, state)["orphans"]
+    assert stage.startswith(f"{_JOURNAL}/retract-")
+    compact_state(spark, state)
+    fps = spark.read.parquet(f"{state}/fingerprints")
+    assert fps.count() == fps.select("keep_id").distinct().count() == 8
+    assert (4,) not in _rows(spark, f"{state}/fingerprints", ["keep_id"])
+    assert state_summary(spark, state)["orphans"] == []
+    # the rebuild and the maintenance then compose again
     rebuild_state(spark, state)
-    assert not table_exists(spark, f"{state}/fingerprints/_RETRACT_SURGERY")
     compact_state(spark, state)
 
 
@@ -1277,23 +1317,48 @@ def test_ingest_releases_probe_caches(spark, tmp_path):
     assert pairs.count() >= 0
 
 
+def _tree(root):
+    """{relpath: file bytes} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
 def test_fsck_legacy_whole_snapshot_restore(spark, tmp_path):
-    """Judge r10 medium: a crash leftover from the PRE-round-10
-    whole-snapshot-swap retraction protocol — a complete staged copy
-    (tmp/_SUCCESS, no _SURGERY_MANIFEST) whose batches/{name} was
-    already deleted before the rename — holds the snapshot's ONLY
-    copy.  fsck must finish the legacy rename, not sweep the data."""
+    """A crash leftover from a PRE-journal protocol — here the
+    pre-round-10 whole-snapshot swap: a complete staged copy under
+    tmp/retract whose batches/{name} was already deleted — may hold a
+    snapshot's ONLY copy.  fsck must neither sweep nor adopt it: it
+    refuses, naming the artifact, and leaves every file byte-identical
+    (finish it with the previous release's fsck_state)."""
+    from hadoop__spark.operators.ingest import _MAINT_LOCK
+
     state = str(tmp_path / "state")
     ingest_batch(spark, state, _docs(spark, range(1, 10)), "b1")
     ingest_batch(spark, state, _docs(spark, range(10, 15)), "b2")
     rows = spark.read.parquet(f"{state}/batches/b1").count()
     os.makedirs(f"{state}/tmp/retract", exist_ok=True)
     shutil.move(f"{state}/batches/b1", f"{state}/tmp/retract/b1")
-    rep = fsck_state(spark, state)
-    assert "batches/b1" in rep["restored"]
-    assert not os.path.exists(f"{state}/tmp/retract/b1")
+    before = _tree(state)
+    with pytest.raises(RuntimeError, match="tmp/retract.*previous release"):
+        fsck_state(spark, state)
+    assert _tree(state) == before
+    # every maintenance verb refuses the same way (its lock fsck) and
+    # releases its lock; state_summary reports the artifact
+    with pytest.raises(RuntimeError, match="previous release"):
+        compact_state(spark, state)
+    assert not table_exists(spark, f"{state}/{_MAINT_LOCK}")
+    assert _tree(state) == before
+    assert "tmp/retract" in state_summary(spark, state)["orphans"]
+    # what the previous release's fsck does: finish the legacy rename;
+    # the restored snapshot then rebuilds cleanly (no rows lost)
+    shutil.move(f"{state}/tmp/retract/b1", f"{state}/batches/b1")
+    shutil.rmtree(f"{state}/tmp/retract")
     assert spark.read.parquet(f"{state}/batches/b1").count() == rows
-    # the restored snapshot rebuilds cleanly (no rows lost)
     rebuild_state(spark, state)
     assert spark.read.parquet(f"{state}/fingerprints").count() == 14
 
@@ -1375,7 +1440,7 @@ def test_fsck_sweeps_crashed_ingest_staging(spark, tmp_path):
     assert not table_exists(spark, f"{state}/{_INGEST_MARKER}")
 
 
-def test_compact_state_compacts_ivf_partitions(spark, tmp_path):
+def test_compact_state_compacts_ivf_partitions(spark, tmp_path, monkeypatch):
     """The IVF assigned table fragments one file per touched bucket
     per append — compact_state's partition-preserving variant
     collapses each centroid bucket to ONE file with the Hive layout
@@ -1416,10 +1481,24 @@ def test_compact_state_compacts_ivf_partitions(spark, tmp_path):
         for r in spark.read.parquet(assigned).select("doc_id").collect()
     }
     rows_after_retract = _rows(spark, assigned, ["doc_id", "centroid_id"])
-    # crash window: assigned vanished mid-swap with the tmp complete
-    shutil.move(assigned, f"{assigned}__compact_tmp")
+    # crash window: assigned vanished mid-swap (the commit's mv deleted
+    # it) with the staged rewrite complete
+    from hadoop__spark.operators import ingest as ing
+
+    real_rename = ing._rename_path
+
+    def crash_on_assigned_rename(spark_, src, dst):
+        if dst == assigned:
+            raise RuntimeError("chaos: crash before the assigned rename")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(ing, "_rename_path", crash_on_assigned_rename)
+    with pytest.raises(RuntimeError, match="chaos"):
+        compact_state(spark, state)
+    monkeypatch.setattr(ing, "_rename_path", real_rename)
+    assert not table_exists(spark, assigned)
     rep = fsck_state(spark, state)
-    assert "ivf/assigned" in rep["restored"]
+    assert any(r.startswith(f"{_JOURNAL}/compact-") for r in rep["restored"])
     assert _rows(
         spark, assigned, ["doc_id", "centroid_id"]
     ) == rows_after_retract
@@ -1497,10 +1576,11 @@ def test_refit_ivf_index(spark, tmp_path, monkeypatch):
     """refit_ivf_index re-fits the frozen IVF centroids on the
     current surviving vectors — same vector membership, fresh
     balance — and the next ingest / retraction compose against the
-    NEW centroids.  Crash windows: pre-marker stage swept (old index
-    intact); post-marker mid-swap finished with BOTH tables from the
-    stage; post-marker with the swap not started swept (an interim
-    ingest may have appended — the refit is lost, never the data)."""
+    NEW centroids.  Crash windows: an uncommitted stage is swept (old
+    index intact); a committed stage whose apply never started is
+    replayed (ingest_batch refuses while it is pending, so no interim
+    append can be lost); a mid-apply crash is finished with BOTH
+    tables from the stage."""
     from hadoop__spark.operators import ingest as ing
     from hadoop__spark.operators.ingest import refit_ivf_index
 
@@ -1545,27 +1625,32 @@ def test_refit_ivf_index(spark, tmp_path, monkeypatch):
         r.doc_id for r in spark.read.parquet(assigned).collect()
     }
 
-    # window A: pre-marker stage (junk, no _REFIT_COMPLETE) → swept
-    os.makedirs(f"{state}/tmp/ivf_refit/assigned", exist_ok=True)
-    assert "tmp/ivf_refit" in state_summary(spark, state)["orphans"]
+    # window A: uncommitted stage (junk, no manifest) → swept
+    stage = f"{_JOURNAL}/refit-a"
+    os.makedirs(f"{state}/{stage}/ivf/assigned", exist_ok=True)
+    assert stage in state_summary(spark, state)["orphans"]
     rep = fsck_state(spark, state)
-    assert "tmp/ivf_refit" in rep["swept"]
+    assert stage in rep["swept"]
 
-    # window B: post-marker, swap NOT started → swept, index kept
-    shutil.copytree(f"{state}/ivf", f"{state}/tmp/ivf_refit")
-    touch_file(spark, f"{state}/tmp/ivf_refit/_REFIT_COMPLETE")
+    # window B: committed, apply NOT started → replayed, index kept
+    stage = f"{_JOURNAL}/refit-b"
+    shutil.copytree(f"{state}/ivf", f"{state}/{stage}/ivf")
+    _write_manifest(state, stage, [
+        ["mv", f"{stage}/ivf/{t}", f"ivf/{t}"]
+        for t in ("assigned", "centroids")
+    ])
     ids_now = {r.doc_id for r in spark.read.parquet(assigned).collect()}
     rep = fsck_state(spark, state)
-    assert "tmp/ivf_refit" in rep["swept"]
+    assert stage in rep["restored"]
     assert {
         r.doc_id for r in spark.read.parquet(assigned).collect()
     } == ids_now
 
-    # window C: post-marker, mid-swap crash → fsck finishes BOTH
+    # window C: committed, mid-apply crash → fsck finishes BOTH
     real_rename = ing._rename_path
 
     def crash_on_first_refit_rename(spark_, src, dst):
-        if "/tmp/ivf_refit/" in src:
+        if f"/{_JOURNAL}/refit-" in src:
             raise RuntimeError("chaos: crash before index rename")
         return real_rename(spark_, src, dst)
 
@@ -1575,7 +1660,7 @@ def test_refit_ivf_index(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ing, "_rename_path", real_rename)
     assert not table_exists(spark, assigned)  # old deleted, swap started
     rep = fsck_state(spark, state)
-    assert "ivf" in rep["restored"]
+    assert any(r.startswith(f"{_JOURNAL}/refit-") for r in rep["restored"])
     assert {
         r.doc_id for r in spark.read.parquet(assigned).collect()
     } == ids_now
@@ -1592,20 +1677,18 @@ def test_refit_ivf_index(spark, tmp_path, monkeypatch):
 def test_fsck_refuses_while_maintenance_lock_held(spark, tmp_path):
     """Standalone fsck_state must take the maintenance lock (advice
     r11 medium): run concurrently with a live compact/refit it could
-    sweep the verb's in-flight __compact_tmp between the staged write
-    and the delete->rename, after which the verb deletes the live
-    table and renames a now-missing tmp — permanent table loss.  Held
-    lock -> refuse; lock gone -> normal repair; and fsck releases its
-    own lock on every path."""
+    sweep the verb's not-yet-committed stage between the staged write
+    and the commit, after which the verb commits mv ops whose sources
+    are gone.  Held lock -> refuse; lock gone -> normal repair; and
+    fsck releases its own lock on every path."""
     from hadoop__spark.operators.ingest import _MAINT_LOCK
 
     state = str(tmp_path / "state")
     ingest_batch(spark, state, _docs(spark, range(1, 10)), "b1")
-    # simulate a LIVE compact mid-swap: lock held, staged tmp beside
-    # the still-authoritative table
-    shutil.copytree(
-        f"{state}/fingerprints", f"{state}/fingerprints__compact_tmp"
-    )
+    # simulate a LIVE compact before its commit: lock held, a staged
+    # rewrite in an uncommitted journal stage
+    live = f"{_JOURNAL}/compact-live"
+    shutil.copytree(f"{state}/fingerprints", f"{state}/{live}/fingerprints")
     touch_file(spark, f"{state}/{_MAINT_LOCK}")
     with pytest.raises(RuntimeError, match="maintenance lock"):
         fsck_state(spark, state)
@@ -1616,12 +1699,12 @@ def test_fsck_refuses_while_maintenance_lock_held(spark, tmp_path):
         "skipped": "lock held"
     }
     # the live stage was NOT swept out from under the (simulated) verb
-    assert table_exists(spark, f"{state}/fingerprints__compact_tmp")
+    assert table_exists(spark, f"{state}/{live}")
     assert table_exists(spark, f"{state}/{_MAINT_LOCK}")
     # lock released (crash / completion) -> the repair proceeds
     os.remove(f"{state}/{_MAINT_LOCK}")
     rep = fsck_state(spark, state)
-    assert "fingerprints__compact_tmp" in rep["swept"]
+    assert live in rep["swept"]
     assert not table_exists(spark, f"{state}/{_MAINT_LOCK}")
     # a live INGEST does not block fsck (its staging has its own
     # marker guard) — and fsck still releases the lock it took
@@ -2085,3 +2168,21 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
                 os.path.join(root, f), columns=["doc_id"]
             ).column("doc_id").to_pylist()
             assert ids == sorted(ids), f"{root}/{f} not id-sorted"
+
+
+def test_refused_fast_retraction_leaves_no_crash_marker(spark, tmp_path):
+    """A fast retraction refused for want of a complete snapshot must
+    leave nothing behind: no false crash evidence in state_summary,
+    and the next maintenance verb runs."""
+    state = str(tmp_path / "state")
+    ingest_batch(spark, state, _docs(spark, range(1, 6)), "b1")
+    os.remove(f"{state}/batches/b1/_SUCCESS")
+    with pytest.raises(ValueError, match="no complete batch snapshots"):
+        retract_documents(
+            spark, state, spark.createDataFrame([(2,)], "doc_id LONG"),
+            mode="fast",
+        )
+    s = state_summary(spark, state)
+    assert not s["needs_rebuild"]
+    assert s["orphans"] == []
+    compact_state(spark, state)
