@@ -129,9 +129,12 @@ _STALE_MARKER = "_STALE_SKETCHES"
 
 # the maintenance commit journal: a verb stages under
 # {state_dir}/tmp/commit/{verb}-{uuid}/ and commits by writing the
-# stage's manifest (its op list, see _apply) as the stage's LAST file
+# stage's manifest (its op list, see _apply) as the stage's LAST file;
+# the manifest's last line is _END, so one torn by a crash during its
+# own write reads as uncommitted
 _JOURNAL = "tmp/commit"
 _MANIFEST = "_COMMIT"
+_END = json.dumps(["end"])
 
 # near-dup text plane state layout: subdir under state_dir ("" = the
 # state root, minhash's original layout) and the layout-marker table
@@ -267,11 +270,12 @@ def _commit(spark, state_dir: str, stage: str, ops: list) -> None:
     """Commit a stage, then apply it.  Writing the manifest — the op
     list, every ``mv`` before every ``rm``, so a reader sees at worst
     duplicates, never a missing kept row — as the stage's LAST file is
-    the commit point."""
+    the commit point; the commit lands with the manifest's closing
+    ``_END`` line (see :func:`_stages`)."""
     ops = sorted(ops, key=lambda op: op[0] != "mv")
     _write_text_file(
         spark, f"{state_dir}/{stage}/{_MANIFEST}",
-        "\n".join(json.dumps(op) for op in ops),
+        "\n".join([json.dumps(op) for op in ops] + [_END]),
     )
     _apply(spark, state_dir, stage)
 
@@ -291,7 +295,7 @@ def _apply(spark, state_dir: str, stage: str) -> None:
     globals here — the one place a crash can be injected into any
     maintenance mutation."""
     manifest = _read_text_file(spark, f"{state_dir}/{stage}/{_MANIFEST}")
-    for line in manifest.splitlines():
+    for line in manifest.splitlines()[:-1]:  # all but the closing _END
         op, *paths = json.loads(line)
         src = f"{state_dir}/{paths[0]}"
         if not _table_exists(spark, src):
@@ -322,11 +326,18 @@ def _adopt(spark, state_dir: str, stage: str, rel: str) -> list:
 
 def _stages(spark, state_dir: str) -> tuple[list[str], list[str]]:
     """(committed, uncommitted) journal stages, relative to the state
-    dir."""
+    dir.  A stage is committed when its manifest ends with the ``_END``
+    line: a manifest torn by a crash during its own write (mid-line or
+    at a line boundary) was never applied — :func:`_apply` runs only
+    after the write returns — so its stage is uncommitted."""
     committed, uncommitted = [], []
     for d in _list_child_dirs(spark, f"{state_dir}/{_JOURNAL}"):
         rel = f"{_JOURNAL}/{_name(d)}"
-        if _table_exists(spark, f"{d}/{_MANIFEST}"):
+        manifest = f"{d}/{_MANIFEST}"
+        if (
+            _table_exists(spark, manifest)
+            and _read_text_file(spark, manifest).splitlines()[-1:] == [_END]
+        ):
             committed.append(rel)
         else:
             uncommitted.append(rel)
@@ -2920,10 +2931,12 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
     "replay committed stages, sweep uncommitted ones" over the commit
     journal (``{state_dir}/tmp/commit/``):
 
-    * a stage WITH its manifest reached its commit point: its ops are
-      applied again (each is idempotent, so a half-applied stage
-      finishes exactly once) — reported as ``restored``;
-    * a stage WITHOUT one never mutated anything: it is deleted —
+    * a stage WITH its whole manifest (its last line ``["end"]``)
+      reached its commit point: its ops are applied again (each is
+      idempotent, so a half-applied stage finishes exactly once) —
+      reported as ``restored``;
+    * a stage WITHOUT one — no manifest, or one torn by a crash
+      during its own write — never mutated anything: it is deleted —
       ``swept``;
     * a crashed ingest's single-execution staging tables
       (``tmp/*_eligible`` / ``tmp/*_text_survivors`` / ``tmp/*_sigs``)

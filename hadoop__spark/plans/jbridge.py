@@ -1,12 +1,18 @@
-"""Convert a Spark *parsed* (unresolved) logical plan into Python nodes.
+"""Convert a Spark *parsed* (unresolved) logical plan into Python nodes,
+and answer catalog lookups, in one py4j call each.
 
-The plan crosses the JVM boundary in one py4j call per statement:
-``PlanDump`` (Java source below) serializes the whole parsed tree to
-JSON, and everything downstream (conversion, resolution, rendering,
-lineage) is pure Python.  ``PlanDump`` is compiled once per JVM with
-Janino's ``SimpleCompiler``, the compiler Catalyst's own code
-generation uses, so it ships with every Spark distribution: there is
-no jar to build and nothing to configure.
+Two methods of ``PlanDump`` (Java source below) are the analysis
+plane's whole JVM boundary.  ``dump`` parses a statement with the
+session's own SQL parser and serializes the whole parsed tree to JSON,
+so a statement costs one py4j call, parse included; everything
+downstream (conversion, resolution, rendering, lineage) is pure
+Python.  ``columns`` runs the metastore's lookup rule (the qualified
+name, then the bare name: ``tableExists``, then the resolved schema of
+``table``) and returns the column names as JSON, so a lookup costs one
+call too.  ``PlanDump`` is compiled once per JVM with Janino's
+``SimpleCompiler``, the compiler Catalyst's own code generation uses,
+so it ships with every Spark distribution: there is no jar to build
+and nothing to configure.
 
 Each expression node carries the exact source-text slice from
 Catalyst's ``Origin`` (startIndex / stopIndex into the statement),
@@ -18,9 +24,8 @@ taken here, in Python, because Catalyst's indices count code points,
 as Python ``str`` indexing does (a JVM ``substring`` counts UTF-16
 units and would shift past a non-BMP character).
 
-This is the only JVM boundary of the analysis plane; like the
-reference's ``ParseDriver.parse`` (README.md:747-750) it never touches
-executors.
+Like the reference's ``ParseDriver.parse`` (README.md:747-750) and its
+metastore lookups, neither call touches executors.
 """
 
 from __future__ import annotations
@@ -59,10 +64,14 @@ class Node:
 #: value of a ``Some``, an array (Seq; byte[] as its unsigned bytes),
 #: ``{"c", "f"}`` (any other Product; a JoinType adds its ``"sql"``),
 #: a string, number or bool as py4j would auto-convert it, or else
-#: ``toString()``.
+#: ``toString()``.  ``columns`` answers a JSON array of strings, or
+#: null.
 _PLAN_DUMP_JAVA = r"""
 import java.util.ArrayList;
 import java.util.IdentityHashMap;
+import org.apache.spark.sql.AnalysisException;
+import org.apache.spark.sql.SparkSession;
+import org.apache.spark.sql.catalyst.parser.ParseException;
 import org.apache.spark.sql.catalyst.plans.JoinType;
 import org.apache.spark.sql.catalyst.trees.Origin;
 import org.apache.spark.sql.catalyst.trees.TreeNode;
@@ -71,16 +80,43 @@ public class PlanDump {
     private final IdentityHashMap ids = new IdentityHashMap();
     private final ArrayList nodes = new ArrayList();
 
-    /** Each call walks with a fresh instance: concurrent calls share nothing. */
-    public String dump(TreeNode plan) {
+    /** Parse one statement and dump its plan.  Each call walks with a
+     *  fresh instance: concurrent calls share nothing. */
+    public String dump(SparkSession session, String sql) throws ParseException {
         PlanDump walk = new PlanDump();
-        walk.node(plan);
+        walk.node(session.sessionState().sqlParser().parsePlan(sql));
         StringBuilder sb = new StringBuilder("[");
         for (int i = 0; i < walk.nodes.size(); i++) {
             if (i > 0) sb.append(',');
             sb.append((String) walk.nodes.get(i));
         }
         return sb.append(']').toString();
+    }
+
+    /** The columns of the first of the qualified name and its bare name
+     *  the catalog resolves, as a JSON array of strings; null when none
+     *  does.  An AnalysisException (a ParseException included) means
+     *  "not this name"; any other exception propagates. */
+    public String columns(SparkSession session, String name) throws Exception {
+        String[] names = {name, name.substring(name.indexOf('.') + 1)};
+        for (int i = 0; i < names.length; i++) {
+            try {
+                if (session.catalog().tableExists(names[i])) {
+                    String[] cols = session.table(names[i]).schema().fieldNames();
+                    StringBuilder sb = new StringBuilder("[");
+                    for (int j = 0; j < cols.length; j++) {
+                        if (j > 0) sb.append(',');
+                        string(sb, cols[j]);
+                    }
+                    return sb.append(']').toString();
+                }
+            } catch (Exception e) {
+                // Janino rejects a catch of a checked exception its try
+                // body does not declare, and Scala methods declare none
+                if (!(e instanceof AnalysisException)) throw e;
+            }
+        }
+        return null;
     }
 
     private int node(TreeNode n) {
@@ -186,10 +222,10 @@ _dumpers: dict[Any, Any] = {}
 _dumpers_lock = threading.Lock()
 
 
-def _dumper(jplan):
+def _dumper(jsession):
     """The JVM's ``PlanDump`` instance, compiled on first use and cached
     per py4j gateway (one JVM), never per analyzer or statement."""
-    client = jplan._gateway_client  # noqa: SLF001
+    client = jsession._gateway_client  # noqa: SLF001
     dumper = _dumpers.get(client)
     if dumper is None:
         with _dumpers_lock:
@@ -197,7 +233,7 @@ def _dumper(jplan):
             if dumper is None:
                 jvm = JVMView(client, protocol.DEFAULT_JVM_NAME, id=protocol.DEFAULT_JVM_ID)
                 compiler = jvm.org.codehaus.janino.SimpleCompiler()
-                compiler.setParentClassLoader(jplan.getClass().getClassLoader())
+                compiler.setParentClassLoader(jsession.getClass().getClassLoader())
                 compiler.cook(_PLAN_DUMP_JAVA)
                 cls = compiler.getClassLoader().loadClass("PlanDump")
                 dumper = _dumpers[client] = cls.newInstance()
@@ -247,10 +283,10 @@ _BINARY_OPS = {
 }
 
 
-def convert_plan(jplan, sql: str) -> Node:
-    """Detach a parsed plan: one ``PlanDump.dump`` call, then pure
-    Python over the dumped node table."""
-    return _Tree(json.loads(_dumper(jplan).dump(jplan)), sql).plan(0)
+def convert_plan(dump: str, sql: str) -> Node:
+    """Detach a parsed plan: pure Python over ``PlanDump.dump``'s node
+    table for ``sql``."""
+    return _Tree(json.loads(dump), sql).plan(0)
 
 
 class _Tree:
@@ -600,7 +636,17 @@ def _table_parts(ti: dict) -> list[str]:
 
 
 def parse_statement(spark: SparkSession, sql: str) -> Node:
-    """Parse one statement with Spark's own SQL parser (py4j, driver
-    only — the analysis plane never executes anything) and detach it."""
-    jparser = spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
-    return convert_plan(jparser.parsePlan(sql), sql)
+    """Parse one statement with Spark's own SQL parser and detach it:
+    one py4j call, driver only (the analysis plane never executes
+    anything).  A syntax error raises Spark's ``ParseException``."""
+    jsession = spark._jsparkSession  # noqa: SLF001
+    return convert_plan(_dumper(jsession).dump(jsession, sql), sql)
+
+
+def table_columns(spark: SparkSession, name: str) -> list[str] | None:
+    """The columns of the relation ``name`` names (the qualified name,
+    then the bare name), or ``None`` when neither resolves: one py4j
+    call, analysis metadata only, no Spark job."""
+    jsession = spark._jsparkSession  # noqa: SLF001
+    found = _dumper(jsession).columns(jsession, name)
+    return None if found is None else json.loads(found)

@@ -39,10 +39,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Protocol
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
-from hadoop__spark.plans.jbridge import Node, parse_statement
+from hadoop__spark.plans.jbridge import Node, parse_statement, table_columns
 from hadoop__spark.plans.render import (
     LineageError,
     extract_sources,
@@ -99,24 +98,20 @@ class SparkCatalogMetastore:
     """``spark.catalog`` as the metastore (replaces ``MetaDataDao``,
     reference README.md:102, 239, 814).
 
-    A lookup answers from analysis metadata alone and submits no Spark
-    job: ``tableExists`` guards each candidate name (the qualified name,
-    then the bare name, so ``default.t`` finds a temp view ``t``), and
-    the columns are the resolved schema of ``spark.table``, partition
-    columns last.  A missing table, an unparsable name, or a view whose
-    definition no longer resolves reads as unknown (``None``)."""
+    A lookup is one py4j call (``jbridge.table_columns``) and answers
+    from analysis metadata alone, submitting no Spark job: on the JVM
+    side, ``tableExists`` guards each candidate name (the qualified
+    name, then the bare name, so ``default.t`` finds a temp view
+    ``t``), and the columns are the resolved schema of ``table``,
+    partition columns last.  A missing table, an unparsable name, or a
+    view whose definition no longer resolves reads as unknown
+    (``None``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
     def columns(self, qualified_table: str) -> list[str] | None:
-        for name in (qualified_table, qualified_table.split(".", 1)[-1]):
-            try:
-                if self.spark.catalog.tableExists(name):
-                    return self.spark.table(name).columns
-            except AnalysisException:
-                continue
-        return None
+        return table_columns(self.spark, qualified_table)
 
 
 class DictMetastore:

@@ -311,6 +311,45 @@ def test_applying_a_committed_stage_twice_leaves_the_same_tree(
     assert not os.path.exists(f"{once}/{stage}")
 
 
+def test_torn_manifest_is_swept(spark, base, tmp_path, monkeypatch):
+    """A crash during the manifest's own write leaves a prefix of it:
+    cut mid-line (fsck would fail on the partial JSON line) or at a
+    line boundary (fsck would replay part of the ops).  Either reads as
+    uncommitted, since only the closing line commits: fsck sweeps the
+    stage, the state is byte-identical to the pre-verb state, and
+    ingest_batch does not refuse while the torn stage is pending."""
+    before = _tree(base)
+    pending = _copy(base, tmp_path / "pending")
+    monkeypatch.setattr(ing, "_apply", lambda *args: None)
+    VERBS["compact"](spark, pending)
+    monkeypatch.undo()
+    (stage,) = state_summary(spark, pending)["orphans"]
+    assert ing._stages(spark, pending) == ([stage], [])
+    manifest = f"{stage}/{_MANIFEST}"
+    with open(f"{pending}/{manifest}") as fh:
+        text = fh.read()
+    lines = text.split("\n")
+    assert len(lines) >= 3 and lines[-1] == '["end"]'
+    cuts = {
+        # half of the last op line
+        "mid-line": text[: len(text) - len(lines[-1]) - 1 - len(lines[-2]) // 2],
+        # every op line whole, the closing line missing
+        "line-boundary": text[: len(text) - len(lines[-1]) - 1],
+    }
+    for cut, torn in cuts.items():
+        st = _copy(pending, tmp_path / cut)
+        # the bytes that landed before the crash
+        ing._write_text_file(spark, f"{st}/{manifest}", torn)
+        assert state_summary(spark, st)["orphans"] == [stage], cut
+        if cut == "line-boundary":
+            ingested = _copy(st, tmp_path / f"{cut}-ingest")
+            ingest_batch(spark, ingested, _docs(spark, [45]), "b_next",
+                         **_opts(spark, [45]))
+            assert os.path.isdir(f"{ingested}/batches/b_next"), cut
+        assert fsck_state(spark, st) == {"restored": [], "swept": [stage]}, cut
+        assert _tree(st) == before, cut
+
+
 def test_maintenance_hold_reentrant_per_thread_only(spark, tmp_path):
     """The maintenance hold is re-entrant for the thread that holds
     it (a verb composed inside another runs directly) and exclusive

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop__spark.operators.ingest import (
+    _END,
     _INGEST_MARKER,
     _JOURNAL,
     _MANIFEST,
@@ -247,8 +248,10 @@ def test_fast_retract_is_file_local(spark, tmp_path):
 
 
 def _write_manifest(state, stage, ops):
+    """A committed stage's manifest, as ``ingest._commit`` writes it:
+    the ops, then the closing line."""
     with open(f"{state}/{stage}/{_MANIFEST}", "w") as fh:
-        fh.write("\n".join(json.dumps(op) for op in ops))
+        fh.write("\n".join([json.dumps(op) for op in ops] + [_END]))
 
 
 def test_fsck_restores_and_sweeps_swap_orphans(spark, tmp_path):

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import sys
 import threading
+from contextlib import contextmanager
 
 import pytest
 
@@ -362,11 +363,13 @@ def test_spark_catalog_metastore_matches_list_columns_without_jobs(spark):
         try:
             got = {name: ms.columns(name) for name, _ in cases}
             missing = ms.columns("default.ms_no_such_table")
+            unparsable = ms.columns("default.a-b")
             jobs = list(sc.statusTracker().getJobIdsForGroup("ms-lookups"))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert got == oracle
         assert missing is None
+        assert unparsable is None  # a ParseException is "not this name"
         assert jobs == []
     finally:
         spark.sql("DROP VIEW IF EXISTS ms_pv")
@@ -429,37 +432,45 @@ def test_catalog_lookups_not_stale_across_analyze_calls(spark):
         spark.catalog.dropTempView("ms_late")
 
 
-def test_plan_conversion_is_one_py4j_call(spark, monkeypatch):
-    """A parsed plan crosses the JVM boundary in one py4j call, however
-    many nodes it has, and the dumper is compiled once per JVM: the
-    first statement of a second analyzer costs one call too."""
-    from hadoop__spark.plans import jbridge
+def test_statement_and_lookup_are_one_py4j_call_each(spark, monkeypatch):
+    """A statement crosses the JVM boundary in one py4j call, parse
+    included, however many nodes its plan has; the dumper is compiled
+    once per JVM, so the first statement of a second analyzer costs
+    one call too.  A catalog lookup is one call: a direct hit, a hit
+    through the bare-name fallback, and a miss alike."""
+    from py4j import protocol
+
+    from hadoop__spark.plans import lineage
+    from hadoop__spark.plans.lineage import SparkCatalogMetastore
 
     client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
     calls: list[int] = []
     counting = False
     send_command = client.send_command
 
-    def counted_send_command(*args, **kwargs):
-        if counting:
+    def counted_send_command(command, *args, **kwargs):
+        # py4j's finalizer thread releases garbage-collected JavaObjects
+        # with memory commands at any time: those are not this call's
+        if counting and not command.startswith(protocol.MEMORY_COMMAND_NAME):
             calls[-1] += 1
-        return send_command(*args, **kwargs)
+        return send_command(command, *args, **kwargs)
 
-    convert_plan = jbridge.convert_plan
-
-    def counted_convert_plan(jplan, sql):
+    @contextmanager
+    def counted():
         nonlocal counting
-        if counting:  # a recursive converter: count the outermost call
-            return convert_plan(jplan, sql)
         calls.append(0)
         counting = True
         try:
-            return convert_plan(jplan, sql)
+            yield
         finally:
             counting = False
 
-    monkeypatch.setattr(client, "send_command", counted_send_command)
-    monkeypatch.setattr(jbridge, "convert_plan", counted_convert_plan)
+    parse_statement = lineage.parse_statement
+
+    def counted_parse_statement(spark_, sql_):
+        with counted():
+            return parse_statement(spark_, sql_)
+
     ms = DictMetastore(
         {
             "app.orders": ["id", "cust", "amt"],
@@ -476,31 +487,35 @@ def test_plan_conversion_is_one_py4j_call(spark, monkeypatch):
     )
     first = LineageAnalyzer(spark, ms)
     first.analyze(sql)  # warm-up: the session's first dump may compile
+    monkeypatch.setattr(client, "send_command", counted_send_command)
+    monkeypatch.setattr(lineage, "parse_statement", counted_parse_statement)
     res = first.analyze(sql)
     assert res.input_tables == {"app.orders", "app.customers", "app.vip"}
     assert res.output_tables == {"app.dest"}
-    assert calls[-1] == 1
+    assert calls == [1]
     LineageAnalyzer(spark, ms).analyze(sql)
-    assert len(calls) == 3 and calls[-1] == 1
+    assert calls == [1, 1]
+
+    spark.range(1).selectExpr("id AS a").createOrReplaceTempView("py4j_tv")
+    try:
+        catalog = SparkCatalogMetastore(spark)
+        got = []
+        # a direct hit, a hit through the bare-name fallback, a miss
+        for name in ("py4j_tv", "default.py4j_tv", "default.py4j_none"):
+            with counted():
+                got.append(catalog.columns(name))
+    finally:
+        spark.catalog.dropTempView("py4j_tv")
+    assert got == [["a"], ["a"], None]
+    assert calls == [1, 1, 1, 1, 1]
 
 
-def test_concurrent_analyze_calls_compile_one_dumper(spark, monkeypatch):
-    """``analyze`` from more threads than cores, starting from a JVM
-    with no compiled dumper: every thread gets the sequential result,
-    and ``PlanDump`` is compiled once, not once per racing thread."""
+def _race_analyze(spark, monkeypatch, ms, script):
+    """``analyze(script)`` three times in each of 8 threads (more
+    threads than cores), starting from a JVM with no compiled dumper;
+    returns (sequential result, the threads' results, compile count)."""
     from hadoop__spark.plans import jbridge
 
-    ms = DictMetastore(
-        {"app.src": ["id", "amt", "tag"], "app.dim": ["id", "name"],
-         "app.dst": ["id", "v", "name"]}
-    )
-    script = (
-        "insert into table app.dst select s.id, case when s.amt > 1 then "
-        "concat('😀', s.tag) else 'x' end, d.name from app.src s join app.dim d "
-        "on s.id = d.id where s.tag in ('a', 'b');"
-        "with t as (select id, sum(amt) v from app.src group by id) "
-        "select t.id, t.v from t where t.v > (select avg(amt) from app.src)"
-    )
     expected = LineageAnalyzer(spark, ms).analyze(script)
     compiles = []
 
@@ -532,8 +547,65 @@ def test_concurrent_analyze_calls_compile_one_dumper(spark, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
+    return expected, results, len(compiles)
+
+
+def test_concurrent_analyze_calls_compile_one_dumper(spark, monkeypatch):
+    """``analyze`` from more threads than cores, starting from a JVM
+    with no compiled dumper: every thread gets the sequential result,
+    and ``PlanDump`` is compiled once, not once per racing thread."""
+    ms = DictMetastore(
+        {"app.src": ["id", "amt", "tag"], "app.dim": ["id", "name"],
+         "app.dst": ["id", "v", "name"]}
+    )
+    script = (
+        "insert into table app.dst select s.id, case when s.amt > 1 then "
+        "concat('😀', s.tag) else 'x' end, d.name from app.src s join app.dim d "
+        "on s.id = d.id where s.tag in ('a', 'b');"
+        "with t as (select id, sum(amt) v from app.src group by id) "
+        "select t.id, t.v from t where t.v > (select avg(amt) from app.src)"
+    )
+    expected, results, compiles = _race_analyze(spark, monkeypatch, ms, script)
     assert results == [expected] * 24
-    assert compiles == [1]
+    assert compiles == 1
+
+
+def test_concurrent_catalog_analyze_calls_compile_one_dumper(spark, monkeypatch):
+    """The same race through the default catalog metastore, whose
+    lookups go through the same compiled ``PlanDump``: one compile, and
+    every thread gets the sequential result, ``SELECT *`` expansion,
+    bare-name fallback and an unknown table included."""
+    spark.range(2).selectExpr("id", "id AS amt", "'a' AS tag").createOrReplaceTempView(
+        "race_src"
+    )
+    spark.range(2).selectExpr("id", "'n' AS name").createOrReplaceTempView("race_dim")
+    spark.range(0).selectExpr("id", "id AS v", "'' AS name").createOrReplaceTempView(
+        "race_dst"
+    )
+    script = (
+        "insert into table default.race_dst select s.id, s.amt, d.name "
+        "from race_src s join race_dim d on s.id = d.id where s.tag = 'a';"
+        "select * from race_src s join default.race_dim d on s.id = d.id;"
+        "select tag, x from race_src join race_none "
+        "on race_src.id = race_none.id"
+    )
+    try:
+        expected, results, compiles = _race_analyze(spark, monkeypatch, None, script)
+    finally:
+        for view in ("race_src", "race_dim", "race_dst"):
+            spark.catalog.dropTempView(view)
+    assert [line.to_name for line in expected.col_lines[:3]] == [
+        "default.race_dst.id", "default.race_dst.v", "default.race_dst.name"
+    ]
+    assert [line.to_name_parse for line in expected.col_lines[3:8]] == [
+        "id", "amt", "tag", "id", "name"
+    ]
+    # race_none is a lookup miss, so x may come from either side
+    assert expected.col_lines[-1].from_names == (
+        "default.race_src&default.race_none.x",
+    )
+    assert results == [expected] * 24
+    assert compiles == 1
 
 
 def test_ddl_statement_kinds(spark):
