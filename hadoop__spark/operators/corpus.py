@@ -1137,7 +1137,7 @@ def prepare_corpus(
     order the published pipelines use; documents without an embedding
     row pass through untouched (can't be semantically compared).
     ``semantic_kwargs`` forwards the stage's cost knobs (``nlist``,
-    ``n_rows``, ``assign``, ``cache``, ``checkpoint_dir``); at 100 TB
+    ``n_rows``, ``assign``, ``checkpoint_dir``); at 100 TB
     pair it with ``materialize_dir`` so the stage's several actions
     (centroid fit, clustering rounds, anti-join) read the materialized
     ``deduped`` boundary instead of re-deriving the whole chain.

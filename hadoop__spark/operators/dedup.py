@@ -1596,7 +1596,6 @@ def embedding_dedup_pairs_bucketed(
     nlist: int = 16,
     n_assign: int = 2,
     seed: int = 42,
-    cache: bool = True,
     assign: str = "jvm",
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -1611,7 +1610,7 @@ def embedding_dedup_pairs_bucketed(
     per-bucket: cost drops from O(N²) to O(Σ bucket²), and the buckets
     are the shuffle partitions.
 
-    ``cache`` persists the assigned frame (MEMORY_AND_DISK): both
+    The assigned frame is persisted (MEMORY_AND_DISK): both
     sides of the bucket self-join read it, and the assignment
     projection is ``nlist`` similarity folds per row — measured on the
     10× rehearsal it is the single most expensive stage, so evaluating
@@ -1638,10 +1637,9 @@ def embedding_dedup_pairs_bucketed(
     assigned = _normalized_assignment(
         df, cents, vec_col, id_col, n_assign, assign
     )
-    if cache:
-        assigned = _register_probe_cache(
-            assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    assigned = _register_probe_cache(
+        assigned.persist(StorageLevel.MEMORY_AND_DISK)
+    )
     return _bucket_local_pairs(assigned, threshold)
 
 
@@ -1758,7 +1756,6 @@ def embedding_pairs_against_index(
     threshold: float = 0.95,
     n_assign: int = 2,
     assign: str = "jvm",
-    cache: bool = True,
 ) -> DataFrame:
     """Incremental SEMANTIC dedup: near-duplicate pairs between a NEW
     batch and a persisted IVF index
@@ -1789,9 +1786,8 @@ ivf_append_index` completes the ingest loop without ever re-pairing
     )
     # the probe-id collect below and the pair join both evaluate the
     # assignment — the operator's most expensive projection — so
-    # persist it once (same rationale as the bucketed variant's cache)
-    if cache:
-        b = _register_probe_cache(b.persist(StorageLevel.MEMORY_AND_DISK))
+    # persist it once (same rationale as the bucketed variant's persist)
+    b = _register_probe_cache(b.persist(StorageLevel.MEMORY_AND_DISK))
     probe_ids = sorted(
         r.centroid_id
         for r in b.select("centroid_id").distinct().collect()
@@ -2036,7 +2032,6 @@ def semantic_dedup(
     checkpoint_dir: str | None = None,
     n_rows: int | None = None,
     assign: str = "jvm",
-    cache: bool = True,
 ) -> DataFrame:
     """One-call SEMANTIC deduplication (the SemDeDup recipe, Abbas et
     al. 2023): cluster the corpus by embedding, drop all but one
@@ -2081,7 +2076,6 @@ def semantic_dedup(
         nlist,
         n_assign,
         seed,
-        cache=cache,
         assign=assign,
         n_rows=n_rows,
     )

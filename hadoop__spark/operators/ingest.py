@@ -44,7 +44,8 @@ from __future__ import annotations
 import json
 import threading
 import uuid
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -59,6 +60,7 @@ from hadoop__spark.operators.dedup import (
     minhash_write_signatures,
     minhash_write_signatures_frames,
     ngram_append_index,
+    ngram_jaccard_pairs,
     ngram_jaccard_pairs_between,
     ngram_write_index,
     semantic_dedup,
@@ -82,6 +84,7 @@ from hadoop__spark.operators.similarity import (
     ivf_write_index,
 )
 from hadoop__spark.operators.util import (
+    create_exclusive,
     delete_path as _delete_path,
     list_child_dirs as _list_child_dirs,
     list_files as _list_files,
@@ -110,16 +113,29 @@ _COMMIT_MARKER = "_INGEST_COMMITTED"
 # delete by hand (the error message says so).
 _MAINT_LOCK = "_MAINTENANCE_LOCK"
 
-# the OTHER side of the advisory protocol: ingest_batch holds this
-# in-progress marker for its whole run, and _maintenance_lock refuses
-# while it exists — so a compact/retract started while an ingest is
-# mid-flight cannot replace a table between the ingest's read and
-# append (which would silently lose that batch's appended rows).
-# Each side creates its own flag FIRST and then checks the other's,
-# so the two can never both proceed (both may refuse — advisory, not
-# a scheduler).  A crashed ingest leaves the marker; rebuild_state
+# the OTHER side of the advisory protocol (see _advisory_flag):
+# ingest_batch holds this in-progress marker for its whole run, and
+# _maintenance_lock refuses while it exists — so a compact/retract
+# started while an ingest is mid-flight cannot replace a table between
+# the ingest's read and append (which would silently lose that batch's
+# appended rows).  A crashed ingest leaves the marker; rebuild_state
 # (the crash-recovery path) clears it.
 _INGEST_MARKER = "_INGEST_INPROGRESS"
+
+# what a present flag means: the refusal raised both by the side that
+# fails to create it and by the other side that finds it
+_FLAG_MEANS = {
+    _MAINT_LOCK: (
+        "is under maintenance: maintenance lock {path} is held by a "
+        "live compact/retract/refit run, or stale from a crashed one "
+        "(delete the file after confirming nothing runs)"
+    ),
+    _INGEST_MARKER: (
+        "has an ingest_batch run in flight ({path} present) — retry "
+        "after it completes (a crashed ingest leaves the marker stale: "
+        "rebuild_state clears it, or delete the file by hand)"
+    ),
+}
 
 # sketch states that cannot subtract (KLL quantiles, HLL/theta
 # accounting): a fast-path retraction leaves them overstating and
@@ -136,14 +152,204 @@ _JOURNAL = "tmp/commit"
 _MANIFEST = "_COMMIT"
 _END = json.dumps(["end"])
 
-# near-dup text plane state layout: subdir under state_dir ("" = the
-# state root, minhash's original layout) and the layout-marker table
-# whose existence identifies the plane a corpus was bootstrapped with
-_PLANE_LAYOUT = {
-    "minhash": ("", "signatures"),
-    "simhash": ("simhash", "simhash/signatures"),
-    "ngram": ("ngram", "ngram/meta"),
+
+class _Plane(NamedTuple):
+    """One near-dup text plane: its state layout and its ingest steps.
+
+    ``sub`` is the plane's dir suffix under the state dir ("" = the
+    state root, minhash's original layout), ``marker`` the table whose
+    existence identifies the plane a corpus was bootstrapped with,
+    ``tables`` the flat tables a fast retraction rewrites, ``params``
+    the parameters besides ``n`` its policy records.  The steps take
+    the call's knobs as keywords and look every dedup function up as a
+    module global at call time, so a patched global is what runs:
+
+    * ``stored(spark, marker)``: the parameters the plane was written
+      with, as ``{name: value}``;
+    * ``sign(spark, fresh, sigs, **k)``: stage the batch's signature
+      frames ONCE under ``sigs`` and return them (None: the plane keeps
+      the from-text route);
+    * ``probe(spark, path, fresh, frames, **k)``: pairs (``id_new``)
+      between the batch and the stored plane;
+    * ``pairs(spark, surv, frames, eligible, **k)``: pairs (``id_a``,
+      ``id_b``) within the batch's exact-pass survivors;
+    * ``write(spark, path, surv, frames, mode, **k)``: write
+      (``"overwrite"``) or append the survivors to the plane.
+    """
+
+    sub: str
+    marker: str
+    tables: tuple
+    params: tuple
+    stored: Callable
+    sign: Callable
+    probe: Callable
+    pairs: Callable
+    write: Callable
+
+
+def _alive(frames: dict, surv: DataFrame, id_col: str) -> dict:
+    """The staged frames semi-joined to the ids of ``surv``: per-row
+    projections and per-doc aggregations are deterministic, so these
+    equal frames recomputed on the subset, at zero re-hash cost."""
+    alive = surv.select(F.col(id_col).alias("_id"))
+    return {k: f.join(alive, "_id", "left_semi") for k, f in frames.items()}
+
+
+def _mh_stored(spark, marker):
+    return {
+        "num_perm": sum(
+            c.startswith("mh_") for c in spark.read.parquet(marker).columns
+        )
+    }
+
+
+def _mh_sign(spark, fresh, sigs, *, text_col, id_col, n, num_perm, **_):
+    shingle_frame(fresh, text_col, id_col, n).write.mode(
+        "overwrite"
+    ).parquet(f"{sigs}/shingles")
+    sh = spark.read.parquet(f"{sigs}/shingles")
+    _minhash_signatures(sh, num_perm).write.mode("overwrite").parquet(
+        f"{sigs}/signatures"
+    )
+    return {"sh": sh, "mh": spark.read.parquet(f"{sigs}/signatures")}
+
+
+def _mh_probe(spark, path, fresh, frames, *, bands, threshold, max_bucket,
+              **_):
+    return minhash_lsh_pairs_between_frames(
+        spark, path, frames["mh"], frames["sh"], bands=bands,
+        threshold=threshold, max_bucket=max_bucket,
+    )
+
+
+def _mh_pairs(spark, surv, frames, eligible, *, id_col, bands, threshold,
+              max_bucket, **_):
+    # bucket caps apply after the semi-join, same as the text path
+    f = _alive(frames, surv, id_col)
+    return minhash_lsh_pairs_frames(
+        f["mh"], f["sh"], bands=bands, threshold=threshold,
+        max_bucket=max_bucket,
+    )
+
+
+def _mh_write(spark, path, surv, frames, mode, *, text_col, id_col, n,
+              num_perm, **_):
+    if frames is None:
+        minhash_write_signatures(
+            surv, path, text_col, id_col, n=n, num_perm=num_perm, mode=mode
+        )
+    else:
+        f = _alive(frames, surv, id_col)
+        minhash_write_signatures_frames(
+            spark, path, f["sh"], f["mh"], mode=mode
+        )
+
+
+def _sim_sign(spark, fresh, sigs, *, text_col, id_col, n, **_):
+    simhash(fresh, text_col, id_col, n).select(
+        F.col(id_col).alias("_id"), "simhash"
+    ).write.mode("overwrite").parquet(f"{sigs}/signatures")
+    return {"sim": spark.read.parquet(f"{sigs}/signatures")}
+
+
+def _sim_probe(spark, path, fresh, frames, *, max_hamming, n_chunks, **_):
+    return simhash_pairs_between_frames(
+        spark, path, frames["sim"], max_hamming=max_hamming,
+        n_chunks=n_chunks,
+    )
+
+
+def _sim_pairs(spark, surv, frames, eligible, *, id_col, max_hamming,
+               n_chunks, **_):
+    from hadoop__spark.operators.util import parquet_row_count
+
+    # the frame is batch-sized by construction (⊆ the eligible
+    # staging): pass that bound as n_docs, so the occupancy guard costs
+    # a driver-side footer read instead of a join-backed count() job
+    # (the guard is monotone in n_docs: an upper bound can only refuse
+    # earlier, never admit more)
+    return simhash_pairs_frames(
+        _alive(frames, surv, id_col)["sim"], max_hamming=max_hamming,
+        n_chunks=n_chunks, n_docs=parquet_row_count(spark, eligible),
+    )
+
+
+def _sim_write(spark, path, surv, frames, mode, *, text_col, id_col, n,
+               **_):
+    if frames is None:
+        simhash_write_signatures(
+            surv, path, text_col, id_col, n=n, mode=mode
+        )
+    else:
+        simhash_write_signatures_frames(
+            spark, path, _alive(frames, surv, id_col)["sim"], mode=mode
+        )
+
+
+def _ng_stored(spark, marker):
+    meta = spark.read.parquet(marker).first()
+    return {"n": meta.n, "threshold": meta.threshold}
+
+
+def _ng_probe(spark, path, fresh, frames, *, text_col, id_col, threshold,
+              **_):
+    return ngram_jaccard_pairs_between(
+        spark, path, fresh, text_col, id_col, threshold=threshold
+    )
+
+
+def _ng_pairs(spark, surv, frames, eligible, *, text_col, id_col, n,
+              threshold, **_):
+    return ngram_jaccard_pairs(
+        surv, text_col, id_col, threshold=threshold, n=n
+    )
+
+
+def _ng_write(spark, path, surv, frames, mode, *, text_col, id_col, n,
+              threshold, **_):
+    # the append cross-checks n/threshold against the stored meta and
+    # keeps the bootstrap's frozen df order
+    if mode == "append":
+        ngram_append_index(
+            spark, path, surv, text_col, id_col, n=n, threshold=threshold
+        )
+    else:
+        ngram_write_index(
+            surv, path, text_col, id_col, n=n, threshold=threshold
+        )
+
+
+# The ngram plane signs nothing: its index appends under a frozen
+# df-order contract, and its per-batch recompute is one tokenize+slice
+# pass with no hash fan-out, not worth entangling that invariant for.
+_PLANES = {
+    "minhash": _Plane(
+        "", "signatures", ("shingles", "signatures"),
+        ("num_perm", "threshold"), _mh_stored, _mh_sign, _mh_probe,
+        _mh_pairs, _mh_write,
+    ),
+    "simhash": _Plane(
+        "/simhash", "simhash/signatures", ("simhash/signatures",), (),
+        lambda spark, marker: {}, _sim_sign, _sim_probe, _sim_pairs,
+        _sim_write,
+    ),
+    "ngram": _Plane(
+        "/ngram", "ngram/meta", ("ngram/shingle_sets", "ngram/prefix"),
+        ("threshold",), _ng_stored, lambda *a, **k: None, _ng_probe,
+        _ng_pairs, _ng_write,
+    ),
 }
+
+
+def _plane(text_method: str) -> _Plane:
+    """The plane record for a ``text_method`` argument."""
+    if text_method not in _PLANES:
+        raise ValueError(
+            "text_method must be 'minhash', 'simhash' or 'ngram', "
+            f"got {text_method!r}"
+        )
+    return _PLANES[text_method]
 
 
 # every flat state table (relpath → compaction sort keys; None =
@@ -172,19 +378,58 @@ def _name(path: str) -> str:
     return path.rstrip("/").rsplit("/", 1)[-1]
 
 
-def _plane_paths(state_dir: str, text_method: str) -> tuple[str, str]:
-    """(plane state path, layout-marker table path) for a method."""
-    sub, marker = _PLANE_LAYOUT[text_method]
-    plane = state_dir if not sub else f"{state_dir}/{sub}"
-    return plane, f"{state_dir}/{marker}"
-
-
 def _detect_plane(spark, state_dir: str) -> str | None:
     """The text plane a state dir holds, from its layout markers."""
-    for method in _PLANE_LAYOUT:
-        if _table_exists(spark, _plane_paths(state_dir, method)[1]):
+    for method, plane in _PLANES.items():
+        if _table_exists(spark, f"{state_dir}/{plane.marker}"):
             return method
     return None
+
+
+def _same(stored, call) -> bool:
+    """Whether a call's value matches a stored one (floats within
+    1e-12: they round-trip through parquet)."""
+    if isinstance(stored, float) and isinstance(call, (int, float)):
+        return abs(stored - call) <= 1e-12
+    return stored == call
+
+
+def _check_stored_plane(
+    spark, state_dir: str, text_method: str, n: int, num_perm: int,
+    threshold: float, params: bool = True,
+) -> None:
+    """THE stored-plane check of :func:`ingest_batch`,
+    :func:`rebuild_state` and :func:`retract_documents`, run before
+    anything is written: refuse a call whose ``text_method`` has no
+    plane in the state (probing or rebuilding the wrong plane would
+    silently admit near-dups of everything already ingested) and, with
+    ``params``, one whose parameters contradict those the plane was
+    written with (the minhash ``num_perm``, the ngram ``n`` and
+    ``threshold``: a mismatched append would refuse mid-batch, or a
+    rebuild would strand every later append)."""
+    plane = _PLANES[text_method]
+    marker = f"{state_dir}/{plane.marker}"
+    if not _table_exists(spark, marker):
+        held = _detect_plane(spark, state_dir)
+        raise ValueError(
+            f"state at {state_dir} holds "
+            + (f"a {held!r} plane" if held else "no text plane")
+            + f", not a {text_method!r} one: it was built with a "
+            "different text_method — pass the text_method the corpus "
+            "was ingested with, or rebuild the state"
+        )
+    call = {"n": n, "num_perm": num_perm, "threshold": threshold}
+    drift = [
+        f"{name}: stored {v!r}, this call {call[name]!r}"
+        for name, v in (plane.stored(spark, marker) if params else {}).items()
+        if not _same(v, call[name])
+    ]
+    if drift:
+        raise ValueError(
+            f"the {text_method!r} plane at {state_dir} contradicts this "
+            f"call — {'; '.join(drift)} — match the stored parameters, "
+            "or rebuild the state"
+        )
 
 
 def _complete_snapshots(spark, state_dir: str) -> list[str]:
@@ -215,50 +460,57 @@ def _union(spark, paths: list[str]) -> DataFrame:
 _HELD = threading.local()
 
 
+class _Held(RuntimeError):
+    """An advisory flag this run needs is present (see _FLAG_MEANS)."""
+
+
+@contextmanager
+def _advisory_flag(spark, state_dir: str, mine: str, other: str | None):
+    """THE two-sided advisory protocol: exclusively create this side's
+    flag ``mine``, refuse when the ``other`` side's flag exists, and
+    always release.  Each side creates its own flag FIRST and only
+    then checks the other's, so the two can never both proceed (both
+    may refuse — advisory, not a scheduler)."""
+
+    def refuse(flag):
+        means = _FLAG_MEANS[flag].format(path=f"{state_dir}/{flag}")
+        return _Held(f"state at {state_dir} {means}")
+
+    path = f"{state_dir}/{mine}"
+    if not create_exclusive(spark, path):
+        raise refuse(mine)
+    try:
+        if other is not None and _table_exists(spark, f"{state_dir}/{other}"):
+            raise refuse(other)
+        yield
+    finally:
+        _delete_path(spark, path)
+
+
 @contextmanager
 def _maintenance_lock(spark, state_dir: str):
-    """The maintenance hold every verb runs under: exclusively create
-    the state's lock file, refusing when another run holds it OR an
-    ingest is mid-flight (two-sided advisory locking; see
-    _INGEST_MARKER), then run the fsck pass FIRST — a crashed verb's
-    committed stage is replayed and an uncommitted one swept before
-    this verb reads anything — and always release.
+    """The maintenance hold every verb runs under: the maintenance
+    lock's advisory flag, refused while another run holds it OR an
+    ingest is mid-flight (see _INGEST_MARKER), then the fsck pass
+    FIRST — a crashed verb's committed stage is replayed and an
+    uncommitted one swept before this verb reads anything.
 
     Re-entrant per thread: a call made while this thread already holds
     the state's lock (maintain_state → coalesce_snapshots,
     decontaminate_state → retract_documents) runs directly, and the
     fsck pass runs once per outermost hold.  Yields the fsck report
     (empty for a nested hold)."""
-    from hadoop__spark.operators.util import create_exclusive
-
     key = state_dir.rstrip("/")
     held = _HELD.__dict__.setdefault("dirs", set())
     if key in held:
         yield {"restored": [], "swept": []}
         return
-    path = f"{state_dir}/{_MAINT_LOCK}"
-    if not create_exclusive(spark, path):
-        raise RuntimeError(
-            f"maintenance lock {path} is held — another "
-            "compact/retract run is active (or crashed and left it "
-            "stale; delete the file after confirming nothing runs)"
-        )
-    try:
-        # own flag first, then the other side's — if an ingest slipped
-        # in between our existence check and our create, one of us
-        # sees the other and backs off
-        if _table_exists(spark, f"{state_dir}/{_INGEST_MARKER}"):
-            raise RuntimeError(
-                f"an ingest_batch run is in flight on {state_dir} "
-                f"({_INGEST_MARKER} present) — retry after it completes "
-                "(a crashed ingest leaves the marker stale; "
-                "rebuild_state clears it, or delete the file by hand)"
-            )
+    with _advisory_flag(spark, state_dir, _MAINT_LOCK, _INGEST_MARKER):
         held.add(key)
-        yield _fsck_state_locked(spark, state_dir)
-    finally:
-        held.discard(key)
-        _delete_path(spark, path)
+        try:
+            yield _fsck_state_locked(spark, state_dir)
+        finally:
+            held.discard(key)
 
 
 def _stage_dir(verb: str) -> str:
@@ -413,18 +665,37 @@ def _read_policy(spark, state_dir: str) -> dict | None:
     return spark.read.parquet(path).first().asDict()
 
 
+def _policy(
+    text_method: str, n: int, num_perm: int, threshold: float,
+    has_quality_gate: bool, group_cap: tuple | None,
+    accounting_col: str | None, has_embeddings: bool, **probe_knobs,
+) -> dict:
+    """THE policy record of a call (``group_cap``: ``(col, k)``, k may
+    be None; ``probe_knobs``: the recorded query-time knobs, absent
+    from a rebuild's record)."""
+    uses = _PLANES[text_method].params
+    cap_col, cap_k = group_cap if group_cap is not None else (None, None)
+    return {
+        "text_method": text_method,
+        "n": int(n),
+        "num_perm": int(num_perm) if "num_perm" in uses else None,
+        "threshold": float(threshold) if "threshold" in uses else None,
+        "has_quality_gate": has_quality_gate,
+        "group_cap_col": cap_col,
+        "group_cap_k": None if cap_k is None else int(cap_k),
+        "accounting_col": accounting_col,
+        "has_embeddings": has_embeddings,
+        **probe_knobs,
+    }
+
+
 def _policy_drift(stored: dict, current: dict) -> list[str]:
     """Human-readable drift descriptions for the ENFORCED fields."""
-    drift = []
-    for f in _POLICY_ENFORCED:
-        s, c = stored.get(f), current.get(f)
-        if isinstance(s, float) and isinstance(c, float):
-            if abs(s - c) <= 1e-12:
-                continue
-        elif s == c:
-            continue
-        drift.append(f"{f}: stored {s!r}, this call {c!r}")
-    return drift
+    return [
+        f"{f}: stored {stored.get(f)!r}, this call {current.get(f)!r}"
+        for f in _POLICY_ENFORCED
+        if not _same(stored.get(f), current.get(f))
+    ]
 
 
 def _required_planes(
@@ -528,41 +799,38 @@ def _write_state_tables(
     enable) — the targeted-repair path writes only the kilobyte
     policy/sketch tables without touching the text/embedding planes.
 
-    ``mode``: ``"bootstrap"`` / ``"rebuild"`` overwrite every table;
-    ``"append"`` adds the batch's rows (the ingest loop) — the ngram
-    plane appends through
+    ``mode``: ``"overwrite"`` rewrites every table (a bootstrap batch
+    or a rebuild); ``"append"`` adds the batch's rows (the ingest loop)
+    — the ngram plane appends through
     :func:`~hadoop__spark.operators.dedup.ngram_append_index` (frozen
     df-order) and the IVF index through
     :func:`~hadoop__spark.operators.similarity.ivf_append_index`
-    (frozen centroids) when an index exists; both bootstrap/rebuild
-    routes (re-)fit.
+    (frozen centroids) when an index exists; ``"overwrite"`` (re-)fits
+    both.
 
     ``surv`` must already be MATERIALIZED (both callers read it back
     from a written snapshot) — every writer below scans it, and a lazy
     chain would re-run the whole dedup per table.
 
     ``sig_frames`` is :func:`ingest_batch`'s per-batch signature
-    staging, keyed by shape — ``{"sh": (_id, _sh), "mh": (_id,
-    mh_*)}`` for the minhash plane, ``{"sim": (_id, simhash)}`` for
-    simhash — computed once at the batch's own ``n``/``num_perm`` and
-    possibly covering a SUPERSET of the survivors; when given, the
-    text plane appends the frames semi-joined to ``surv`` instead of
-    re-tokenizing and re-hashing the survivor text (the rebuild paths
-    omit it and keep the from-text route; the ngram plane has no
-    staged shape).
+    staging (the plane's ``sign`` step, see :class:`_Plane`), computed
+    once at the batch's own ``n``/``num_perm`` and possibly covering a
+    SUPERSET of the survivors; when given, the text plane writes the
+    frames semi-joined to ``surv`` instead of re-tokenizing and
+    re-hashing the survivor text (the rebuild paths omit it and keep
+    the from-text route).
 
     Returns the set of coverage-marker plane names actually written
     (``"embeddings"`` is claimed even when zero survivors carried a
     vector — a replay would find nothing to add either, so coverage
     is vacuously true and the index bootstraps on a later batch).
     """
-    if mode not in ("bootstrap", "append", "rebuild"):
+    if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown state-writer mode {mode!r}")
 
     def _on(plane: str) -> bool:
         return include is None or plane in include
 
-    write_mode = "append" if mode == "append" else "overwrite"
     # each plane's writer is an independent job (or short job chain)
     # over the same materialized snapshot, touching a disjoint table —
     # collected here and submitted CONCURRENTLY below.  Driver threads
@@ -581,7 +849,7 @@ def _write_state_tables(
             (
                 surv.groupBy(group_cap_col)
                 .agg(F.count("*").cast("bigint").alias("n_admitted"))
-                .write.mode(write_mode)
+                .write.mode(mode)
                 .parquet(f"{state_dir}/group_counts")
             )
 
@@ -603,7 +871,7 @@ def _write_state_tables(
                 )
             )
             score_sketch(surv_scores, score_col=score_col).write.mode(
-                write_mode
+                mode
             ).parquet(f"{state_dir}/score_sketches")
 
         writers.append(("gate", _w_gate))
@@ -615,14 +883,14 @@ def _write_state_tables(
             corpus_stats_sketch(
                 surv, group_cols=[accounting_col], text_col=text_col,
                 id_col=id_col, cache=False,
-            ).write.mode(write_mode).parquet(
+            ).write.mode(mode).parquet(
                 f"{state_dir}/accounting/stats"
             )
 
         def _w_acct_overlap():
             overlap_sketch(
                 surv, group_col=accounting_col, text_col=text_col
-            ).write.mode(write_mode).parquet(
+            ).write.mode(mode).parquet(
                 f"{state_dir}/accounting/overlap"
             )
 
@@ -631,62 +899,19 @@ def _write_state_tables(
     if _on("fingerprints"):
         def _w_fingerprints():
             fingerprint_write(
-                surv, state_dir, text_col, id_col, mode=write_mode
+                surv, state_dir, text_col, id_col, mode=mode
             )
 
         writers.append(("fingerprints", _w_fingerprints))
     if _on("text"):
-        plane_path, _ = _plane_paths(state_dir, text_method)
-        if text_method == "minhash":
-            if sig_frames is not None:
-                sh_b, mh_b = sig_frames["sh"], sig_frames["mh"]
+        plane = _PLANES[text_method]
 
-                def _w_text():
-                    alive = surv.select(F.col(id_col).alias("_id"))
-                    minhash_write_signatures_frames(
-                        spark,
-                        plane_path,
-                        sh_b.join(alive, "_id", "left_semi"),
-                        mh_b.join(alive, "_id", "left_semi"),
-                        mode=write_mode,
-                    )
-            else:
-                def _w_text():
-                    minhash_write_signatures(
-                        surv, plane_path, text_col, id_col, n=n,
-                        num_perm=num_perm, mode=write_mode,
-                    )
-        elif text_method == "simhash":
-            if sig_frames is not None:
-                sim_b = sig_frames["sim"]
-
-                def _w_text():
-                    alive = surv.select(F.col(id_col).alias("_id"))
-                    simhash_write_signatures_frames(
-                        spark,
-                        plane_path,
-                        sim_b.join(alive, "_id", "left_semi"),
-                        mode=write_mode,
-                    )
-            else:
-                def _w_text():
-                    simhash_write_signatures(
-                        surv, plane_path, text_col, id_col, n=n,
-                        mode=write_mode,
-                    )
-        elif mode == "append":
-            # the append cross-checks n/threshold against the stored meta
-            def _w_text():
-                ngram_append_index(
-                    spark, plane_path, surv, text_col, id_col, n=n,
-                    threshold=threshold,
-                )
-        else:
-            def _w_text():
-                ngram_write_index(
-                    surv, plane_path, text_col, id_col, n=n,
-                    threshold=threshold,
-                )
+        def _w_text():
+            plane.write(
+                spark, f"{state_dir}{plane.sub}", surv, sig_frames, mode,
+                text_col=text_col, id_col=id_col, n=n, num_perm=num_perm,
+                threshold=threshold,
+            )
 
         writers.append(("text", _w_text))
     if embeddings is not None and _on("embeddings"):
@@ -908,11 +1133,13 @@ def ingest_batch(
     the corpus.  The exact-fingerprint plane and the optional
     embedding plane run regardless of the choice.
 
-    ``n``/``num_perm`` must match the stored MinHash state across
-    calls (a ``num_perm`` mismatch is refused at the append; ``n`` is
-    the caller's contract; the ngram plane cross-checks ``n`` AND
-    ``threshold`` against its stored meta); ``nlist`` sizes the
-    bootstrap IVF fit
+    ``n``/``num_perm``/``threshold`` must match the stored state
+    across calls: the policy check refuses a mismatch before any
+    compute, and so does the stored-plane check (the minhash
+    signatures' ``num_perm``, the ngram meta's ``n`` and
+    ``threshold``) whenever a call adopts or rewrites the policy — so
+    a refused call leaves the stored policy as it was; ``nlist`` sizes
+    the bootstrap IVF fit
     (default: the faiss ``max(16, 4√N)`` rule via
     :func:`~hadoop__spark.operators.dedup.semantic_dedup`'s sizing).
 
@@ -962,43 +1189,24 @@ def ingest_batch(
         raise ValueError(
             f"on_existing must be 'fail' or 'skip', got {on_existing!r}"
         )
-    if text_method not in ("minhash", "simhash", "ngram"):
-        raise ValueError(
-            "text_method must be 'minhash', 'simhash' or 'ngram', "
-            f"got {text_method!r}"
-        )
-    if _table_exists(spark, f"{state_dir}/{_MAINT_LOCK}"):
-        # a compact/retract run is deleting-and-swapping the tables
-        # this ingest would read and append — refuse loudly instead of
-        # racing the swap (advisory; see _MAINT_LOCK)
-        raise RuntimeError(
-            f"state at {state_dir} is under maintenance "
-            f"({_MAINT_LOCK} present) — retry after it completes, or "
-            "delete a stale lock by hand"
-        )
-    from hadoop__spark.operators.util import create_exclusive
+    plane = _plane(text_method)
+    from hadoop__spark.operators.dedup import release_probe_caches
 
-    in_progress = f"{state_dir}/{_INGEST_MARKER}"
-    if not create_exclusive(spark, in_progress):
-        raise RuntimeError(
-            f"another ingest_batch run is in flight on {state_dir} "
-            f"({_INGEST_MARKER} present) — two concurrent ingests "
-            "would race the state appends; retry after it completes "
-            "(a crashed ingest leaves the marker stale — rebuild_state "
-            "clears it, or delete the file by hand)"
-        )
-    try:
-        if _table_exists(spark, f"{state_dir}/{_MAINT_LOCK}"):
-            # re-check after planting our flag: a maintenance run may
-            # have taken the lock between our first check and our
-            # create — each side checks the other's flag AFTER its
-            # own, so the two can never both proceed (two-sided
-            # advisory locking; both backing off is fine)
-            raise RuntimeError(
-                f"state at {state_dir} is under maintenance "
-                f"({_MAINT_LOCK} present) — retry after it completes, "
-                "or delete a stale lock by hand"
-            )
+    # the whole run holds the in-progress marker, refused while a
+    # maintenance verb holds its lock: a compact/retract would
+    # delete-and-swap the tables this ingest reads and appends
+    flag = _advisory_flag(spark, state_dir, _INGEST_MARKER, _MAINT_LOCK)
+    with flag, ExitStack() as done:
+        # on the way out, before the marker goes, release the probe
+        # caches THIS call accumulated: the survivors and every state
+        # append are already durable (the returned frame reads the
+        # snapshot, not the probe chain), and CacheManager entries
+        # otherwise accrue per batch — every query compile scans all
+        # of them, so a long-lived streaming driver slows down per
+        # micro-batch (measured 20 s → 87 s per identical batch over
+        # 120 ingests; tools/cadence_rehearsal.py).  Scoped to THIS
+        # session: another session's pipeline keeps its own caches.
+        done.callback(release_probe_caches, spark)
         committed = _stages(spark, state_dir)[0]
         if committed:
             # a crashed maintenance verb committed but did not finish:
@@ -1009,127 +1217,74 @@ def ingest_batch(
                 f"stage(s) {committed} pending — run fsck_state to "
                 "finish them, then retry"
             )
-        return _ingest_batch_inner(
-            spark, state_dir, batch, batch_name, text_col, id_col,
-            text_method, threshold, n, num_perm, bands, max_bucket,
-            max_hamming, n_chunks, scores, score_col, keep_frac,
-            unscored, benchmark, group_cap, embeddings, embedding_col,
-            semantic_threshold, nlist, n_assign, assign, seed,
-            checkpoint_dir, accounting_col, on_existing,
-            allow_policy_change,
-        )
-    finally:
-        # release the probe caches THIS call accumulated: the
-        # survivors and every state append are already durable (the
-        # returned frame reads the snapshot, not the probe chain), and
-        # CacheManager entries otherwise accrue per batch — every
-        # query compile scans all of them, so a long-lived streaming
-        # driver slows down per micro-batch (measured 20 s → 87 s per
-        # identical batch over 120 ingests; tools/cadence_rehearsal.py)
-        from hadoop__spark.operators.dedup import release_probe_caches
-
-        # scoped to THIS session: a concurrent pipeline on another
-        # session in the same process keeps its own probe caches
-        release_probe_caches(spark)
-        _delete_path(spark, in_progress)
-
-
-def _ingest_batch_inner(
-    spark, state_dir, batch, batch_name, text_col, id_col, text_method,
-    threshold, n, num_perm, bands, max_bucket, max_hamming, n_chunks,
-    scores, score_col, keep_frac, unscored, benchmark, group_cap,
-    embeddings, embedding_col, semantic_threshold, nlist, n_assign,
-    assign, seed, checkpoint_dir, accounting_col, on_existing,
-    allow_policy_change,
-) -> DataFrame:
-    """:func:`ingest_batch`'s body, run while the in-progress marker
-    is held (the public wrapper owns acquisition and release)."""
-    batch_path = f"{state_dir}/batches/{batch_name}"
-    if _table_exists(spark, batch_path):
-        # fail FAST (before any dedup compute): a reused name would
-        # overwrite this staging table while the earlier run's state
-        # appends remain — a silent double-append.  With
-        # on_existing="skip" a COMMITTED batch (marker present = every
-        # state append finished) is returned as-is — the idempotent
-        # no-op a foreachBatch retry needs — provided the marker's
-        # coverage includes every plane THIS call's options touch; a
-        # snapshot WITHOUT the marker crashed mid-append and still
-        # refuses (replaying it would double-append — run
-        # rebuild_state first).
-        if on_existing == "skip":
-            covered = _read_commit_marker(spark, batch_path)
-            if covered is not None:
-                required = _required_planes(
-                    keep_frac is not None,
-                    group_cap[0] if group_cap is not None else None,
-                    accounting_col,
-                    embeddings is not None,
-                )
-                missing = required - covered
-                if missing:
-                    raise ValueError(
-                        f"batch {batch_name!r} is committed covering "
-                        f"planes {sorted(covered)}, but this replay "
-                        f"also needs {sorted(missing)} — those state "
-                        "tables are missing the batch's rows (a "
-                        "rebuild omitted the input); rebuild_state "
-                        "with the full inputs first"
-                    )
-                return spark.read.parquet(batch_path)
-        raise ValueError(
-            f"batch {batch_name!r} was already ingested into "
-            f"{state_dir} (staging table exists"
-            + (
-                " without a commit marker — it crashed mid-append; "
-                "rebuild_state, then re-ingest under a new name)"
+        batch_path = f"{state_dir}/batches/{batch_name}"
+        if _table_exists(spark, batch_path):
+            # fail FAST (before any dedup compute): a reused name would
+            # overwrite this staging table while the earlier run's
+            # state appends remain — a silent double-append.  With
+            # on_existing="skip" a COMMITTED batch (marker present =
+            # every state append finished) is returned as-is — the
+            # idempotent no-op a foreachBatch retry needs — provided
+            # the marker's coverage includes every plane THIS call's
+            # options touch; a snapshot WITHOUT the marker crashed
+            # mid-append and still refuses (replaying it would
+            # double-append — run rebuild_state first).
+            covered = (
+                _read_commit_marker(spark, batch_path)
                 if on_existing == "skip"
-                else "); pick a new name, or pass on_existing='skip' "
-                "for idempotent stream replays"
+                else None
             )
+            if covered is None:
+                raise ValueError(
+                    f"batch {batch_name!r} was already ingested into "
+                    f"{state_dir} (staging table exists"
+                    + (
+                        " without a commit marker — it crashed "
+                        "mid-append; rebuild_state, then re-ingest under "
+                        "a new name)"
+                        if on_existing == "skip"
+                        else "); pick a new name, or pass "
+                        "on_existing='skip' for idempotent stream replays"
+                    )
+                )
+            missing = _required_planes(
+                keep_frac is not None,
+                group_cap[0] if group_cap is not None else None,
+                accounting_col,
+                embeddings is not None,
+            ) - covered
+            if missing:
+                raise ValueError(
+                    f"batch {batch_name!r} is committed covering planes "
+                    f"{sorted(covered)}, but this replay also needs "
+                    f"{sorted(missing)} — those state tables are missing "
+                    "the batch's rows (a rebuild omitted the input); "
+                    "rebuild_state with the full inputs first"
+                )
+            return spark.read.parquet(batch_path)
+        bootstrap = not _table_exists(spark, f"{state_dir}/fingerprints")
+        # persisted-policy consistency — fail FAST, before any compute
+        # (see the docstring's policy paragraph; _POLICY_ENFORCED lists
+        # the refused fields)
+        pol = _policy(
+            text_method, n, num_perm, threshold, keep_frac is not None,
+            group_cap, accounting_col, embeddings is not None,
+            max_hamming=int(max_hamming), n_chunks=int(n_chunks),
+            bands=int(bands), semantic_threshold=float(semantic_threshold),
         )
-    plane_path, plane_marker = _plane_paths(state_dir, text_method)
-    bootstrap = not _table_exists(spark, f"{state_dir}/fingerprints")
-    if not bootstrap and not _table_exists(spark, plane_marker):
-        # the corpus was bootstrapped under a DIFFERENT text_method —
-        # probing the wrong plane would silently admit near-dups of
-        # everything already ingested
-        raise ValueError(
-            f"state at {state_dir} has no {text_method!r} plane: it was "
-            "built with a different text_method; use the original "
-            "method or rebuild the state"
-        )
-    # persisted-policy consistency — fail FAST, before any compute
-    # (see the docstring's policy paragraph; _POLICY_ENFORCED lists
-    # the refused fields)
-    current_pol = {
-        "text_method": text_method,
-        "n": int(n),
-        "num_perm": int(num_perm) if text_method == "minhash" else None,
-        "threshold": (
-            float(threshold)
-            if text_method in ("minhash", "ngram")
-            else None
-        ),
-        "max_hamming": int(max_hamming),
-        "n_chunks": int(n_chunks),
-        "bands": int(bands),
-        "has_quality_gate": keep_frac is not None,
-        "group_cap_col": group_cap[0] if group_cap is not None else None,
-        "group_cap_k": int(group_cap[1]) if group_cap is not None else None,
-        "accounting_col": accounting_col,
-        "has_embeddings": embeddings is not None,
-        "semantic_threshold": float(semantic_threshold),
-    }
-    if bootstrap:
-        _write_policy(spark, state_dir, current_pol)
-    else:
-        stored = _read_policy(spark, state_dir)
-        if stored is None:
-            # pre-policy legacy state: adopt this call's parameters as
-            # the corpus policy (enforced from the next call on)
-            _write_policy(spark, state_dir, current_pol)
-        else:
-            drift = _policy_drift(stored, current_pol)
+        stored, drift = None, []
+        if not bootstrap:
+            stored = _read_policy(spark, state_dir)
+            if stored is not None:
+                drift = _policy_drift(stored, pol)
+            # the stored plane is checked before any policy write; its
+            # parameters are read only when this call adopts or
+            # rewrites the policy — an unchanged stored policy already
+            # vouches for them (a minhash schema read is a Spark job)
+            _check_stored_plane(
+                spark, state_dir, text_method, n, num_perm, threshold,
+                params=stored is None or bool(drift),
+            )
             if drift and not allow_policy_change:
                 raise ValueError(
                     f"ingest policy drift on {state_dir} — "
@@ -1138,344 +1293,253 @@ def _ingest_batch_inner(
                     "allow_policy_change=True for a deliberate change "
                     "(earlier batches stay governed by the old policy)"
                 )
-            if drift:
-                _write_policy(spark, state_dir, current_pol)
-    if not bootstrap and text_method == "ngram":
-        # fail FAST on a parameter drift the end-of-batch append would
-        # refuse anyway — by then the fingerprint/gate appends would
-        # already have committed, stranding the state mid-batch
-        meta = spark.read.parquet(f"{plane_path}/meta").first()
-        if n != meta.n or abs(threshold - meta.threshold) > 1e-12:
-            raise ValueError(
-                f"ngram ingest with n={n}, threshold={threshold} onto a "
-                f"plane written with n={meta.n}, "
-                f"threshold={meta.threshold} — match the stored "
-                "parameters or rebuild the state"
+        if stored is None or drift:
+            # bootstrap, a pre-policy legacy state adopting this call's
+            # parameters (enforced from the next call on), or a
+            # deliberate change
+            _write_policy(spark, state_dir, pol)
+        if scores is not None:
+            # one row per id (same collapse as prepare_corpus):
+            # duplicate score rows would fan out the group-cap rank
+            # join — a doc occupying several rank slots starves its
+            # group — and double-count in the persisted score sketch
+            scores = scores.groupBy(id_col).agg(
+                F.max(score_col).alias(score_col)
             )
-    if scores is not None:
-        # one row per id (same collapse as prepare_corpus): duplicate
-        # score rows would fan out the group-cap rank join — a doc
-        # occupying several rank slots starves its group — and
-        # double-count in the persisted score sketch
-        scores = scores.groupBy(id_col).agg(
-            F.max(score_col).alias(score_col)
+        fresh = batch
+        if benchmark is not None:
+            fresh = decontaminate(fresh, benchmark, text_col, id_col)
+        if not bootstrap:
+            # plane 1: exact copies of anything already ingested
+            fresh = fingerprint_filter_new(
+                spark, state_dir, fresh, text_col, id_col
+            )
+        knobs = dict(
+            text_col=text_col, id_col=id_col, n=n, num_perm=num_perm,
+            threshold=threshold, bands=bands, max_bucket=max_bucket,
+            max_hamming=max_hamming, n_chunks=n_chunks,
         )
-    fresh = batch
-    if benchmark is not None:
-        fresh = decontaminate(fresh, benchmark, text_col, id_col)
-    if not bootstrap:
-        # plane 1: exact copies of anything already ingested
-        fresh = fingerprint_filter_new(
-            spark, state_dir, fresh, text_col, id_col
-        )
-    # stage the batch's signature frames ONCE (minhash: the plane's
-    # own two-table layout; simhash: the one signatures table): the
-    # cross-corpus probe, the within-batch pairing, and the
-    # end-of-batch plane append all reuse these parquet-backed
-    # frames — one tokenize→shingle→hash pass per batch instead of
-    # three (per-row projections and per-doc aggregations are
-    # deterministic, so frames computed here and semi-joined down to
-    # each stage's surviving ids equal frames recomputed on the
-    # subset).  Deleted with the other staging once the batch
-    # commits; a crashed run's copy is swept by fsck_state (never
-    # while an ingest is live — the in-progress-marker guard).  The
-    # ngram plane keeps the from-text route: its index appends under
-    # a frozen df-order contract, and its per-batch recompute is one
-    # tokenize+slice pass (no hash fan-out) — not worth entangling
-    # that invariant for.
-    sigs_path = sh_new = mh_new = sim_new = None
-    if text_method == "minhash":
-        sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
-        shingle_frame(fresh, text_col, id_col, n).write.mode(
-            "overwrite"
-        ).parquet(f"{sigs_path}/shingles")
-        sh_new = spark.read.parquet(f"{sigs_path}/shingles")
-        _minhash_signatures(sh_new, num_perm).write.mode(
-            "overwrite"
-        ).parquet(f"{sigs_path}/signatures")
-        mh_new = spark.read.parquet(f"{sigs_path}/signatures")
-    elif text_method == "simhash":
-        sigs_path = f"{state_dir}/tmp/{batch_name}_sigs"
-        simhash(fresh, text_col, id_col, n).select(
-            F.col(id_col).alias("_id"), "simhash"
-        ).write.mode("overwrite").parquet(f"{sigs_path}/signatures")
-        sim_new = spark.read.parquet(f"{sigs_path}/signatures")
-    if not bootstrap:
-        # plane 2: near-dups of the indexed corpus, probed on the
-        # state's text plane (each probe's exactness claim — equal to
-        # the cross-corpus slice of a full self-pairing — is its own
-        # docstring's and test's)
-        if text_method == "minhash":
-            cross = minhash_lsh_pairs_between_frames(
-                spark,
-                plane_path,
-                mh_new,
-                sh_new,
-                bands=bands,
-                threshold=threshold,
-                max_bucket=max_bucket,
+        # sign the batch ONCE: the cross-corpus probe, the within-batch
+        # pairing and the end-of-batch plane append all reuse these
+        # parquet-backed frames — one tokenize→shingle→hash pass per
+        # batch instead of three (frames computed here and semi-joined
+        # down to each stage's surviving ids equal frames recomputed on
+        # the subset).  Deleted with the other staging once the batch
+        # commits; a crashed run's copy is swept by fsck_state (never
+        # while an ingest is live — the in-progress-marker guard).
+        sigs = f"{state_dir}/tmp/{batch_name}_sigs"
+        frames = plane.sign(spark, fresh, sigs, **knobs)
+        if not bootstrap:
+            # plane 2: near-dups of the indexed corpus, probed on the
+            # state's text plane (each probe's exactness claim — equal
+            # to the cross-corpus slice of a full self-pairing — is its
+            # own docstring's and test's)
+            cross = plane.probe(
+                spark, f"{state_dir}{plane.sub}", fresh, frames, **knobs
             )
-        elif text_method == "simhash":
-            cross = simhash_pairs_between_frames(
-                spark,
-                plane_path,
-                sim_new,
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
+            fresh = _drop_ids(
+                fresh, id_col, cross.select("id_new").distinct()
             )
-        else:
-            cross = ngram_jaccard_pairs_between(
-                spark, plane_path, fresh, text_col, id_col,
-                threshold=threshold,
-            )
-        fresh = _drop_ids(fresh, id_col, cross.select("id_new").distinct())
 
-    sketch_path = f"{state_dir}/score_sketches"
-    counts_path = f"{state_dir}/group_counts"
-    if keep_frac is not None or group_cap is not None:
-        state_sk = None
-        if keep_frac is not None:
-            if scores is None:
-                raise ValueError("keep_frac needs a scores frame")
-            # gate against the corpus-so-far's retained distribution;
-            # the bootstrap batch (no state yet) gates against its
-            # own — the scores of its ELIGIBLE rows (semi-joined to
-            # the decontaminated batch, not the whole caller-supplied
-            # frame, which may span the corpus or score-correlated
-            # dropped docs)
-            state_sk = (
-                spark.read.parquet(sketch_path)
-                if _table_exists(spark, sketch_path)
-                else score_sketch(
-                    scores.select(id_col, score_col).join(
-                        fresh.select(id_col), id_col, "left_semi"
-                    ),
-                    score_col=score_col,
+        sketch_path = f"{state_dir}/score_sketches"
+        counts_path = f"{state_dir}/group_counts"
+        if keep_frac is not None or group_cap is not None:
+            state_sk = None
+            if keep_frac is not None:
+                if scores is None:
+                    raise ValueError("keep_frac needs a scores frame")
+                # gate against the corpus-so-far's retained
+                # distribution; the bootstrap batch (no state yet)
+                # gates against its own — the scores of its ELIGIBLE
+                # rows (semi-joined to the decontaminated batch, not
+                # the whole caller-supplied frame, which may span the
+                # corpus or score-correlated dropped docs)
+                state_sk = (
+                    spark.read.parquet(sketch_path)
+                    if _table_exists(spark, sketch_path)
+                    else score_sketch(
+                        scores.select(id_col, score_col).join(
+                            fresh.select(id_col), id_col, "left_semi"
+                        ),
+                        score_col=score_col,
+                    )
                 )
-            )
-        # the shared eligibility stage (KLL-state cutoff,
-        # remaining-slots cap against the persisted admitted counts)
-        fresh = eligibility_filter(
-            fresh,
-            id_col,
-            scores,
-            score_col,
-            keep_frac=keep_frac,
-            unscored=unscored,
-            gate_sketches=state_sk,
-            group_cap=group_cap,
-            used_counts=(
-                spark.read.parquet(counts_path)
-                if group_cap is not None and _table_exists(spark, counts_path)
-                else None
-            ),
-        )
-
-    # materialize the probe-filtered rows ONCE before the within-batch
-    # dedup: dedup_clusters eagerly materializes its edge list (the
-    # within-batch LSH pair DAG) and the snapshot write below executes
-    # the survivors plan — both have the whole probe chain (3 plane
-    # anti-joins + the gate) as their upstream, so without this
-    # staging that chain runs two-plus times per batch.  One
-    # batch-sized parquet write buys single-execution of every probe
-    # (measured: ~30% of the fixed per-micro-batch job floor,
-    # tools/ingest_profile.py); deleted with the other staging below,
-    # swept by fsck_state after a crash.
-    eligible_path = f"{state_dir}/tmp/{batch_name}_eligible"
-    fresh.write.mode("overwrite").parquet(eligible_path)
-    fresh = spark.read.parquet(eligible_path)
-
-    # within-batch dedup: exact FIRST (minhash pairs do NOT subsume
-    # exact copies of texts shorter than the shingle order — zero-
-    # shingle rows never enter the LSH — and a capped hot bucket can
-    # drop identical-text pairs), then near-dup on the exact
-    # survivors.  The published corpus and the fingerprint table stay
-    # one-row-per-text consistent.
-    surv = dedup_corpus(fresh, text_col, id_col, method="fingerprint")
-    if text_method in ("minhash", "simhash"):
-        # within-batch near-dup pairs from the staged signature
-        # frames, semi-joined down to the ids still alive after the
-        # exact pass — identical pairs to recomputing on the subset
-        # (per-row projections / per-doc aggregations; minhash bucket
-        # caps applied after the filter, same as the text path), at
-        # zero re-hash cost
-        alive = surv.select(F.col(id_col).alias("_id"))
-        if text_method == "minhash":
-            pairs_wb = minhash_lsh_pairs_frames(
-                mh_new.join(alive, "_id", "left_semi"),
-                sh_new.join(alive, "_id", "left_semi"),
-                bands=bands,
-                threshold=threshold,
-                max_bucket=max_bucket,
-            )
-        else:
-            # the frame is batch-sized by construction (staged sigs
-            # semi-joined to the exact-pass survivors, all ⊆ the
-            # eligible staging just written above) — pass that bound
-            # as n_docs so the occupancy guard costs a driver-side
-            # footer read instead of a join-backed count() job per
-            # batch (the guard is monotone in n_docs, so an upper
-            # bound can only refuse earlier, never admit more)
-            from hadoop__spark.operators.util import parquet_row_count
-
-            pairs_wb = simhash_pairs_frames(
-                sim_new.join(alive, "_id", "left_semi"),
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
-                n_docs=parquet_row_count(spark, eligible_path),
-            )
-        surv = dedup_corpus(
-            surv,
-            text_col,
-            id_col,
-            pairs=pairs_wb,
-            scores=scores,
-            score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-        )
-    else:
-        surv = dedup_corpus(
-            surv,
-            text_col,
-            id_col,
-            method=text_method,
-            scores=scores,
-            score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-            threshold=threshold,
-            n=n,
-        )
-
-    ivf_path = f"{state_dir}/ivf"
-    text_surv_path = None
-    if embeddings is not None:
-        # materialize the text-plane survivors BEFORE the semantic
-        # stage: semantic_dedup runs several independent actions
-        # (sizing count, centroid-fit sample, assignment, pairing),
-        # each of which would otherwise re-derive the whole lazy
-        # filter chain — including the minhash self-join
-        text_surv_path = f"{state_dir}/tmp/{batch_name}_text_survivors"
-        surv.write.mode("overwrite").parquet(text_surv_path)
-        surv = spark.read.parquet(text_surv_path)
-        emb = embeddings.select(
-            F.col(id_col).alias("_eid"), F.col(embedding_col)
-        ).join(
-            surv.select(F.col(id_col).alias("_eid")), "_eid", "left_semi"
-        ).select(F.col("_eid").alias(id_col), embedding_col)
-        if _table_exists(spark, f"{ivf_path}/centroids"):
-            # plane 3: semantic near-dups of the indexed corpus
-            # (frozen-centroid assignment, partition-pruned probe)
-            cross_e = embedding_pairs_against_index(
-                spark,
-                ivf_path,
-                emb,
-                embedding_col,
+            # the shared eligibility stage (KLL-state cutoff,
+            # remaining-slots cap against the persisted admitted counts)
+            fresh = eligibility_filter(
+                fresh,
                 id_col,
+                scores,
+                score_col,
+                keep_frac=keep_frac,
+                unscored=unscored,
+                gate_sketches=state_sk,
+                group_cap=group_cap,
+                used_counts=(
+                    spark.read.parquet(counts_path)
+                    if group_cap is not None
+                    and _table_exists(spark, counts_path)
+                    else None
+                ),
+            )
+
+        # materialize the probe-filtered rows ONCE before the
+        # within-batch dedup: dedup_clusters eagerly materializes its
+        # edge list (the within-batch pair DAG) and the snapshot write
+        # below executes the survivors plan — both have the whole probe
+        # chain (3 plane anti-joins + the gate) as their upstream, so
+        # without this staging that chain runs two-plus times per
+        # batch.  One batch-sized parquet write buys single-execution
+        # of every probe (measured: ~30% of the fixed per-micro-batch
+        # job floor, tools/ingest_profile.py); deleted with the other
+        # staging below, swept by fsck_state after a crash.
+        eligible_path = f"{state_dir}/tmp/{batch_name}_eligible"
+        fresh.write.mode("overwrite").parquet(eligible_path)
+        fresh = spark.read.parquet(eligible_path)
+
+        # within-batch dedup: exact FIRST (minhash pairs do NOT subsume
+        # exact copies of texts shorter than the shingle order —
+        # zero-shingle rows never enter the LSH — and a capped hot
+        # bucket can drop identical-text pairs), then near-dup on the
+        # exact survivors.  The published corpus and the fingerprint
+        # table stay one-row-per-text consistent.
+        surv = dedup_corpus(fresh, text_col, id_col, method="fingerprint")
+        surv = dedup_corpus(
+            surv,
+            text_col,
+            id_col,
+            pairs=plane.pairs(spark, surv, frames, eligible_path, **knobs),
+            scores=scores,
+            score_col=score_col,
+            checkpoint_dir=checkpoint_dir,
+        )
+
+        ivf_path = f"{state_dir}/ivf"
+        text_surv_path = None
+        if embeddings is not None:
+            # materialize the text-plane survivors BEFORE the semantic
+            # stage: semantic_dedup runs several independent actions
+            # (sizing count, centroid-fit sample, assignment, pairing),
+            # each of which would otherwise re-derive the whole lazy
+            # filter chain — including the minhash self-join
+            text_surv_path = f"{state_dir}/tmp/{batch_name}_text_survivors"
+            surv.write.mode("overwrite").parquet(text_surv_path)
+            surv = spark.read.parquet(text_surv_path)
+            emb = embeddings.select(
+                F.col(id_col).alias("_eid"), F.col(embedding_col)
+            ).join(
+                surv.select(F.col(id_col).alias("_eid")), "_eid",
+                "left_semi",
+            ).select(F.col("_eid").alias(id_col), embedding_col)
+            if _table_exists(spark, f"{ivf_path}/centroids"):
+                # plane 3: semantic near-dups of the indexed corpus
+                # (frozen-centroid assignment, partition-pruned probe)
+                cross_e = embedding_pairs_against_index(
+                    spark,
+                    ivf_path,
+                    emb,
+                    embedding_col,
+                    id_col,
+                    threshold=semantic_threshold,
+                    n_assign=n_assign,
+                    assign=assign,
+                )
+                dup_e = cross_e.select("id_new").distinct()
+                surv = _drop_ids(surv, id_col, dup_e)
+                emb = _drop_ids(emb, id_col, dup_e)
+            # within-batch semantic dedup (fits its own centroids on
+            # the small batch; scores arbitrate keepers as in
+            # dedup_corpus)
+            kept_e = semantic_dedup(
+                emb,
+                vec_col=embedding_col,
+                id_col=id_col,
                 threshold=semantic_threshold,
+                nlist=nlist,
                 n_assign=n_assign,
+                seed=seed,
+                scores=scores,
+                score_col=score_col,
+                checkpoint_dir=checkpoint_dir,
                 assign=assign,
             )
-            dup_e = cross_e.select("id_new").distinct()
-            surv = _drop_ids(surv, id_col, dup_e)
-            emb = _drop_ids(emb, id_col, dup_e)
-        # within-batch semantic dedup (fits its own centroids on the
-        # small batch; scores arbitrate keepers as in dedup_corpus)
-        kept_e = semantic_dedup(
-            emb,
-            vec_col=embedding_col,
+            sem_dropped = emb.select(id_col).join(
+                kept_e.select(F.col(id_col).alias("_k")),
+                F.col(id_col) == F.col("_k"),
+                "left_anti",
+            )
+            surv = _drop_ids(surv, id_col, sem_dropped.select(id_col))
+
+        # materialize the survivors ONCE; everything below (the state
+        # appends + the returned frame) scans this table instead of
+        # re-running the filter chain — and the fingerprint append no
+        # longer reads the table it writes
+        surv.write.mode("overwrite").parquet(batch_path)
+        if text_surv_path is not None:
+            # the text-survivors staging table fed the semantic stage
+            # and the batch_path write above; done with it — without
+            # this, the tmp dir accrues one survivors copy per batch
+            _delete_path(spark, text_surv_path)
+        _delete_path(spark, eligible_path)
+        surv_m = spark.read.parquet(batch_path)
+
+        covered = _write_state_tables(
+            spark,
+            state_dir,
+            surv_m,
+            mode="overwrite" if bootstrap else "append",
+            text_col=text_col,
             id_col=id_col,
-            threshold=semantic_threshold,
-            nlist=nlist,
-            n_assign=n_assign,
-            seed=seed,
+            text_method=text_method,
+            n=n,
+            num_perm=num_perm,
+            threshold=threshold,
             scores=scores,
             score_col=score_col,
-            checkpoint_dir=checkpoint_dir,
-            assign=assign,
+            write_gate=keep_frac is not None,
+            group_cap_col=group_cap[0] if group_cap is not None else None,
+            accounting_col=accounting_col,
+            embeddings=embeddings,
+            embedding_col=embedding_col,
+            nlist=nlist,
+            seed=seed,
+            sig_frames=frames,
         )
-        sem_dropped = emb.select(id_col).join(
-            kept_e.select(F.col(id_col).alias("_k")),
-            F.col(id_col) == F.col("_k"),
-            "left_anti",
-        )
-        surv = _drop_ids(surv, id_col, sem_dropped.select(id_col))
-
-    # materialize the survivors ONCE; everything below (three state
-    # appends + the returned frame) scans this table instead of
-    # re-running the filter chain — and the fingerprint append no
-    # longer reads the table it writes
-    surv.write.mode("overwrite").parquet(batch_path)
-    if text_surv_path is not None:
-        # the text-survivors staging table fed the semantic stage and
-        # the batch_path write above; done with it — without this, the
-        # tmp dir accrues one full survivors copy per batch forever
-        _delete_path(spark, text_surv_path)
-    _delete_path(spark, eligible_path)
-    surv_m = spark.read.parquet(batch_path)
-
-    covered = _write_state_tables(
-        spark,
-        state_dir,
-        surv_m,
-        mode="bootstrap" if bootstrap else "append",
-        text_col=text_col,
-        id_col=id_col,
-        text_method=text_method,
-        n=n,
-        num_perm=num_perm,
-        threshold=threshold,
-        scores=scores,
-        score_col=score_col,
-        write_gate=keep_frac is not None,
-        group_cap_col=group_cap[0] if group_cap is not None else None,
-        accounting_col=accounting_col,
-        embeddings=embeddings,
-        embedding_col=embedding_col,
-        nlist=nlist,
-        seed=seed,
-        sig_frames=(
-            None
-            if sigs_path is None
-            else (
-                {"sh": sh_new, "mh": mh_new}
-                if text_method == "minhash"
-                else {"sim": sim_new}
-            )
-        ),
-    )
-    # LAST step: the batch's commit marker — every state append above
-    # completed, so an on_existing="skip" replay may safely no-op; the
-    # marker content records WHICH planes it covers
-    _write_commit_marker(spark, batch_path, covered)
-    if sigs_path is not None:
-        # the staged signature frames fed the probe, the within-batch
-        # pairing, and the plane append — all durable now
-        _delete_path(spark, sigs_path)
-    return surv_m
+        # LAST step: the batch's commit marker — every state append
+        # above completed, so an on_existing="skip" replay may safely
+        # no-op; the marker content records WHICH planes it covers
+        _write_commit_marker(spark, batch_path, covered)
+        if frames is not None:
+            # the staged signature frames fed the probe, the
+            # within-batch pairing, and the plane append — all durable
+            _delete_path(spark, sigs)
+        return surv_m
 
 
-def _resolve_rebuild_params(
-    pol: dict | None,
-    detected_plane: str | None,
-    text_method: str | None,
-    n: int | None,
-    num_perm: int | None,
-    threshold: float | None,
+def _rebuild_params(
+    spark, state_dir: str, pol: dict | None, text_method: str | None,
+    n: int | None, num_perm: int | None, threshold: float | None,
 ) -> tuple[str, int, int, float]:
-    """Resolve the rebuild's structural parameters: explicit values
-    win but are REFUSED when they contradict the stored policy (a
-    wrong value would rebuild the wrong plane shape and strand the
-    real state stale — the class of mistake retract_documents used to
-    surface only AFTER its destructive rewrite); omitted values
-    default from the policy, then the detected plane layout, then the
-    ingest defaults (legacy pre-policy states)."""
-    resolved = []
+    """Resolve and check the rebuild's structural parameters — shared
+    by :func:`rebuild_state` and, BEFORE its first destructive
+    snapshot rewrite, :func:`retract_documents`, so a wrong value
+    refuses while the state is still intact.  Explicit values win but
+    are REFUSED when they contradict the stored policy (a wrong value
+    would rebuild the wrong plane shape and strand the real state
+    stale); omitted values default from the policy, then the detected
+    plane layout, then the ingest defaults (legacy pre-policy states).
+    Then the stored-plane check runs against the surviving state
+    tables: after a crash the plane tables may be behind, but their
+    layout markers survive — only a state dir with NO recognizable
+    plane skips it."""
+    detected = _detect_plane(spark, state_dir)
     defaults = {
-        "text_method": detected_plane or "minhash",
+        "text_method": detected or "minhash",
         "n": 3,
         "num_perm": 64,
         "threshold": 0.8,
     }
+    resolved = []
     for name, explicit in (
         ("text_method", text_method),
         ("n", n),
@@ -1484,77 +1548,18 @@ def _resolve_rebuild_params(
     ):
         stored = pol.get(name) if pol is not None else None
         if explicit is None:
-            resolved.append(stored if stored is not None else defaults[name])
-        else:
-            if stored is not None:
-                same = (
-                    abs(stored - explicit) <= 1e-12
-                    if isinstance(stored, float)
-                    else stored == explicit
-                )
-                if not same:
-                    raise ValueError(
-                        f"rebuild with {name}={explicit!r} contradicts "
-                        f"the stored ingest policy ({name}={stored!r}) "
-                        "— omit it to use the stored value, or fix the "
-                        "call"
-                    )
-            resolved.append(explicit)
+            explicit = stored if stored is not None else defaults[name]
+        elif stored is not None and not _same(stored, explicit):
+            raise ValueError(
+                f"rebuild with {name}={explicit!r} contradicts the stored "
+                f"ingest policy ({name}={stored!r}) — omit it to use the "
+                "stored value, or fix the call"
+            )
+        resolved.append(explicit)
+    _plane(resolved[0])
+    if detected is not None:
+        _check_stored_plane(spark, state_dir, *resolved)
     return tuple(resolved)
-
-
-def _validate_rebuild_layout(
-    spark, state_dir: str, text_method: str, n: int, num_perm: int,
-    threshold: float,
-) -> None:
-    """The plane-layout and stored-parameter guards shared by
-    :func:`rebuild_state` and — BEFORE its first destructive snapshot
-    rewrite — :func:`retract_documents`: a wrong ``text_method`` /
-    ``num_perm`` / ngram parameters must refuse while the state is
-    still intact, not after the snapshots have been rewritten."""
-    if text_method not in ("minhash", "simhash", "ngram"):
-        raise ValueError(
-            "text_method must be 'minhash', 'simhash' or 'ngram', "
-            f"got {text_method!r}"
-        )
-    # refuse a text_method that contradicts the surviving state layout:
-    # rebuilding the WRONG plane would leave the corpus's real plane
-    # stale, and every later ingest_batch would probe it and silently
-    # admit near-dups of the rebuilt-over batches.  (After a crash the
-    # plane tables may be behind, but their layout markers survive —
-    # only a state dir with NO recognizable plane skips the check.)
-    present = [
-        m
-        for m in _PLANE_LAYOUT
-        if _table_exists(spark, _plane_paths(state_dir, m)[1])
-    ]
-    if present and text_method not in present:
-        raise ValueError(
-            f"state at {state_dir} holds a {present[0]!r} plane but "
-            f"rebuild was asked for {text_method!r} — pass the "
-            "text_method the corpus was ingested with"
-        )
-    mh_marker = _plane_paths(state_dir, "minhash")[1]
-    if text_method == "minhash" and _table_exists(spark, mh_marker):
-        stored_perm = sum(
-            c.startswith("mh_")
-            for c in spark.read.parquet(mh_marker).columns
-        )
-        if stored_perm != num_perm:
-            raise ValueError(
-                f"rebuild with num_perm={num_perm} onto a corpus signed "
-                f"with num_perm={stored_perm} — a silent downgrade would "
-                "make every later append refuse; pass the stored value"
-            )
-    ng_marker = _plane_paths(state_dir, "ngram")[1]
-    if text_method == "ngram" and _table_exists(spark, ng_marker):
-        meta = spark.read.parquet(ng_marker).first()
-        if n != meta.n or abs(threshold - meta.threshold) > 1e-12:
-            raise ValueError(
-                f"rebuild with n={n}, threshold={threshold} onto an "
-                f"index written with n={meta.n}, "
-                f"threshold={meta.threshold} — pass the stored values"
-            )
 
 
 def rebuild_state(
@@ -1640,17 +1645,13 @@ def rebuild_state(
     _delete_path(spark, f"{state_dir}/{_INGEST_MARKER}")
     _fsck_state_locked(spark, state_dir)
     pol = _read_policy(spark, state_dir)
-    text_method, n, num_perm, threshold = _resolve_rebuild_params(
-        pol, _detect_plane(spark, state_dir), text_method, n, num_perm,
-        threshold,
+    text_method, n, num_perm, threshold = _rebuild_params(
+        spark, state_dir, pol, text_method, n, num_perm, threshold
     )
     if group_cap_col is None and pol is not None:
         group_cap_col = pol.get("group_cap_col")
     if accounting_col is None and pol is not None:
         accounting_col = pol.get("accounting_col")
-    _validate_rebuild_layout(
-        spark, state_dir, text_method, n, num_perm, threshold
-    )
     complete = _complete_snapshots(spark, state_dir)
     for b in _list_child_dirs(spark, f"{state_dir}/batches"):
         if b not in complete:
@@ -1665,7 +1666,7 @@ def rebuild_state(
         spark,
         state_dir,
         union,
-        mode="rebuild",
+        mode="overwrite",
         text_col=text_col,
         id_col=id_col,
         text_method=text_method,
@@ -1685,26 +1686,11 @@ def rebuild_state(
     if pol is None:
         # pre-policy legacy state: record the rebuild's resolved
         # parameters so later ingests are policy-checked
-        _write_policy(
-            spark,
-            state_dir,
-            {
-                "text_method": text_method,
-                "n": int(n),
-                "num_perm": (
-                    int(num_perm) if text_method == "minhash" else None
-                ),
-                "threshold": (
-                    float(threshold)
-                    if text_method in ("minhash", "ngram")
-                    else None
-                ),
-                "has_quality_gate": scores is not None,
-                "group_cap_col": group_cap_col,
-                "accounting_col": accounting_col,
-                "has_embeddings": embeddings is not None,
-            },
-        )
+        _write_policy(spark, state_dir, _policy(
+            text_method, n, num_perm, threshold, scores is not None,
+            None if group_cap_col is None else (group_cap_col, None),
+            accounting_col, embeddings is not None,
+        ))
     rebuilt = set()
     if scores is not None:
         rebuilt.add("score_sketches")
@@ -1782,7 +1768,7 @@ def rebuild_sketch_states(
             spark,
             state_dir,
             _read_snapshots_union(spark, state_dir),
-            mode="rebuild",
+            mode="overwrite",
             text_col=text_col,
             id_col=id_col,
             text_method=pol["text_method"],
@@ -1806,6 +1792,35 @@ def rebuild_sketch_states(
             "rebuilt": sorted(covered),
             "still_stale": sorted(_read_stale(spark, state_dir)),
         }
+
+
+def _hits(
+    df: DataFrame, key_col: str, retract: DataFrame, vals: list | None,
+    tag_file: bool = False,
+) -> DataFrame:
+    """THE retraction hit discovery: the rows of ``df`` whose
+    ``key_col`` is in the retract set (``retract``: the frozen ids, one
+    ``_retract`` column; ``vals``: their collected list when bounded).
+    A bounded set is a pushed ``IN`` predicate — parquet row-group
+    min/max stats skip every file whose key range misses the set, so
+    after a key-sorted compaction the scan is ∝ files with hits, not
+    the table; otherwise a broadcast semi-join (still column-pruned).
+
+    ``tag_file`` adds each row's file as ``_file``, ABOVE the pushed
+    filter (``input_file_name`` is nondeterministic, so a predicate
+    above it never reaches the scan's PushedFilters — plan-asserted)
+    and BELOW the join (Spark refuses the expression above a plan with
+    two file sources, and the frozen ids table is one)."""
+    if vals is not None:
+        df = df.where(F.col(key_col).isin(vals))
+    if tag_file:
+        df = df.withColumn("_file", F.input_file_name())
+    if vals is not None:
+        return df
+    return df.join(
+        F.broadcast(retract), F.col(key_col) == F.col("_retract"),
+        "left_semi",
+    )
 
 
 def _stage_kept(
@@ -1845,11 +1860,8 @@ def _rewrite_snapshots_without(
 
     Hit-FILE discovery is ONE scan over every complete snapshot (not
     a probe job per snapshot — at thousands of batches the per-probe
-    driver round-trips would dominate a small takedown): a pushed
-    ``IN`` predicate when the set is bounded (``retract_values``;
-    row-group min/max stats skip clean files without reading rows),
-    else ``input_file_name`` tagged below a broadcast semi-join.
-    ``mergeSchema`` handles snapshots whose optional columns drifted
+    driver round-trips would dominate a small takedown), through
+    :func:`_hits`.  ``mergeSchema`` handles snapshots whose optional columns drifted
     across batches (the same tolerance the rebuild's
     ``unionByName(allowMissingColumns)`` gives).
 
@@ -1863,22 +1875,9 @@ def _rewrite_snapshots_without(
     if not complete:
         return []
     scan = spark.read.option("mergeSchema", "true").parquet(*complete)
-    if retract_values is not None:
-        hits = scan.where(F.col(id_col).isin(retract_values)).select(
-            F.input_file_name().alias("_file")
-        )
-    else:
-        hits = (
-            scan.withColumn("_file", F.input_file_name())
-            .join(
-                F.broadcast(retract),
-                F.col(id_col) == F.col("_retract"),
-                "left_semi",
-            )
-            .select("_file")
-        )
+    hits = _hits(scan, id_col, retract, retract_values, tag_file=True)
     by_snap: dict[str, list[str]] = {}
-    for r in hits.distinct().collect():
+    for r in hits.select("_file").distinct().collect():
         # .../batches/{name}/part-….parquet → {name}
         name = r._file.rsplit("/batches/", 1)[1].split("/", 1)[0]
         by_snap.setdefault(name, []).append(r._file)
@@ -2018,17 +2017,10 @@ def retract_documents(
                 "rewrite; a post-rewrite failure would leave retracted "
                 "documents probe-visible in the state tables)"
             )
-        rb_method, rb_n, rb_perm, rb_thresh = _resolve_rebuild_params(
-            pol,
-            _detect_plane(spark, state_dir),
-            rebuild_kwargs.get("text_method"),
-            rebuild_kwargs.get("n"),
-            rebuild_kwargs.get("num_perm"),
-            rebuild_kwargs.get("threshold"),
-        )
-        _validate_rebuild_layout(
-            spark, state_dir, rb_method, rb_n, rb_perm, rb_thresh
-        )
+        _rebuild_params(spark, state_dir, pol, *(
+            rebuild_kwargs.get(k)
+            for k in ("text_method", "n", "num_perm", "threshold")
+        ))
     else:
         # the fast path takes everything from the stored policy; the
         # only keywords it accepts are the in-line sketch repair's
@@ -2143,16 +2135,7 @@ def _retract_fast(
     if cap_col is not None and _table_exists(
         spark, f"{state_dir}/group_counts"
     ):
-        union = _union(spark, complete)
-        if vals is not None:
-            # pushed IN over the snapshots' id column: row-group stats
-            # skip clean files, so the removed-rows scan is ∝ files
-            # holding a hit, not the corpus
-            removed = union.where(F.col(id_col).isin(vals))
-        else:
-            removed = union.join(
-                retract, F.col(id_col) == F.col("_retract"), "left_semi"
-            )
+        removed = _hits(_union(spark, complete), id_col, retract, vals)
         neg = removed.groupBy(cap_col).agg(
             (-F.count("*")).cast("bigint").alias("n_admitted")
         )
@@ -2165,11 +2148,7 @@ def _retract_fast(
     # files containing a hit are rewritten).  The ngram plane's
     # doc_freq stays FROZEN — stale df only lengthens prefixes
     # (recall-safe; the ngram_append_index argument)
-    plane = {
-        "minhash": ["shingles", "signatures"],
-        "simhash": ["simhash/signatures"],
-        "ngram": ["ngram/shingle_sets", "ngram/prefix"],
-    }[pol["text_method"]]
+    plane = _PLANES[pol["text_method"]].tables
     for rel, key in [("fingerprints", "keep_id")] + [(r, "_id") for r in plane]:
         found = _delete_keys_file_local(
             spark, f"{state_dir}/{rel}", key, retract, retract_values=vals
@@ -2224,38 +2203,18 @@ def _delete_keys_file_local(
     not the table (after :func:`compact_state`'s probe-key sort, hits
     cluster into few files).
 
-    ``retract_values`` (supplied when the retracted set is small —
-    the common takedown) turns hit-file DISCOVERY into a pushed
-    ``IN`` predicate: parquet min/max row-group stats skip every file
-    whose key range misses the set, so after a key-sorted compaction
-    the discovery scan itself is ∝ files-with-hits, not the table.
-    Without it, discovery is a key-column-only scan plus a broadcast
-    semi-join (still column-pruned; the rewrite is file-local either
-    way).  The journal adds the replacement files before it deletes
-    the hit files, so a concurrent reader sees duplicate rows at
-    worst (the probes tolerate them: fingerprint/anti-join and
-    pair-candidate reads are set-semantics), never a missing kept
-    row."""
+    Hit-file discovery is :func:`_hits` (a pushed ``IN`` when
+    ``retract_values``, the bounded set, is given).  The journal adds
+    the replacement files before it deletes the hit files, so a
+    concurrent reader sees duplicate rows at worst (the probes
+    tolerate them: fingerprint/anti-join and pair-candidate reads are
+    set-semantics), never a missing kept row."""
     if not _table_exists(spark, table_path):
         return None
-    df = spark.read.parquet(table_path)
-    # the key filter goes BEFORE the input_file_name projection:
-    # input_file_name is nondeterministic, so a predicate above it
-    # can never be pushed into the scan — filtered first, the IN
-    # predicate lands in PushedFilters (plan-asserted)
-    if retract_values is not None:
-        hit_rows = df.where(F.col(key_col).isin(retract_values)).withColumn(
-            "_file", F.input_file_name()
-        )
-    else:
-        # input_file_name is tagged BELOW the join: Spark refuses the
-        # expression above a plan with two file sources, and the
-        # frozen retract-ids staging table IS a file source
-        hit_rows = df.withColumn("_file", F.input_file_name()).join(
-            F.broadcast(retract),
-            F.col(key_col) == F.col("_retract"),
-            "left_semi",
-        )
+    hit_rows = _hits(
+        spark.read.parquet(table_path), key_col, retract, retract_values,
+        tag_file=True,
+    )
     hit_files = [
         r._file for r in hit_rows.select("_file").distinct().collect()
     ]
@@ -2285,17 +2244,10 @@ def _retract_ivf_partitions(
     tables)."""
     rel = "ivf/assigned"
     assigned = spark.read.parquet(f"{state_dir}/{rel}")
-    if retract_values is not None:
-        aff_rows = assigned.where(F.col(id_col).isin(retract_values))
-    else:
-        aff_rows = assigned.join(
-            F.broadcast(retract),
-            F.col(id_col) == F.col("_retract"),
-            "left_semi",
-        )
     affected = [
         r.centroid_id
-        for r in aff_rows.select("centroid_id").distinct().collect()
+        for r in _hits(assigned, id_col, retract, retract_values)
+        .select("centroid_id").distinct().collect()
     ]
     if not affected:
         return []
@@ -2905,14 +2857,7 @@ def maintain_state(
         )
         refit_report = None
         if refit == "advice":
-            skew = _ivf_skew(spark, state_dir)
-            if (
-                skew is not None
-                and skew["buckets"] > 1
-                and skew["skew"] > (
-                    _REFIT_SKEW if refit_skew is None else refit_skew
-                )
-            ):
+            if _refit_due(_ivf_skew(spark, state_dir), refit_skew):
                 refit_report = refit_ivf_index(spark, state_dir, seed=seed)
         compact = _compact_state(
             spark, state_dir, target_file_bytes,
@@ -2972,23 +2917,13 @@ def fsck_state(spark, state_dir: str, blocking: bool = True) -> dict:
     ``orphans`` — or ``{"skipped": "lock held"}`` under
     ``blocking=False``.
     """
-    from hadoop__spark.operators.util import create_exclusive
-
-    lock = f"{state_dir}/{_MAINT_LOCK}"
-    if not create_exclusive(spark, lock):
-        if not blocking:
-            return {"skipped": "lock held"}
-        raise RuntimeError(
-            f"maintenance lock {lock} is held — a live compact/"
-            "retract/refit may be mid-commit, and fsck racing it could "
-            "sweep its stage before the commit (or the lock is stale "
-            "from a hard crash; delete the file after confirming "
-            "nothing runs)"
-        )
     try:
-        return _fsck_state_locked(spark, state_dir)
-    finally:
-        _delete_path(spark, lock)
+        with _advisory_flag(spark, state_dir, _MAINT_LOCK, None):
+            return _fsck_state_locked(spark, state_dir)
+    except _Held:
+        if blocking:
+            raise
+        return {"skipped": "lock held"}
 
 
 def _pending(spark, state_dir: str) -> tuple[list, list, list]:
@@ -3050,6 +2985,17 @@ def _fsck_state_locked(spark, state_dir: str) -> dict:
 # which state_summary recommends — and maintain_state(refit="advice")
 # runs — an IVF centroid re-fit
 _REFIT_SKEW = 8.0
+
+
+def _refit_due(skew: dict | None, refit_skew: float | None) -> bool:
+    """Whether a :func:`_ivf_skew` measurement calls for a centroid
+    re-fit: more than one bucket, and a max/mean ratio above
+    ``refit_skew`` (None = ``_REFIT_SKEW``)."""
+    return (
+        skew is not None
+        and skew["buckets"] > 1
+        and skew["skew"] > (_REFIT_SKEW if refit_skew is None else refit_skew)
+    )
 
 
 def _ivf_skew(
@@ -3281,13 +3227,7 @@ def state_summary(
         # repair (maintain_state(refit="advice") runs it on this
         # signal).
         skew = _ivf_skew(spark, state_dir, file_list=ivf_files)
-        refit_rec = (
-            skew is not None
-            and skew["buckets"] > 1
-            and skew["skew"] > (
-                _REFIT_SKEW if refit_skew is None else refit_skew
-            )
-        )
+        refit_rec = _refit_due(skew, refit_skew)
     advice = {
         "snapshot_count": n_committed,
         "table_files": table_files,

@@ -438,6 +438,54 @@ def test_policy_drift_refused_and_opt_out(spark, tmp_path):
     assert state_summary(spark, state)["policy"]["group_cap_k"] == 7
 
 
+def _tree_bytes(path):
+    """{relpath: content} of every file under ``path``."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize(
+    "method, good, bad",
+    [("minhash", {"num_perm": 64}, {"num_perm": 32}),
+     ("ngram", {"n": 3}, {"n": 4})],
+)
+def test_plane_mismatch_refused_before_policy_write(
+    spark, tmp_path, method, good, bad
+):
+    """A call whose parameters contradict the stored text plane is
+    refused before any policy adoption or rewrite: with
+    allow_policy_change=True the stored policy stays byte-identical,
+    and on a legacy state (no policy table) none is written — so the
+    correct call that follows is not refused as policy drift."""
+    state = str(tmp_path / "state")
+    policy = f"{state}/policy"
+    ingest_batch(
+        spark, state, _docs(spark, range(1, 9)), "b1", text_method=method,
+        **good,
+    )
+    b2 = _docs(spark, range(9, 13))
+    before = _tree_bytes(policy)
+    with pytest.raises(ValueError, match="stored"):
+        ingest_batch(
+            spark, state, b2, "b2", text_method=method,
+            allow_policy_change=True, **bad,
+        )
+    assert _tree_bytes(policy) == before
+    shutil.rmtree(policy)
+    with pytest.raises(ValueError, match="stored"):
+        ingest_batch(spark, state, b2, "b2", text_method=method, **bad)
+    assert not os.path.exists(policy)
+    got = ingest_batch(spark, state, b2, "b2", text_method=method, **good)
+    assert {r.doc_id for r in got.collect()} == set(range(9, 13))
+    (name, value), = good.items()
+    assert state_summary(spark, state)["policy"][name] == value
+
+
 def test_partial_rebuild_coverage_gates_skip_replay(spark, tmp_path,
                                                     monkeypatch):
     """A rebuild that omitted an input re-marks snapshots WITHOUT

@@ -33,8 +33,8 @@ from pyspark.sql import SparkSession  # noqa: E402
 import hadoop__spark.operators.dedup as dd  # noqa: E402
 import hadoop__spark.operators.ingest as ing  # noqa: E402
 
-# every Spark-action-bearing phase of _ingest_batch_inner /
-# _write_state_tables, by the name ingest.py binds it to
+# every Spark-action-bearing phase of ingest_batch (its plane steps
+# included) and _write_state_tables, by the name ingest.py binds it to
 PHASES = [
     "decontaminate",
     "fingerprint_filter_new",
