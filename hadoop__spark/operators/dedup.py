@@ -29,6 +29,7 @@ from functools import reduce
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from hadoop__spark.operators.similarity import _default_nlist, _dot, _norm
 from hadoop__spark.operators.text import (
     exact_key,
     fingerprint_expr,
@@ -1390,8 +1391,6 @@ def embedding_dedup_pairs(
     the quadratic stage what the linear stage can carry; measured 2.3×
     on the pair stage at sf0.1).
     """
-    from hadoop__spark.operators.similarity import _dot, _norm
-
     e = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     if max_rows is not None:
         n = e.count()
@@ -1631,8 +1630,6 @@ def embedding_dedup_pairs_bucketed(
     """
     from hadoop__spark.operators.similarity import ivf_fit_centroids
 
-    if assign not in ("jvm", "arrow"):
-        raise ValueError(f"assign must be 'jvm' or 'arrow', got {assign!r}")
     cents = ivf_fit_centroids(df, nlist, vec_col, seed, n_rows=n_rows)
     assigned = _normalized_assignment(
         df, cents, vec_col, id_col, n_assign, assign
@@ -1656,8 +1653,6 @@ def _normalized_assignment(
     frame the bucket-local pair search consumes.  ``assign="jvm"`` is
     the expression-fold path, ``"arrow"`` the numpy matmul kernel."""
     from hadoop__spark.operators.similarity import (
-        _dot,
-        _norm,
         collect_centroid_array,
         ivf_assign_arrow,
         nearest_centroids,
@@ -1726,8 +1721,6 @@ def _bucket_local_pairs(assigned: DataFrame, threshold: float) -> DataFrame:
     ``(_id, _vn normalized, centroid_id)``: self-join within each
     centroid bucket, exact JVM cosine fold per candidate, threshold,
     dedupe multi-assignment repeats."""
-    from hadoop__spark.operators.similarity import _dot
-
     return (
         assigned.alias("a")
         .join(
@@ -1778,8 +1771,6 @@ ivf_append_index` completes the ingest loop without ever re-pairing
     Exact batch copies of indexed vectors are always found (identical
     vector → identical nearest-centroid set).
     """
-    from hadoop__spark.operators.similarity import _dot, _norm
-
     cents = spark.read.parquet(f"{index_path}/centroids")
     b = _normalized_assignment(
         batch, cents, vec_col, id_col, n_assign, assign
@@ -2067,7 +2058,7 @@ def semantic_dedup(
     if n_rows == 0:
         return df  # nothing to dedup; don't crash the k-means fit
     if nlist is None:
-        nlist = max(16, int(4 * n_rows**0.5))
+        nlist = _default_nlist(n_rows)
     pairs = embedding_dedup_pairs_bucketed(
         df,
         vec_col,

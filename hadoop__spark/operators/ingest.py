@@ -80,6 +80,12 @@ from hadoop__spark.operators.corpus import (
     score_sketch,
 )
 from hadoop__spark.operators.similarity import (
+    _bucket,
+    _bucket_cid,
+    _bucket_ids,
+    _default_nlist,
+    _ivf_columns,
+    _write_buckets,
     ivf_append_index,
     ivf_write_index,
 )
@@ -763,6 +769,18 @@ def _drop_ids(df: DataFrame, id_col: str, bad_ids: DataFrame) -> DataFrame:
     )
 
 
+def _survivor_embeddings(
+    embeddings: DataFrame, surv: DataFrame, id_col: str, embedding_col: str
+) -> DataFrame:
+    """``(id_col, embedding_col)`` of the embeddings whose document is
+    among the survivors ``surv``."""
+    return embeddings.select(
+        F.col(id_col).alias("_eid"), F.col(embedding_col)
+    ).join(
+        surv.select(F.col(id_col).alias("_eid")), "_eid", "left_semi",
+    ).select(F.col("_eid").alias(id_col), embedding_col)
+
+
 def _write_state_tables(
     spark,
     state_dir: str,
@@ -918,13 +936,7 @@ def _write_state_tables(
         ivf_path = f"{state_dir}/ivf"
 
         def _w_embeddings():
-            emb = embeddings.select(
-                F.col(id_col).alias("_eid"), F.col(embedding_col)
-            ).join(
-                surv.select(F.col(id_col).alias("_eid")),
-                "_eid",
-                "left_semi",
-            ).select(F.col("_eid").alias(id_col), embedding_col)
+            emb = _survivor_embeddings(embeddings, surv, id_col, embedding_col)
             if mode == "append" and _table_exists(
                 spark, f"{ivf_path}/centroids"
             ):
@@ -935,7 +947,7 @@ def _write_state_tables(
             else:
                 n_emb = emb.count()
                 if n_emb:
-                    fit_nlist = nlist or max(16, int(4 * n_emb**0.5))
+                    fit_nlist = nlist or _default_nlist(n_emb)
                     ivf_write_index(
                         emb, ivf_path, nlist=fit_nlist,
                         vec_col=embedding_col, id_col=id_col, seed=seed,
@@ -1425,12 +1437,7 @@ def ingest_batch(
             text_surv_path = f"{state_dir}/tmp/{batch_name}_text_survivors"
             surv.write.mode("overwrite").parquet(text_surv_path)
             surv = spark.read.parquet(text_surv_path)
-            emb = embeddings.select(
-                F.col(id_col).alias("_eid"), F.col(embedding_col)
-            ).join(
-                surv.select(F.col(id_col).alias("_eid")), "_eid",
-                "left_semi",
-            ).select(F.col("_eid").alias(id_col), embedding_col)
+            emb = _survivor_embeddings(embeddings, surv, id_col, embedding_col)
             if _table_exists(spark, f"{ivf_path}/centroids"):
                 # plane 3: semantic near-dups of the indexed corpus
                 # (frozen-centroid assignment, partition-pruned probe)
@@ -2234,9 +2241,11 @@ def _retract_ivf_partitions(
 ) -> list:
     """Stage a rewrite of ONLY the IVF ``centroid_id`` partitions that
     hold a retracted vector: their kept rows are written to
-    ``{stage}/ivf/assigned`` in the same layout (one file per bucket),
-    and the returned ops move them in, then remove each affected
-    bucket's old files — or the whole bucket dir when no row survives.
+    ``{stage}/ivf/assigned`` by the one layout writer
+    (:func:`~hadoop__spark.operators.similarity._write_buckets`: one
+    file per bucket, id-sorted), and the returned ops move them in,
+    then remove each affected bucket's old files — or the whole
+    bucket dir when no row survives.
     Untouched buckets keep their files byte-for-byte.  Centroids stay
     frozen — probe exactness needs only internal consistency.  A
     small ``retract_values`` set pushes an IN predicate into the
@@ -2254,20 +2263,12 @@ def _retract_ivf_partitions(
     kept = assigned.where(F.col("centroid_id").isin(affected)).join(
         F.broadcast(retract), F.col(id_col) == F.col("_retract"), "left_anti"
     )
-    (
-        kept.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{state_dir}/{stage}/{rel}")
-    )
-    staged = {
-        _name(d)
-        for d in _list_child_dirs(spark, f"{state_dir}/{stage}/{rel}")
-    }
+    _write_buckets(kept, f"{state_dir}/{stage}/{rel}", "overwrite", [id_col])
+    staged = set(_bucket_ids(spark, f"{state_dir}/{stage}/{rel}"))
     ops = _adopt(spark, state_dir, stage, rel)
     for cid in affected:
-        bucket = f"{rel}/centroid_id={cid}"
-        if _name(bucket) not in staged:
+        bucket = f"{rel}/{_bucket(cid)}"
+        if str(cid) not in staged:
             ops.append(["rm", bucket])
             continue
         ops += [
@@ -2386,9 +2387,10 @@ def _compact_state(
     """:func:`compact_state`'s body.  ``skip_ivf=True`` skips the IVF
     rewrite when a just-finished refit already rewrote the index in
     :func:`_compact_ivf_assigned`'s exact layout — one file per
-    bucket, id-sorted within buckets (``ivf_write_index`` sorts within
-    partitions), so re-compacting it in the same window would double
-    the window's table I/O to produce byte-equivalent row groups."""
+    bucket, id-sorted within buckets (both write through
+    ``similarity._write_buckets``), so re-compacting it in the same
+    window would double the window's table I/O to produce
+    byte-equivalent row groups."""
     from hadoop__spark.sources.io import compact_parquet
 
     with _maintenance_lock(spark, state_dir):
@@ -2422,13 +2424,13 @@ def _compact_ivf_assigned(
     the embedding plane's small-files bound.  Every
     :func:`~hadoop__spark.operators.similarity.ivf_append_index` call
     (one per :func:`ingest_batch` with embeddings) lands new parquet
-    files INSIDE the existing ``centroid_id=…`` bucket directories,
-    so at stream cadence each bucket fragments without bound — the
-    same axis :func:`compact_state` already closes for the flat
-    tables, but a flat rewrite here would destroy the Hive-partition
-    pruning the probes rely on.  Instead the table is rewritten
-    clustered by ``centroid_id`` + ``partitionBy("centroid_id")``
-    (layout identical), sorted within partitions by the scalar id
+    files INSIDE the existing bucket directories, so at stream
+    cadence each bucket fragments without bound — the same axis
+    :func:`compact_state` already closes for the flat tables, but a
+    flat rewrite here would destroy the Hive-partition pruning the
+    probes rely on.  Instead the table is rewritten by the one layout
+    writer, :func:`~hadoop__spark.operators.similarity._write_buckets`
+    (layout identical), sorted within buckets by the scalar id
     columns so retraction's pushed-IN discovery keeps its row-group
     pruning.
 
@@ -2444,52 +2446,33 @@ def _compact_ivf_assigned(
     which commits it; without a ``stage`` the call stages and commits
     its own.  Returns the file count written, or None when no index
     exists."""
-    from pyspark.sql.types import ArrayType
-
     from hadoop__spark.operators.util import parquet_row_count, path_bytes
 
     path = f"{state_dir}/ivf/assigned"
     if not _table_exists(spark, path):
         return None
     df = spark.read.parquet(path)
-    sort_cols = [
-        f.name
-        for f in df.schema.fields
-        if f.name != "centroid_id" and not isinstance(f.dataType, ArrayType)
-    ]
+    sort_cols = _ivf_columns(df.schema)[1]
     # per-bucket split counts from directory byte sizes (driver-side
     # metadata): ceil(bytes/target) files for buckets over the target,
     # 1 for the rest.  Parquet bytes undercount the in-flight row size
     # slightly (encoding), which only errs toward fewer, larger files.
     splits = {}
     split_dirs = {}
-    for b in _list_child_dirs(spark, path):
-        name = _name(b)
-        # only real partition dirs: a hard-crashed append can leave
-        # _temporary (non-numeric → _typed would raise; truncated
-        # footers → parquet_row_count would raise), and the reader
-        # ignores _/.-prefixed dirs anyway.  The null bucket
-        # (__HIVE_DEFAULT_PARTITION__) stays COLD: its rows read back
-        # as NULL centroid_id, which isin() can never select.
-        if not name.startswith("centroid_id="):
-            continue
-        cid = name.split("=", 1)[-1]
+    # only real partition dirs (_bucket_ids): a hard-crashed append
+    # can leave _temporary (non-numeric → _typed would raise;
+    # truncated footers → parquet_row_count would raise), and the
+    # reader ignores _/.-prefixed dirs anyway.  The null bucket
+    # (__HIVE_DEFAULT_PARTITION__) stays COLD: its rows read back as
+    # NULL centroid_id, which isin() can never select.
+    for cid in _bucket_ids(spark, path):
         if cid == "__HIVE_DEFAULT_PARTITION__":
             continue
+        b = f"{path}/{_bucket(cid)}"
         k = max(1, -(-path_bytes(spark, b) // target_file_bytes))
         if k > 1:
             splits[cid] = k
             split_dirs[cid] = b
-    def _cluster(frame):
-        out = frame.repartition(F.col("centroid_id"))
-        if sort_cols:
-            # centroid_id FIRST: the partitioned writer requires task
-            # rows clustered by the partition column and would insert
-            # its own (order-destroying) sort if they weren't —
-            # leading with it satisfies that requirement, so the
-            # secondary id order actually reaches the row groups
-            out = out.sortWithinPartitions("centroid_id", *sort_cols)
-        return out
 
     own = stage is None
     stage = stage or _stage_dir("compact")
@@ -2522,12 +2505,10 @@ def _compact_ivf_assigned(
         # silently drop those rows from the rewrite.  Route them to
         # the cold writer (they are never in `splits`).
         cold_pred = ~F.coalesce(hot_pred, F.lit(False))
-        _cluster(df.filter(cold_pred)).write.mode(
-            "overwrite"
-        ).partitionBy("centroid_id").parquet(tmp)
+        _write_buckets(df.filter(cold_pred), tmp, "overwrite", sort_cols)
         # salt the hot buckets: rows hash-route to one of k
         # sub-shards of their bucket, each shard one task → one file
-        # inside the same centroid_id= directory
+        # inside the same bucket directory
         k_col = F.coalesce(
             *[
                 F.when(
@@ -2540,11 +2521,6 @@ def _compact_ivf_assigned(
         hot = df.filter(hot_pred).withColumn(
             "_shard", F.pmod(F.xxhash64(*sort_cols), k_col)
         )
-        hot = hot.repartition(
-            F.col("centroid_id"), F.col("_shard")
-        ).sortWithinPartitions(
-            "centroid_id", "_shard", *sort_cols
-        ).drop("_shard")
         # the salt spreads a hot bucket across tasks (parallel write);
         # maxRecordsPerFile is the HARD size cap — two shards of one
         # bucket hash-colliding into the same task would otherwise be
@@ -2578,13 +2554,12 @@ def _compact_ivf_assigned(
             rows_per_file = max(
                 1, int(target_file_bytes * total_rows / total_bytes)
             )
-        hot.write.mode("append").partitionBy("centroid_id").option(
-            "maxRecordsPerFile", rows_per_file
-        ).parquet(tmp)
+        _write_buckets(
+            hot, tmp, "append", sort_cols, shard="_shard",
+            max_records=rows_per_file,
+        )
     else:
-        _cluster(df).write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(tmp)
+        _write_buckets(df, tmp, "overwrite", sort_cols)
     n_files = len(_list_files(spark, tmp, suffix=".parquet"))
     if own:
         _commit(
@@ -2632,7 +2607,6 @@ def refit_ivf_index(
     skew crosses the :func:`state_summary` threshold.
     """
     from hadoop__spark.operators.similarity import ivf_write_index
-    from pyspark.sql.types import ArrayType
 
     with _maintenance_lock(spark, state_dir):
         assigned_path = f"{state_dir}/ivf/assigned"
@@ -2641,18 +2615,9 @@ def refit_ivf_index(
                 f"no IVF index at {state_dir}/ivf — nothing to re-fit"
             )
         assigned = spark.read.parquet(assigned_path)
-        vec_col = next(
-            f.name
-            for f in assigned.schema.fields
-            if isinstance(f.dataType, ArrayType)
-        )
-        id_col = next(
-            f.name
-            for f in assigned.schema.fields
-            if f.name not in (vec_col, "centroid_id")
-        )
+        vec_col, (id_col, *_) = _ivf_columns(assigned.schema)
         n = assigned.count()
-        fit_nlist = nlist or max(16, int(4 * n**0.5))
+        fit_nlist = nlist or _default_nlist(n)
         stage = _stage_dir("refit")
         ivf_write_index(
             assigned.select(id_col, vec_col),
@@ -2833,10 +2798,10 @@ def maintain_state(
     ``refit_recommended`` threshold), runs the centroid re-fit inside
     this window — after which the compact step skips the IVF table:
     the refit's own write IS the compacted layout (one file per
-    bucket, id-sorted within buckets — ``ivf_write_index`` mirrors
-    :func:`_compact_ivf_assigned`'s sort), so the window leaves the
-    index exactly as a compact would without paying a second
-    full-table rewrite right after the refit's.  Default
+    bucket, id-sorted within buckets — ``ivf_write_index`` and
+    :func:`_compact_ivf_assigned` share one layout writer), so the
+    window leaves the index exactly as a compact would without paying
+    a second full-table rewrite right after the refit's.  Default
     ``"off"``: a refit is heavier than a coalesce+compact and swaps
     the index layout mid-stream, so it stays opt-in.
 
@@ -3010,9 +2975,9 @@ def _ivf_skew(
 
     Cost is bounded for monitoring pollers: ONE recursive file
     listing (or the caller's already-obtained ``file_list``) grouped
-    by ``centroid_id=`` path component, then parquet-footer row
-    counts — and past ``max_buckets`` buckets a deterministic stride
-    sample is measured instead of every bucket (the refit default
+    by bucket directory, then parquet-footer row counts — and past
+    ``max_buckets`` buckets a deterministic stride sample is
+    measured instead of every bucket (the refit default
     ``nlist = 4√N`` reaches thousands of buckets at corpus scale, and
     per-bucket listing walks there made every streaming-loop advice
     check pay thousands of driver FS calls).  A sampled measurement
@@ -3035,16 +3000,15 @@ def _ivf_skew(
     if not _table_exists(spark, path):
         return None
     # hidden-segment filter even on a caller-provided list: a crashed
-    # append's _temporary attempt dirs replicate the centroid_id=
+    # append's _temporary attempt dirs replicate the bucket
     # partition structure, so their truncated in-flight files would
     # otherwise group as real buckets (and fail the footer read)
     files = visible_parquet_files(spark, path, files=file_list)
     by_bucket: dict[str, list[str]] = {}
     for f in files:
-        for part in f.split("/"):
-            if part.startswith("centroid_id="):
-                by_bucket.setdefault(part, []).append(f)
-                break
+        cid = _bucket_cid(f.rsplit("/", 1)[0])
+        if cid is not None:
+            by_bucket.setdefault(cid, []).append(f)
     if not by_bucket:
         return None
     n_buckets = len(by_bucket)
@@ -3052,7 +3016,7 @@ def _ivf_skew(
     if is_local_fs(spark, path):
         import pyarrow.parquet as pq
 
-        # LEXICAL sort ("centroid_id=10" < "=2"): deterministic, and
+        # LEXICAL sort ("10" < "2"): deterministic, and
         # since k-means ids carry no relation to bucket occupancy the
         # stride sample stays unbiased for a distribution property
         # like skew — numeric order would buy nothing here
@@ -3215,7 +3179,7 @@ def state_summary(
         # the IVF floor is one file per bucket directory (the pruning
         # layout compaction preserves), so its trigger is fragmentation
         # ABOVE that floor, not an absolute count
-        buckets = _list_child_dirs(spark, f"{state_dir}/ivf/assigned")
+        buckets = _bucket_ids(spark, f"{state_dir}/ivf/assigned")
         compact_rec = compact_rec or table_files["ivf/assigned"] > max(
             compact_after, 2 * len(buckets)
         )

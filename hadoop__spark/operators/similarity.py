@@ -99,6 +99,13 @@ def cosine_topk(
             ).alias("cosine"),
         )
     )
+    return _top_k(sims, k)
+
+
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(query_id, neighbor_id, cosine)`` rows per
+    query, ranked ``cosine desc, neighbor_id asc`` — the one ranking
+    every top-k entry point ends in."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -297,7 +304,14 @@ def ivf_assign(
     former crossJoin+window argmin (same fold-order cosine, same
     ``sim desc, cid asc`` tie-break), pinned by the dd07/ann02/ann03
     oracles and asserted shuffle-free in tests/test_plan_shapes.py."""
-    cent_arr = collect_centroid_array(centroids)
+    return _assigned(corpus, collect_centroid_array(centroids), vec_col, id_col)
+
+
+def _assigned(
+    corpus: DataFrame, cent_arr: Column, vec_col: str, id_col: str
+) -> DataFrame:
+    """``(id_col, vec_col, centroid_id)``: each vector's nearest
+    centroid of the literal ``cent_arr`` (see :func:`ivf_assign`)."""
     best = F.element_at(
         nearest_centroids(F.col(vec_col), cent_arr, 1, cosine_sim), 1
     )
@@ -399,6 +413,79 @@ def ivf_assign_arrow(
     )
 
 
+def _default_nlist(n: int) -> int:
+    """The self-sized bucket count of an ``n``-vector index: the faiss
+    ``max(16, 4√N)`` rule (assignment costs ``N·nlist`` folds, bucket
+    pairing ``≈N²/nlist``)."""
+    return max(16, int(4 * n**0.5))
+
+
+def _ivf_columns(schema) -> tuple[str | None, list[str]]:
+    """``(vector column, id columns)`` of an assigned IVF table: the
+    vector is its array column, the ids are the other scalar columns
+    (``centroid_id`` aside)."""
+    from pyspark.sql.types import ArrayType
+
+    arrays = [f.name for f in schema.fields if isinstance(f.dataType, ArrayType)]
+    ids = [f.name for f in schema.fields if f.name not in ("centroid_id", *arrays)]
+    return next(iter(arrays), None), ids
+
+
+def _bucket(cid) -> str:
+    """The directory name of centroid ``cid``'s bucket."""
+    return f"centroid_id={cid}"
+
+
+def _bucket_cid(path: str) -> str | None:
+    """The centroid id (as written in the name) of the bucket dir
+    ``path`` — its last component — or None when that is not a
+    ``centroid_id=`` partition dir (e.g. a crashed write's
+    ``_temporary``).  The Hive null bucket's id is
+    ``__HIVE_DEFAULT_PARTITION__``."""
+    key, eq, cid = path.rstrip("/").rsplit("/", 1)[-1].partition("=")
+    return cid if key == "centroid_id" and eq else None
+
+
+def _bucket_ids(spark, base: str) -> list[str]:
+    """The centroid ids of the bucket dirs directly under ``base``, from
+    ONE flat listing (readdir, no recursion, no per-file status)."""
+    from hadoop__spark.operators.util import list_child_dirs
+
+    return [
+        cid
+        for d in list_child_dirs(spark, base)
+        if (cid := _bucket_cid(d)) is not None
+    ]
+
+
+def _write_buckets(
+    frame: DataFrame,
+    path: str,
+    mode: str,
+    id_cols: list[str],
+    shard: str | None = None,
+    max_records: int | None = None,
+) -> None:
+    """The one writer of the IVF bucket layout: rows clustered by
+    ``centroid_id`` (and the optional ``shard`` column, which splits a
+    bucket over several tasks and is dropped before the write), sorted
+    within each task by ``id_cols``, written ``partitionBy("centroid_id")``
+    — one Hive-style directory per bucket, normally one file per bucket
+    and task, capped at ``max_records`` rows a file when given.
+
+    ``centroid_id`` leads the sort: the partitioned writer requires
+    task rows clustered by the partition column and would insert its
+    own (order-destroying) sort if they were not, so leading with it
+    makes the id order reach the row groups at zero extra cost —
+    retraction's pushed-IN discovery prunes row groups by it."""
+    keys = ["centroid_id", *([shard] if shard else [])]
+    out = frame.repartition(*keys).sortWithinPartitions(*keys, *id_cols)
+    writer = (out.drop(shard) if shard else out).write.mode(mode)
+    if max_records:
+        writer = writer.option("maxRecordsPerFile", max_records)
+    writer.partitionBy("centroid_id").parquet(path)
+
+
 def ivf_write_index(
     corpus: DataFrame,
     path: str,
@@ -416,27 +503,17 @@ def ivf_write_index(
     directory, and a query touching nprobe buckets reads exactly those
     directories and nothing else.
 
-    Rows are sorted within each bucket by ``id_col`` — the exact layout
-    ``ingest._compact_ivf_assigned`` produces — so a fresh write (or a
+    Rows go through :func:`_write_buckets`, the one layout writer
+    (id-sorted within each bucket), so a fresh write (or a
     maintenance-window re-fit, which calls this) needs NO follow-up
-    compaction for retraction's pushed-IN row-group pruning to work:
-    the partitioned writer demands task rows clustered by the partition
-    column anyway (it inserts its own order-destroying sort when they
-    are not), so leading with ``centroid_id`` makes the id order reach
-    the row groups at zero extra cost.
+    compaction for retraction's pushed-IN row-group pruning to work.
     """
     cents = ivf_fit_centroids(corpus, nlist, vec_col, seed)
     # fit on the raw frame (sampling is partition-layout-sensitive),
     # assign on the spread frame: nlist folds per row on one core
     # otherwise serializes a single-row-group input (no-op at scale)
     assigned = ivf_assign(ensure_parallelism(corpus), cents, vec_col, id_col)
-    (
-        assigned.repartition("centroid_id")
-        .sortWithinPartitions("centroid_id", id_col)
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/assigned")
-    )
+    _write_buckets(assigned, f"{path}/assigned", "overwrite", [id_col])
     cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -482,13 +559,7 @@ def ivf_append_index(
             vec_col, F.col(vec_col).cast(stored_type)
         )
     assigned = ivf_assign(ensure_parallelism(corpus), cents, vec_col, id_col)
-    (
-        assigned.repartition("centroid_id")
-        .sortWithinPartitions("centroid_id", id_col)
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/assigned")
-    )
+    _write_buckets(assigned, f"{path}/assigned", "append", [id_col])
 
 
 def read_probed_buckets(spark, base: str, probe_ids) -> DataFrame:
@@ -513,18 +584,14 @@ def read_probed_buckets(spark, base: str, probe_ids) -> DataFrame:
     contributes zero rows either way.  Falls back to the
     prune-by-filter read when no probed dir is found (preserving the
     full read's schema and its missing-table error)."""
-    from hadoop__spark.operators.util import list_child_dirs
-
     # materialize once: a generator argument would be exhausted by the
     # set-build, leaving the later isin() an always-false isin([])
     probe_ids = list(probe_ids)
     probe_set = {str(c) for c in probe_ids}
     hit = [
-        f"{base}/{name}"
-        for d in list_child_dirs(spark, base)
-        for name in [d.rstrip("/").rsplit("/", 1)[-1]]
-        if name.split("=", 1)[0] == "centroid_id"
-        and name.split("=", 1)[-1] in probe_set
+        f"{base}/{_bucket(cid)}"
+        for cid in _bucket_ids(spark, base)
+        if cid in probe_set
     ]
     if not hit:
         return spark.read.parquet(base).where(
@@ -556,11 +623,24 @@ def ivf_read_topk(
     ∝ probed buckets, not nlist).
     """
     cents = spark.read.parquet(f"{path}/centroids")
-    cent_arr = collect_centroid_array(cents)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+    q_buckets = _probe_buckets(
+        queries, collect_centroid_array(cents), nprobe, vec_col, id_col
     )
-    q_buckets = q.select(
+    probe_ids = sorted(
+        {r.centroid_id for r in q_buckets.select("centroid_id").collect()}
+    )
+    assigned = read_probed_buckets(spark, f"{path}/assigned", probe_ids)
+    return _probe_topk(assigned, q_buckets, k, vec_col, id_col)
+
+
+def _probe_buckets(
+    queries: DataFrame, cent_arr: Column, nprobe: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """``(query_id, _qv, centroid_id)``: one row per query and probed
+    bucket — the ``nprobe`` centroids of ``cent_arr`` nearest the
+    query vector ``_qv``."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    return q.select(
         "query_id",
         "_qv",
         F.explode(
@@ -570,10 +650,14 @@ def ivf_read_topk(
             )
         ).alias("centroid_id"),
     )
-    probe_ids = sorted(
-        {r.centroid_id for r in q_buckets.select("centroid_id").collect()}
-    )
-    assigned = read_probed_buckets(spark, f"{path}/assigned", probe_ids)
+
+
+def _probe_topk(
+    assigned: DataFrame, q_buckets: DataFrame, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Top-``k`` of each query over the vectors of its probed buckets.
+    The small ``q_buckets`` side is broadcast, so the assigned corpus
+    never shuffles before the join."""
     sims = (
         assigned.join(F.broadcast(q_buckets), "centroid_id")
         .where(F.col(id_col) != F.col("query_id"))
@@ -583,19 +667,7 @@ def ivf_read_topk(
             cosine_sim(F.col("_qv"), F.col(vec_col)).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _top_k(sims, k)
 
 
 def ivf_topk(
@@ -621,37 +693,6 @@ def ivf_topk(
     # re-collect the centroid frame for an identical expression (one
     # redundant driver job per call).
     cent_arr = collect_centroid_array(cents)
-    best = F.element_at(
-        nearest_centroids(F.col(vec_col), cent_arr, 1, cosine_sim), 1
-    )
-    assigned = ensure_parallelism(corpus).select(
-        id_col, vec_col, best["cid"].alias("centroid_id")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    q_buckets = q.select(
-        "query_id",
-        "_qv",
-        F.explode(
-            F.transform(
-                nearest_centroids(F.col("_qv"), cent_arr, nprobe, cosine_sim),
-                lambda s: s["cid"],
-            )
-        ).alias("centroid_id"),
-    )
-    sims = (
-        assigned.join(F.broadcast(q_buckets), "centroid_id")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine_sim(F.col("_qv"), F.col(vec_col)).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-    )
+    assigned = _assigned(ensure_parallelism(corpus), cent_arr, vec_col, id_col)
+    q_buckets = _probe_buckets(queries, cent_arr, nprobe, vec_col, id_col)
+    return _probe_topk(assigned, q_buckets, k, vec_col, id_col)

@@ -38,6 +38,18 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+def _default_driver_memory() -> str:
+    """Half the physical memory, capped at 16g, as a Spark size string
+    (``"7936m"``): a local-mode driver holds the executors too, and
+    leaving the other half to the OS and the Python side keeps two
+    test processes on one machine from being OOM-killed."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf here
+        return "16g"
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "hadoop__spark",
     cpus: int | None = None,
@@ -45,8 +57,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for the local core count.  All configs
-    are cluster-safe: on a real deployment only ``master`` changes.
+    Honors ``SPARK_GRAFT_CPUS`` for the local core count and
+    ``SPARK_GRAFT_DRIVER_MEM`` for the driver memory (default
+    :func:`_default_driver_memory`).  All configs are cluster-safe: on
+    a real deployment only ``master`` changes.
     ``extra_conf`` lets tooling (e.g. the profiler) set start-time-only
     configs such as ``spark.ui.retainedJobs``.
     """
@@ -62,7 +76,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

@@ -2175,7 +2175,8 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
     id-sorted within the bucket (ivf_write_index sorts within
     partitions) — which is why maintain_state's compact step may skip
     the IVF table after a refit instead of paying a second full-table
-    rewrite in the same window (judge r13 item 3)."""
+    rewrite in the same window (judge r13 item 3).  A fast retraction
+    and an append keep every file id-sorted too."""
     import pyarrow.parquet as pq
 
     from hadoop__spark.operators.ingest import refit_ivf_index
@@ -2183,6 +2184,31 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
     state = str(tmp_path / "state")
     admitted = _build_state(spark, state, BATCHES)
     assigned = f"{state}/ivf/assigned"
+
+    def files_ids():
+        for root, _, files in os.walk(assigned):
+            for f in files:
+                if f.endswith(".parquet"):
+                    yield root, f, pq.read_table(
+                        os.path.join(root, f), columns=["doc_id"]
+                    ).column("doc_id").to_pylist()
+
+    # the appended one-hot vectors are orthogonal to every bootstrap
+    # centroid, so later batches tie into one bucket next to a
+    # bootstrap row: a multi-file bucket whose larger, higher-id files
+    # the reader returns first.  A fast retraction there rewrites the
+    # bucket — unsorted unless the rewrite sorts.
+    victim = max(admitted)
+    (bucket,) = {root for root, _, ids in files_ids() if victim in ids}
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(bucket))
+    assert n_files > 1, f"{bucket} is not multi-file"
+    retract_documents(
+        spark, state, spark.createDataFrame([(victim,)], "doc_id LONG"),
+        mode="fast",
+    )
+    admitted -= {victim}
+    for root, f, ids in files_ids():
+        assert ids == sorted(ids), f"{root}/{f} not id-sorted"
 
     refit_ivf_index(spark, state)
 
@@ -2211,14 +2237,8 @@ def test_refit_output_is_compact_equivalent(spark, tmp_path):
         spark, state, _docs(spark, new_ids), "b_sorted_append",
         **_full_opts(spark, all_ids + new_ids),
     )
-    for root, _, files in os.walk(assigned):
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            ids = pq.read_table(
-                os.path.join(root, f), columns=["doc_id"]
-            ).column("doc_id").to_pylist()
-            assert ids == sorted(ids), f"{root}/{f} not id-sorted"
+    for root, f, ids in files_ids():
+        assert ids == sorted(ids), f"{root}/{f} not id-sorted"
 
 
 def test_refused_fast_retraction_leaves_no_crash_marker(spark, tmp_path):

@@ -95,14 +95,33 @@ def test_minhash_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_cosine_topk_broadcasts_queries_not_corpus(spark):
+def _ivf_read_topk(embs, q, tmp_path):
+    path = str(tmp_path / "ivf")
+    similarity.ivf_write_index(embs, path, nlist=8)
+    return similarity.ivf_read_topk(embs.sparkSession, path, q, k=5, nprobe=3)
+
+
+@pytest.mark.parametrize(
+    "topk, join",
+    [
+        (lambda embs, q, _: similarity.cosine_topk(embs, q, k=5),
+         "BroadcastNestedLoopJoin"),
+        (lambda embs, q, _: similarity.ivf_topk(embs, q, k=5, nlist=8, nprobe=3),
+         "BroadcastHashJoin"),
+        (_ivf_read_topk, "BroadcastHashJoin"),
+    ],
+    ids=["cosine_topk", "ivf_topk", "ivf_read_topk"],
+)
+def test_cosine_topk_broadcasts_queries_not_corpus(spark, tmp_path, topk, join):
     embs = load_tables(spark, SF_DIR)["embeddings"]
     q = embs.where(F.col("vec_id") < 5)
-    plan = _plan(similarity.cosine_topk(embs, q, k=5))
-    # the only join must be a broadcast NL join (tiny query side);
+    plan = _plan(topk(embs, q, tmp_path))
+    # the only join must be a broadcast join of the tiny query side
+    # (nested-loop brute force, hash on centroid_id for IVF probes);
     # the corpus must not hash-shuffle before it
-    join_part = plan.split("BroadcastNestedLoopJoin")
+    join_part = plan.split(join)
     assert len(join_part) == 2, "expected broadcast of the query side"
+    assert "BroadcastExchange" in join_part[1], plan
     assert "Exchange hashpartitioning" not in join_part[1].split("Window")[0]
 
 

@@ -60,9 +60,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from hadoop__spark.operators import ingest as ing  # noqa: E402
+from hadoop__spark.session import get_spark  # noqa: E402
 
 EMBED = os.environ.get("REHEARSAL_EMBED", "") == "1"
 EMBED_DIM = 16
@@ -204,19 +205,7 @@ def main() -> None:
     maintain_every = int(sys.argv[3]) if len(sys.argv) > 3 else 0
     workdir = os.environ.get("REHEARSAL_DIR", "/tmp/cadence_rehearsal")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cadence-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("cadence-rehearsal", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     state = f"{workdir}/state"
     shutil.rmtree(state, ignore_errors=True)

@@ -28,10 +28,9 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 import hadoop__spark.operators.dedup as dd  # noqa: E402
 import hadoop__spark.operators.ingest as ing  # noqa: E402
+from hadoop__spark.session import get_spark  # noqa: E402
 
 # every Spark-action-bearing phase of ingest_batch (its plane steps
 # included) and _write_state_tables, by the name ingest.py binds it to
@@ -76,19 +75,10 @@ def main() -> None:
     per_batch = int(sys.argv[2]) if len(sys.argv) > 2 else 25
     workdir = os.environ.get("PROFILE_DIR", "/tmp/ingest_profile")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ingest-profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4777")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        "ingest-profile",
+        cpus=cpus,
+        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4777"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext

@@ -28,10 +28,10 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from hadoop__spark.operators import corpus, dedup, similarity
-from hadoop__spark.session import load_tables
+from hadoop__spark.session import get_spark, load_tables
 
 UI_PORT = 4049
 
@@ -342,18 +342,14 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     workdir = os.environ.get("REHEARSAL_DIR", "/tmp/scale_rehearsal")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.ui.retainedStages", "5000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = get_spark(
+        "scale-rehearsal",
+        cpus=cpus,
+        extra_conf={
+            "spark.ui.enabled": "true",
+            "spark.ui.port": str(UI_PORT),
+            "spark.ui.retainedStages": "5000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     report = {}
