@@ -10,10 +10,11 @@ one py4j call; a catalog lookup is one more.  A small Java class,
 lookups; it is compiled once per JVM with Janino, the compiler
 Catalyst's own code generation uses, so it ships with Spark and
 nothing is built or configured.  :mod:`jbridge` converts the dump
-into lightweight Python nodes, and a recursive walker with proper
-lexical scoping (:mod:`lineage`) emits input/output tables,
-column-level lineage edges and reference-format condition strings
-(:mod:`render`).
+into lightweight Python nodes and decides what each statement is (a
+``Sink`` for every destination, a ``Ddl`` for every DDL or utility
+kind), and a recursive walker with proper lexical scoping
+(:mod:`lineage`) emits input/output tables, column-level lineage
+edges and reference-format condition strings (:mod:`render`).
 """
 
 from hadoop__spark.plans.lineage import (

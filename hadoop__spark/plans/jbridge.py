@@ -14,6 +14,13 @@ call too.  ``PlanDump`` is compiled once per JVM with Janino's
 so it ships with every Spark distribution: there is no jar to build
 and nothing to configure.
 
+The conversion is also the one place that decides what a statement
+is (``_Tree.statement``): every destination — a table, a directory or
+a bare SELECT's ``TOK_TMP_FILE`` — is one ``Sink`` node, every DDL or
+utility command one ``Ddl`` node, and each shape carries its statement
+kind, so the analyzer (:mod:`lineage`) needs no Catalyst class-name
+rule and handles each shape at one site.
+
 Each expression node carries the exact source-text slice from
 Catalyst's ``Origin`` (startIndex / stopIndex into the statement),
 which is what lets the renderer reproduce literals exactly as written
@@ -265,6 +272,28 @@ _DDL_TARGET_CLASSES = {
     "UnresolvedRelation": "multipartIdentifier",
 }
 
+#: DDL statements by class: (statement kind, whether the target table
+#: is an output).
+_DDL_KINDS = {
+    "CreateTable": ("CREATETABLE", True),
+    "CreateTableStatement": ("CREATETABLE", True),
+    "LoadData": ("LOAD", True),
+    "DropTable": ("DROP", False),
+    "TruncateTable": ("TRUNCATE", False),
+}
+
+#: ALTER statements by class-name prefix.
+_ALTER_PREFIXES = (
+    "Alter", "RenameTable", "AddColumns", "ReplaceColumns", "RenameColumn", "DropColumns",
+    "SetTableProperties", "AddPartitions", "DropPartitions", "RenamePartitions",
+)
+
+#: Metadata and utility commands by class-name prefix.
+_UTILITY_PREFIXES = (
+    "Show", "Describe", "Desc", "Explain", "Set", "Refresh",
+    "Cache", "Uncache", "Analyze", "Comment", "Msck", "Repair",
+)
+
 _BINARY_OPS = {
     "EqualTo": "=",
     "EqualNullSafe": "<=>",
@@ -284,14 +313,15 @@ _BINARY_OPS = {
 
 
 def convert_plan(dump: str, sql: str) -> Node:
-    """Detach a parsed plan: pure Python over ``PlanDump.dump``'s node
-    table for ``sql``."""
-    return _Tree(json.loads(dump), sql).plan(0)
+    """Detach a parsed statement as one of the shapes
+    ``_Tree.statement`` decides: pure Python over ``PlanDump.dump``'s
+    node table for ``sql``."""
+    return _Tree(json.loads(dump), sql).statement(0)
 
 
 class _Tree:
-    """One statement's dumped node table; ``plan``/``expr`` convert the
-    node with the given id."""
+    """One statement's dumped node table; ``statement``/``plan``/``expr``
+    convert the node with the given id."""
 
     def __init__(self, nodes: list[dict], sql: str):
         self.nodes = nodes
@@ -313,6 +343,83 @@ class _Tree:
             if key:
                 return ch["f"][key]
         return None
+
+    def statement(self, i: int) -> Node:
+        """Decide what the root statement is.  Every destination is a
+        ``Sink`` (reference TOK_DESTINATION, README.md:211-225): table
+        parts, a directory path or a bare SELECT's ``TOK_TMP_FILE``,
+        the explicit column list, the statement kind and the view
+        flag, with the query as its child.  Every DDL or utility
+        statement is a ``Ddl``: its kind, output table, ALTER tag and
+        input table.  The rest are ``Use``, ``UpdateTable``,
+        ``DeleteFromTable`` and ``MergeIntoTable``, a Hive multi-insert
+        is a ``Union`` of Sinks, and a statement-level WITH wraps one
+        of these.  Every shape carries its statement ``kind``."""
+        n = self.nodes[i]
+        cls, f = n["c"], n["f"]
+        plan = self.plan
+
+        if cls == "UnresolvedWith":
+            return self._with(f, self.statement)
+        if cls == "Union" and all(
+            self.nodes[k]["c"] in ("InsertIntoStatement", "InsertIntoDir") for k in n["k"]
+        ):
+            # `FROM src INSERT … INSERT …`: one Sink per branch, each
+            # with the FROM duplicated into its query
+            return Node("Union", {"kind": "MULTIINSERT"}, [self.statement(k) for k in n["k"]])
+        if cls == "InsertIntoStatement":
+            return _sink(
+                "INSERT", plan(f["table"])["parts"], plan(f["query"]), f["userSpecifiedCols"]
+            )
+        if cls == "InsertIntoDir":  # INSERT OVERWRITE [LOCAL] DIRECTORY '/path'
+            path = f["storage"]["f"]["locationUri"] or "TOK_DIR"
+            return _sink("INSERT", path, plan(f["child"]))
+        if cls in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
+            parts = self.nodes[f["name"]]["f"]["nameParts"]
+            return _sink("CREATETABLE", parts, plan(f["query"]))
+        if cls in ("CreateView", "CreateViewCommand"):
+            # CreateViewCommand is CREATE [OR REPLACE] TEMP VIEW
+            temp = cls == "CreateViewCommand"
+            parts = _table_parts(f["name"]) if temp else self._ddl_target(n)
+            cols = [c["f"]["_1"] for c in f["userSpecifiedColumns"]]
+            query = plan(f["plan" if temp else "query"])
+            return _sink("CREATEVIEW", parts, query, cols, "temp" if temp else "view")
+        if cls in ("UpdateTable", "DeleteFromTable"):
+            # condition is Option[Expression] on UpdateTable but a plain
+            # Expression on DeleteFromTable; the dump gives an id or
+            # null for both.
+            kind = "UPDATE" if cls == "UpdateTable" else "DELETE"
+            return self._dml(cls, kind, [f["table"]], f["condition"], f.get("assignments", []))
+        if cls == "MergeIntoTable":
+            # every action's SET/INSERT assignments in one list;
+            # DeleteAction and the star actions carry none
+            pairs = [
+                p
+                for key in ("matchedActions", "notMatchedActions", "notMatchedBySourceActions")
+                for a in f[key]
+                for p in self.nodes[a]["f"].get("assignments", [])
+            ]
+            tables = [f["targetTable"], f["sourceTable"]]
+            return self._dml(cls, "MERGE", tables, f["mergeCondition"], pairs)
+        if cls == "SetCatalogAndNamespace":
+            return Node("Use", {"kind": "USE", "parts": self._ddl_target(n)})
+        if cls == "CreateTableLikeCommand":
+            # schema copy: the template table is an input, no data moves
+            return _ddl(
+                "CREATETABLE", _table_parts(f["targetTable"]), _table_parts(f["sourceTable"])
+            )
+        if cls in _DDL_KINDS:
+            kind, has_target = _DDL_KINDS[cls]
+            return _ddl(kind, self._ddl_target(n) if has_target else None)
+        if cls.startswith(_ALTER_PREFIXES):
+            return _ddl("ALTER", self._ddl_target(n))
+        if cls.startswith(_UTILITY_PREFIXES):
+            # metadata/utility commands: no lineage, but the statement
+            # kind is recorded instead of a phantom SELECT
+            return _ddl(cls.removesuffix("Command").removesuffix("Statement").upper())
+        # a query (or an unknown statement): a bare SELECT's
+        # pseudo-destination, reference README.md:211-225
+        return _sink("SELECT", "TOK_TMP_FILE", plan(i))
 
     def plan(self, i: int) -> Node:
         n = self.nodes[i]
@@ -384,56 +491,7 @@ class _Tree:
         if cls == "Union":
             return Node("Union", {}, [plan(c) for c in n["k"]])
         if cls == "UnresolvedWith":
-            # WITH ctes (beyond the reference — it predates CTEs): each
-            # (name, SubqueryAlias(query)) pair plus the main query child
-            ctes = [
-                (t["f"]["_1"], plan(self.nodes[t["f"]["_2"]]["f"]["child"]))
-                for t in f["cteRelations"]
-            ]
-            return Node("With", {"ctes": ctes}, [plan(f["child"])])
-        if cls == "InsertIntoStatement":
-            table = plan(f["table"])
-            return Node(
-                "InsertIntoStatement",
-                {
-                    "table_parts": table["parts"],
-                    "overwrite": f["overwrite"],
-                    # lowercase like every other identifier path: a
-                    # consumer joining edges on to_name case-sensitively
-                    # must not see default.sink.C2 beside default.sink.c2
-                    "cols": [c.lower() for c in f["userSpecifiedCols"]],
-                },
-                [plan(f["query"])],
-            )
-        if cls in ("UpdateTable", "DeleteFromTable"):
-            # condition is Option[Expression] on UpdateTable but a plain
-            # Expression on DeleteFromTable; the dump gives an id or null
-            # for both.
-            cond = f["condition"]
-            fields = {"cond": expr(cond) if cond is not None else None}
-            if cls == "UpdateTable":
-                fields["assignments"] = self._assignments(f["assignments"])
-            return Node(cls, fields, [plan(f["table"])])
-        if cls == "MergeIntoTable":
-            # MERGE INTO (beyond the reference): target + source relations,
-            # the ON condition, and per-action SET/INSERT assignments.
-            # DeleteAction and the star actions carry no assignments.
-            actions = [
-                {
-                    "kind": self.nodes[a]["c"],
-                    "assignments": self._assignments(
-                        self.nodes[a]["f"].get("assignments", [])
-                    ),
-                }
-                for key in ("matchedActions", "notMatchedActions",
-                            "notMatchedBySourceActions")
-                for a in f[key]
-            ]
-            return Node(
-                "MergeIntoTable",
-                {"cond": expr(f["mergeCondition"]), "actions": actions},
-                [plan(f["targetTable"]), plan(f["sourceTable"])],
-            )
+            return self._with(f, plan)
         if cls == "ScriptTransformation":
             # Hive TRANSFORM ... USING 'script' (beyond the reference): an
             # opaque row transform — every output column derives from every
@@ -463,70 +521,35 @@ class _Tree:
                 },
                 [plan(f["child"])],
             )
-        if cls == "CreateTableLikeCommand":
-            return Node(
-                "CreateTableLike",
-                {
-                    "table_parts": _table_parts(f["targetTable"]),
-                    "source_parts": _table_parts(f["sourceTable"]),
-                },
-            )
-        if cls == "InsertIntoDir":
-            # INSERT OVERWRITE [LOCAL] DIRECTORY '/path' — the reference's
-            # TOK_DIR destination (README.md:211-225); the path is the sink.
-            return Node(
-                "InsertIntoDir",
-                {"path": f["storage"]["f"]["locationUri"]},
-                [plan(f["child"])],
-            )
-        if cls == "SetCatalogAndNamespace":
-            return Node("Use", {"parts": self._ddl_target(n) or []})
-        if cls in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
-            return Node(
-                "CreateTableAsSelect",
-                {"table_parts": self.nodes[f["name"]]["f"]["nameParts"]},
-                [plan(f["query"])],
-            )
-        if cls == "DropTable":
-            return Node("DropTable", {"table_parts": self._ddl_target(n)})
-        if cls == "TruncateTable":
-            return Node("TruncateTable", {"table_parts": self._ddl_target(n)})
-        if cls == "LoadData":
-            return Node("LoadData", {"table_parts": self._ddl_target(n)})
-        if cls == "RenameTable":
-            return Node(
-                "AlterTable",
-                {"table_parts": self._ddl_target(n), "new_parts": f["newName"]},
-            )
-        if cls.startswith(("Alter", "AddColumns", "ReplaceColumns", "RenameColumn",
-                           "DropColumns", "SetTableProperties", "AddPartitions",
-                           "DropPartitions", "RenamePartitions")):
-            return Node("AlterTable", {"table_parts": self._ddl_target(n)})
-        if cls in ("CreateTable", "CreateTableStatement"):
-            return Node("CreateTable", {"table_parts": self._ddl_target(n)})
-        if cls == "CreateView":
-            return Node(
-                "CreateView",
-                {"table_parts": self._ddl_target(n)},
-                [plan(n["k"][1])],
-            )
-        if cls == "CreateViewCommand":  # CREATE [OR REPLACE] TEMP VIEW
-            return Node(
-                "CreateView",
-                {"table_parts": _table_parts(f["name"]), "temp": True},
-                [plan(f["plan"])],
-            )
-
         # Unknown plan node: keep class name + children so the walker can
         # recurse (robustness over the full Spark SQL surface).
         return Node(cls, {}, [plan(c) for c in n["k"]])
 
-    def _assignments(self, ids: list[int]) -> list[tuple[Node, Node]]:
-        out = []
-        for a in ids:
-            af = self.nodes[a]["f"]
-            out.append((self.expr(af["key"]), self.expr(af["value"])))
-        return out
+    def _with(self, f: dict, child) -> Node:
+        """WITH ctes (beyond the reference — it predates CTEs): each
+        (name, SubqueryAlias(query)) pair plus the main child, converted
+        by ``child``."""
+        ctes = [
+            (t["f"]["_1"], self.plan(self.nodes[t["f"]["_2"]]["f"]["child"]))
+            for t in f["cteRelations"]
+        ]
+        return Node("With", {"ctes": ctes}, [child(f["child"])])
+
+    def _dml(
+        self, cls: str, kind: str, tables: list[int], cond: int | None, pairs: list[int]
+    ) -> Node:
+        """UPDATE / DELETE / MERGE INTO (beyond the reference): the
+        target (and MERGE's source) relation as children, the condition
+        and the ``SET key = value`` assignments."""
+        fields = {
+            "kind": kind,
+            "cond": None if cond is None else self.expr(cond),
+            "assignments": [
+                (self.expr(self.nodes[a]["f"]["key"]), self.expr(self.nodes[a]["f"]["value"]))
+                for a in pairs
+            ],
+        }
+        return Node(cls, fields, [self.plan(t) for t in tables])
 
     def expr(self, i: int) -> Node:
         n = self.nodes[i]
@@ -627,6 +650,34 @@ class _Tree:
         # Unknown expression: generic node; renderer falls back to the
         # source slice, sources = union over children.
         return Node("Opaque", {"cls": cls}, [expr(c) for c in n["k"]], src=src)
+
+
+def _sink(
+    kind: str,
+    dest: list[str] | str,
+    query: Node,
+    cols: list[str] | None = None,
+    view: str | None = None,
+) -> Node:
+    """A destination: table parts (a list), else a directory path or
+    ``TOK_TMP_FILE``; ``cols`` is the explicit column list, lowercased
+    like every other identifier path (a consumer joining edges on
+    ``to_name`` case-sensitively must not see ``sink.C2`` beside
+    ``sink.c2``); ``view`` is ``"temp"`` or ``"view"`` for CREATE
+    VIEW."""
+    cols = [c.lower() for c in cols or []]
+    return Node("Sink", {"kind": kind, "dest": dest, "cols": cols, "view": view}, [query])
+
+
+def _ddl(
+    kind: str, target: list[str] | None = None, source: list[str] | None = None
+) -> Node:
+    """A statement with no query: its output table and its input
+    table, as name parts, when it has them.  An ALTER's output carries
+    the ``ALTER`` tag (reference README.md:259-263)."""
+    return Node(
+        "Ddl", {"kind": kind, "target": target, "source": source, "alter": kind == "ALTER"}
+    )
 
 
 def _table_parts(ti: dict) -> list[str]:

@@ -2,7 +2,12 @@
 product (``LineParser``, reference README.md:100-844), rebuilt over
 Spark's parsed logical plans.
 
-Per statement the analyzer emits:
+The converter (:mod:`jbridge`) decides what each statement is: a
+``Sink`` (a table, a directory or a bare SELECT's ``TOK_TMP_FILE``), a
+``Ddl``, ``Use``, UPDATE / DELETE / MERGE, or a Hive multi-insert's
+``Union`` of Sinks, each carrying its statement kind.  This module
+handles each shape at one site and walks the queries.  Per statement
+the analyzer emits:
 
 * **input tables** — every relation referenced in a FROM
   (README.md:173-192),
@@ -35,7 +40,7 @@ Design differences from the reference (all deliberate):
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from typing import Protocol
 
@@ -128,6 +133,16 @@ class DictMetastore:
 # FROM-clause scope model
 
 
+def _union(out: list[str], *more: Iterable[str]) -> list[str]:
+    """Order-preserving union: append to ``out``, in order, each item
+    of ``more`` it does not hold yet (``out``'s own repeats stay)."""
+    for items in more:
+        for x in items:
+            if x not in out:
+                out.append(x)
+    return out
+
+
 @dataclass
 class OutCol:
     name: str  # '' when the item is an unaliased literal/expression
@@ -165,12 +180,13 @@ class FromCtx:
     )
 
     def all_tables(self) -> list[str]:
-        out: list[str] = []
-        for _, s in self.sources:
-            for t in [s.qname] if isinstance(s, BaseTable) else s.scope.tables:
-                if t not in out:
-                    out.append(t)
-        return out
+        return _union(
+            [],
+            *(
+                [s.qname] if isinstance(s, BaseTable) else s.scope.tables
+                for _, s in self.sources
+            ),
+        )
 
     # -- resolution ---------------------------------------------------------
 
@@ -181,21 +197,16 @@ class FromCtx:
         # source-table prefix, merged with '&' — this is what produces
         # `app.action_video&fact.action_comment.uid` for a column coming
         # through a UNION subquery (reference README.md:596-611).
-        prefixes: list[str] = []
-        expanded: list[str] = []
-        matched = False
-        for c in source.scope.cols:
-            if c.name.lower() == col:
-                matched = True
-                if c.expand:
-                    for s in c.sources:
-                        if s not in expanded:
-                            expanded.append(s)
-                    continue
-                for s in c.sources:
-                    p = s.rsplit(".", 1)[0]
-                    if p not in prefixes:
-                        prefixes.append(p)
+        matched = [c for c in source.scope.cols if c.name.lower() == col]
+        expanded = _union([], *(c.sources for c in matched if c.expand))
+        prefixes = _union(
+            [],
+            *(
+                (s.rsplit(".", 1)[0] for s in c.sources)
+                for c in matched
+                if not c.expand
+            ),
+        )
         if expanded:
             # generator output (LATERAL VIEW): the honest provenance is
             # the generator's own source columns, &-merged like the
@@ -284,6 +295,11 @@ class FromCtx:
         return qualify
 
 
+def _block(scope: Scope) -> FromCtx:
+    """A query block's output as the one FROM source, unaliased."""
+    return FromCtx([(None, SubScope(scope))])
+
+
 # --------------------------------------------------------------------------
 
 
@@ -363,214 +379,121 @@ class LineageAnalyzer:
     # -- per-statement ------------------------------------------------------
 
     def _statement(self, sql: str, res: LineageResult) -> None:
+        """Handle each statement shape the converter decides
+        (``jbridge._Tree.statement``) at one site."""
         node = parse_statement(self.spark, sql)
         conditions: set[str] = set()
         self._ctes = {}
         self._cur_res = res  # for expression-subquery input scanning
-
-        _SINKS = (
-            "InsertIntoStatement", "InsertIntoDir",
-            "UpdateTable", "DeleteFromTable", "MergeIntoTable",
-        )
-        if node.cls == "With" and node.children and (
-            node.children[0].cls in _SINKS
-            or (
-                node.children[0].cls == "Union"
-                and all(
-                    c.cls == "InsertIntoStatement"
-                    for c in node.children[0].children
-                )
-            )
-        ):
-            # WITH wrapping a SINK statement (`WITH w AS (…) INSERT …`
-            # parses as With(InsertIntoStatement); likewise directory
-            # inserts, UPDATE/DELETE/MERGE): hoist — register the CTE
-            # scopes for this statement, then dispatch on the wrapped
-            # statement, or it would fall through to the bare-SELECT
-            # branch and lose its destination.  CTAS/CREATE VIEW put
-            # the With inside their query child, so they never arrive
-            # wrapped.
-            for name, cte_query in node["ctes"]:
-                self._ctes[name.lower()] = self._walk_query(
-                    cte_query, conditions, res
-                )
+        if node.cls == "With":
+            # a statement-level WITH (`WITH w AS (…) INSERT …`, UPDATE,
+            # a multi-insert or a bare SELECT): register the CTE scopes
+            # for this statement, then handle the wrapped statement.
+            # CTAS and CREATE VIEW keep their WITH inside the query.
+            self._register_ctes(node, conditions, res)
             node = node.children[0]
 
         if node.cls == "Use":
-            parts = node["parts"]
-            if parts:
-                self.current_db = parts[-1].lower()
-            res.statements.append("USE")
-        elif node.cls == "Union" and all(
-            c.cls == "InsertIntoStatement" for c in node.children
-        ):
-            # Hive multi-insert `FROM src INSERT ... INSERT ...` parses
-            # as a Union of inserts with the FROM duplicated per branch;
-            # each branch gets its own condition set (cleaner than the
-            # reference's shared statement-wide accumulator)
+            if node["parts"]:
+                self.current_db = node["parts"][-1].lower()
+        elif node.cls == "Union":
+            # Hive multi-insert: each branch gets its own condition set
+            # (cleaner than the reference's shared statement-wide
+            # accumulator), seeded with the statement-level set: a
+            # hoisted WITH's CTE-internal conditions apply to every
+            # branch
             for branch in node.children:
-                # seeded with the statement-level set: a hoisted WITH's
-                # CTE-internal conditions apply to every branch
-                branch_conditions: set[str] = set(conditions)
-                dest = self._fill_parts(branch["table_parts"])
-                res.output_tables.add(dest)
-                scope = self._walk_query(
-                    branch.children[0], branch_conditions, res
-                )
-                self._emit(
-                    dest, scope, branch_conditions, res,
-                    dest_cols=branch.get("cols") or None,
-                )
-            res.statements.append("MULTIINSERT")
-        elif node.cls == "InsertIntoStatement":
-            dest = self._fill_parts(node["table_parts"])
-            res.output_tables.add(dest)
-            scope = self._walk_query(node.children[0], conditions, res)
-            self._emit(
-                dest, scope, conditions, res,
-                dest_cols=node.get("cols") or None,
-            )
-            res.statements.append("INSERT")
-        elif node.cls == "CreateTableAsSelect":
-            dest = self._fill_parts(node["table_parts"])
-            res.output_tables.add(dest)
-            scope = self._walk_query(node.children[0], conditions, res)
-            self._emit(dest, scope, conditions, res)
-            res.statements.append("CREATETABLE")
-        elif node.cls == "CreateView":
-            # views become session-level virtual scopes: later
-            # statements in the same analyzer resolve through the
-            # view's own lineage (beyond the reference's surface)
-            dest = self._fill_parts(node["table_parts"])
-            res.output_tables.add(dest)
-            scope = self._walk_query(node.children[0], conditions, res)
-            self._emit(dest, scope, conditions, res)
-            if node.get("temp"):
-                # temp views are session-global and db-independent:
-                # bare-name key only (the db-qualified key would pin
-                # them to whatever database was current at CREATE time)
-                self._views[node["table_parts"][-1].lower()] = scope
-            else:
-                # persistent views live in a database: qualified key
-                # ONLY — a bare-name key would make a same-named TABLE
-                # after `USE other` resolve to this view's stale lineage
-                self._views[dest] = scope
-            res.statements.append("CREATEVIEW")
-        elif node.cls == "CreateTableLike":
-            # CREATE TABLE t LIKE s: schema copy — target is an output,
-            # the template table an input; no column edges (no data
-            # moves).
-            res.output_tables.add(self._fill_parts(node["table_parts"]))
-            res.input_tables.add(self._fill_parts(node["source_parts"]))
-            res.statements.append("CREATETABLE")
-        elif node.cls == "CreateTable":
-            if node.get("table_parts"):
-                res.output_tables.add(self._fill_parts(node["table_parts"]))
-            res.statements.append("CREATETABLE")
-        elif node.cls == "LoadData":
-            if node.get("table_parts"):
-                res.output_tables.add(self._fill_parts(node["table_parts"]))
-            res.statements.append("LOAD")
-        elif node.cls == "AlterTable":
-            if node.get("table_parts"):
-                # tagged output, reference README.md:259-263
-                res.output_tables.add(
-                    f"{self._fill_parts(node['table_parts'])}\tALTER"
-                )
-            res.statements.append("ALTER")
-        elif node.cls in ("UpdateTable", "DeleteFromTable"):
-            # UPDATE/DELETE (beyond the reference): the table is both
-            # read and modified; UPDATE assignments become self-edges
-            # tagged with the WHERE condition.
-            ctx = self._walk_from(node.children[0], conditions, res)
-            dest = next(iter(ctx.all_tables()), None)
-            if dest is not None:
-                res.output_tables.add(dest)
-            qualify = ctx.make_qualify(self)
-            if node.get("cond") is not None:
-                self._scan_subquery_exprs(node["cond"], res)
-                conditions.add(f"WHERE:{render(node['cond'], qualify)}")
-            for key, value in node.get("assignments") or []:
-                col = (
-                    key["parts"][-1].lower()
-                    if key.cls == "Attr"
-                    else render(key, qualify)
-                )
-                res.col_lines.append(
-                    ColLine(
-                        to_table=dest,
-                        to_name=f"{dest}.{col}" if dest else col,
-                        to_name_parse=col,
-                        from_names=tuple(extract_sources(value, qualify)),
-                        conditions=frozenset(conditions),
-                    )
-                )
-            res.statements.append(
-                "UPDATE" if node.cls == "UpdateTable" else "DELETE"
-            )
-        elif node.cls == "MergeIntoTable":
-            # MERGE INTO (beyond the reference): the target is an
-            # output AND an input (matched rows are read), the source a
-            # plain input; each UPDATE SET / INSERT assignment becomes
-            # a column edge tagged MERGE:<on-condition>.  Star actions
-            # (SET *) carry no parse-time assignments — in/out capture
-            # only.
-            tgt_ctx = self._walk_from(node.children[0], conditions, res)
-            src_ctx = self._walk_from(node.children[1], conditions, res)
-            dest = next(iter(tgt_ctx.all_tables()), "TOK_MERGE_TARGET")
-            res.output_tables.add(dest)
-            ctx = FromCtx(tgt_ctx.sources + src_ctx.sources)
-            qualify = ctx.make_qualify(self)
-            self._scan_subquery_exprs(node["cond"], res)
-            conditions.add(f"MERGE:{render(node['cond'], qualify)}")
-            merged: dict[str, list[str]] = {}
-            for action in node["actions"]:
-                for key, value in action["assignments"]:
-                    col = key["parts"][-1].lower() if key.cls == "Attr" else render(key, qualify)
-                    srcs = merged.setdefault(col, [])
-                    for s in extract_sources(value, qualify):
-                        if s not in srcs:
-                            srcs.append(s)
-            for col, srcs in merged.items():
-                res.col_lines.append(
-                    ColLine(
-                        to_table=dest,
-                        to_name=f"{dest}.{col}",
-                        to_name_parse=col,
-                        from_names=tuple(srcs),
-                        conditions=frozenset(conditions),
-                    )
-                )
-            res.statements.append("MERGE")
-        elif node.cls == "InsertIntoDir":
-            # Directory sink (reference TOK_DIR, README.md:211-225):
-            # the path is the destination; no catalog columns, so sink
-            # alignment keeps the parsed output names.
-            dest = node.get("path") or "TOK_DIR"
-            res.output_tables.add(dest)
-            scope = self._walk_query(node.children[0], conditions, res)
-            self._emit(dest, scope, conditions, res)
-            res.statements.append("INSERT")
-        elif node.cls == "DropTable":
-            res.statements.append("DROP")
-        elif node.cls == "TruncateTable":
-            res.statements.append("TRUNCATE")
-        elif node.cls.startswith(
-            (
-                "Show", "Describe", "Desc", "Explain", "Set", "Refresh",
-                "Cache", "Uncache", "Analyze", "Comment", "Msck", "Repair",
-            )
-        ):
-            # metadata/utility commands: no lineage, but record the
-            # statement kind instead of a phantom SELECT
-            res.statements.append(
-                node.cls.removesuffix("Command").removesuffix("Statement").upper()
-            )
+                self._sink(branch, set(conditions), res)
+        elif node.cls == "Sink":
+            self._sink(node, conditions, res)
+        elif node.cls == "Ddl":
+            if node["target"]:
+                dest = self._fill_parts(node["target"])
+                res.output_tables.add(f"{dest}\tALTER" if node["alter"] else dest)
+            if node["source"]:
+                res.input_tables.add(self._fill_parts(node["source"]))
         else:
-            # bare SELECT: pseudo-destination, reference README.md:211-225
-            scope = self._walk_query(node, conditions, res)
-            self._emit("TOK_TMP_FILE", scope, conditions, res)
-            res.statements.append("SELECT")
+            self._dml(node, conditions, res)
+        res.statements.append(node["kind"])
+
+    def _sink(self, node: Node, conditions: set[str], res: LineageResult) -> None:
+        """One destination's edges.  The sink schema that aligns them
+        positionally (README.md:796-804) is the explicit column list,
+        else a table's catalog columns; a directory and TOK_TMP_FILE
+        have no catalog columns, so their edges keep only the parsed
+        output names.  A view becomes a session-level virtual scope:
+        later statements resolve through its own lineage (beyond the
+        reference's surface)."""
+        table = isinstance(node["dest"], list)
+        dest = self._fill_parts(node["dest"]) if table else node["dest"]
+        if dest != "TOK_TMP_FILE":
+            res.output_tables.add(dest)
+        scope = self._walk_query(node.children[0], conditions, res)
+        cols = scope.cols
+        if scope.branch_cols and len(scope.branch_cols) > 1:
+            cols = self._merge_union(scope.branch_cols)
+        dest_cols = node["cols"] or (self._columns(dest) if table else None)
+        for i, c in enumerate(cols):
+            res.col_lines.append(
+                ColLine(
+                    to_table=dest,
+                    to_name=(
+                        f"{dest}.{dest_cols[i]}"
+                        if dest_cols is not None and i < len(dest_cols)
+                        else None
+                    ),
+                    to_name_parse=c.name,
+                    from_names=tuple(c.sources),
+                    conditions=frozenset(c.colfun | conditions),
+                )
+            )
+        if node["view"] == "temp":
+            # temp views are session-global and db-independent:
+            # bare-name key only (the db-qualified key would pin them
+            # to whatever database was current at CREATE time)
+            self._views[node["dest"][-1].lower()] = scope
+        elif node["view"]:
+            # persistent views live in a database: qualified key ONLY —
+            # a bare-name key would make a same-named TABLE after `USE
+            # other` resolve to this view's stale lineage
+            self._views[dest] = scope
+
+    def _dml(self, node: Node, conditions: set[str], res: LineageResult) -> None:
+        """UPDATE / DELETE / MERGE INTO (beyond the reference): the
+        target is both read and modified, a MERGE source is a plain
+        input.  Each assignment becomes an edge to the target tagged
+        with the statement's WHERE: or MERGE: condition; MERGE folds
+        its actions' assignments per column, and its star actions
+        (SET *) carry none: in/out capture only."""
+        merge = node.cls == "MergeIntoTable"
+        ctxs = [self._walk_from(c, conditions, res) for c in node.children]
+        dest = next(iter(ctxs[0].all_tables()), "TOK_MERGE_TARGET" if merge else None)
+        if dest is not None:
+            res.output_tables.add(dest)
+        qualify = FromCtx([s for ctx in ctxs for s in ctx.sources]).make_qualify(self)
+        if node["cond"] is not None:
+            self._scan_subquery_exprs(node["cond"], res)
+            tag = "MERGE" if merge else "WHERE"
+            conditions.add(f"{tag}:{render(node['cond'], qualify)}")
+        edges: list[tuple[str, list[str]]] = []
+        for key, value in node["assignments"]:
+            col = key["parts"][-1].lower() if key.cls == "Attr" else render(key, qualify)
+            edges.append((col, extract_sources(value, qualify)))
+        if merge:
+            folded: dict[str, list[str]] = {}
+            for col, srcs in edges:
+                _union(folded.setdefault(col, []), srcs)
+            edges = list(folded.items())
+        for col, srcs in edges:
+            res.col_lines.append(
+                ColLine(
+                    to_table=dest,
+                    to_name=f"{dest}.{col}" if dest else col,
+                    to_name_parse=col,
+                    from_names=tuple(srcs),
+                    conditions=frozenset(conditions),
+                )
+            )
 
     # -- query walking ------------------------------------------------------
 
@@ -578,13 +501,8 @@ class LineageAnalyzer:
         self, node: Node, conditions: set[str], res: LineageResult
     ) -> Scope:
         if node.cls == "With":
-            # CTEs resolve lexically; later CTEs see earlier ones.
-            # A CTE reference is NOT an input table — its own inputs are.
             saved = dict(self._ctes)
-            for name, cte_query in node["ctes"]:
-                self._ctes[name.lower()] = self._walk_query(
-                    cte_query, conditions, res
-                )
+            self._register_ctes(node, conditions, res)
             scope = self._walk_query(node.children[0], conditions, res)
             self._ctes = saved
             return scope
@@ -605,14 +523,11 @@ class LineageAnalyzer:
             branches = [
                 self._walk_query(c, conditions, res) for c in leaves
             ]
-            tables: list[str] = []
-            cols: list[OutCol] = []
-            for b in branches:
-                for t in b.tables:
-                    if t not in tables:
-                        tables.append(t)
-                cols.extend(b.cols)
-            return Scope(tables, cols, branch_cols=[b.cols for b in branches])
+            return Scope(
+                _union([], *(b.tables for b in branches)),
+                [c for b in branches for c in b.cols],
+                branch_cols=[b.cols for b in branches],
+            )
 
         if node.cls in ("Project", "Aggregate"):
             ctx = self._walk_from(node.children[0], conditions, res)
@@ -634,14 +549,12 @@ class LineageAnalyzer:
             # both filter the block's output; HAVING gets its own tag
             # (the reference predates HAVING and knew only WHERE:).
             inner = self._walk_query(node.children[0], conditions, res)
-            ctx = FromCtx([(None, SubScope(inner))])
             tag = "HAVING" if node.cls == "Having" else "WHERE"
             # register subquery input tables (`HAVING k IN (SELECT …)`);
             # predicate position, so the returned sources are ignored
             self._scan_subquery_exprs(node["cond"], res)
-            conditions.add(
-                f"{tag}:{render(node['cond'], ctx.make_qualify(self))}"
-            )
+            qualify = _block(inner).make_qualify(self)
+            conditions.add(f"{tag}:{render(node['cond'], qualify)}")
             return inner
 
         if node.cls == "ScriptTransformation":
@@ -649,11 +562,7 @@ class LineageAnalyzer:
             # output column derives from every input column of the
             # child projection, tagged with the script.
             inner = self._walk_query(node.children[0], conditions, res)
-            srcs: list[str] = []
-            for c in inner.cols:
-                for s in c.sources:
-                    if s not in srcs:
-                        srcs.append(s)
+            srcs = _union([], *(c.sources for c in inner.cols))
             tag = {f"COLFUN:transform using '{node['script']}'"}
             cols = [
                 OutCol(name, list(srcs), set(tag))
@@ -664,8 +573,7 @@ class LineageAnalyzer:
         if node.cls == "Sort":
             inner = self._walk_query(node.children[0], conditions, res)
             if self.extended_tags:
-                ctx = FromCtx([(None, SubScope(inner))])
-                qualify = ctx.make_qualify(self)
+                qualify = _block(inner).make_qualify(self)
                 keys = ",".join(render(k, qualify) for k in node["keys"])
                 conditions.add(f"ORDERBY:{keys}")
             return inner
@@ -674,6 +582,14 @@ class LineageAnalyzer:
         # tables with no column list.
         ctx = self._walk_from(node, conditions, res)
         return Scope(ctx.all_tables(), [])
+
+    def _register_ctes(
+        self, node: Node, conditions: set[str], res: LineageResult
+    ) -> None:
+        """CTEs resolve lexically; later CTEs see earlier ones.  A CTE
+        reference is NOT an input table — its own inputs are."""
+        for name, cte_query in node["ctes"]:
+            self._ctes[name.lower()] = self._walk_query(cte_query, conditions, res)
 
     def _walk_from(
         self, node: Node, conditions: set[str], res: LineageResult
@@ -734,8 +650,7 @@ class LineageAnalyzer:
                 conditions.add(f"{node['label']}:{rendered}")
             return ctx
         if node.cls in ("Project", "Aggregate", "Union", "Having", "Sort"):
-            scope = self._walk_query(node, conditions, res)
-            return FromCtx([(None, SubScope(scope))])
+            return _block(self._walk_query(node, conditions, res))
         # unknown plan node: merge children contexts (robustness)
         merged = FromCtx([])
         for c in node.children:
@@ -780,9 +695,7 @@ class LineageAnalyzer:
                     if cols is None:
                         return None
                     names = [c.lower() for c in cols]
-                for n in names:
-                    if n not in out:
-                        out.append(n)
+                _union(out, names)
             return out
 
         lcols, rcols = side(left), side(right)
@@ -827,10 +740,7 @@ class LineageAnalyzer:
                 plan = n.get("plan")
                 if plan is not None:
                     scope = self._walk_query(plan, set(), res)
-                    for c in scope.cols:
-                        for s in c.sources:
-                            if s not in extra:
-                                extra.append(s)
+                    _union(extra, *(c.sources for c in scope.cols))
                 # the walked scope already folded the subquery's OWN
                 # output-column sources; re-pushing fields['plan']
                 # would also surface its internal PREDICATE subqueries
@@ -871,9 +781,7 @@ class LineageAnalyzer:
         # a scalar subquery's output feeds the item: merge its column
         # edges after the direct ones (SELECT (SELECT max(x) FROM t2)
         # AS m FROM t1 emits t2.x → m)
-        for s in subquery_sources:
-            if s not in sources:
-                sources.append(s)
+        _union(sources, subquery_sources)
         rendered = render(expr, qualify)
         colfun: set[str] = set()
         # COLFUN only when the item is a real expression — a bare column
@@ -923,42 +831,6 @@ class LineageAnalyzer:
         return out
 
     # -- edge emission ------------------------------------------------------
-
-    def _emit(
-        self,
-        dest: str,
-        scope: Scope,
-        conditions: set[str],
-        res: LineageResult,
-        dest_cols: list[str] | None = None,
-    ) -> None:
-        cols = scope.cols
-        if scope.branch_cols and len(scope.branch_cols) > 1:
-            cols = self._merge_union(scope.branch_cols)
-        if dest_cols is None:
-            # positional alignment against the physical sink schema
-            # (README.md:796-804); an explicit INSERT column list
-            # overrides the metastore order
-            dest_cols = (
-                self._columns(dest)
-                if dest != "TOK_TMP_FILE"
-                else None
-            )
-        for i, c in enumerate(cols):
-            to_name = (
-                f"{dest}.{dest_cols[i]}"
-                if dest_cols is not None and i < len(dest_cols)
-                else None
-            )
-            res.col_lines.append(
-                ColLine(
-                    to_table=dest,
-                    to_name=to_name,
-                    to_name_parse=c.name,
-                    from_names=tuple(c.sources),
-                    conditions=frozenset(c.colfun | conditions),
-                )
-            )
 
     @staticmethod
     def _merge_union(branch_cols: list[list[OutCol]]) -> list[OutCol]:

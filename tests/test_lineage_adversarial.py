@@ -373,7 +373,16 @@ def test_case_when_predicate_subquery_is_not_a_source(analyzer):
 
 def test_with_wrapped_dir_insert_and_update(analyzer):
     """The WITH hoist covers every sink-statement class Spark wraps:
-    directory inserts and UPDATE (whose IN-subquery probes a CTE)."""
+    directory inserts and UPDATE (whose IN-subquery probes a CTE).  A
+    directory has no catalog columns, so its path is never looked up."""
+    looked_up = []
+    columns = analyzer.metastore.columns
+
+    def recording_columns(name):
+        looked_up.append(name)
+        return columns(name)
+
+    analyzer.metastore.columns = recording_columns
     res = analyzer.analyze(
         "use db;with w as (select a from src) "
         "insert overwrite directory '/tmp/out' select a from w"
@@ -382,6 +391,12 @@ def test_with_wrapped_dir_insert_and_update(analyzer):
     assert res.input_tables == {"db.src"}
     (line,) = res.col_lines
     assert line.from_names == ("db.src.a",)
+    assert line.to_name is None
+    res = analyzer.analyze(
+        "use db;insert overwrite directory '/tmp/x' select a from src"
+    )
+    assert res.output_tables == {"/tmp/x"}
+    assert not [n for n in looked_up if n.startswith("/")], looked_up
 
     res = analyzer.analyze(
         "use db;with w as (select a from src) "

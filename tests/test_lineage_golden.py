@@ -624,6 +624,27 @@ def test_ddl_statement_kinds(spark):
     assert res.output_tables == {"app.t3\tALTER", "app.t5", "app.t6"}
     assert res.input_tables == {"app.t7"}
 
+    # one statement per row: (sql, kind, outputs, inputs, edges)
+    for sql, kind, outputs, inputs, edges in (
+        ("create table t8 (x int)", "CREATETABLE", {"app.t8"}, set(), 0),
+        ("create table t9 like t10", "CREATETABLE", {"app.t9"}, {"app.t10"}, 0),
+        ("alter table t3 add columns (z int)", "ALTER", {"app.t3\tALTER"}, set(), 0),
+        ("alter table t3 drop partition (d='1')", "ALTER", {"app.t3\tALTER"}, set(), 0),
+        ("replace table t11 as select ip from t7", "CREATETABLE", {"app.t11"}, {"app.t7"}, 1),
+        ("cache table t12", "CACHETABLE", set(), set(), 0),
+        ("msck repair table t3", "REPAIRTABLE", set(), set(), 0),
+        ("comment on table t3 is 'x'", "COMMENTONTABLE", set(), set(), 0),
+        (
+            "insert overwrite local directory '/tmp/z' select ip from t7",
+            "INSERT", {"/tmp/z"}, {"app.t7"}, 1,
+        ),
+    ):
+        res = an.analyze(sql)
+        assert res.statements == [kind], sql
+        assert res.output_tables == outputs, sql
+        assert res.input_tables == inputs, sql
+        assert len(res.col_lines) == edges, sql
+
 
 def test_escaped_semicolon_split(spark):
     """Statement splitting honors escaped semicolons (README.md:746)."""
@@ -669,6 +690,26 @@ def test_multi_insert_from_first(spark):
     check_line(lines["b"], "app.src.b", {"WHERE:app.src.b < 5"})
     assert lines["a"].to_table == "app.t1"
     assert lines["b"].to_table == "app.t2"
+
+    # a DIRECTORY branch is a sink like a table branch, bare and under
+    # a WITH; only the table branch aligns with catalog columns
+    ms = DictMetastore({"default.src": ["a", "b"], "default.t3": ["y"]})
+    for sql in (
+        "from src insert overwrite directory '/tmp/x' select a "
+        "insert into t3 select b",
+        "with w as (select a, b from src) from w "
+        "insert overwrite directory '/tmp/x' select a insert into t3 select b",
+    ):
+        res = LineageAnalyzer(spark, ms).analyze(sql)
+        assert res.statements == ["MULTIINSERT"], sql
+        assert res.output_tables == {"/tmp/x", "default.t3"}, sql
+        assert res.input_tables == {"default.src"}, sql
+        assert [
+            (l.from_names, l.to_table, l.to_name) for l in res.col_lines
+        ] == [
+            (("default.src.a",), "/tmp/x", None),
+            (("default.src.b",), "default.t3", "default.t3.y"),
+        ], sql
 
 
 def test_insert_explicit_column_list_alignment(spark):
@@ -779,6 +820,18 @@ def test_create_view_lineage_and_resolution(spark):
     assert any(
         c == "JOIN:app.t.b = app.u.k" for c in select_x[0].conditions
     ), select_x[0].conditions
+
+    # an explicit view column list aligns the sink like INSERT's does,
+    # lowercased, for persistent and temp views alike
+    for sql in (
+        "create view v (P, q) as select a, b from src",
+        "create temp view v (P, q) as select a, b from src",
+    ):
+        res = LineageAnalyzer(spark, DictMetastore({})).analyze(sql)
+        assert res.statements == ["CREATEVIEW"], sql
+        assert [(l.to_name_parse, l.to_name) for l in res.col_lines] == [
+            ("a", "default.v.p"), ("b", "default.v.q"),
+        ], sql
 
 
 def test_format_matches_reference_print_shape(spark):
