@@ -350,8 +350,8 @@ class _Tree:
         parts, a directory path or a bare SELECT's ``TOK_TMP_FILE``,
         the explicit column list, the statement kind and the view
         flag, with the query as its child.  Every DDL or utility
-        statement is a ``Ddl``: its kind, output table, ALTER tag and
-        input table.  The rest are ``Use``, ``UpdateTable``,
+        statement is a ``Ddl``: its kind, output table and input
+        table.  The rest are ``Use``, ``UpdateTable``,
         ``DeleteFromTable`` and ``MergeIntoTable``, a Hive multi-insert
         is a ``Union`` of Sinks, and a statement-level WITH wraps one
         of these.  Every shape carries its statement ``kind``."""
@@ -675,9 +675,7 @@ def _ddl(
     """A statement with no query: its output table and its input
     table, as name parts, when it has them.  An ALTER's output carries
     the ``ALTER`` tag (reference README.md:259-263)."""
-    return Node(
-        "Ddl", {"kind": kind, "target": target, "source": source, "alter": kind == "ALTER"}
-    )
+    return Node("Ddl", {"kind": kind, "target": target, "source": source})
 
 
 def _table_parts(ti: dict) -> list[str]:

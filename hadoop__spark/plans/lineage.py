@@ -385,11 +385,13 @@ class LineageAnalyzer:
         conditions: set[str] = set()
         self._ctes = {}
         self._cur_res = res  # for expression-subquery input scanning
-        if node.cls == "With":
+        while node.cls == "With":
             # a statement-level WITH (`WITH w AS (…) INSERT …`, UPDATE,
-            # a multi-insert or a bare SELECT): register the CTE scopes
-            # for this statement, then handle the wrapped statement.
-            # CTAS and CREATE VIEW keep their WITH inside the query.
+            # a multi-insert or a bare SELECT), possibly nested
+            # (`WITH a AS (…) (WITH b AS (…) SELECT …)`): register the
+            # CTE scopes for this statement, then handle the wrapped
+            # statement.  CTAS and CREATE VIEW keep their WITH inside
+            # the query.
             self._register_ctes(node, conditions, res)
             node = node.children[0]
 
@@ -409,11 +411,13 @@ class LineageAnalyzer:
         elif node.cls == "Ddl":
             if node["target"]:
                 dest = self._fill_parts(node["target"])
-                res.output_tables.add(f"{dest}\tALTER" if node["alter"] else dest)
+                res.output_tables.add(f"{dest}\tALTER" if node["kind"] == "ALTER" else dest)
             if node["source"]:
                 res.input_tables.add(self._fill_parts(node["source"]))
-        else:
+        elif node.cls in ("UpdateTable", "DeleteFromTable", "MergeIntoTable"):
             self._dml(node, conditions, res)
+        else:
+            raise ValueError(f"unhandled statement shape {node.cls!r}: {sql!r}")
         res.statements.append(node["kind"])
 
     def _sink(self, node: Node, conditions: set[str], res: LineageResult) -> None:

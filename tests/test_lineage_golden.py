@@ -673,6 +673,23 @@ def test_cte_lineage(spark):
         {"WHERE:default.nation.n_nationkey > 3"},
     )
 
+    # a parenthesised query with its own WITH parses as a WITH nested
+    # directly in the statement-level WITH
+    res = LineageAnalyzer(spark, DictMetastore({})).analyze(
+        "with a as (select n_name from nation where n_nationkey > 3) "
+        "(with b as (select n_name from a) select n_name from b)"
+    )
+    assert res.statements == ["SELECT"]
+    assert res.input_tables == {"default.nation"}
+    assert res.output_tables == set()
+    lines = lines_by_name(res)
+    assert lines["n_name"].to_table == "TOK_TMP_FILE"
+    check_line(
+        lines["n_name"],
+        "default.nation.n_name",
+        {"WHERE:default.nation.n_nationkey > 3"},
+    )
+
 
 def test_multi_insert_from_first(spark):
     """Hive multi-insert (Q2 extension): one FROM, several INSERT
