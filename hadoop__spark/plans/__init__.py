@@ -5,7 +5,8 @@ raw Hive ANTLR AST with explicit clause stacks.  This package gets the
 same results from Spark's parser instead: each statement goes through
 ``sessionState().sqlParser().parsePlan`` (driver-side only, nothing
 executes), and parse plus the parsed tree cross the JVM boundary in
-one py4j call; a catalog lookup is one more.  A small Java class,
+one py4j call; a catalog lookup is one more, which reads the session
+catalog's stored schemas rather than analyzing the name.  A small Java class,
 ``PlanDump``, parses and serializes the tree to JSON and answers the
 lookups; it is compiled once per JVM with Janino, the compiler
 Catalyst's own code generation uses, so it ships with Spark and

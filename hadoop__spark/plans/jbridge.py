@@ -7,12 +7,15 @@ session's own SQL parser and serializes the whole parsed tree to JSON,
 so a statement costs one py4j call, parse included; everything
 downstream (conversion, resolution, rendering, lineage) is pure
 Python.  ``columns`` runs the metastore's lookup rule (the qualified
-name, then the bare name: ``tableExists``, then the resolved schema of
-``table``) and returns the column names as JSON, so a lookup costs one
-call too.  ``PlanDump`` is compiled once per JVM with Janino's
-``SimpleCompiler``, the compiler Catalyst's own code generation uses,
-so it ships with every Spark distribution: there is no jar to build
-and nothing to configure.
+name, then the bare name) against the session catalog and returns the
+column names as JSON, so a lookup costs one call too.  It reads state
+the catalog already holds: a temp view's stored schema or a table's
+metadata, with no parse and no analysis; only a view with no analyzed
+plan (a permanent view, a temp view defined by SQL text) is analyzed.
+``PlanDump`` is compiled once per JVM with Janino's ``SimpleCompiler``,
+the compiler Catalyst's own code generation uses, so it ships with
+every Spark distribution: there is no jar to build and nothing to
+configure.
 
 The conversion is also the one place that decides what a statement
 is (``_Tree.statement``): every destination — a table, a directory or
@@ -78,10 +81,16 @@ import java.util.ArrayList;
 import java.util.IdentityHashMap;
 import org.apache.spark.sql.AnalysisException;
 import org.apache.spark.sql.SparkSession;
+import org.apache.spark.sql.catalyst.TableIdentifier;
+import org.apache.spark.sql.catalyst.catalog.CatalogTable;
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType;
+import org.apache.spark.sql.catalyst.catalog.SessionCatalog;
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation;
 import org.apache.spark.sql.catalyst.parser.ParseException;
 import org.apache.spark.sql.catalyst.plans.JoinType;
 import org.apache.spark.sql.catalyst.trees.Origin;
 import org.apache.spark.sql.catalyst.trees.TreeNode;
+import org.apache.spark.sql.types.StructType;
 
 public class PlanDump {
     private final IdentityHashMap ids = new IdentityHashMap();
@@ -101,15 +110,18 @@ public class PlanDump {
     }
 
     /** The columns of the first of the qualified name and its bare name
-     *  the catalog resolves, as a JSON array of strings; null when none
-     *  does.  An AnalysisException (a ParseException included) means
-     *  "not this name"; any other exception propagates. */
+     *  the session catalog holds, as a JSON array of strings; null when
+     *  none does.  A name is split at its first dot, never parsed, and
+     *  the catalog formats its parts (case).  An AnalysisException
+     *  means "not this name"; any other exception propagates. */
     public String columns(SparkSession session, String name) throws Exception {
+        SessionCatalog catalog = session.sessionState().catalog();
         String[] names = {name, name.substring(name.indexOf('.') + 1)};
         for (int i = 0; i < names.length; i++) {
             try {
-                if (session.catalog().tableExists(names[i])) {
-                    String[] cols = session.table(names[i]).schema().fieldNames();
+                StructType schema = schema(session, catalog, names[i]);
+                if (schema != null) {
+                    String[] cols = schema.fieldNames();
                     StringBuilder sb = new StringBuilder("[");
                     for (int j = 0; j < cols.length; j++) {
                         if (j > 0) sb.append(',');
@@ -124,6 +136,30 @@ public class PlanDump {
             }
         }
         return null;
+    }
+
+    /** The schema of the relation a "table" or "db.table" name names,
+     *  or null when the catalog holds none.  Only a view with no
+     *  analyzed plan (a permanent view, a SQL-text temp view) is
+     *  analyzed, so one that no longer resolves throws. */
+    private static StructType schema(SparkSession session, SessionCatalog catalog, String name)
+            throws Exception {
+        int dot = name.indexOf('.');
+        String db = dot < 0 ? null : name.substring(0, dot);
+        String table = name.substring(dot + 1);
+        scala.Option temp = db == null ? catalog.getRawTempView(table)
+            : catalog.isGlobalTempViewDB(db) ? catalog.getRawGlobalTempView(table)
+            : scala.Option.empty();
+        if (temp.isDefined()) {
+            TemporaryViewRelation view = (TemporaryViewRelation) temp.get();
+            return view.plan().isDefined() ? view.tableMeta().schema() : session.table(name).schema();
+        }
+        TableIdentifier id = new TableIdentifier(table, scala.Option.apply(db));
+        if (!catalog.tableExists(id)) return null;
+        CatalogTable meta = catalog.getTableMetadata(id);
+        // a v1 table's stored schema holds its partition columns last
+        return meta.tableType().equals(CatalogTableType.VIEW())
+            ? session.table(name).schema() : meta.schema();
     }
 
     private int node(TreeNode n) {
@@ -384,6 +420,10 @@ class _Tree:
             cols = [c["f"]["_1"] for c in f["userSpecifiedColumns"]]
             query = plan(f["plan" if temp else "query"])
             return _sink("CREATEVIEW", parts, query, cols, "temp" if temp else "view")
+        if cls == "AlterViewAs":
+            # ALTER VIEW v AS <query> redefines the view as CREATE VIEW does
+            parts = self.nodes[f["child"]]["f"]["multipartIdentifier"]
+            return _sink("ALTER", parts, plan(f["query"]), view="view")
         if cls in ("UpdateTable", "DeleteFromTable"):
             # condition is Option[Expression] on UpdateTable but a plain
             # Expression on DeleteFromTable; the dump gives an id or
@@ -664,7 +704,7 @@ def _sink(
     like every other identifier path (a consumer joining edges on
     ``to_name`` case-sensitively must not see ``sink.C2`` beside
     ``sink.c2``); ``view`` is ``"temp"`` or ``"view"`` for CREATE
-    VIEW."""
+    VIEW, ``"view"`` for ALTER VIEW … AS."""
     cols = [c.lower() for c in cols or []]
     return Node("Sink", {"kind": kind, "dest": dest, "cols": cols, "view": view}, [query])
 

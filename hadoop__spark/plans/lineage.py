@@ -103,14 +103,14 @@ class SparkCatalogMetastore:
     """``spark.catalog`` as the metastore (replaces ``MetaDataDao``,
     reference README.md:102, 239, 814).
 
-    A lookup is one py4j call (``jbridge.table_columns``) and answers
-    from analysis metadata alone, submitting no Spark job: on the JVM
-    side, ``tableExists`` guards each candidate name (the qualified
-    name, then the bare name, so ``default.t`` finds a temp view
-    ``t``), and the columns are the resolved schema of ``table``,
-    partition columns last.  A missing table, an unparsable name, or a
-    view whose definition no longer resolves reads as unknown
-    (``None``)."""
+    A lookup is one py4j call (``jbridge.table_columns``) and submits
+    no Spark job.  On the JVM side it reads the session catalog for
+    each candidate name (the qualified name, then the bare name, so
+    ``default.t`` finds a temp view ``t``): a temp view's stored schema,
+    else a table's catalog schema, partition columns last.  Only a
+    permanent view or a temp view defined by SQL text is analyzed.  A
+    missing table or database, a name no table has, or a view whose
+    definition no longer resolves reads as unknown (``None``)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -197,16 +197,17 @@ class FromCtx:
         # source-table prefix, merged with '&' — this is what produces
         # `app.action_video&fact.action_comment.uid` for a column coming
         # through a UNION subquery (reference README.md:596-611).
-        matched = [c for c in source.scope.cols if c.name.lower() == col]
-        expanded = _union([], *(c.sources for c in matched if c.expand))
-        prefixes = _union(
-            [],
-            *(
-                (s.rsplit(".", 1)[0] for s in c.sources)
-                for c in matched
-                if not c.expand
-            ),
-        )
+        matched = False
+        expanded: list[str] = []
+        prefixes: list[str] = []
+        for c in source.scope.cols:
+            if c.name.lower() != col:
+                continue
+            matched = True
+            if c.expand:
+                _union(expanded, c.sources)
+            else:
+                _union(prefixes, [s.rsplit(".", 1)[0] for s in c.sources])
         if expanded:
             # generator output (LATERAL VIEW): the honest provenance is
             # the generator's own source columns, &-merged like the
@@ -293,6 +294,12 @@ class FromCtx:
             return f"{'&'.join(tables)}.{col}" if tables else col
 
         return qualify
+
+
+def _output(table: str, kind: str) -> str:
+    """An output table as recorded: an ALTER's carries the ``ALTER``
+    tag (reference README.md:259-263)."""
+    return f"{table}\tALTER" if kind == "ALTER" else table
 
 
 def _block(scope: Scope) -> FromCtx:
@@ -411,7 +418,7 @@ class LineageAnalyzer:
         elif node.cls == "Ddl":
             if node["target"]:
                 dest = self._fill_parts(node["target"])
-                res.output_tables.add(f"{dest}\tALTER" if node["kind"] == "ALTER" else dest)
+                res.output_tables.add(_output(dest, node["kind"]))
             if node["source"]:
                 res.input_tables.add(self._fill_parts(node["source"]))
         elif node.cls in ("UpdateTable", "DeleteFromTable", "MergeIntoTable"):
@@ -431,7 +438,7 @@ class LineageAnalyzer:
         table = isinstance(node["dest"], list)
         dest = self._fill_parts(node["dest"]) if table else node["dest"]
         if dest != "TOK_TMP_FILE":
-            res.output_tables.add(dest)
+            res.output_tables.add(_output(dest, node["kind"]))
         scope = self._walk_query(node.children[0], conditions, res)
         cols = scope.cols
         if scope.branch_cols and len(scope.branch_cols) > 1:

@@ -328,12 +328,20 @@ def test_spark_catalog_metastore_and_validation(spark):
 def test_spark_catalog_metastore_matches_list_columns_without_jobs(spark):
     """SparkCatalogMetastore answers from analysis metadata alone: the
     same ordered columns ``spark.catalog.listColumns`` reports, for
-    every kind of relation the analyzer meets, and no Spark job."""
+    every kind of relation the analyzer meets, and no Spark job.  The
+    catalog formats mixed-case names as ``listColumns`` does, and
+    column names keep their own case."""
     from hadoop__spark.plans.lineage import SparkCatalogMetastore
+    from hadoop__spark.session import TABLES, register_views
+    from tests.conftest import SF_DIR
 
+    register_views(spark, SF_DIR)
     spark.range(2).selectExpr("id AS a", "id * 2 AS B").createOrReplaceTempView(
         "ms_tv"
     )
+    spark.range(1).selectExpr("id AS Aa", "id AS bB").createOrReplaceTempView("Ms_MixedV")
+    spark.range(1).selectExpr("id AS G").createOrReplaceGlobalTempView("Ms_MixedG")
+    spark.sql("CREATE TABLE IF NOT EXISTS Ms_MixedT (Cc INT, dD STRING) USING parquet")
     spark.range(2).selectExpr("id AS g", "id AS h").createOrReplaceGlobalTempView(
         "ms_gv"
     )
@@ -352,30 +360,46 @@ def test_spark_catalog_metastore_matches_list_columns_without_jobs(spark):
             ("default.ms_part", "default.ms_part"),
             ("default.ms_pv", "default.ms_pv"),
             ("default.ms_tv", "ms_tv"),
+            ("MS_MIXEDV", "Ms_MixedV"),
+            ("Default.ms_mixedv", "ms_mixedv"),
+            ("DEFAULT.MS_MIXEDT", "default.ms_mixedt"),
+            ("ms_mixedt", "Ms_MixedT"),
+            ("Global_Temp.MS_MIXEDG", "global_temp.ms_mixedg"),
         ]
+        # the seven TPC-H fixture views, the lineage benchmark's catalog
+        for table in TABLES[:7]:
+            cases += [(table, table), (f"default.{table}", table)]
         oracle = {
             name: [c.name for c in spark.catalog.listColumns(ref)]
             for name, ref in cases
         }
         assert oracle["default.ms_part"] == ["x", "y", "p"]  # partition last
+        assert oracle["MS_MIXEDV"] == ["Aa", "bB"]
+        assert oracle["DEFAULT.MS_MIXEDT"] == ["Cc", "dD"]
+        assert oracle["default.lineitem"][0] == "l_orderkey"
         ms = SparkCatalogMetastore(spark)
         sc.setJobGroup("ms-lookups", "catalog lookups")
         try:
             got = {name: ms.columns(name) for name, _ in cases}
             missing = ms.columns("default.ms_no_such_table")
             unparsable = ms.columns("default.a-b")
+            no_database = ms.columns("ms_no_db.ms_no_table")
             jobs = list(sc.statusTracker().getJobIdsForGroup("ms-lookups"))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert got == oracle
         assert missing is None
         assert unparsable is None  # a ParseException is "not this name"
+        assert no_database is None
         assert jobs == []
     finally:
         spark.sql("DROP VIEW IF EXISTS ms_pv")
         spark.sql("DROP TABLE IF EXISTS ms_part")
+        spark.sql("DROP TABLE IF EXISTS Ms_MixedT")
         spark.catalog.dropTempView("ms_tv")
+        spark.catalog.dropTempView("Ms_MixedV")
         spark.catalog.dropGlobalTempView("ms_gv")
+        spark.catalog.dropGlobalTempView("Ms_MixedG")
 
 
 class _CountingMetastore:
@@ -418,7 +442,8 @@ def test_catalog_lookups_memoized_per_analyze_call(spark):
 
 def test_catalog_lookups_not_stale_across_analyze_calls(spark):
     """A table created between two ``analyze`` calls on one analyzer is
-    visible to the second: the memo never outlives a call."""
+    visible to the second, and so are the new columns of a temp view
+    replaced between two calls: the memo never outlives a call."""
     an = LineageAnalyzer(spark)
     with pytest.raises(LineageError):
         an.analyze("select * from ms_late")
@@ -428,8 +453,32 @@ def test_catalog_lookups_not_stale_across_analyze_calls(spark):
     try:
         res = an.analyze("select * from ms_late", validate=True)
         assert [line.to_name_parse for line in res.col_lines] == ["a", "b"]
+        spark.range(1).selectExpr("id AS c", "id AS d", "id AS e").createOrReplaceTempView(
+            "ms_late"
+        )
+        res = an.analyze("select * from ms_late", validate=True)
+        assert [line.to_name_parse for line in res.col_lines] == ["c", "d", "e"]
     finally:
         spark.catalog.dropTempView("ms_late")
+
+
+def test_catalog_lookup_sql_text_temp_view_over_dropped_table(spark):
+    """A temp view defined by SQL text holds no analyzed plan, so a
+    lookup analyzes it: once its base table is dropped it reads as
+    unknown, under its bare name and its qualified name alike."""
+    from hadoop__spark.plans.lineage import SparkCatalogMetastore
+
+    spark.sql("CREATE TABLE IF NOT EXISTS ms_gone (q INT, r INT) USING parquet")
+    spark.sql("CREATE OR REPLACE TEMP VIEW ms_sqltv AS SELECT r, q FROM ms_gone")
+    try:
+        ms = SparkCatalogMetastore(spark)
+        assert ms.columns("default.ms_sqltv") == ["r", "q"]
+        spark.sql("DROP TABLE ms_gone")
+        assert ms.columns("ms_sqltv") is None
+        assert ms.columns("default.ms_sqltv") is None
+    finally:
+        spark.catalog.dropTempView("ms_sqltv")
+        spark.sql("DROP TABLE IF EXISTS ms_gone")
 
 
 def test_statement_and_lookup_are_one_py4j_call_each(spark, monkeypatch):
@@ -849,6 +898,40 @@ def test_create_view_lineage_and_resolution(spark):
         assert [(l.to_name_parse, l.to_name) for l in res.col_lines] == [
             ("a", "default.v.p"), ("b", "default.v.q"),
         ], sql
+
+
+def test_alter_view_as_lineage(spark):
+    """ALTER VIEW … AS redefines the view as CREATE VIEW does: its query
+    is walked into edges to the view, the view is an ALTER-tagged
+    output (reference README.md:259-263), and later statements resolve
+    through the new definition."""
+    an = LineageAnalyzer(spark, DictMetastore({}))
+    res = an.analyze(
+        "use app; alter view v as select a as x, nvl(b, 0) as y from t where a > 0; "
+        "select x from v"
+    )
+    assert res.statements == ["USE", "ALTER", "SELECT"]
+    assert res.output_tables == {"app.v\tALTER"}
+    assert res.input_tables == {"app.t"}
+    assert [
+        (l.to_table, l.to_name, l.to_name_parse, l.from_names, sorted(l.conditions))
+        for l in res.col_lines
+    ] == [
+        ("app.v", None, "x", ("app.t.a",), ["WHERE:app.t.a > 0"]),
+        ("app.v", None, "y", ("app.t.b",), ["COLFUN:nvl(app.t.b,0)", "WHERE:app.t.a > 0"]),
+        ("TOK_TMP_FILE", None, "x", ("app.t.x",), []),
+    ]
+
+    # a qualified view name and a WITH inside the query
+    res = LineageAnalyzer(spark, DictMetastore({})).analyze(
+        "alter view db.v as with w as (select a from t) select a from w"
+    )
+    assert res.statements == ["ALTER"]
+    assert res.output_tables == {"db.v\tALTER"}
+    assert res.input_tables == {"default.t"}
+    assert [(l.to_table, l.to_name_parse, l.from_names) for l in res.col_lines] == [
+        ("db.v", "a", ("default.t.a",)),
+    ]
 
 
 def test_format_matches_reference_print_shape(spark):
