@@ -12,9 +12,10 @@ lookups; it is compiled once per JVM with Janino, the compiler
 Catalyst's own code generation uses, so it ships with Spark and
 nothing is built or configured.  :mod:`jbridge` converts the dump
 into lightweight Python nodes and decides what each statement is (a
-``Sink`` for every destination, a ``Ddl`` for every DDL or utility
-kind), and a recursive walker with proper lexical scoping
-(:mod:`lineage`) emits input/output tables, column-level lineage
+``Sink`` for every destination, a ``Ddl`` for every other Catalyst
+``Command``, kind ALTER when the statement starts with ALTER, else the
+reference's kind or the class name), and a recursive walker with
+proper lexical scoping (:mod:`lineage`) emits input/output tables, column-level lineage
 edges and reference-format condition strings (:mod:`render`).
 """
 

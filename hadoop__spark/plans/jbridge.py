@@ -19,10 +19,14 @@ configure.
 
 The conversion is also the one place that decides what a statement
 is (``_Tree.statement``): every destination — a table, a directory or
-a bare SELECT's ``TOK_TMP_FILE`` — is one ``Sink`` node, every DDL or
-utility command one ``Ddl`` node, and each shape carries its statement
-kind, so the analyzer (:mod:`lineage`) needs no Catalyst class-name
-rule and handles each shape at one site.
+a bare SELECT's ``TOK_TMP_FILE`` — is one ``Sink`` node, every other
+Catalyst ``Command`` one ``Ddl`` node, and each shape carries its
+statement kind, so the analyzer (:mod:`lineage`) handles each shape at
+one site.  Catalyst says what a command is: the dump flags a root that
+is a ``Command``, so only a query reaches the bare-SELECT sink, and a
+command's kind is the reference's (CREATETABLE, LOAD, DROP, TRUNCATE,
+or ALTER for any statement whose first keyword is ALTER), else its
+class name.
 
 Each expression node carries the exact source-text slice from
 Catalyst's ``Origin`` (startIndex / stopIndex into the statement),
@@ -41,6 +45,7 @@ metastore lookups, neither call touches executors.
 from __future__ import annotations
 
 import json
+import re
 import threading
 from dataclasses import dataclass, field
 from typing import Any
@@ -70,6 +75,7 @@ class Node:
 #: is ``{"c": simple class name, "s"/"e": Origin start/stop index or
 #: null, "k": children() as node ids, "f": product fields}``; fields
 #: are keyed by ``productElementName`` (by position when it is empty).
+#: The root alone adds ``"cmd"``: whether it is a Catalyst ``Command``.
 #: A field value is a node id (TreeNode), ``null`` (null or None), the
 #: value of a ``Some``, an array (Seq; byte[] as its unsigned bytes),
 #: ``{"c", "f"}`` (any other Product; a JoinType adds its ``"sql"``),
@@ -88,6 +94,7 @@ import org.apache.spark.sql.catalyst.catalog.SessionCatalog;
 import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation;
 import org.apache.spark.sql.catalyst.parser.ParseException;
 import org.apache.spark.sql.catalyst.plans.JoinType;
+import org.apache.spark.sql.catalyst.plans.logical.Command;
 import org.apache.spark.sql.catalyst.trees.Origin;
 import org.apache.spark.sql.catalyst.trees.TreeNode;
 import org.apache.spark.sql.types.StructType;
@@ -179,6 +186,7 @@ public class PlanDump {
         value(sb, n.children());
         sb.append(",\"f\":");
         fields(sb, n);
+        if (id == 0) sb.append(",\"cmd\":").append(n instanceof Command);
         nodes.set(id, sb.append('}').toString());
         return id;
     }
@@ -300,11 +308,13 @@ _PASS_THROUGH = {
     "Repartition",
 }
 
+#: The placeholders that name a DDL statement's table or view.  A
+#: namespace is never an output table.
 _DDL_TARGET_CLASSES = {
     "UnresolvedIdentifier": "nameParts",
     "UnresolvedTable": "multipartIdentifier",
     "UnresolvedTableOrView": "multipartIdentifier",
-    "UnresolvedNamespace": "multipartIdentifier",
+    "UnresolvedView": "multipartIdentifier",
     "UnresolvedRelation": "multipartIdentifier",
 }
 
@@ -317,18 +327,6 @@ _DDL_KINDS = {
     "DropTable": ("DROP", False),
     "TruncateTable": ("TRUNCATE", False),
 }
-
-#: ALTER statements by class-name prefix.
-_ALTER_PREFIXES = (
-    "Alter", "RenameTable", "AddColumns", "ReplaceColumns", "RenameColumn", "DropColumns",
-    "SetTableProperties", "AddPartitions", "DropPartitions", "RenamePartitions",
-)
-
-#: Metadata and utility commands by class-name prefix.
-_UTILITY_PREFIXES = (
-    "Show", "Describe", "Desc", "Explain", "Set", "Refresh",
-    "Cache", "Uncache", "Analyze", "Comment", "Msck", "Repair",
-)
 
 _BINARY_OPS = {
     "EqualTo": "=",
@@ -385,12 +383,17 @@ class _Tree:
         ``Sink`` (reference TOK_DESTINATION, README.md:211-225): table
         parts, a directory path or a bare SELECT's ``TOK_TMP_FILE``,
         the explicit column list, the statement kind and the view
-        flag, with the query as its child.  Every DDL or utility
-        statement is a ``Ddl``: its kind, output table and input
-        table.  The rest are ``Use``, ``UpdateTable``,
-        ``DeleteFromTable`` and ``MergeIntoTable``, a Hive multi-insert
-        is a ``Union`` of Sinks, and a statement-level WITH wraps one
-        of these.  Every shape carries its statement ``kind``."""
+        flag, with the query as its child.  ``Use``, ``UpdateTable``,
+        ``DeleteFromTable`` and ``MergeIntoTable`` are their own
+        shapes, a Hive multi-insert is a ``Union`` of Sinks, and a
+        statement-level WITH wraps one of these.  Any other root that
+        is a Catalyst ``Command`` is a ``Ddl`` (its kind, output table
+        and input table): kind from ``_DDL_KINDS``, else ALTER when the
+        statement starts with ALTER (reference S9, its whole ALTER
+        token range) with the named table or view as an output, else
+        the class name, upper-cased without its ``Command`` or
+        ``Statement`` suffix.  Every shape carries its statement
+        ``kind``."""
         n = self.nodes[i]
         cls, f = n["c"], n["f"]
         plan = self.plan
@@ -442,24 +445,28 @@ class _Tree:
             tables = [f["targetTable"], f["sourceTable"]]
             return self._dml(cls, "MERGE", tables, f["mergeCondition"], pairs)
         if cls == "SetCatalogAndNamespace":
-            return Node("Use", {"kind": "USE", "parts": self._ddl_target(n)})
+            # None for `USE IDENTIFIER(…)`, whose name is an expression
+            parts = self.nodes[f["child"]]["f"].get("multipartIdentifier")
+            return Node("Use", {"kind": "USE", "parts": parts})
         if cls == "CreateTableLikeCommand":
             # schema copy: the template table is an input, no data moves
             return _ddl(
                 "CREATETABLE", _table_parts(f["targetTable"]), _table_parts(f["sourceTable"])
             )
+        if not n.get("cmd"):
+            # a query: a bare SELECT's pseudo-destination, reference
+            # README.md:211-225
+            return _sink("SELECT", "TOK_TMP_FILE", plan(i))
         if cls in _DDL_KINDS:
             kind, has_target = _DDL_KINDS[cls]
             return _ddl(kind, self._ddl_target(n) if has_target else None)
-        if cls.startswith(_ALTER_PREFIXES):
+        if re.match(r"alter\b", self.src(i) or "", re.IGNORECASE):
+            # the reference's ALTER is the whole ALTER token range (S9)
             return _ddl("ALTER", self._ddl_target(n))
-        if cls.startswith(_UTILITY_PREFIXES):
-            # metadata/utility commands: no lineage, but the statement
-            # kind is recorded instead of a phantom SELECT
-            return _ddl(cls.removesuffix("Command").removesuffix("Statement").upper())
-        # a query (or an unknown statement): a bare SELECT's
-        # pseudo-destination, reference README.md:211-225
-        return _sink("SELECT", "TOK_TMP_FILE", plan(i))
+        # any other command: no lineage, its kind named after its class
+        # (`ClearCacheCommand$` is a Scala object)
+        kind = cls.removesuffix("$").removesuffix("Command").removesuffix("Statement")
+        return _ddl(kind.upper())
 
     def plan(self, i: int) -> Node:
         n = self.nodes[i]

@@ -430,11 +430,12 @@ class LineageAnalyzer:
     def _sink(self, node: Node, conditions: set[str], res: LineageResult) -> None:
         """One destination's edges.  The sink schema that aligns them
         positionally (README.md:796-804) is the explicit column list,
-        else a table's catalog columns; a directory and TOK_TMP_FILE
-        have no catalog columns, so their edges keep only the parsed
-        output names.  A view becomes a session-level virtual scope:
-        later statements resolve through its own lineage (beyond the
-        reference's surface)."""
+        else a table's catalog columns.  A view's columns are the ones
+        its query defines, not those of a view it replaces, and a
+        directory and TOK_TMP_FILE have no catalog columns, so their
+        edges keep only the parsed output names.  A view becomes a
+        session-level virtual scope: later statements resolve through
+        its own lineage (beyond the reference's surface)."""
         table = isinstance(node["dest"], list)
         dest = self._fill_parts(node["dest"]) if table else node["dest"]
         if dest != "TOK_TMP_FILE":
@@ -443,7 +444,9 @@ class LineageAnalyzer:
         cols = scope.cols
         if scope.branch_cols and len(scope.branch_cols) > 1:
             cols = self._merge_union(scope.branch_cols)
-        dest_cols = node["cols"] or (self._columns(dest) if table else None)
+        dest_cols = node["cols"] or (
+            self._columns(dest) if table and not node["view"] else None
+        )
         for i, c in enumerate(cols):
             res.col_lines.append(
                 ColLine(

@@ -657,6 +657,49 @@ def test_concurrent_catalog_analyze_calls_compile_one_dumper(spark, monkeypatch)
     assert compiles == 1
 
 
+#: One statement per row, run after ``use app``: (sql, kind, outputs,
+#: inputs, edges).  Every Catalyst command reports a kind of its own,
+#: never SELECT: one that starts with ALTER is an ALTER of the table or
+#: view it names (a database is no output table), any other is named
+#: after its class (``DropView`` → ``DROPVIEW``; the reference's DROP
+#: is ``TOK_DROPTABLE`` only).
+DDL_ROWS = (
+    ("create table t8 (x int)", "CREATETABLE", {"app.t8"}, set(), 0),
+    ("create table t9 like t10", "CREATETABLE", {"app.t9"}, {"app.t10"}, 0),
+    ("alter table t3 add columns (z int)", "ALTER", {"app.t3\tALTER"}, set(), 0),
+    ("alter table t3 drop partition (d='1')", "ALTER", {"app.t3\tALTER"}, set(), 0),
+    ("replace table t11 as select ip from t7", "CREATETABLE", {"app.t11"}, {"app.t7"}, 1),
+    ("cache table t12", "CACHETABLE", set(), set(), 0),
+    ("msck repair table t3", "REPAIRTABLE", set(), set(), 0),
+    ("comment on table t3 is 'x'", "COMMENTONTABLE", set(), set(), 0),
+    (
+        "insert overwrite local directory '/tmp/z' select ip from t7",
+        "INSERT", {"/tmp/z"}, {"app.t7"}, 1,
+    ),
+    ("drop table t1", "DROP", set(), set(), 0),
+    ("show tables", "SHOWTABLES", set(), set(), 0),
+    ("use identifier('x')", "USE", set(), set(), 0),
+    ("drop view v", "DROPVIEW", set(), set(), 0),
+    ("drop index i on t1", "DROPINDEX", set(), set(), 0),
+    ("drop database d", "DROPNAMESPACE", set(), set(), 0),
+    ("drop function f", "DROPFUNCTION", set(), set(), 0),
+    ("drop temporary function f", "DROPFUNCTION", set(), set(), 0),
+    ("create function f as 'x'", "CREATEFUNCTION", set(), set(), 0),
+    ("create temporary function f as 'x'", "CREATEFUNCTION", set(), set(), 0),
+    ("create database d", "CREATENAMESPACE", set(), set(), 0),
+    ("create namespace d", "CREATENAMESPACE", set(), set(), 0),
+    ("reset", "RESET", set(), set(), 0),
+    ("add jar /tmp/x.jar", "ADDJARS", set(), set(), 0),
+    ("clear cache", "CLEARCACHE", set(), set(), 0),
+    ("declare variable x int", "CREATEVARIABLE", set(), set(), 0),
+    ("create index i on t1 (c)", "CREATEINDEX", set(), set(), 0),
+    ("alter table t3 unset tblproperties ('a')", "ALTER", {"app.t3\tALTER"}, set(), 0),
+    ("alter table t3 set location '/x'", "ALTER", {"app.t3\tALTER"}, set(), 0),
+    ("alter view v set tblproperties ('a'='b')", "ALTER", {"app.v\tALTER"}, set(), 0),
+    ("alter database d set dbproperties ('a'='b')", "ALTER", set(), set(), 0),
+)
+
+
 def test_ddl_statement_kinds(spark):
     """DDL routing (S4-S9): statement kinds + tagged ALTER outputs."""
     ms = DictMetastore({})
@@ -673,21 +716,7 @@ def test_ddl_statement_kinds(spark):
     assert res.output_tables == {"app.t3\tALTER", "app.t5", "app.t6"}
     assert res.input_tables == {"app.t7"}
 
-    # one statement per row: (sql, kind, outputs, inputs, edges)
-    for sql, kind, outputs, inputs, edges in (
-        ("create table t8 (x int)", "CREATETABLE", {"app.t8"}, set(), 0),
-        ("create table t9 like t10", "CREATETABLE", {"app.t9"}, {"app.t10"}, 0),
-        ("alter table t3 add columns (z int)", "ALTER", {"app.t3\tALTER"}, set(), 0),
-        ("alter table t3 drop partition (d='1')", "ALTER", {"app.t3\tALTER"}, set(), 0),
-        ("replace table t11 as select ip from t7", "CREATETABLE", {"app.t11"}, {"app.t7"}, 1),
-        ("cache table t12", "CACHETABLE", set(), set(), 0),
-        ("msck repair table t3", "REPAIRTABLE", set(), set(), 0),
-        ("comment on table t3 is 'x'", "COMMENTONTABLE", set(), set(), 0),
-        (
-            "insert overwrite local directory '/tmp/z' select ip from t7",
-            "INSERT", {"/tmp/z"}, {"app.t7"}, 1,
-        ),
-    ):
+    for sql, kind, outputs, inputs, edges in DDL_ROWS:
         res = an.analyze(sql)
         assert res.statements == [kind], sql
         assert res.output_tables == outputs, sql
@@ -888,39 +917,56 @@ def test_create_view_lineage_and_resolution(spark):
     ), select_x[0].conditions
 
     # an explicit view column list aligns the sink like INSERT's does,
-    # lowercased, for persistent and temp views alike
-    for sql in (
-        "create view v (P, q) as select a, b from src",
-        "create temp view v (P, q) as select a, b from src",
+    # lowercased, for persistent and temp views alike.  Without one, a
+    # view's edges name no sink column, even where the catalog still
+    # holds the columns of the view being replaced: a view sink never
+    # looks its name up
+    ms = _CountingMetastore(DictMetastore({"app.v": ["old1", "old2"]}))
+    for sql, kinds, to_names in (
+        ("create view v (P, q) as select a, b from src", ["CREATEVIEW"],
+         ["default.v.p", "default.v.q"]),
+        ("create temp view v (P, q) as select a, b from src", ["CREATEVIEW"],
+         ["default.v.p", "default.v.q"]),
+        ("use app; create or replace view v (P, q) as select a, b from src",
+         ["USE", "CREATEVIEW"], ["app.v.p", "app.v.q"]),
+        ("use app; create or replace view v as select a, b from src",
+         ["USE", "CREATEVIEW"], [None, None]),
+        ("use app; create or replace temp view v as select a, b from src",
+         ["USE", "CREATEVIEW"], [None, None]),
     ):
-        res = LineageAnalyzer(spark, DictMetastore({})).analyze(sql)
-        assert res.statements == ["CREATEVIEW"], sql
+        res = LineageAnalyzer(spark, ms).analyze(sql)
+        assert res.statements == kinds, sql
         assert [(l.to_name_parse, l.to_name) for l in res.col_lines] == [
-            ("a", "default.v.p"), ("b", "default.v.q"),
+            ("a", to_names[0]), ("b", to_names[1]),
         ], sql
+    assert "app.v" not in ms.calls
 
 
 def test_alter_view_as_lineage(spark):
     """ALTER VIEW … AS redefines the view as CREATE VIEW does: its query
     is walked into edges to the view, the view is an ALTER-tagged
     output (reference README.md:259-263), and later statements resolve
-    through the new definition."""
-    an = LineageAnalyzer(spark, DictMetastore({}))
-    res = an.analyze(
-        "use app; alter view v as select a as x, nvl(b, 0) as y from t where a > 0; "
-        "select x from v"
-    )
-    assert res.statements == ["USE", "ALTER", "SELECT"]
-    assert res.output_tables == {"app.v\tALTER"}
-    assert res.input_tables == {"app.t"}
-    assert [
-        (l.to_table, l.to_name, l.to_name_parse, l.from_names, sorted(l.conditions))
-        for l in res.col_lines
-    ] == [
-        ("app.v", None, "x", ("app.t.a",), ["WHERE:app.t.a > 0"]),
-        ("app.v", None, "y", ("app.t.b",), ["COLFUN:nvl(app.t.b,0)", "WHERE:app.t.a > 0"]),
-        ("TOK_TMP_FILE", None, "x", ("app.t.x",), []),
-    ]
+    through the new definition.  Its edges name no sink column, and
+    the view is not looked up: the catalog's columns for it are those
+    of the definition being replaced."""
+    for tables in ({}, {"app.v": ["old1", "old2"]}):
+        ms = _CountingMetastore(DictMetastore(tables))
+        res = LineageAnalyzer(spark, ms).analyze(
+            "use app; alter view v as select a as x, nvl(b, 0) as y from t where a > 0; "
+            "select x from v"
+        )
+        assert res.statements == ["USE", "ALTER", "SELECT"]
+        assert res.output_tables == {"app.v\tALTER"}
+        assert res.input_tables == {"app.t"}
+        assert [
+            (l.to_table, l.to_name, l.to_name_parse, l.from_names, sorted(l.conditions))
+            for l in res.col_lines
+        ] == [
+            ("app.v", None, "x", ("app.t.a",), ["WHERE:app.t.a > 0"]),
+            ("app.v", None, "y", ("app.t.b",), ["COLFUN:nvl(app.t.b,0)", "WHERE:app.t.a > 0"]),
+            ("TOK_TMP_FILE", None, "x", ("app.t.x",), []),
+        ], tables
+        assert "app.v" not in ms.calls
 
     # a qualified view name and a WITH inside the query
     res = LineageAnalyzer(spark, DictMetastore({})).analyze(
