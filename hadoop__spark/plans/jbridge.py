@@ -26,7 +26,13 @@ one site.  Catalyst says what a command is: the dump flags a root that
 is a ``Command``, so only a query reaches the bare-SELECT sink, and a
 command's kind is the reference's (CREATETABLE, LOAD, DROP, TRUNCATE,
 or ALTER for any statement whose first keyword is ALTER), else its
-class name.
+class name.  Every table or view name is read by one reader,
+``_Tree.name``, whatever Catalyst node carries it.  An
+``IDENTIFIER('name')`` clause arrives as a plain name: the dump
+replaces a ``PlanWithUnresolvedIdentifier`` whose name folds to a
+constant with the plan its builder makes of that name (built once,
+under the clause's ``Origin``), so ``insert into identifier('t')``
+dumps as ``insert into t`` does.
 
 Each expression node carries the exact source-text slice from
 Catalyst's ``Origin`` (startIndex / stopIndex into the statement),
@@ -76,6 +82,8 @@ class Node:
 #: null, "k": children() as node ids, "f": product fields}``; fields
 #: are keyed by ``productElementName`` (by position when it is empty).
 #: The root alone adds ``"cmd"``: whether it is a Catalyst ``Command``.
+#: A ``PlanWithUnresolvedIdentifier`` whose name folds is no node of
+#: its own: its id is that of the plan it builds.
 #: A field value is a node id (TreeNode), ``null`` (null or None), the
 #: value of a ``Some``, an array (Seq; byte[] as its unsigned bytes),
 #: ``{"c", "f"}`` (any other Product; a JoinType adds its ``"sql"``),
@@ -88,6 +96,8 @@ import java.util.IdentityHashMap;
 import org.apache.spark.sql.AnalysisException;
 import org.apache.spark.sql.SparkSession;
 import org.apache.spark.sql.catalyst.TableIdentifier;
+import org.apache.spark.sql.catalyst.analysis.IdentifierResolution$;
+import org.apache.spark.sql.catalyst.analysis.PlanWithUnresolvedIdentifier;
 import org.apache.spark.sql.catalyst.catalog.CatalogTable;
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType;
 import org.apache.spark.sql.catalyst.catalog.SessionCatalog;
@@ -95,6 +105,7 @@ import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation;
 import org.apache.spark.sql.catalyst.parser.ParseException;
 import org.apache.spark.sql.catalyst.plans.JoinType;
 import org.apache.spark.sql.catalyst.plans.logical.Command;
+import org.apache.spark.sql.catalyst.trees.CurrentOrigin$;
 import org.apache.spark.sql.catalyst.trees.Origin;
 import org.apache.spark.sql.catalyst.trees.TreeNode;
 import org.apache.spark.sql.types.StructType;
@@ -172,6 +183,24 @@ public class PlanDump {
     private int node(TreeNode n) {
         Integer seen = (Integer) ids.get(n);
         if (seen != null) return seen.intValue();
+        if (n instanceof PlanWithUnresolvedIdentifier
+                && ((PlanWithUnresolvedIdentifier) n).identifierExpr().foldable()) {
+            // IDENTIFIER('name'): dump the plan its builder makes of the
+            // name, built once under the clause's Origin
+            PlanWithUnresolvedIdentifier p = (PlanWithUnresolvedIdentifier) n;
+            TreeNode built;
+            CurrentOrigin$.MODULE$.set(p.origin());
+            try {
+                built = (TreeNode) p.planBuilder().apply(
+                    IdentifierResolution$.MODULE$.evalIdentifierExpr(p.identifierExpr()),
+                    p.children());
+            } finally {
+                CurrentOrigin$.MODULE$.reset();
+            }
+            Integer id = Integer.valueOf(node(built));
+            ids.put(n, id);
+            return id.intValue();
+        }
         int id = nodes.size();
         ids.put(n, Integer.valueOf(id));
         nodes.add(null);
@@ -308,16 +337,6 @@ _PASS_THROUGH = {
     "Repartition",
 }
 
-#: The placeholders that name a DDL statement's table or view.  A
-#: namespace is never an output table.
-_DDL_TARGET_CLASSES = {
-    "UnresolvedIdentifier": "nameParts",
-    "UnresolvedTable": "multipartIdentifier",
-    "UnresolvedTableOrView": "multipartIdentifier",
-    "UnresolvedView": "multipartIdentifier",
-    "UnresolvedRelation": "multipartIdentifier",
-}
-
 #: DDL statements by class: (statement kind, whether the target table
 #: is an output).
 _DDL_KINDS = {
@@ -368,15 +387,30 @@ class _Tree:
             return None
         return self.sql[start : stop + 1]
 
-    def _ddl_target(self, n: dict) -> list[str] | None:
-        """The multi-part name of a DDL statement's target table, from
-        the Unresolved* placeholder among its direct children."""
-        for k in n["k"]:
-            ch = self.nodes[k]
-            key = _DDL_TARGET_CLASSES.get(ch["c"])
-            if key:
-                return ch["f"][key]
+    def name(self, v: Any) -> list[str] | None:
+        """The parts of the table or view name ``v`` carries: a node id
+        of an ``UnresolvedIdentifier`` or an ``UnresolvedRelation`` /
+        ``Table`` / ``TableOrView`` / ``View``, or a dumped
+        ``TableIdentifier`` ([database,] table).  ``None`` for anything
+        else: a namespace is never a table name."""
+        if isinstance(v, dict):
+            if v["c"] != "TableIdentifier":
+                return None
+            db = v["f"]["database"]
+            return ([db] if db else []) + [v["f"]["table"]]
+        cls, f = self.nodes[v]["c"], self.nodes[v]["f"]
+        if cls == "UnresolvedIdentifier":
+            return f["nameParts"]
+        if cls in (
+            "UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView", "UnresolvedView"
+        ):
+            return f["multipartIdentifier"]
         return None
+
+    def _ddl_target(self, n: dict) -> list[str] | None:
+        """A DDL statement's target: the first child that names a table
+        or view."""
+        return next(filter(None, map(self.name, n["k"])), None)
 
     def statement(self, i: int) -> Node:
         """Decide what the root statement is.  Every destination is a
@@ -393,7 +427,10 @@ class _Tree:
         token range) with the named table or view as an output, else
         the class name, upper-cased without its ``Command`` or
         ``Statement`` suffix.  Every shape carries its statement
-        ``kind``."""
+        ``kind``.  Every table or view name comes from ``name``, a
+        DDL target from the first child ``name`` answers; ``Use`` (USE
+        db and USE NAMESPACE / DATABASE / SCHEMA db) carries the
+        namespace's parts."""
         n = self.nodes[i]
         cls, f = n["c"], n["f"]
         plan = self.plan
@@ -407,26 +444,22 @@ class _Tree:
             # with the FROM duplicated into its query
             return Node("Union", {"kind": "MULTIINSERT"}, [self.statement(k) for k in n["k"]])
         if cls == "InsertIntoStatement":
-            return _sink(
-                "INSERT", plan(f["table"])["parts"], plan(f["query"]), f["userSpecifiedCols"]
-            )
+            return _sink("INSERT", self.name(f["table"]), plan(f["query"]), f["userSpecifiedCols"])
         if cls == "InsertIntoDir":  # INSERT OVERWRITE [LOCAL] DIRECTORY '/path'
             path = f["storage"]["f"]["locationUri"] or "TOK_DIR"
             return _sink("INSERT", path, plan(f["child"]))
         if cls in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
-            parts = self.nodes[f["name"]]["f"]["nameParts"]
-            return _sink("CREATETABLE", parts, plan(f["query"]))
+            return _sink("CREATETABLE", self.name(f["name"]), plan(f["query"]))
         if cls in ("CreateView", "CreateViewCommand"):
             # CreateViewCommand is CREATE [OR REPLACE] TEMP VIEW
             temp = cls == "CreateViewCommand"
-            parts = _table_parts(f["name"]) if temp else self._ddl_target(n)
+            parts = self.name(f["name" if temp else "child"])
             cols = [c["f"]["_1"] for c in f["userSpecifiedColumns"]]
             query = plan(f["plan" if temp else "query"])
             return _sink("CREATEVIEW", parts, query, cols, "temp" if temp else "view")
         if cls == "AlterViewAs":
             # ALTER VIEW v AS <query> redefines the view as CREATE VIEW does
-            parts = self.nodes[f["child"]]["f"]["multipartIdentifier"]
-            return _sink("ALTER", parts, plan(f["query"]), view="view")
+            return _sink("ALTER", self.name(f["child"]), plan(f["query"]), view="view")
         if cls in ("UpdateTable", "DeleteFromTable"):
             # condition is Option[Expression] on UpdateTable but a plain
             # Expression on DeleteFromTable; the dump gives an id or
@@ -444,15 +477,14 @@ class _Tree:
             ]
             tables = [f["targetTable"], f["sourceTable"]]
             return self._dml(cls, "MERGE", tables, f["mergeCondition"], pairs)
-        if cls == "SetCatalogAndNamespace":
-            # None for `USE IDENTIFIER(…)`, whose name is an expression
-            parts = self.nodes[f["child"]]["f"].get("multipartIdentifier")
+        if cls in ("SetCatalogAndNamespace", "SetNamespaceCommand"):
+            # USE [NAMESPACE|DATABASE|SCHEMA] db names a namespace, never
+            # a table (none when an IDENTIFIER clause does not fold)
+            parts = f.get("namespace") or self.nodes[f["child"]]["f"].get("multipartIdentifier")
             return Node("Use", {"kind": "USE", "parts": parts})
         if cls == "CreateTableLikeCommand":
             # schema copy: the template table is an input, no data moves
-            return _ddl(
-                "CREATETABLE", _table_parts(f["targetTable"]), _table_parts(f["sourceTable"])
-            )
+            return _ddl("CREATETABLE", self.name(f["targetTable"]), self.name(f["sourceTable"]))
         if not n.get("cmd"):
             # a query: a bare SELECT's pseudo-destination, reference
             # README.md:211-225
@@ -477,7 +509,7 @@ class _Tree:
             return plan(n["k"][0])
 
         if cls == "UnresolvedRelation":
-            return Node("UnresolvedRelation", {"parts": f["multipartIdentifier"]})
+            return Node("UnresolvedRelation", {"parts": self.name(i)})
         if cls == "SubqueryAlias":
             return Node(
                 "SubqueryAlias",
@@ -725,16 +757,12 @@ def _ddl(
     return Node("Ddl", {"kind": kind, "target": target, "source": source})
 
 
-def _table_parts(ti: dict) -> list[str]:
-    """A dumped ``TableIdentifier``'s parts: [database,] table."""
-    db = ti["f"]["database"]
-    return ([db] if db else []) + [ti["f"]["table"]]
-
-
 def parse_statement(spark: SparkSession, sql: str) -> Node:
     """Parse one statement with Spark's own SQL parser and detach it:
     one py4j call, driver only (the analysis plane never executes
-    anything).  A syntax error raises Spark's ``ParseException``."""
+    anything).  A syntax error raises Spark's ``ParseException``, and
+    an ``IDENTIFIER`` clause that folds to no name (``identifier(1)``)
+    Spark's ``AnalysisException``, as ``spark.sql`` would."""
     jsession = spark._jsparkSession  # noqa: SLF001
     return convert_plan(_dumper(jsession).dump(jsession, sql), sql)
 

@@ -277,7 +277,7 @@ class FromCtx:
                     return resolve(src, col)
                 # unknown qualifier: treat as a table name, like the
                 # reference's getRealTable fallback (README.md:537-553)
-                return f"{analyzer.fill_db(owner)}.{col}"
+                return f"{analyzer._fill_parts([owner])}.{col}"
             col = parts[0]
             if len(self.sources) == 1:
                 return resolve(self.sources[0][1], col)
@@ -310,15 +310,34 @@ def _block(scope: Scope) -> FromCtx:
 # --------------------------------------------------------------------------
 
 
-_SPLIT_RE = re.compile(r"(?<!\\);")  # reference README.md:746
+#: What a statement split must see whole: a quoted string (backslash
+#: escapes), a backticked name, a ``--`` or ``/* */`` comment, each to
+#: its end or the script's; else a top-level ``;``, or its ``\;``
+#: escape (group 1).
+_SCRIPT_TOKENS = re.compile(
+    r"""'(?:\\.|[^\\'])*'?|"(?:\\.|[^\\"])*"?|`[^`]*`?|--[^\n]*|/\*.*?(?:\*/|\Z)|(\\?;)""",
+    re.DOTALL,
+)
 
 
 def split_statements(script: str) -> list[str]:
-    return [
-        s.replace("\\;", ";").strip()
-        for s in _SPLIT_RE.split(script)
-        if s.strip()
-    ]
+    """The statements of a script, for both planes: split on each
+    top-level ``;``, never on one inside a string, a backticked name or
+    a comment; a top-level ``\\;`` is kept as ``;`` (reference
+    README.md:746).  Blank statements drop."""
+    stmts: list[str] = []
+    stmt, start = "", 0
+    for m in _SCRIPT_TOKENS.finditer(script):
+        if m[1]:  # a top-level ; or \; (quoted and commented text stays)
+            stmt += script[start : m.start()]
+            start = m.end()
+            if m[1] == ";":
+                stmts.append(stmt)
+                stmt = ""
+            else:
+                stmt += ";"
+    stmts.append(stmt + script[start:])
+    return [s for s in map(str.strip, stmts) if s]
 
 
 class LineageAnalyzer:
@@ -345,7 +364,6 @@ class LineageAnalyzer:
         self._bindings: list[tuple[str, str]] = []
         self._ctes: dict[str, Scope] = {}  # per-statement WITH scopes
         self._views: dict[str, Scope] = {}  # session-level CREATE VIEWs
-        self._cur_res: LineageResult | None = None
         self._column_memo: dict[str, list[str] | None] = {}
 
     def _columns(self, qualified_table: str) -> list[str] | None:
@@ -359,13 +377,9 @@ class LineageAnalyzer:
             )
         return self._column_memo[qualified_table]
 
-    def fill_db(self, name: str) -> str:
-        """``table`` → ``db.table`` with the session database
-        (reference ``fillDB``, README.md:826-843)."""
-        name = name.lower()
-        return name if "." in name else f"{self.current_db}.{name}"
-
     def _fill_parts(self, parts: list[str]) -> str:
+        """A table name's parts → ``db.table``, the session database
+        filling a bare name (reference ``fillDB``, README.md:826-843)."""
         parts = [p.lower() for p in parts]
         if len(parts) == 1:
             return f"{self.current_db}.{parts[0]}"
@@ -391,7 +405,6 @@ class LineageAnalyzer:
         node = parse_statement(self.spark, sql)
         conditions: set[str] = set()
         self._ctes = {}
-        self._cur_res = res  # for expression-subquery input scanning
         while node.cls == "With":
             # a statement-level WITH (`WITH w AS (…) INSERT …`, UPDATE,
             # a multi-insert or a bare SELECT), possibly nested
@@ -548,7 +561,7 @@ class LineageAnalyzer:
             qualify = ctx.make_qualify(self)
             cols: list[OutCol] = []
             for item in node["exprs"]:
-                cols.extend(self._select_item(item, ctx, qualify))
+                cols.extend(self._select_item(item, ctx, qualify, res))
             if (
                 node.cls == "Aggregate"
                 and self.extended_tags
@@ -777,10 +790,12 @@ class LineageAnalyzer:
                             )
         return extra
 
-    def _select_item(self, item: Node, ctx: FromCtx, qualify) -> list[OutCol]:
+    def _select_item(
+        self, item: Node, ctx: FromCtx, qualify, res: LineageResult
+    ) -> list[OutCol]:
         if item.cls == "Star":
             return self._expand_star(item, ctx)
-        subquery_sources = self._scan_subquery_exprs(item, self._cur_res)
+        subquery_sources = self._scan_subquery_exprs(item, res)
         if item.cls == "Alias":
             name = item["name"]
             expr = item.children[0]

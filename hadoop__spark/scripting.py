@@ -5,10 +5,13 @@ multi-statement script with ``USE db`` session state (reference
 README.md:744-764, 637-640).  This module is the execution-plane
 counterpart plus the bridge to the analysis plane:
 
-* ``run_script`` splits on non-escaped ``;`` (README.md:746) and
-  dispatches each statement to ``spark.sql`` — Catalyst handles
-  INSERT OVERWRITE (+ static partitions), CTAS, DROP/TRUNCATE/ALTER,
-  and ``USE db`` natively (SURVEY.md §2.1).
+* ``run_script`` splits the script with the analysis plane's own
+  ``split_statements`` (a top-level ``;`` ends a statement, one in a
+  string, a backticked name or a comment does not, and ``\\;`` is
+  kept as ``;``, README.md:746), so both planes see the same
+  statements, and dispatches each statement to ``spark.sql`` —
+  Catalyst handles INSERT OVERWRITE (+ static partitions), CTAS,
+  DROP/TRUNCATE/ALTER, and ``USE db`` natively (SURVEY.md §2.1).
 * ``lineage`` runs the analysis plane on the same script without
   executing anything, starting from the session's current database.
 """
@@ -22,69 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from hadoop__spark.plans.lineage import (
     LineageAnalyzer,
     LineageResult,
+    split_statements,
 )
-
-
-def split_statements_exec(script: str) -> list[str]:
-    """Quote-aware statement split for the EXECUTION plane.
-
-    The analysis plane's regex split on non-escaped ``;`` is pinned
-    reference parity (reference README.md:746) and must not change —
-    but handing its output to ``spark.sql`` means a ``;`` inside a
-    string literal hard-fails execution.  This splitter tracks
-    single/double-quoted strings (with backslash escapes), backticked
-    identifiers, and ``--`` / ``/* */`` comments, so only a top-level
-    ``;`` terminates a statement.  The reference's ``\\;`` escape is
-    still honored at top level (unescaped to ``;``) so scripts written
-    for the analysis plane keep running."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    state: str | None = None  # "'", '"', '`', '--', '/*'
-    i, n = 0, len(script)
-    while i < n:
-        c = script[i]
-        if state is None:
-            if c == ";":
-                stmts.append("".join(buf))
-                buf = []
-                i += 1
-                continue
-            if c == "\\" and script[i + 1 : i + 2] == ";":
-                buf.append(";")
-                i += 2
-                continue
-            if c in ("'", '"', "`"):
-                state = c
-            elif c == "-" and script[i + 1 : i + 2] == "-":
-                state = "--"
-            elif c == "/" and script[i + 1 : i + 2] == "*":
-                state = "/*"
-                buf.append("/*")
-                i += 2
-                continue
-        elif state in ("'", '"'):
-            if c == "\\":  # Spark string literals use backslash escapes
-                buf.append(script[i : i + 2])
-                i += 2
-                continue
-            if c == state:
-                state = None
-        elif state == "`":
-            if c == "`":
-                state = None
-        elif state == "--":
-            if c == "\n":
-                state = None
-        else:  # "/*"
-            if c == "*" and script[i + 1 : i + 2] == "/":
-                state = None
-                buf.append("*/")
-                i += 2
-                continue
-        buf.append(c)
-        i += 1
-    stmts.append("".join(buf))
-    return [s.strip() for s in stmts if s.strip()]
 
 
 @dataclass
@@ -111,16 +53,14 @@ class ScriptSession:
         ``parse(sql, validate)``, README.md:744-764): every referenced
         table and column must resolve against the catalog before any
         statement executes — a whole-script precheck instead of
-        failing halfway through a multi-statement mutation.  The
-        precheck runs the analysis plane verbatim, which keeps the
-        reference's regex split — a quoted ``;`` that the executor
-        handles will fail the precheck; escape it ``\\;`` if both
-        planes must see the script."""
+        failing halfway through a multi-statement mutation.  Both
+        planes split the script with one ``split_statements``, so the
+        precheck analyzes exactly the statements that then run."""
         if validate:
             self.lineage(script, validate=True)
         return [
             StatementResult(sql, self.spark.sql(sql))
-            for sql in split_statements_exec(script)
+            for sql in split_statements(script)
         ]
 
     def run(self, script: str) -> DataFrame | None:

@@ -697,6 +697,14 @@ DDL_ROWS = (
     ("alter table t3 set location '/x'", "ALTER", {"app.t3\tALTER"}, set(), 0),
     ("alter view v set tblproperties ('a'='b')", "ALTER", {"app.v\tALTER"}, set(), 0),
     ("alter database d set dbproperties ('a'='b')", "ALTER", set(), set(), 0),
+    # an IDENTIFIER('name') clause names the table it folds to
+    ("insert into identifier('t') select a from src", "INSERT", {"app.t"}, {"app.src"}, 1),
+    ("select a from identifier('app.src')", "SELECT", set(), {"app.src"}, 1),
+    (
+        "create table identifier('t2') as select a from src",
+        "CREATETABLE", {"app.t2"}, {"app.src"}, 1,
+    ),
+    ("alter table identifier('t3') add columns (z int)", "ALTER", {"app.t3\tALTER"}, set(), 0),
 )
 
 
@@ -717,7 +725,8 @@ def test_ddl_statement_kinds(spark):
     assert res.input_tables == {"app.t7"}
 
     for sql, kind, outputs, inputs, edges in DDL_ROWS:
-        res = an.analyze(sql)
+        # each row on its own, so a USE row moves no later row
+        res = LineageAnalyzer(spark, ms, current_db="app").analyze(sql)
         assert res.statements == [kind], sql
         assert res.output_tables == outputs, sql
         assert res.input_tables == inputs, sql
@@ -725,13 +734,39 @@ def test_ddl_statement_kinds(spark):
 
 
 def test_escaped_semicolon_split(spark):
-    """Statement splitting honors escaped semicolons (README.md:746)."""
+    """Statement splitting honors escaped semicolons (README.md:746),
+    and a ';' in a string, a backticked name or a comment does not end
+    the statement."""
     from hadoop__spark.plans.lineage import split_statements
 
     assert split_statements("select 1\\; ok; use app") == [
         "select 1; ok",
         "use app",
     ]
+    an = LineageAnalyzer(spark, DictMetastore({}))
+    for sql in (
+        "select 'a;b' as c from t",
+        "select a from t -- note; here\n",
+        "select a /* x; y */ from t",
+        "select `a;b` from t",
+    ):
+        res = an.analyze(sql)
+        assert res.statements == ["SELECT"], sql
+        assert res.input_tables == {"default.t"}, sql
+        assert len(res.col_lines) == 1, sql
+
+
+def test_every_use_form_switches_database(spark):
+    """USE NAMESPACE / DATABASE / SCHEMA and USE IDENTIFIER('db') set
+    the session database as USE db does (reference S10,
+    README.md:637-640)."""
+    for use in (
+        "use namespace app", "use database app", "use schema app", "use identifier('app')"
+    ):
+        res = LineageAnalyzer(spark, DictMetastore({})).analyze(f"{use}; select a from t")
+        assert res.statements == ["USE", "SELECT"], use
+        assert res.input_tables == {"app.t"}, use
+        assert [line.from_names for line in res.col_lines] == [("app.t.a",)], use
 
 
 def test_cte_lineage(spark):

@@ -773,36 +773,13 @@ _STMT_FRAGMENT = st.lists(
 @settings(max_examples=120, deadline=None)
 def test_exec_split_roundtrips_generated_statements(stmts):
     """Property: joining statements with ';' and re-splitting with the
-    quote-aware exec splitter recovers exactly the non-blank
+    quote-aware statement splitter recovers exactly the non-blank
     statements (whitespace-stripped) — for ANY statement bodies whose
     quotes/comments are internally balanced, including ';' inside
     strings and comments and escaped quotes.  Backslash-escape
     semantics (including the left-to-right '\\;' consumption order)
     are pinned separately by test_exec_split_units."""
-    from hadoop__spark.scripting import split_statements_exec
-
-    out = split_statements_exec(";".join(stmts))
-    assert out == [s.strip() for s in stmts if s.strip()]
-
-
-@given(
-    stmts=st.lists(
-        st.text(
-            alphabet="select abt12,()=.* \n", min_size=1, max_size=40
-        ),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(max_examples=120, deadline=None)
-def test_exec_split_agrees_with_analysis_split_on_common_surface(stmts):
-    """On scripts with no quotes, comments, or backslashes — the
-    entire surface the reference's regex split was designed for — the
-    quote-aware exec splitter and the pinned analysis-plane splitter
-    must return IDENTICAL statement lists (the exec plane is a
-    superset, never a divergence)."""
     from hadoop__spark.plans.lineage import split_statements
-    from hadoop__spark.scripting import split_statements_exec
 
-    script = ";".join(stmts)
-    assert split_statements_exec(script) == split_statements(script)
+    out = split_statements(";".join(stmts))
+    assert out == [s.strip() for s in stmts if s.strip()]

@@ -166,10 +166,9 @@ def test_run_script_validate_precheck(sess, spark):
 
 
 def test_exec_split_quote_aware(sess, spark):
-    """A ';' inside a string literal must not split the EXECUTION
-    plane's statements (the analysis plane keeps the reference's regex
-    split, README.md:746) — previously this hard-failed run_script
-    with a ParseException on the fragment (NOTES round-13 item e)."""
+    """A ';' inside a string literal must not split a script's
+    statements — previously this hard-failed run_script with a
+    ParseException on the fragment (NOTES round-13 item e)."""
     sess.run_script(
         """
         USE appx;
@@ -198,35 +197,35 @@ def test_exec_split_quote_aware(sess, spark):
 
 
 def test_exec_split_units():
-    """split_statements_exec corner shapes, no Spark needed."""
-    from hadoop__spark.scripting import split_statements_exec
+    """split_statements corner shapes, no Spark needed."""
+    from hadoop__spark.plans.lineage import split_statements
 
-    assert split_statements_exec("select 'a;b'; select 1") == [
+    assert split_statements("select 'a;b'; select 1") == [
         "select 'a;b'",
         "select 1",
     ]
-    assert split_statements_exec('select ";" ; select 2') == [
+    assert split_statements('select ";" ; select 2') == [
         'select ";"',
         "select 2",
     ]
-    assert split_statements_exec("select `we;ird` from t") == [
+    assert split_statements("select `we;ird` from t") == [
         "select `we;ird` from t"
     ]
-    assert split_statements_exec("select 1 -- c;omment\n; select 2") == [
+    assert split_statements("select 1 -- c;omment\n; select 2") == [
         "select 1 -- c;omment",
         "select 2",
     ]
-    assert split_statements_exec("select 1 /* a;b */; select 2") == [
+    assert split_statements("select 1 /* a;b */; select 2") == [
         "select 1 /* a;b */",
         "select 2",
     ]
     # escaped quote inside a string does not end it
-    assert split_statements_exec(r"select 'a\';b'; select 3") == [
+    assert split_statements(r"select 'a\';b'; select 3") == [
         r"select 'a\';b'",
         "select 3",
     ]
-    # legacy top-level escape unescapes, like the analysis plane
-    assert split_statements_exec(r"select 'x\;y'") == [r"select 'x\;y'"]
-    assert split_statements_exec(r"a \; b; c") == ["a ; b", "c"]
+    # a top-level \; escape unescapes (README.md:746); a quoted one stays
+    assert split_statements(r"select 'x\;y'") == [r"select 'x\;y'"]
+    assert split_statements(r"a \; b; c") == ["a ; b", "c"]
     # trailing semicolon / empty statements drop
-    assert split_statements_exec("select 1; ;\n;") == ["select 1"]
+    assert split_statements("select 1; ;\n;") == ["select 1"]
